@@ -23,6 +23,11 @@ object Bench {
       s.trim.split("\\s+").take(3).toSeq.map(_.toDouble)
     } catch { case _: Throwable => Seq.empty }
 
+  /** A run id made safe to embed in a file name: every character outside
+    * [A-Za-z0-9_-] becomes '_', so no value can name a path ('/', '..'). */
+  private[graft] def fileTag(runId: String): String =
+    runId.replaceAll("[^A-Za-z0-9_-]", "_")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -286,7 +291,8 @@ object Bench {
     // BENCH_FULL_c8.json land in history via the driver's stray-file
     // commit). Pure output-channel addition; the stdout contract and the
     // timing methodology are unchanged.
-    val runTag = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUN_ID", "c" + cpus)
+    val runTag = fileTag(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_RUN_ID", "c" + cpus))
     writeTo(s"BENCH_FULL_$runTag.json")
     def fmt3(d: Double) =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))

@@ -18,8 +18,8 @@ import graft.sources.{SinkMode, Tap}
   *
   * The memo map mirrors `flinkMemo` (`FFS:230-242`): a pipe object consumed
   * by several downstream pipes lowers once and the DataFrame is reused —
-  * Catalyst handles common-subplan execution; callers opt into `.cache()`
-  * when recomputation would be costly.
+  * Catalyst handles common-subplan execution; callers opt into `persist()`
+  * pipes when recomputation would be costly.
   */
 final class Lowering(spark: SparkSession, keepAssertions: Boolean = true,
                      processConfig: Map[String, String] = Map.empty) {
@@ -47,14 +47,16 @@ final class Lowering(spark: SparkSession, keepAssertions: Boolean = true,
     * materialization barrier — see CheckpointPipe below). The
     * split intermediates are persisted to memory-and-disk so success and
     * trap outputs are read from one materialization (no divergence for
-    * nondeterministic upstreams), and unpersisted once both are written. */
+    * nondeterministic upstreams). */
   private val pendingTraps = mutable.Buffer.empty[(Tap, DataFrame)]
-  private val persistedIntermediates = mutable.Buffer.empty[DataFrame]
 
-  private def registerTrap(tap: Tap, bad: DataFrame, intermediate: DataFrame): Unit = {
-    pendingTraps += tap -> bad
-    persistedIntermediates += intermediate
-  }
+  /** Every frame the lowering materializes — trap split intermediates,
+    * the scan buffer's sorted relation, `persist()` and tapless
+    * `checkpoint()` pipes. Flows that run to their sinks close it once
+    * the sinks and traps are written (`Flow.writeAll`); a caller that
+    * consumes the lowered DataFrame itself owns the frames it reads and
+    * closes this once the result is consumed. */
+  val frames = new Frames
 
   /** Write all registered trap sinks (called by Flow after the main sinks).
     * Multiple stages may share ONE trap tap (upstream
@@ -69,12 +71,6 @@ final class Lowering(spark: SparkSession, keepAssertions: Boolean = true,
       tap.write(united, SinkMode.Replace)
     }
     pendingTraps.clear()
-  }
-
-  /** Release the persisted split intermediates (after traps are flushed). */
-  def unpersistIntermediates(): Unit = {
-    persistedIntermediates.foreach(_.unpersist())
-    persistedIntermediates.clear()
   }
 
   /** Per-pipe ConfigDef properties of the enclosing `withConfig` scopes
@@ -318,6 +314,7 @@ final class Lowering(spark: SparkSession, keepAssertions: Boolean = true,
         }(Encoders.row(df.schema))
       }
 
+    // caller-owned: the lowered flow reads the cache; `frames` never holds it
     case PersistPipe(prev) => lower(prev).persist()
 
     case CheckpointPipe(prev, tapOpt) =>
@@ -332,7 +329,7 @@ final class Lowering(spark: SparkSession, keepAssertions: Boolean = true,
           tap.read(spark)
         // lineage truncation only: lazy localCheckpoint (materializes on
         // first action, blocks stay on executors)
-        case None => df.localCheckpoint(false)
+        case None => frames.lazily(df)
       }
 
     case AssertPipe(prev, pred, message) =>
@@ -380,12 +377,9 @@ final class Lowering(spark: SparkSession, keepAssertions: Boolean = true,
     // the trap tap with the original input columns + the error, rows that
     // succeeded continue with the computed value. One persisted split.
     def trySplit(tap: graft.sources.Tap, tried: Column): DataFrame = {
-      val base = df.withColumn("__try", tried)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      registerTrap(tap,
-        base.filter(col("__try.err").isNotNull)
-          .select(incoming.map(col) :+ col("__try.err").as("__trap_err"): _*),
-        base)
+      val base = frames.persist(df.withColumn("__try", tried))
+      pendingTraps += tap -> base.filter(col("__try.err").isNotNull)
+        .select(incoming.map(col) :+ col("__try.err").as("__trap_err"): _*)
       base.filter(col("__try.err").isNull)
     }
 
@@ -509,7 +503,7 @@ final class Lowering(spark: SparkSession, keepAssertions: Boolean = true,
           StructField("__trap_in", df.schema) :+ StructField("__trap_err", StringType))
         val enc = Encoders.row(withErr)
         val n = resultSchema.length
-        val processed = df.flatMap { row =>
+        val processed = frames.persist(df.flatMap { row =>
           val argRow = Row.fromSeq(idx.map(row.get))
           try fn(argRow).map(s => Row.fromSeq(s :+ null :+ null))
           catch {
@@ -517,11 +511,10 @@ final class Lowering(spark: SparkSession, keepAssertions: Boolean = true,
               Iterator.single(Row.fromSeq(
                 Seq.fill[Any](n)(null) :+ row :+ ex.toString))
           }
-        }(enc).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        registerTrap(trapTap,
-          processed.filter(col("__trap_err").isNotNull)
-            .select(col("__trap_in.*"), col("__trap_err")),
-          processed)
+        }(enc))
+        pendingTraps += trapTap -> processed
+          .filter(col("__trap_err").isNotNull)
+          .select(col("__trap_in.*"), col("__trap_err"))
         processed.filter(col("__trap_err").isNull)
           .drop("__trap_in", "__trap_err")
     }
@@ -652,13 +645,10 @@ final class Lowering(spark: SparkSession, keepAssertions: Boolean = true,
     trap match {
       case None => runner
       case Some(tap) =>
-        val persisted = runner
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        registerTrap(tap,
-          persisted.filter(col("__trap_err").isNotNull)
-            .select((if (inclKeys) keys else Nil).map(col) :+
-              col("__trap_err"): _*),
-          persisted)
+        val persisted = frames.persist(runner)
+        pendingTraps += tap -> persisted.filter(col("__trap_err").isNotNull)
+          .select((if (inclKeys) keys else Nil).map(col) :+
+            col("__trap_err"): _*)
         persisted.filter(col("__trap_err").isNull).drop("__trap_err")
     }
   }
@@ -688,13 +678,11 @@ final class Lowering(spark: SparkSession, keepAssertions: Boolean = true,
     // rows by consecutive __pid runs, so they stay correct under fusion
     // (coalesce concatenates parents in range order).
     val dataSchema = df.schema
-    val sorted = df.repartitionByRange(parts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // released by Flow.writeAll after the sinks materialize (the emit phase
     // below reads it, so it must outlive the flow's actions)
-    persistedIntermediates += sorted
+    val sorted = frames.persist(df.repartitionByRange(parts, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*)
+      .withColumn("__pid", spark_partition_id()))
     val pidIdx = dataSchema.length
 
     import Lowering.{ser, deser, pidRuns, stripLast}
@@ -906,13 +894,10 @@ final class Lowering(spark: SparkSession, keepAssertions: Boolean = true,
     * one-materialization discipline as Buffer/Each traps. */
   private def splitJoinTrap(runner: DataFrame, tap: Tap,
                             keyNames: Seq[String]): DataFrame = {
-    val persisted = runner
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registerTrap(tap,
-      persisted.filter(col("__trap_err").isNotNull)
-        .select(keyNames.zipWithIndex.map { case (nm, i) =>
-          col(s"__trap_key.k$i").as(nm) } :+ col("__trap_err"): _*),
-      persisted)
+    val persisted = frames.persist(runner)
+    pendingTraps += tap -> persisted.filter(col("__trap_err").isNotNull)
+      .select(keyNames.zipWithIndex.map { case (nm, i) =>
+        col(s"__trap_key.k$i").as(nm) } :+ col("__trap_err"): _*)
     persisted.filter(col("__trap_err").isNull).drop("__trap_key", "__trap_err")
   }
 
@@ -1092,17 +1077,17 @@ object Flow {
   /** Multi-sink flow: lowers the shared DAG once (memoized splits). Trap
     * sinks registered during lowering are written AFTER the main sinks —
     * this is the flow-execution point the reference's `Flow.complete()`
-    * marks — then the split intermediates are released. Failure policy: if
-    * any main sink write throws, trap sinks are NOT written (the flow
-    * failed; partial trap output beside incomplete success sinks would
-    * read as a completed flow) but the persisted intermediates ARE always
+    * marks — then every frame the flow materialized is released. Failure
+    * policy: if any main sink write throws, trap sinks are NOT written
+    * (the flow failed; partial trap output beside incomplete success
+    * sinks would read as a completed flow) but the frames ARE always
     * released, so a failed flow leaves nothing cached behind. */
   def writeAll(sinks: Seq[(Pipe, Tap, SinkMode)])(implicit spark: SparkSession): Unit = {
     val lowering = new Lowering(spark)
     try {
       sinks.foreach { case (p, t, m) => t.write(lowering.lower(p), m) }
       lowering.flushTraps()
-    } finally lowering.unpersistIntermediates()
+    } finally lowering.frames.close()
   }
 
   /** Lower + flush trap sinks eagerly, returning the success-side relation
@@ -1110,8 +1095,8 @@ object Flow {
     * writing it to a tap) but still need trap sinks materialized. The
     * returned relation reads the persisted split intermediates, so they
     * stay cached for the session; prefer `write`/`writeAll` (which release
-    * them) for production flows, or drive a `Lowering` directly and call
-    * `unpersistIntermediates()` once the result is consumed. */
+    * them) for production flows, or drive a `Lowering` directly and close
+    * its `frames` once the result is consumed. */
   def toDFWithTraps(p: Pipe)(implicit spark: SparkSession): DataFrame = {
     val lowering = new Lowering(spark)
     val df = lowering.lower(p)
@@ -1120,13 +1105,13 @@ object Flow {
   }
 
   /** Execute ONLY the trap side of a flow: lower, write the trap sinks, and
-    * release every persisted intermediate. For callers that consume the
-    * trap output (already durable in its taps) rather than the success
-    * relation. */
+    * release every frame. For callers that consume the trap output
+    * (already durable in its taps) rather than the success relation. */
   def materializeTraps(p: Pipe)(implicit spark: SparkSession): Unit = {
     val lowering = new Lowering(spark)
-    lowering.lower(p)
-    lowering.flushTraps()
-    lowering.unpersistIntermediates()
+    try {
+      lowering.lower(p)
+      lowering.flushTraps()
+    } finally lowering.frames.close()
   }
 }

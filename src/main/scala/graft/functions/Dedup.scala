@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import TextAnalysis.{tokens, tokenHash}
+import graft.exec.Frames
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard.
@@ -15,47 +16,6 @@ import TextAnalysis.{tokens, tokenHash}
   * near-dup detection tractable at 100 TB.
   */
 object Dedup {
-
-  /** Env-guarded phase log for the propagation engine (GRAFT_PROP_LOG=1):
-    * stderr-only timing of transitiveClustersOver's seed validation and
-    * per-round actions — the measurement hook behind the round-16
-    * optimization work. Zero cost when unset. */
-  private val propLog = sys.env.contains("GRAFT_PROP_LOG")
-  private def plog[A](label: String)(f: => A): A =
-    if (!propLog) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[prop] $label%-28s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
-
-  /** Hash-partition `df` on `keys` into exactly `n` partitions, sort
-    * within partitions on the same keys, and lazily localCheckpoint —
-    * so the resulting LogicalRDD CAPTURES HashPartitioning(keys, n) and
-    * the sort order, and every later join/aggregate on those keys
-    * consumes the frame with NO exchange and NO sort (the r17 loop-input
-    * discipline). AQE is disabled while the checkpoint Dataset is
-    * created: `AdaptiveSparkPlanExec` does not override
-    * `outputPartitioning`, so a checkpoint taken under AQE records
-    * UnknownPartitioning and every downstream join re-exchanges the
-    * frame (verified empirically; the PlanAuditSpec propagation-round
-    * audit pins the working shape). Only plan CAPTURE runs non-adaptive
-    * — the one REPARTITION_BY_NUM shuffle below is exempt from AQE
-    * coalescing anyway, and consumers plan under the session's normal
-    * conf. */
-  private[graft] def checkpointPartitioned(df: DataFrame, n: Int,
-                                           keys: Column*): DataFrame = {
-    val s = df.sparkSession
-    val key = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(key)
-    try {
-      s.conf.set(key, "false")
-      df.repartition(n, keys: _*).sortWithinPartitions(keys: _*)
-        .localCheckpoint(false)
-    } finally s.conf.set(key, prev)
-  }
 
   /** Canonical text normalization: trim, lowercase, collapse whitespace. */
   def normText(text: Column): Column =
@@ -196,6 +156,7 @@ object Dedup {
     // does not share subplans across branches — without this the md5
     // signature computation (and the corpus scan under it) runs twice.
     // Band rows are (id, band, key): tiny relative to the corpus.
+    // caller-owned: the returned DataFrame reads this cache
     val br = bandRows(df, idCol, textCol, k, bands).cache()
     val bucketMin = br.groupBy(col("band"), col("key"))
       .agg(min(col("id")).as("bucket_min"))
@@ -231,8 +192,8 @@ object Dedup {
   /** As [[minhashClustersTransitive]], also returning the number of
     * propagation rounds run (the convergence counter: strictly less than
     * `maxIters` iff the labels reached a fixed point). The returned frame
-    * reads a cached relation; callers running inside a larger flow may
-    * `unpersist()` it after consumption. */
+    * reads the last round's checkpointed labels, which the caller owns
+    * (the [[Frames]] ownership rule). */
   def minhashClustersTransitiveStats(df: DataFrame, idCol: String, textCol: String,
                                      k: Int = 16, bands: Int = 4,
                                      maxIters: Int = 30,
@@ -258,13 +219,17 @@ object Dedup {
     * silently wrong labels) without running the propagation it guards.
     * Callers whose construction proves transitive connectivity opt out
     * with `validateSeeds = false` — the relaxed requirement is then only
-    * that each in-rows seed label be in the SAME component as its node. */
+    * that each in-rows seed label be in the SAME component as its node.
+    *
+    * Returns the last round's (id, cluster_id) frame itself, caller-owned
+    * (the [[Frames]] ownership rule): a caller that materializes its own
+    * result eagerly can `adopt` it and release it with its scope. */
   def transitiveClustersOver(rows: DataFrame,
                              maxIters: Int = 30,
                              requireConvergence: Boolean = true,
                              seeds: Option[DataFrame] = None,
-                             validateSeeds: Boolean = true): (DataFrame, Int) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+                             validateSeeds: Boolean = true)
+      : (DataFrame, Int) = Frames { f =>
     // LAZY localCheckpoint, not a bare persist (r16, guide §7.3 "driver
     // thread dumps → Optimizer"): a persisted frame keeps its FULL logical
     // plan, and every round's action re-analyzes and re-optimizes that
@@ -274,8 +239,8 @@ object Dedup {
     // in DRIVER gaps between jobs, one 11 s planning pause per early
     // round. Checkpointing truncates br to a LogicalRDD: the blocks
     // materialize on the same first action that used to populate the
-    // cache, and every round now plans against a leaf. RDD blocks are
-    // released in releaseLabels style at the end.
+    // cache, and every round now plans against a leaf. The scope
+    // releases the blocks on every exit path ([[Frames]]).
     //
     // r17 (guide §2.4 remove shuffles outright): the loop joins the edge
     // table TWICE per round — by id (labels hop) and by (band, key)
@@ -308,14 +273,14 @@ object Dedup {
     // partition-size band — capped by the session setting, which a
     // cluster deployment sizes to its scale. The count action doubles as
     // the materialization the labels⁰ action used to perform.
-    val br0 = rows.localCheckpoint(false)
-    val edgeRows = plog("edge-count")(br0.count())
+    val br0 = f.lazily(rows)
+    val edgeRows = br0.count()
     val targetRowsPerPart = 1000000L
     val shufP = rows.sparkSession.sessionState.conf.numShufflePartitions
     val loopP = math.max(1L, math.min(shufP.toLong,
       (edgeRows + targetRowsPerPart - 1L) / targetRowsPerPart)).toInt
-    val br = checkpointPartitioned(br0, loopP, col("id"))
-    val brByBucket = checkpointPartitioned(br, loopP, col("band"), col("key"))
+    val br = f.partitioned(br0, loopP, col("id"))
+    val brByBucket = f.partitioned(br, loopP, col("band"), col("key"))
     // SEED-CONTRACT ENFORCEMENT (one bounded pre-flight action, O(subgraph)
     // joins on uniform keys): the documented contract below was previously
     // trust-based — a caller whose seed label names an in-rows node of a
@@ -327,7 +292,7 @@ object Dedup {
     // Labels absent from `rows` are fine (chasing them is a no-op).
     // `validateSeeds = false` opts out for callers with a proven-by-
     // construction seed set on very large subgraphs.
-    seeds.filter(_ => validateSeeds).foreach { sd => plog("seed-validate") {
+    seeds.filter(_ => validateSeeds).foreach { sd =>
       val nodeIds = br.select(col("id")).distinct()
       // only seeds whose id IS a node can mislead the propagation — a
       // seed for an absent id never enters labels⁰ and is a harmless
@@ -347,20 +312,15 @@ object Dedup {
         .join(sharedBucket, Seq("id", "label"), "left_anti")
         .select(col("id"), col("label"))
         .limit(1).collect()
-      if (bad.nonEmpty) {
-        releaseLabels(brByBucket)
-        releaseLabels(br)
-        releaseLabels(br0)
-        throw new IllegalArgumentException(
-          s"transitiveClustersOver: seed (id=${bad.head.get(0)}, " +
-            s"label=${bad.head.get(1)}) violates the seed contract — the " +
-            "label names a node of `rows` but shares no (band, key) bucket " +
-            "with its seeded node; propagation would chase it as if " +
-            "reachable and could ship wrong labels silently. Add an " +
-            "explicit (band, key) membership row linking the seed label " +
-            "to its node's bucket, or drop the seed.")
-      }
-    }}
+      if (bad.nonEmpty) throw new IllegalArgumentException(
+        s"transitiveClustersOver: seed (id=${bad.head.get(0)}, " +
+          s"label=${bad.head.get(1)}) violates the seed contract — the " +
+          "label names a node of `rows` but shares no (band, key) bucket " +
+          "with its seeded node; propagation would chase it as if " +
+          "reachable and could ship wrong labels silently. Add an " +
+          "explicit (band, key) membership row linking the seed label " +
+          "to its node's bucket, or drop the seed.")
+    }
     // labels⁰: each node's own id, unless `seeds` (id, label) carries a
     // prior assignment — the incremental-maintenance entry point, where
     // corpus nodes start at their persisted family label and only the
@@ -372,12 +332,12 @@ object Dedup {
     // connected to its seeded node by an explicit (band, key) membership
     // row the caller adds. Unseeded runs satisfy this
     // trivially — a propagated label is always a real member's id.
-    var labels = seeds.fold(
-      br.select(col("id")).distinct().withColumn("label", col("id"))) { sd =>
+    var labels = f.persist(seeds.fold(
+      br.select(col("id")).distinct().withColumn("cluster_id", col("id"))) { sd =>
       br.select(col("id")).distinct()
         .join(sd.select(col("id"), col("label").as("__seed")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__seed"), col("id")).as("label"))
-    }.persist(lvl)
+        .select(col("id"), coalesce(col("__seed"), col("id")).as("cluster_id"))
+    })
     var iters = 0
     var converged = false
     // Convergence WITHOUT a per-round join: min-label propagation is
@@ -389,16 +349,17 @@ object Dedup {
     // per round). Seeded from labels⁰ (= ids) so a no-op first round is
     // detected exactly like the old join-based check; the seeding action
     // also materializes the labels cache before the loop.
-    var prevSum: java.math.BigDecimal = plog("labels0+sum")(
-      labels.agg(sum(col("label").cast("decimal(38,0)"))).head.getDecimal(0))
-    while (!converged && iters < maxIters) plog(s"round ${iters + 1}") {
+    var prevSum: java.math.BigDecimal =
+      labels.agg(sum(col("cluster_id").cast("decimal(38,0)"))).head.getDecimal(0)
+    while (!converged && iters < maxIters) {
       // labels hop reads the id-partitioned copy, bucket hop the
       // (band, key)-partitioned copy — neither join exchanges or sorts
       // the edge side (r17, see the checkpoint comment above)
       val bucketLabel = br.join(labels, "id")
-        .groupBy(col("band"), col("key")).agg(min(col("label")).as("blabel"))
+        .groupBy(col("band"), col("key"))
+        .agg(min(col("cluster_id")).as("blabel"))
       var next = brByBucket.join(bucketLabel, Seq("band", "key"))
-        .groupBy(col("id")).agg(min(col("blabel")).as("label"))
+        .groupBy(col("id")).agg(min(col("blabel")).as("cluster_id"))
       // POINTER JUMPING (the Shiloach–Vishkin shortcut): after the bucket
       // hop, chase label ← min(label, label(label)) twice. Each chase is
       // a self-join of the LABEL table (O(docs), ≪ the edge table the
@@ -417,7 +378,7 @@ object Dedup {
       // adaptiveBuckets); the single sum action below materializes the
       // whole chain with each stage computed exactly once
       var stages: List[DataFrame] = Nil
-      next = next.persist(lvl)
+      next = f.persist(next)
       stages ::= next
       // ONE chase per round (r16; was 2): a single label(label) hop per
       // round is the classic pointer-jumping form and already gives the
@@ -426,12 +387,12 @@ object Dedup {
       // with a knob sweep at sf0.1: rounds identical at 2/3/4 chases)
       // while paying one extra persist + self-join every round.
       for (_ <- 1 to 1) {
-        val hop = next.select(col("id").as("__lid"), col("label").as("__ll"))
-        next = next.join(hop, col("label") === col("__lid"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("__ll"), col("label")))
-              .as("label"))
-          .persist(lvl)
+        val hop = next.select(col("id").as("__lid"),
+          col("cluster_id").as("__ll"))
+        next = f.persist(next
+          .join(hop, col("cluster_id") === col("__lid"), "left")
+          .select(col("id"), least(col("cluster_id"),
+            coalesce(col("__ll"), col("cluster_id"))).as("cluster_id")))
         stages ::= next
       }
       // EVERY round ends in a (lazy) localCheckpoint: each self-join
@@ -440,17 +401,18 @@ object Dedup {
       // plan string hits 2 GB by round 5 and OOMs the driver. The
       // checkpoint rides the same sum action that materializes the
       // round; the persisted jump stages are released right after.
-      next = next.localCheckpoint(false)
-      val sumNow = next.agg(sum(col("label").cast("decimal(38,0)")))
+      next = f.lazily(next)
+      val sumNow = next.agg(sum(col("cluster_id").cast("decimal(38,0)")))
         .head.getDecimal(0)
-      releaseLabels(labels)
-      stages.foreach(_.unpersist())
+      f.release(labels)
+      stages.foreach(f.release)
       labels = next
       iters += 1
       // round 1's action has materialized brByBucket (the bucket hop
       // reads it), so the unpartitioned staging copy can go now — its
-      // blocks would otherwise triple the edge footprint for the loop
-      if (iters == 1) releaseLabels(br0)
+      // blocks would otherwise triple the edge footprint for the loop (a
+      // no-op on later rounds: the scope no longer holds it)
+      f.release(br0)
       // sums are null exactly when the frame is empty: empty input is a
       // trivially converged fixed point (the old join-count check agreed)
       converged =
@@ -458,9 +420,6 @@ object Dedup {
         else prevSum != null && prevSum.compareTo(sumNow) == 0
       prevSum = sumNow
     }
-    releaseLabels(brByBucket)
-    releaseLabels(br)
-    releaseLabels(br0) // no-op unless the loop never ran
     // Directed failure on non-convergence: a component deeper than
     // maxIters hops (boilerplate families at corpus scale) would
     // otherwise ship WRONG cluster labels with no error — the one
@@ -468,16 +427,14 @@ object Dedup {
     // counter already proves the fixed point, so the guard is free.
     // requireConvergence=false opts a caller into inspecting the
     // (labels, iters) pair itself (iters < maxIters iff converged).
-    if (requireConvergence && !converged) {
-      releaseLabels(labels)
-      throw new IllegalStateException(
-        s"transitiveClustersOver: label propagation did NOT reach its " +
-          s"fixed point within maxIters=$maxIters rounds (labels were " +
-          s"still changing at the last round). The component graph has a " +
-          s"chain deeper than $maxIters hops; raise maxIters, or pass " +
-          s"requireConvergence=false to receive the partial labels.")
-    }
-    (labels.select(col("id"), col("label").as("cluster_id")), iters)
+    if (requireConvergence && !converged) throw new IllegalStateException(
+      s"transitiveClustersOver: label propagation did NOT reach its " +
+        s"fixed point within maxIters=$maxIters rounds (labels were " +
+        s"still changing at the last round). The component graph has a " +
+        s"chain deeper than $maxIters hops; raise maxIters, or pass " +
+        s"requireConvergence=false to receive the partial labels.")
+    // the last round's (id, cluster_id) frame is the result: caller-owned
+    (f.keep(labels), iters)
   }
 
   /** Transitive RUN-level dedup families: connected components over the
@@ -500,29 +457,28 @@ object Dedup {
   def winnowClustersTransitive(docs: DataFrame, idCol: String = "doc_id",
                                textCol: String = "text", n: Int = 4,
                                w: Int = 4, maxIters: Int = 30,
-                               wideHash: Boolean = false): DataFrame = {
+                               wideHash: Boolean = false)
+      : DataFrame = Frames { f =>
     // distinct (id, h): a hash selected at several positions of one doc
     // is ONE membership edge (dups only inflate every propagation
     // round's bucket table); cached — two consumers (the shared-hash
     // aggregate and the edge join). The wide path is distinct per doc
     // already (kernel-level dedup) — no shuffle needed.
-    val fp = (if (wideHash)
+    val fp = f.persist(if (wideHash)
         winnowWide(docs, idCol, textCol, n, w)
           .select(col(idCol).as("id"), col("h"))
       else winnow(docs, idCol, textCol, n, w)
         .select(col(idCol).as("id"), col("h")).distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val shared = fp.groupBy(col("h"))
       .agg(count(lit(1)).as("__nd"))
       .filter(col("__nd") >= 2).select(col("h"))
     val rows = fp.join(shared, Seq("h"))
       .select(col("id"), lit(0).as("band"),
         col("h").cast("string").as("key"))
+    // propagation materializes its own label frames (every round's
+    // monotone-sum action), so the scope releases fp on return rather
+    // than leaking a cached relation per invocation for the session
     val clustered = transitiveClustersOver(rows, maxIters)._1
-    // propagation has materialized its own label cache by now (every
-    // round's monotone-sum action) — release fp here rather than leaking
-    // a cached relation per invocation for the session lifetime
-    fp.unpersist()
     // docs with no shared fingerprint are their own singleton cluster
     docs.select(col(idCol).as("id")).join(clustered, Seq("id"), "left")
       .select(col("id"),
@@ -613,10 +569,9 @@ object Dedup {
                           corpusFamilies: DataFrame,
                           batchFps: DataFrame, batchIds: DataFrame,
                           maxIters: Int = 8,
-                          assertBucketScan: Boolean = false): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val bfp = batchFps.select(col("id"), col("h")).distinct()
-      .persist(lvl)
+                          assertBucketScan: Boolean = false)
+      : DataFrame = Frames { f =>
+    val bfp = f.persist(batchFps.select(col("id"), col("h")).distinct())
     // corpus memberships on touched hashes only: a LEFT SEMI of the index
     // against the batch hashes — h is the index's bucket column, so the
     // corpus side plans with no exchange and the (small) batch-hash side
@@ -667,11 +622,9 @@ object Dedup {
       .unionByName(famTouched.select(col("family_id").as("id"),
         lit(0).as("band"), col("h").cast("string").as("key")))
     val labeled = transitiveClustersOver(rows, maxIters)._1
-    val out = batchIds.select(col("id")).join(labeled, Seq("id"), "left")
+    batchIds.select(col("id")).join(labeled, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("cluster_id"), col("id")).as("family_id"))
-    bfp.unpersist()
-    out
   }
 
   /** Dedup-and-reweight: collapse every near-dup cluster to its MIN-ID
@@ -705,26 +658,6 @@ object Dedup {
         col("weight"))
   }
 
-  /** Free a round's label table. `unpersist()` covers the persisted
-    * rounds; a localCheckpoint'ed Dataset has NO CacheManager entry (its
-    * blocks live on the raw RDD), so the checkpointed RDD must be
-    * unpersisted directly or each checkpoint round leaks a full label-table
-    * copy into the block manager until GC. */
-  private def releaseLabels(df: DataFrame): Unit = {
-    df.unpersist()
-    // ROOT-only LogicalRDD release: a round's labels end in their own
-    // localCheckpoint, so the materialization to drop is the plan ROOT.
-    // A deep foreach (the pre-r16 form) also unpersisted every NESTED
-    // LogicalRDD — e.g. the checkpointed propagation input `br` inside
-    // labels⁰'s plan, whose blocks later rounds still read (checkpointed
-    // RDDs cannot be recomputed once dropped).
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
-  }
-
   /** Chunk-level exact dedup — the sub-document granularity of
     * exact-substring dedup (Lee et al. 2021, "Deduplicating Training Data
     * Makes Language Models Better"): documents are cut into disjoint
@@ -748,7 +681,9 @@ object Dedup {
     // (id, chunk-hash) rows; md5 keeps the shuffle key narrow and uniform
     val rows = df.select(col(idCol).as("id"), explode(chunks).as("chunk"))
       .select(col("id"), md5(col("chunk")).as("h"))
-      .cache() // consumed by both the keeper aggregate and the verdict join
+      // consumed by both the keeper aggregate and the verdict join;
+      // caller-owned: the returned DataFrame reads this cache
+      .cache()
     val keeper = rows.groupBy(col("h")).agg(min(col("id")).as("keep_id"))
     rows.join(keeper, "h")
       .groupBy(col("id"))
@@ -781,7 +716,7 @@ object Dedup {
       minhashSignature(col(textCol), k).as("sig"),
       array_distinct(shingles(col(textCol), 3)).as("sh"))
       .withColumn("nsh", size(col("sh")).cast("long"))
-      .cache()
+      .cache() // caller-owned: the returned DataFrame reads this cache
     val br = base.select(col("id"), explode(array(
         (0 until bands).map(b =>
           struct(lit(b).as("band"), bandKey(col("sig"), b, rowsPerBand).as("key"))): _*
@@ -839,7 +774,7 @@ object Dedup {
         minhashSignature(col(textCol), k).as("sig"),
         array_distinct(tokens(col(textCol))).as("ts"))
       .withColumn("nt", size(col("ts")).cast("long"))
-      .cache()
+      .cache() // caller-owned: the returned DataFrame reads this cache
     val br = base.select(col("id"), explode(array(
         (0 until bands).map(b =>
           struct(lit(b).as("band"),
@@ -1205,20 +1140,19 @@ object Dedup {
     * share-a-shingle join's qualifying pairs. */
   def setSimilarityJoin(docs: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text", n: Int = 8,
-                        tNum: Long = 4L, tDen: Long = 5L): DataFrame = {
+                        tNum: Long = 4L,
+                        tDen: Long = 5L): DataFrame = Frames { f =>
     require(tNum > 0 && tNum < tDen, s"threshold must be in (0,1): $tNum/$tDen")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // distinct shingle-hash SET per doc (set semantics — positions and
     // multiplicity do not matter for Jaccard)
-    val sh = docs
+    val sh = f.persist(docs
       .select(col(idCol).as("id"), split(col(textCol), " ").as("__t"))
       .filter(size(col("__t")) >= n)
       .select(col("id"), explode(transform(
         sequence(lit(1), size(col("__t")) - (n - 1)),
         i => graft.catalyst.Md5Prefix60(
           concat_ws(" ", slice(col("__t"), i, lit(n)))))).as("h"))
-      .distinct()
-      .persist(lvl)
+      .distinct())
     val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("nsz"))
     val df = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
     // global frequency order: position of each shingle within its doc
@@ -1244,16 +1178,13 @@ object Dedup {
       .join(sh.select(col("id").as("ib"), col("h")), Seq("ib", "h"))
       .groupBy(col("ia"), col("ib"), col("na"), col("nb"))
       .agg(count(lit(1)).as("inter"))
-    val res = inter
+    f.result(inter
       .filter(lit(tNum + tDen) * col("inter") >=
         lit(tNum) * (col("na") + col("nb")))
       .select(col("ia").as("id_a"), col("ib").as("id_b"),
         col("inter").cast("bigint").as("inter"),
         expr("(1000000 * inter) div (na + nb - inter)")
-          .cast("bigint").as("jaccard_micros"))
-      .localCheckpoint(true)
-    sh.unpersist()
-    res
+          .cast("bigint").as("jaccard_micros")))
   }
 
   def duplicatedSpans(docs: DataFrame, idCol: String = "doc_id",

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.exec.Frames
 
 /** Graph analytics over co-occurrence projections — the OLAP-adjacent
   * graph class (entity graphs mined from fact tables: co-purchase,
@@ -21,26 +21,11 @@ import org.apache.spark.storage.StorageLevel
   *    O(V × k) state, no per-vertex full sort, wedge counts bounded by
   *    V·k² downstream no matter how dense the raw projection gets;
   *  - PageRank is EXACT-INTEGER (floor division, both engines identical),
-  *    one keyed shuffle per iteration, ranks persisted per iteration and
-  *    the previous one unpersisted (the q186 iteration discipline).
+  *    one keyed shuffle per iteration, each iteration's ranks a loop
+  *    frame ([[graft.exec.Frames]]) released once its successor is
+  *    materialized (the q186 iteration discipline).
   */
 object Graph {
-
-  /** Release a frame materialized through persist OR localCheckpoint:
-    * drops the CacheManager entry plus the ROOT LogicalRDD's blocks.
-    * Root-only on purpose (the r16 releaseLabels lesson): a deep plan
-    * walk also unpersists NESTED checkpointed leaves — e.g. the
-    * lineage-truncated edge table inside an iteration frame's plan —
-    * whose blocks later iterations still read and which, being
-    * checkpointed, can never be recomputed. */
-  private[graft] def releaseRoot(df: DataFrame): Unit = if (df != null) {
-    df.unpersist()
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
-  }
 
   /** ADDITIVE pair-weight rows — the artifact form of the co-occurrence
     * graph: w is a plain co-listing count, so arrival maintenance is
@@ -107,7 +92,8 @@ object Graph {
     * contributions fit int64 while indeg·8.5·10⁸ < 2⁶³ (~10⁹ in-edges
     * per vertex — beyond any degree-capped graph). Returns the top `k`
     * (rank desc, vertex asc). */
-  def pageRankTopK(edges: DataFrame, iters: Int, k: Int): DataFrame = {
+  def pageRankTopK(edges: DataFrame, iters: Int,
+                   k: Int): DataFrame = Frames { f =>
     val out = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     // LAZY localCheckpoints, not bare persists (r16, the
     // transitiveClustersOver lesson): a persist caches data but keeps
@@ -116,40 +102,27 @@ object Graph {
     // reference — driver planning grows linearly in iterations. The
     // checkpoint truncates e/verts/rank to LogicalRDD leaves; blocks
     // materialize on the same first action that used to fill the cache.
-    val e = edges.join(out, Seq("src"))
-      .select(col("src"), col("dst"), col("outdeg"))
-      .localCheckpoint(false)
+    val e = f.lazily(edges.join(out, Seq("src"))
+      .select(col("src"), col("dst"), col("outdeg")))
     // vertex set = src ∪ dst: on an asymmetric edge input a dst-only
     // (dangling) vertex still ranks — it accumulates mass and passes
     // none on, the standard sink semantics. (The symmetric co-occurrence
     // callers see the identical set either way, which is why their
     // oracles can derive it from DISTINCT src.)
-    val verts = e.select(col("src").as("v"))
-      .union(e.select(col("dst").as("v"))).distinct()
-      .localCheckpoint(false)
+    val verts = f.lazily(e.select(col("src").as("v"))
+      .union(e.select(col("dst").as("v"))).distinct())
     var rank = verts.select(col("v"), lit(1000000000L).as("r"))
-    var prev: DataFrame = null
     (1 to iters).foreach { _ =>
-      val contrib = e.join(rank, e("src") === rank("v"))
-        .select(col("dst"), expr("(r * 85) div (100 * outdeg)").as("c"))
-      val sums = contrib.groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      val next = verts.join(sums, verts("v") === sums("dst"), "left_outer")
-        .select(verts("v"),
-          (lit(150000000L) + coalesce(col("s"), lit(0L))).as("r"))
-        .localCheckpoint(false)
+      val next = f.lazily(prNext(e, verts, rank))
       next.count() // materialize before dropping the previous iteration
-      releaseRoot(prev)
-      prev = next
+      f.release(rank)
       rank = next
     }
-    // eager localCheckpoint: the k-row result keeps its blocks after the
-    // iteration frames are released
-    val res = rank.orderBy(col("r").desc, col("v"))
+    // eager: the k-row result keeps its blocks after the iteration
+    // frames are released
+    f.result(rank.orderBy(col("r").desc, col("v"))
       .limit(k)
-      .select(col("v").as("vertex"), col("r").as("rank_scaled"))
-      .localCheckpoint(true)
-    releaseRoot(e); releaseRoot(verts); releaseRoot(prev)
-    res
+      .select(col("v").as("vertex"), col("r").as("rank_scaled")))
   }
 
   /** WEIGHTED exact-integer PageRank: like [[pageRankTopK]] but each
@@ -161,37 +134,30 @@ object Graph {
     * pair actually co-occurs), which plain PageRank discards after the
     * cap. */
   def pageRankWeightedTopK(edges: DataFrame, iters: Int,
-                           k: Int): DataFrame = {
+                           k: Int): DataFrame = Frames { f =>
     val sw = edges.groupBy(col("src")).agg(sum(col("w")).as("sw"))
     // lazy localCheckpoints — the pageRankTopK planning rationale
-    val e = edges.join(sw, Seq("src"))
-      .select(col("src"), col("dst"), col("w"), col("sw"))
-      .localCheckpoint(false)
+    val e = f.lazily(edges.join(sw, Seq("src"))
+      .select(col("src"), col("dst"), col("w"), col("sw")))
     // src ∪ dst — the pageRankTopK dangling-vertex note applies
-    val verts = e.select(col("src").as("v"))
-      .union(e.select(col("dst").as("v"))).distinct()
-      .localCheckpoint(false)
+    val verts = f.lazily(e.select(col("src").as("v"))
+      .union(e.select(col("dst").as("v"))).distinct())
     var rank = verts.select(col("v"), lit(1000000000L).as("r"))
-    var prev: DataFrame = null
     (1 to iters).foreach { _ =>
       val contrib = e.join(rank, e("src") === rank("v"))
         .select(col("dst"), expr("(r * 85 * w) div (100 * sw)").as("c"))
       val sums = contrib.groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      val next = verts.join(sums, verts("v") === sums("dst"), "left_outer")
-        .select(verts("v"),
-          (lit(150000000L) + coalesce(col("s"), lit(0L))).as("r"))
-        .localCheckpoint(false)
+      val next = f.lazily(
+        verts.join(sums, verts("v") === sums("dst"), "left_outer")
+          .select(verts("v"),
+            (lit(150000000L) + coalesce(col("s"), lit(0L))).as("r")))
       next.count()
-      releaseRoot(prev)
-      prev = next
+      f.release(rank)
       rank = next
     }
-    val res = rank.orderBy(col("r").desc, col("v"))
+    f.result(rank.orderBy(col("r").desc, col("v"))
       .limit(k)
-      .select(col("v").as("vertex"), col("r").as("rank_scaled"))
-      .localCheckpoint(true)
-    releaseRoot(e); releaseRoot(verts); releaseRoot(prev)
-    res
+      .select(col("v").as("vertex"), col("r").as("rank_scaled")))
   }
 
   /** PageRank iterated to a TOLERANCE-gated stop (round-13 verdict item
@@ -241,14 +207,14 @@ object Graph {
 
   def pageRankConverge(edges: DataFrame, epsUnits: Long,
                        initRank: Option[DataFrame] = None,
-                       maxIters: Int = 24): (DataFrame, Int) = {
+                       maxIters: Int = 24): (DataFrame, Int) = Frames { f =>
     require(epsUnits >= 0, s"pageRankConverge: epsUnits must be >= 0")
     val out = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     // lazy localCheckpoints — the pageRankTopK planning rationale
-    val e = edges.join(out, Seq("src"))
-      .select(col("src"), col("dst"), col("outdeg")).localCheckpoint(false)
-    val verts = e.select(col("src").as("v"))
-      .union(e.select(col("dst").as("v"))).distinct().localCheckpoint(false)
+    val e = f.lazily(edges.join(out, Seq("src"))
+      .select(col("src"), col("dst"), col("outdeg")))
+    val verts = f.lazily(e.select(col("src").as("v"))
+      .union(e.select(col("dst").as("v"))).distinct())
     // rank⁰ needs no checkpoint of its own: its plan is a projection (or
     // one small join) over the already-truncated verts leaf — round 1
     // recomputes it from verts' blocks for the price of a map (r16)
@@ -268,23 +234,21 @@ object Graph {
       // whose blocks materialize under the same max-|Δr| collect that
       // decides the stop — previously an eager checkpoint (job 1) was
       // followed by the diff collect (job 2) every round.
-      val next = prNext(e, verts, rank).localCheckpoint(false)
+      val next = f.lazily(prNext(e, verts, rank))
       // vertex set is fixed across rounds (verts), so an inner join
       // covers every vertex — max |Δr| is the stopping statistic
       val maxDiff = next.as("n")
         .join(rank.as("o"), col("n.v") === col("o.v"))
         .agg(max(abs(col("n.r") - col("o.r"))).as("d"))
         .collect().head.getLong(0)
-      releaseRoot(rank)
+      f.release(rank)
       rank = next
       if (maxDiff <= epsUnits) rounds = i
     }
     require(rounds > 0, s"pageRankConverge: max |Δr| still above " +
       s"$epsUnits units after $maxIters rounds — raise maxIters or " +
       "loosen the tolerance")
-    val res = rank.select(col("v"), col("r")).localCheckpoint(true)
-    releaseRoot(e); releaseRoot(verts); releaseRoot(rank)
-    (res, rounds)
+    (f.result(rank.select(col("v"), col("r"))), rounds)
   }
 
   /** Connected components over the undirected support, via the repo's
@@ -336,18 +300,16 @@ object Graph {
     * cluster ids) would still yield a consistent partition here, but the
     * output labels could differ from the persisted ids. */
   def componentsIncremental(corpusLabels: DataFrame,
-                            newEdges: DataFrame): DataFrame = {
-    val und = newEdges.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+                            newEdges: DataFrame): DataFrame = Frames { f =>
+    val und = f.persist(newEdges.select(least(col("src"), col("dst")).as("a"),
+      greatest(col("src"), col("dst")).as("b")).distinct())
     val touchedV = und.select(col("a").as("id"))
       .union(und.select(col("b").as("id"))).distinct()
     val touchedClusters = corpusLabels
       .join(touchedV, Seq("id"), "left_semi")
       .select(col("cluster_id")).distinct()
-    val members = corpusLabels
-      .join(touchedClusters, Seq("cluster_id"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val members = f.persist(corpusLabels
+      .join(touchedClusters, Seq("cluster_id"), "left_semi"))
     // CLUSTER-REP REDUCTION (r16 optimization, guide §2.3 — shuffle fewer
     // bytes per propagation round): untouched members of a touched
     // cluster never influence the propagation — their only contribution
@@ -364,9 +326,8 @@ object Graph {
     // Every member of a touched cluster then relabels through ONE rep-map
     // join at the end, instead of carrying O(members) rows through every
     // propagation round.
-    val touchedLinks = corpusLabels
-      .join(touchedV, Seq("id"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val touchedLinks = f.persist(corpusLabels
+      .join(touchedV, Seq("id"), "left_semi"))
     val edgeKey = concat_ws("_", col("a"), col("b"))
     val rows = und
       .select(col("a").as("id"), lit(0).as("band"), edgeKey.as("key"))
@@ -377,7 +338,8 @@ object Graph {
       .union(touchedLinks.select(col("cluster_id").as("id"),
         lit(1).as("band"),
         concat(lit("m_"), col("cluster_id")).as("key")).distinct())
-    val (relabeled, _) = Dedup.transitiveClustersOver(rows)
+    // the result below is eager, so this scope releases the label frame
+    val relabeled = f.adopt(Dedup.transitiveClustersOver(rows)._1)
     // rep map: the new label of each touched cluster's rep carries to
     // every member (reps are nodes of `rows`, so `relabeled` covers them)
     val repMap = relabeled
@@ -391,12 +353,9 @@ object Graph {
       .select(col("id"), col("cluster_id"))
     val untouched = corpusLabels
       .join(members.select(col("id")), Seq("id"), "left_anti")
-    val res = untouched.select(col("id"), col("cluster_id"))
+    f.result(untouched.select(col("id"), col("cluster_id"))
       .unionByName(relabeledMembers)
-      .unionByName(newVerts)
-      .localCheckpoint(true)
-    und.unpersist(); members.unpersist(); touchedLinks.unpersist()
-    res
+      .unionByName(newVerts))
   }
 
   /** Local clustering coefficients over the undirected support: per
@@ -405,13 +364,12 @@ object Graph {
     * three corners), d(v) the distinct-neighbor degree. Vertices with
     * d < 2 are excluded (coefficient undefined). Returns the top `k` by
     * (coeff desc, vertex asc) — deterministic, vertex ids unique. */
-  def clusteringTopK(edges: DataFrame, k: Int): DataFrame = {
+  def clusteringTopK(edges: DataFrame, k: Int): DataFrame = Frames { f =>
     // lazy localCheckpoint: und is referenced 4× in one plan (degree +
     // three wedge-join legs) — truncating it plans the caller's edge
     // lineage once instead of four times (r16)
-    val und = edges.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")).distinct()
-      .localCheckpoint(false)
+    val und = f.lazily(edges.select(least(col("src"), col("dst")).as("a"),
+      greatest(col("src"), col("dst")).as("b")).distinct())
     val deg = und.select(col("a").as("v"))
       .union(und.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
@@ -421,17 +379,14 @@ object Graph {
         col("x") === col("e3.a") && col("z") === col("e3.b"))
       .select(explode(array(col("x"), col("y"), col("z"))).as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("t"))
-    val res = deg.filter(col("d") >= 2)
+    f.result(deg.filter(col("d") >= 2)
       .join(tri, Seq("v"), "left_outer")
       .select(col("v").as("vertex"), col("d").as("degree"),
         coalesce(col("t"), lit(0L)).as("triangles"),
         expr("(2000000 * coalesce(t, 0)) div (d * (d - 1))")
           .as("coeff_micros"))
       .orderBy(col("coeff_micros").desc, col("vertex"))
-      .limit(k)
-      .localCheckpoint(true)
-    releaseRoot(und)
-    res
+      .limit(k))
   }
 
   /** k-core decomposition step: the maximal subgraph where every vertex
@@ -446,14 +401,14 @@ object Graph {
     * Returns per-vertex rows (v, degree-in-core) of the surviving core;
     * empty when the whole graph peels away. One keyed shuffle per round
     * over a SHRINKING edge set. */
-  def kCore(edges: DataFrame, k: Int, rounds: Int = 8): DataFrame = {
+  def kCore(edges: DataFrame, k: Int,
+            rounds: Int = 8): DataFrame = Frames { f =>
     // lazy localCheckpoints per peel (r16): a persisted round kept the
     // full join chain back to the caller's edge lineage in its plan, so
     // each peel's count re-planned a tree one round deeper — the
     // pageRankTopK planning rationale applied to a shrinking loop
-    var und = edges.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")).distinct()
-      .localCheckpoint(false)
+    var und = f.lazily(edges.select(least(col("src"), col("dst")).as("a"),
+      greatest(col("src"), col("dst")).as("b")).distinct())
     var nEdges = und.count()
     var converged = nEdges == 0L
     var r = 0
@@ -463,31 +418,24 @@ object Graph {
         .groupBy(col("v")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k)
         .select(col("v"))
-      val next = und
+      val next = f.lazily(und
         .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .localCheckpoint(false)
+        .select(col("a"), col("b")))
       val nNext = next.count()
-      releaseRoot(und)
+      f.release(und)
       und = next
       converged = nNext == nEdges || nNext == 0L
       nEdges = nNext
       r += 1
     }
-    if (!converged) {
-      releaseRoot(und)
-      throw new IllegalStateException(
-        s"kCore: peeling had not converged after $rounds rounds (edges " +
-          s"still shrinking, $nEdges left) — raise `rounds`; shipping an " +
-          "unconverged peel would silently return a superset of the core.")
-    }
-    val res = und.select(col("a").as("v"))
+    if (!converged) throw new IllegalStateException(
+      s"kCore: peeling had not converged after $rounds rounds (edges " +
+        s"still shrinking, $nEdges left) — raise `rounds`; shipping an " +
+        "unconverged peel would silently return a superset of the core.")
+    f.result(und.select(col("a").as("v"))
       .union(und.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("core_degree"))
-      .localCheckpoint(true)
-    releaseRoot(und)
-    res
+      .groupBy(col("v")).agg(count(lit(1)).as("core_degree")))
   }
 
   /** Exact triangle census over the UNDIRECTED support of the capped
@@ -496,12 +444,11 @@ object Graph {
     * by e₃(a,c) — counts each triangle exactly once, and the wedge
     * count is bounded by V·k² under the degree cap (never Σ deg² of the
     * raw projection). One row out: (n_vertices, n_edges, n_triangles). */
-  def triangleStats(edges: DataFrame): DataFrame = {
+  def triangleStats(edges: DataFrame): DataFrame = Frames { f =>
     // lazy localCheckpoint: und is referenced 5× in one plan — the
     // clusteringTopK planning rationale (r16)
-    val und = edges.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")).distinct()
-      .localCheckpoint(false)
+    val und = f.lazily(edges.select(least(col("src"), col("dst")).as("a"),
+      greatest(col("src"), col("dst")).as("b")).distinct())
     val nV = und.select(col("a").as("v"))
       .union(und.select(col("b").as("v"))).distinct()
       .agg(count(lit(1)).as("n_vertices"))
@@ -512,9 +459,7 @@ object Graph {
     val nT = wedge.join(und.as("e3"),
         col("x") === col("e3.a") && col("z") === col("e3.b"))
       .agg(count(lit(1)).as("n_triangles"))
-    val res = nV.crossJoin(nE).crossJoin(nT).localCheckpoint(true)
-    releaseRoot(und)
-    res
+    f.result(nV.crossJoin(nE).crossJoin(nT))
   }
 
   /** HITS hubs-and-authorities (Kleinberg 1999) over a DIRECTED (often
@@ -536,8 +481,9 @@ object Graph {
     * raw·10⁹ < 10³⁸ holds for any nHubs < 10²⁰.
     *
     * Scale: two keyed shuffles per iteration over the DISTINCT edge set
-    * + a 1-row max broadcast each; per-iteration persist with
-    * predecessor unpersist (the q186 discipline). Returns the top-`k`
+    * + a 1-row max broadcast each; each iteration's vectors persisted,
+    * the predecessors released once they are materialized (the q186
+    * discipline). Returns the top-`k`
     * authorities (target, authority_scaled), (score desc, target asc). */
   /** HITS iterated to the exact-integer FIXED POINT (successive
     * authority vectors bit-equal), optionally WARM-STARTED from a
@@ -564,7 +510,7 @@ object Graph {
     * corpus). Returns (full converged authority table — localCheckpoint,
     * caller-owned — and the round count). */
   def hitsConverge(edges: DataFrame, initAuth: Option[DataFrame] = None,
-                   maxIters: Int = 14): (DataFrame, Int) = {
+                   maxIters: Int = 14): (DataFrame, Int) = Frames { f =>
     // r17 (guide §2.4): each round joins the edge table by src (auth
     // half-step) and by dst (hub half-step) — a bare checkpoint left it
     // unpartitioned, so both half-steps re-exchanged the full edge table
@@ -580,15 +526,13 @@ object Graph {
     // rationale): LogicalRDD leaves pin every round fragment's partition
     // count, so size it to the edge table (~1M rows ≈ 100 MB per
     // partition), capped by the session setting
-    val e0 = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(false)
+    val e0 = f.lazily(edges.select(col("src"), col("dst")).distinct())
     val edgeRows = e0.count()
     val shufP = edges.sparkSession.sessionState.conf.numShufflePartitions
     val loopP = math.max(1L, math.min(shufP.toLong,
       (edgeRows + 999999L) / 1000000L)).toInt
-    val e = Dedup.checkpointPartitioned(e0, loopP, col("src"))
-    val eByDst = Dedup.checkpointPartitioned(e, loopP, col("dst"))
-    var e0Released = false
+    val e = f.partitioned(e0, loopP, col("src"))
+    val eByDst = f.partitioned(e, loopP, col("dst"))
     def normAuth(raw: DataFrame): DataFrame = {
       val m = raw.agg(max(col("ar")).as("amax"))
       raw.crossJoin(broadcast(m))
@@ -614,11 +558,10 @@ object Graph {
     // materialized everything referencing it: the previous auth right
     // after the probe (the current hub — its only lazy reader — was
     // materialized by the same probe), and a hub one full round later
-    // (`spentHub`). Released root-only (releaseRoot — the r16
-    // releaseLabels lesson).
-    var auth: DataFrame = initAuth.map(_.select(col("dst"), col("a"))
-      .localCheckpoint(true)).orNull
-    var hub = (initAuth match {
+    // (`spentHub`). Released root-only (the [[Frames]] release rule).
+    var auth: DataFrame =
+      initAuth.map(a => f.eagerly(a.select(col("dst"), col("a")))).orNull
+    var hub = f.lazily(initAuth match {
       case Some(_) =>
         normHub(eByDst.join(auth, Seq("dst"))
           .groupBy(col("src"))
@@ -626,17 +569,16 @@ object Graph {
       case None =>
         e.select(col("src")).distinct()
           .select(col("src"), lit(1000000000L).as("h"))
-    }).localCheckpoint(false)
+    })
     var spentHub: DataFrame = null
     var rounds = -1
     var i = 0
     while (rounds < 0 && i < maxIters) {
       i += 1
-      val nextAuth = normAuth(
+      val nextAuth = f.lazily(normAuth(
         e.join(hub, Seq("src"))
           .groupBy(col("dst"))
-          .agg(sum(col("h")).cast("decimal(38,0)").as("ar")))
-        .localCheckpoint(false)
+          .agg(sum(col("h")).cast("decimal(38,0)").as("ar"))))
       val fixed = auth != null &&
         nextAuth.as("n").join(auth.as("o"), Seq("dst"), "full")
           .filter(col("n.a").isNull || col("o.a").isNull ||
@@ -648,21 +590,21 @@ object Graph {
         // reader — both releases are now safe. Round 1 cold-start runs
         // no probe (auth == null): nothing is materialized yet and
         // nothing may be released.
-        releaseRoot(spentHub); spentHub = null
-        releaseRoot(auth)
+        f.release(spentHub)
+        f.release(auth)
         // the first probe also proves BOTH partitioned copies are
         // materialized (the hub it computed reads eByDst, which reads e,
-        // which reads e0) — the unpartitioned staging copy can go
-        if (!e0Released) { releaseRoot(e0); e0Released = true }
+        // which reads e0) — the unpartitioned staging copy can go (a
+        // no-op on later rounds: the scope no longer holds it)
+        f.release(e0)
       }
       auth = nextAuth
       if (fixed) rounds = i
       else {
-        val nextHub = normHub(
+        val nextHub = f.lazily(normHub(
           eByDst.join(nextAuth, Seq("dst"))
             .groupBy(col("src"))
-            .agg(sum(col("a")).cast("decimal(38,0)").as("hr")))
-          .localCheckpoint(false)
+            .agg(sum(col("a")).cast("decimal(38,0)").as("hr"))))
         spentHub = hub
         hub = nextHub
       }
@@ -670,56 +612,42 @@ object Graph {
     require(rounds > 0, s"hitsConverge: no exact fixed point within " +
       s"$maxIters iterations — raise maxIters or inspect the graph " +
       "for a floor-map cycle")
-    val res = auth.select(col("dst"), col("a")).localCheckpoint(true)
-    releaseRoot(eByDst); releaseRoot(e); releaseRoot(e0)
-    releaseRoot(spentHub); releaseRoot(hub); releaseRoot(auth)
-    (res, rounds)
+    (f.result(auth.select(col("dst"), col("a"))), rounds)
   }
 
-  def hitsTopK(edges: DataFrame, iters: Int = 2, k: Int = 20): DataFrame = {
+  def hitsTopK(edges: DataFrame, iters: Int = 2,
+               k: Int = 20): DataFrame = Frames { f =>
     require(iters >= 1, s"hitsTopK: iters must be >= 1, got $iters")
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
+    val e = f.persist(edges.select(col("src"), col("dst")).distinct())
     var hub = e.select(col("src")).distinct()
       .select(col("src"), lit(1000000000L).as("h"))
     var auth: DataFrame = null
-    var prevAuth: DataFrame = null
-    var prevHub: DataFrame = null
     (1 to iters).foreach { i =>
       val aRaw = e.join(hub, Seq("src"))
         .groupBy(col("dst"))
         .agg(sum(col("h")).cast("decimal(38,0)").as("ar"))
       val aMax = aRaw.agg(max(col("ar")).as("amax"))
-      val nextAuth = aRaw.crossJoin(broadcast(aMax))
+      val nextAuth = f.persist(aRaw.crossJoin(broadcast(aMax))
         .select(col("dst"),
-          expr("CAST(ar * 1000000000 div amax AS BIGINT)").as("a"))
-        .persist(lvl)
+          expr("CAST(ar * 1000000000 div amax AS BIGINT)").as("a")))
       nextAuth.count() // materialize before releasing the predecessors
-      if (prevAuth != null) prevAuth.unpersist()
-      prevAuth = nextAuth
+      f.release(auth)
       auth = nextAuth
       if (i < iters) {
         val hRaw = e.join(nextAuth, Seq("dst"))
           .groupBy(col("src"))
           .agg(sum(col("a")).cast("decimal(38,0)").as("hr"))
         val hMax = hRaw.agg(max(col("hr")).as("hmax"))
-        val nextHub = hRaw.crossJoin(broadcast(hMax))
+        val nextHub = f.persist(hRaw.crossJoin(broadcast(hMax))
           .select(col("src"),
-            expr("CAST(hr * 1000000000 div hmax AS BIGINT)").as("h"))
-          .persist(lvl)
+            expr("CAST(hr * 1000000000 div hmax AS BIGINT)").as("h")))
         nextHub.count()
-        if (prevHub != null) prevHub.unpersist()
-        prevHub = nextHub
+        f.release(hub)
         hub = nextHub
       }
     }
-    val res = auth.orderBy(col("a").desc, col("dst"))
+    f.result(auth.orderBy(col("a").desc, col("dst"))
       .limit(k)
-      .select(col("dst").as("target"), col("a").as("authority_scaled"))
-      .localCheckpoint(true)
-    e.unpersist()
-    if (prevAuth != null) prevAuth.unpersist()
-    if (prevHub != null) prevHub.unpersist()
-    res
+      .select(col("dst").as("target"), col("a").as("authority_scaled")))
   }
 }

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
+import graft.exec.Frames
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
@@ -120,18 +122,18 @@ object Similarity {
     * in mirrored order, ties break by id asc, and the emitted score is
     * floor micros. The oracle unrolls the k steps as chained CTEs. */
   def mmrDenseTopK(embeddings: DataFrame, idCol: String, vecCol: String,
-                   queryVecId: Long, candK: Int = 20, k: Int = 8): DataFrame = {
+                   queryVecId: Long, candK: Int = 20,
+                   k: Int = 8): DataFrame = Frames { f =>
     val spark0 = embeddings.sparkSession
     val q = embeddings.filter(col(idCol) === queryVecId)
       .select(col(vecCol).as("q_vec"))
     // candidate search: one corpus scan; eagerly materialized (candK
     // rows) so the two downstream uses don't rescan
-    val cand = embeddings.filter(col(idCol) =!= queryVecId)
+    val cand = f.eagerly(embeddings.filter(col(idCol) =!= queryVecId)
       .crossJoin(broadcast(q))
       .select(col(idCol).as("id"), col(vecCol).as("vec"),
         cosine(col(vecCol), col("q_vec")).as("sim"))
-      .orderBy(col("sim").desc, col("id").asc).limit(candK)
-      .localCheckpoint(true)
+      .orderBy(col("sim").desc, col("id").asc).limit(candK))
     // pairwise sims among candidates: candK² rows, computed distributed
     val a = cand.select(col("id").as("id1"), col("vec").as("v1"))
     val b = cand.select(col("id").as("id2"), col("vec").as("v2"))
@@ -199,6 +201,7 @@ object Similarity {
   def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
                         simThreshold: Double, nPlanes: Int = 8,
                         maxBucket: Long = DefaultMaxBucket): DataFrame = {
+    // caller-owned: the returned DataFrame reads this cache
     val b = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
       hyperplaneBucket(col(vecCol), nPlanes).as("bucket")).cache()
     val counts = b.groupBy(col("bucket")).agg(count(lit(1)).as("__bn"))
@@ -366,13 +369,12 @@ object Similarity {
       when(isnan(sim), lit(Double.NegativeInfinity)).otherwise(-sim),
       lit(Double.PositiveInfinity))
 
-    // the returned frame lazily READS this cached projection (the final
-    // probed ranking re-joins the corpus), so it stays persisted for the
-    // session; callers doing repeated sweeps should
-    // `spark.catalog.clearCache()` (or collect + unpersist) between runs
+    // caller-owned: the returned lists read this cached projection (the
+    // final probed ranking re-joins the corpus); callers doing repeated
+    // sweeps should `spark.catalog.clearCache()` between runs
     val base = corpus.select(col(idCol).as("nn_id"), col(vecCol).as("nn_vec"),
       qvec(col(vecCol)).as("q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     var cents = base.orderBy(col("nn_id").asc).limit(nlist)
       .select(col("nn_id").as("cent_id"), col("q").as("cent_q"))
 
@@ -499,17 +501,17 @@ object Similarity {
   def annRecallAudit(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int, nlist: Int = 16,
                      iters: Int = 2,
-                     nprobes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
+                     nprobes: Seq[Int] = Seq(1, 2, 4))
+      : DataFrame = Frames { f =>
     require(nprobes.nonEmpty, "annRecallAudit: nprobes must be non-empty")
-    val exact = bruteForceKnn(corpus, queries, idCol, vecCol, k)
-      .select(col("query_id"), col("nn_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val exact = f.persist(bruteForceKnn(corpus, queries, idCol, vecCol, k)
+      .select(col("query_id"), col("nn_id")))
     val (cents, lists0) = ivfKMeansBuild(corpus, idCol, vecCol, nlist, iters)
     // materialize the inverted lists ONCE (r16): the per-nprobe legs all
     // reference the lists subtree inside one union plan, so the lazy
     // build's corpus assignment aggregate previously ran once per probed
     // leg (3× at the default sweep)
-    val lists = lists0.localCheckpoint(false)
+    val lists = f.lazily(lists0)
     val approx = nprobes.map { np =>
       ivfProbedQuery(cents, lists, queries, idCol, vecCol, k, np)
         .select(lit(np).as("nprobe"), col("query_id"), col("nn_id"))
@@ -521,22 +523,14 @@ object Similarity {
     // agreeing pairs must still report its (hits = 0) row
     val spark0 = corpus.sparkSession
     import spark0.implicits._
-    val out = nprobes.toDF("nprobe").join(hitCounts, Seq("nprobe"), "left")
+    // eager: the (O(nprobes)-row) result is materialized so the scope
+    // can release the exact and lists frames HERE instead of leaking
+    // them for the session per audit invocation
+    f.result(nprobes.toDF("nprobe").join(hitCounts, Seq("nprobe"), "left")
       .crossJoin(broadcast(total))
       .select(col("nprobe"), coalesce(col("__h"), lit(0L)).as("hits"),
         col("total"))
-      .withColumn("recall_micros", expr("hits * 1000000 div total"))
-      // eager localCheckpoint materializes the (O(nprobes)-row) result so
-      // the exact frame's cache entry can be released HERE instead of
-      // leaking one session-lifetime persist per audit invocation
-      .localCheckpoint(true)
-    exact.unpersist()
-    lists.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
-    out
+      .withColumn("recall_micros", expr("hits * 1000000 div total")))
   }
 
   /** Symmetric int8 quantization of an embedding column — the standard 4×
@@ -602,45 +596,40 @@ object Similarity {
     * directed if a bucket stays oversized after `maxRounds`. */
   def adaptiveBuckets(df: DataFrame, idCol: String, vecCol: String,
                       basePlanes: Int, extraPlanes: Int,
-                      maxBucket: Long, maxRounds: Int = 2): DataFrame = {
+                      maxBucket: Long,
+                      maxRounds: Int = 2): DataFrame = Frames { f =>
     require(basePlanes >= 1 && extraPlanes >= 1 && maxRounds >= 1,
       s"adaptiveBuckets: planes/rounds must be ≥ 1 " +
         s"(got base=$basePlanes extra=$extraPlanes rounds=$maxRounds)")
-    val lvlStore = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     var cur = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
       lit(0).as("lvl"), hyperplaneBucket(col(vecCol), basePlanes).as("b"))
     // each round reads cur twice (the counts branch + the main branch);
     // without a per-round persist the uncached lineage re-evaluates every
     // prior round's hyperplane projections AND the corpus scan, so cost
     // multiplies with maxRounds. Persist the round result, drop the
-    // previous round's cache once the new one is materialized (the counts
-    // aggregate of round r+1 — or the caller's first action — does that).
-    var prev: DataFrame = null
+    // previous round's cache once the new one is materialized.
     for (r <- 1 to maxRounds) {
       val planes = basePlanes + r * extraPlanes
       val counts = cur.filter(col("lvl") === (r - 1))
         .groupBy(col("b").as("__cb")).agg(count(lit(1)).as("__n"))
-      cur = cur.join(broadcast(counts),
+      val next = f.persist(cur.join(broadcast(counts),
           col("lvl") === (r - 1) && col("b") === col("__cb"), "left")
         .select(col("id"), col("vec"),
           when(col("__n") > maxBucket, lit(r)).otherwise(col("lvl"))
             .as("lvl"),
           when(col("__n") > maxBucket,
             hyperplaneBucket(col("vec"), planes)).otherwise(col("b"))
-            .as("b"))
-        .persist(lvlStore)
-      cur.count() // materialize before releasing the previous round
-      if (prev != null) prev.unpersist()
-      prev = cur
+            .as("b")))
+      next.count() // materialize before releasing the previous round
+      f.release(cur)
+      cur = next
     }
-    // eager localCheckpoint: the result keeps its blocks on the raw RDD
-    // (freed on GC, no session-lifetime CacheManager entry), letting the
-    // last round's persist be released here instead of leaking
-    val out = cur.select(col("id"), col("vec"), col("lvl"),
+    // eager: the result keeps its blocks on the raw RDD (freed on GC, no
+    // session-lifetime CacheManager entry), so the last round's persist
+    // is released here instead of leaking
+    f.result(cur.select(col("id"), col("vec"), col("lvl"),
       concat(col("lvl").cast("string"), lit(":"),
-        col("b").cast("string")).as("bucket")).localCheckpoint(true)
-    if (prev != null) prev.unpersist()
-    out
+        col("b").cast("string")).as("bucket")))
   }
 
   /** [[semanticDedup]] with adaptive plane escalation: dense sign-bucket
@@ -656,6 +645,7 @@ object Similarity {
                             extraPlanes: Int = 4,
                             maxBucket: Long = DefaultMaxBucket,
                             maxRounds: Int = 2): DataFrame = {
+    // caller-owned: the returned DataFrame reads this cache
     val b = adaptiveBuckets(df, idCol, vecCol, basePlanes, extraPlanes,
       maxBucket, maxRounds).cache()
     val counts = b.groupBy(col("bucket")).agg(count(lit(1)).as("__bn"))
@@ -864,13 +854,11 @@ object Similarity {
     * (subtract-then-quantize would re-round and break oracle replay). */
   def pqBuildQuantized(quant: DataFrame,
                        m: Int = 8, kSub: Int = 16, iters: Int = 2,
-                       dim: Int = 64): (DataFrame, DataFrame) = {
+                       dim: Int = 64): (DataFrame, DataFrame) = Frames { f =>
     require(dim % m == 0, s"pqBuild: dim=$dim not divisible by m=$m")
     val dsub = dim / m
-    val base = quant
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sb = pqSubRows(base, "nn_id", "q", m, dsub)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = f.persist(quant)
+    val sb = f.persist(pqSubRows(base, "nn_id", "q", m, dsub))
 
     // seed: the first kSub vectors by id, sliced per subspace (the
     // ivfKMeansBuild seeding, deterministic on any engine)
@@ -904,15 +892,12 @@ object Similarity {
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, updated.schema)
     }
 
-    // eager localCheckpoint materializes the codes (the small build
-    // artifact: m small ints per vector) so base/sb's cache entries can
-    // be released HERE instead of leaking two session-lifetime persists
-    // per build invocation (the annRecallAudit discipline)
-    val codes = assign(lit(0L))
-      .select(col("nn_id"), col("sub"), col("__best.cent_id").as("code"))
-      .localCheckpoint(true)
-    sb.unpersist()
-    base.unpersist()
+    // eager: the codes (the small build artifact: m small ints per
+    // vector) are materialized so the scope releases base/sb HERE
+    // instead of leaking two session-lifetime persists per build
+    // invocation (the annRecallAudit discipline)
+    val codes = f.result(assign(lit(0L))
+      .select(col("nn_id"), col("sub"), col("__best.cent_id").as("code")))
     (cents, codes)
   }
 
@@ -1375,16 +1360,15 @@ object Similarity {
                      vecCol: String, k: Int, nlist: Int = 16,
                      ivfIters: Int = 2, m: Int = 8, kSub: Int = 16,
                      pqIters: Int = 2, dim: Int = 64,
-                     nprobe: Int = 4): DataFrame = {
-    val exact = bruteForceKnn(corpus, queries, idCol, vecCol, k)
-      .select(col("query_id"), col("nn_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                     nprobe: Int = 4): DataFrame = Frames { f =>
+    val exact = f.persist(bruteForceKnn(corpus, queries, idCol, vecCol, k)
+      .select(col("query_id"), col("nn_id")))
     val (ivfCents, listsLazy) = ivfKMeansBuild(corpus, idCol, vecCol, nlist,
       ivfIters)
     // both variants consume the inverted lists (raw codes join + residual
     // encode): materialize the assignment aggregate once instead of once
     // per reference (lazy checkpoint — the q189 annRecallAudit discipline)
-    val lists = listsLazy.localCheckpoint(false)
+    val lists = f.lazily(listsLazy)
     val (pqCents, rawCodes) = pqBuild(corpus, idCol, vecCol, m, kSub,
       pqIters, dim)
     val rawBook = pqDenseCodebook(pqCents)
@@ -1408,21 +1392,12 @@ object Similarity {
         .select(lit(name).as("variant"), col("__h"))
     }.reduce(_ unionByName _)
     val total = exact.agg(count(lit(1)).as("total"))
-    val out = hits.crossJoin(broadcast(total))
+    // eager: the 2-row result is materialized so the scope releases the
+    // exact leg and the shared lists frame here (the annRecallAudit
+    // discipline)
+    f.result(hits.crossJoin(broadcast(total))
       .select(col("variant"), col("__h").as("hits"), col("total"))
-      .withColumn("recall_micros", expr("hits * 1000000 div total"))
-      // eager localCheckpoint materializes the 2-row result so the exact
-      // leg's cache releases here (the annRecallAudit discipline)
-      .localCheckpoint(true)
-    exact.unpersist()
-    // the shared lists checkpoint has no CacheManager entry — release its
-    // RDD blocks directly (the releaseLabels/releaseRoot lesson)
-    lists.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
-    out
+      .withColumn("recall_micros", expr("hits * 1000000 div total")))
   }
 
   /** Pairwise affinity between group centroids: exact int64 dot product

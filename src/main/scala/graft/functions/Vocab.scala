@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.exec.Frames
 
 /** Tokenizer-training vocabulary induction — byte-pair-encoding merge
   * learning (Sennrich et al. 2016) as a distributed pipeline.
@@ -53,21 +54,22 @@ object Vocab {
     * pair_count is the word-frequency-weighted count of the adjacent pair
     * at the time it was chosen. Stops early (fewer rows) if no pair is
     * left (all words fused to single symbols). */
-  def bpeMerges(docs: DataFrame, textCol: String, nMerges: Int): DataFrame = {
+  def bpeMerges(docs: DataFrame, textCol: String,
+                nMerges: Int): DataFrame = Frames { f =>
     val spark = docs.sparkSession
     import spark.implicits._
 
     // Pass 1 (the only corpus scan): word counts, then symbol-space them.
-    var vocab = docs
+    // LAZY checkpoints throughout the merge loop (r16): each iteration's
+    // top-pair collect materializes the blocks in the same job, so a
+    // merge costs ONE vocab pass instead of an eager checkpoint pass
+    // plus the counting pass
+    var vocab = f.lazily(docs
       .select(explode(split(col(textCol), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(charSpaced(col("w")).as("repr"), col("cnt"))
-      // LAZY checkpoints throughout the merge loop (r16): each
-      // iteration's top-pair collect materializes the blocks in the same
-      // job, so a merge costs ONE vocab pass instead of an eager
-      // checkpoint pass plus the counting pass
-      .localCheckpoint(false)
+      .select(charSpaced(col("w")).as("repr"), col("cnt")))
+    var spent: DataFrame = null
 
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var it = 1
@@ -90,6 +92,7 @@ object Vocab {
         .orderBy(col("pair_count").desc, col("l"), col("r"))
         .limit(1)
         .collect()
+      f.release(spent) // the collect materialized vocab, its only reader
       if (top.isEmpty) exhausted = true
       else {
         val l = top(0).getString(0)
@@ -98,10 +101,9 @@ object Vocab {
         // Apply the merge (narrow map) and re-truncate lineage: the vocab
         // table stays vocabulary-sized, so the checkpoint is O(vocab) per
         // iteration — corpus-size independent.
-        vocab = vocab
-          .withColumn("repr",
-            replace(col("repr"), lit(s" $l $r "), lit(s" $l$r ")))
-          .localCheckpoint(false)
+        spent = vocab
+        vocab = f.lazily(vocab.withColumn("repr",
+          replace(col("repr"), lit(s" $l $r "), lit(s" $l$r "))))
         it += 1
       }
     }
@@ -288,13 +290,15 @@ object Vocab {
     * gated fact instead of an assumption (q263). */
   def phraseBpe(docs: DataFrame, idCol: String, textCol: String,
                 rounds: Int, perRound: Int,
-                requireFullRounds: Boolean = false): DataFrame = {
-    var reprs = docs.select(col(idCol).as("doc_id"),
-        size(split(col(textCol), " ")).as("n_words"),
-        concat(lit(" "), col(textCol), lit(" ")).as("repr"))
-      // lazy checkpoint: round 1's pair-count collect materializes it
-      // (r16 — one corpus pass per round instead of two)
-      .localCheckpoint(false)
+                requireFullRounds: Boolean = false)
+      : DataFrame = Frames { f =>
+    require(rounds >= 1, s"phraseBpe: rounds must be >= 1, got $rounds")
+    // lazy checkpoint: round 1's pair-count collect materializes it
+    // (r16 — one corpus pass per round instead of two)
+    var reprs = f.lazily(docs.select(col(idCol).as("doc_id"),
+      size(split(col(textCol), " ")).as("n_words"),
+      concat(lit(" "), col(textCol), lit(" ")).as("repr")))
+    var spent: DataFrame = null
     for (round <- 1 to rounds) {
       // adjacent pairs via slice+zip over a MATERIALIZED token column:
       // element_at inside a transform lambda re-evaluates the split()
@@ -311,6 +315,8 @@ object Vocab {
         .orderBy(col("pc").desc, col("l"), col("r"))
         .limit(perRound)
         .collect()
+      f.release(spent) // the collect materialized reprs, its only reader
+      spent = reprs
       if (requireFullRounds) require(top.length == perRound,
         s"phraseBpe: round $round yielded only ${top.length} of $perRound " +
         "merges — the corpus' pair space is exhausted; lower perRound/" +
@@ -327,8 +333,11 @@ object Vocab {
       // lazy: the NEXT round's counting scan materializes the applied
       // representation in its own job — the eager form paid a separate
       // full pass per round just to fill the blocks (r16)
-      reprs = if (round < rounds) applied.localCheckpoint(false) else applied
+      reprs = if (round < rounds) f.lazily(applied) else applied
     }
+    // the returned relation reads the last round's input frame:
+    // caller-owned
+    f.keep(spent)
     reprs.select(col("doc_id"), col("n_words"),
       size(split(trim(col("repr")), " ")).as("n_symbols"))
   }
@@ -467,16 +476,16 @@ object Vocab {
     * ratio; emitting the integers keeps the gate float-free). Stops
     * early if no adjacent pair remains. */
   def wordPieceMerges(docs: DataFrame, textCol: String,
-                      nMerges: Int): DataFrame = {
+                      nMerges: Int): DataFrame = Frames { f =>
     val spark = docs.sparkSession
     import spark.implicits._
-    var vocab = docs
+    // lazy checkpoints — the bpeMerges r16 note
+    var vocab = f.lazily(docs
       .select(explode(split(col(textCol), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(wpCharSpaced(col("w")).as("repr"), col("cnt"))
-      // lazy checkpoints — the bpeMerges r16 note
-      .localCheckpoint(false)
+      .select(wpCharSpaced(col("w")).as("repr"), col("cnt")))
+    var spent: DataFrame = null
     val merges = Seq.newBuilder[(Int, String, String, String, Long, Long, Long)]
     var it = 1
     var exhausted = false
@@ -504,6 +513,7 @@ object Vocab {
         .orderBy(col("score").desc, col("l"), col("r"))
         .limit(1)
         .collect()
+      f.release(spent) // the collect materialized vocab, its only reader
       if (top.isEmpty) exhausted = true
       else {
         val l = top(0).getString(0)
@@ -511,10 +521,9 @@ object Vocab {
         val merged = l + r.stripPrefix("##")
         merges += ((it, l, r, merged, top(0).getLong(2), top(0).getLong(3),
           top(0).getLong(4)))
-        vocab = vocab
-          .withColumn("repr",
-            replace(col("repr"), lit(s" $l $r "), lit(s" $merged ")))
-          .localCheckpoint(false)
+        spent = vocab
+        vocab = f.lazily(vocab.withColumn("repr",
+          replace(col("repr"), lit(s" $l $r "), lit(s" $merged "))))
         it += 1
       }
     }
@@ -858,6 +867,7 @@ object Vocab {
                          maxPieceLen: Int = UnigramMaxPieceLen,
                          topK: Int = UnigramTopK,
                          minMultiPieces: Int = 0): DataFrame = {
+    // caller-owned: the returned DataFrame reads this checkpoint
     val words = unigramWordTable(docs, textCol).localCheckpoint()
     val (scored1, _) = unigramScoredPieces(unigramPieceTable(words, maxPieceLen, topK))
     // the q276 requireFullRounds discipline: a piece space too small for
@@ -869,7 +879,7 @@ object Vocab {
     val usage = seg1
       .select(col("cnt"), explode(split(col("seg0"), "\\|")).as("p"))
       .groupBy("p").agg(sum(col("cnt")).as("u"))
-      .localCheckpoint()
+      .localCheckpoint() // caller-owned: the returned DataFrame reads it
     val (scored2, bTot2) = unigramScoredPieces(usage, "u")
     seg1
       .withColumn("seg", unigramSegmentCol(col("w"), scored2))
@@ -916,16 +926,17 @@ object Vocab {
                       rounds: Int = 3, keepPct: Int = 50,
                       maxPieceLen: Int = UnigramMaxPieceLen,
                       topK: Int = UnigramTopK)
-      : (DataFrame, Seq[(Long, Long)]) = {
+      : (DataFrame, Seq[(Long, Long)]) = Frames { f =>
     require(rounds >= 1, s"unigramEmPruned: rounds must be >= 1")
     require(keepPct >= 1 && keepPct <= 100,
       s"unigramEmPruned: keepPct must be in [1, 100], got $keepPct")
-    val words = unigramWordTable(docs, textCol).localCheckpoint()
+    // caller-owned: the returned DataFrame reads this checkpoint
+    val words = f.result(unigramWordTable(docs, textCol))
     val seed = unigramPieceTable(words, maxPieceLen, topK)
     // the seed's single characters — the coverage-floor set, fixed for
     // the whole schedule (O(alphabet) driver carry)
-    val chars = seed.filter(length(col("p")) === 1)
-      .select(col("p")).localCheckpoint()
+    val chars = f.eagerly(seed.filter(length(col("p")) === 1)
+      .select(col("p")))
     var (scored, _) = unigramScoredPieces(seed)
     var usage: DataFrame = null
     val schedule = Seq.newBuilder[(Long, Long)]
@@ -933,10 +944,9 @@ object Vocab {
     while (t < rounds) {
       t += 1
       val seg = words.withColumn("seg", unigramSegmentCol(col("w"), scored))
-      val raw = seg
+      val raw = f.eagerly(seg
         .select(col("cnt"), explode(split(col("seg"), "\\|")).as("p"))
-        .groupBy("p").agg(sum(col("cnt")).as("u"))
-        .localCheckpoint()
+        .groupBy("p").agg(sum(col("cnt")).as("u")))
       val m = raw.filter(length(col("p")) >= 2).count()
       val keepN = ((m * keepPct + 99) / 100).toInt
       val keptMulti = raw.filter(length(col("p")) >= 2)
@@ -945,7 +955,9 @@ object Vocab {
       val floored = chars.join(raw, Seq("p"), "left_outer")
         .select(col("p"), greatest(coalesce(col("u"), lit(0L)), lit(1L))
           .as("u"))
-      usage = floored.unionByName(keptMulti).localCheckpoint()
+      f.release(usage)
+      usage = f.eagerly(floored.unionByName(keptMulti))
+      f.release(raw) // usage is materialized: raw has no reader left
       schedule += ((m, keepN.toLong))
       val (s2, _) = unigramScoredPieces(usage, "u")
       scored = s2
@@ -956,7 +968,8 @@ object Vocab {
       .withColumn("seg", unigramSegmentCol(col("w"), scored))
       .select(col("w"), col("cnt"), col("seg"),
         explode(split(col("seg"), "\\|")).as("p"))
-      .join(broadcast(usage), Seq("p"))
+      // caller-owned: the returned DataFrame reads the final usage
+      .join(broadcast(f.keep(usage)), Seq("p"))
       .groupBy("w", "cnt", "seg")
       .agg(count(lit(1)).as("n_pieces"),
         sum((length(bin(col("u"))) - 1).cast("long") - lit(bTot))
@@ -977,6 +990,7 @@ object Vocab {
   def unigramTrainModel(docs: DataFrame, textCol: String,
                         maxPieceLen: Int = UnigramMaxPieceLen,
                         topK: Int = UnigramTopK): DataFrame = {
+    // caller-owned: the returned DataFrame reads this checkpoint
     val words = unigramWordTable(docs, textCol).localCheckpoint()
     val (scored1, _) = unigramScoredPieces(unigramPieceTable(words, maxPieceLen, topK))
     words.withColumn("seg0", unigramSegmentCol(col("w"), scored1))

@@ -146,7 +146,8 @@ object Extensions {
     * the bundle itself was made cheaper (single-action merge≡rebuild
     * check; pageRankConverge now one action/round with lineage-truncated
     * inputs). */
-  private def pageRankGateBundle(s: SparkSession, dir: String): DataFrame = {
+  private def pageRankGateBundle(s: SparkSession, dir: String): DataFrame =
+    graft.exec.Frames { f =>
     val G = graft.functions.Graph
     val eps = 500000L
     val edgeT = stagedTable("graft_q314_pairw")
@@ -159,19 +160,19 @@ object Extensions {
         li.filter(col("l_orderkey") % 50 =!= 3),
         "l_orderkey", "l_partkey"),
       graft.sources.SinkMode.Replace)
-    val (preRank, _) = G.pageRankConverge(
+    val preRank = f.adopt(G.pageRankConverge(
       G.capByDegree(G.mergePairWeights(edgeTap.read(s)), 64),
-      eps, None, 16)
+      eps, None, 16)._1)
     val rankTap = graft.sources.BucketedTap(rankT, 8, Seq("v"))
     rankTap.write(preRank, graft.sources.SinkMode.Replace)
     // r17 (ADVICE): the bundle now runs on EVERY invocation and
     // clearCache() does not free RDD-level localCheckpoint blocks, so
     // each frame's blocks are released after its LAST reader — preRank
     // here (the warm leg reads the rank TAP, not this frame), merged
-    // after the warm leg, scratch after the cold leg, warm after the
-    // drift check. Only cold's blocks stay alive: the returned frame
-    // reads them.
-    G.releaseRoot(preRank)
+    // after the warm leg, scratch after the cold leg; the scope releases
+    // warm (and everything else on a failed gate). Only cold's blocks
+    // stay alive: the returned frame reads them.
+    f.release(preRank)
     // the arrival: the batch's pair weights APPEND (orders partition
     // between batches, so per-pair sums merge == rebuild)
     edgeTap.write(
@@ -182,10 +183,10 @@ object Extensions {
     // LAZY checkpoints: the merge≡rebuild probe below materializes both
     // sides in its own job (r16; two eager checkpoint jobs + two
     // exceptAll jobs collapsed into one action)
-    val merged = G.capByDegree(G.mergePairWeights(edgeTap.read(s)), 64)
-      .localCheckpoint(false)
-    val scratch = G.coOccurrenceEdges(li, "l_orderkey", "l_partkey", 64)
-      .localCheckpoint(false)
+    val merged = f.lazily(
+      G.capByDegree(G.mergePairWeights(edgeTap.read(s)), 64))
+    val scratch = f.lazily(
+      G.coOccurrenceEdges(li, "l_orderkey", "l_partkey", 64))
     require(merged.exceptAll(scratch)
         .unionByName(scratch.exceptAll(merged))
         .limit(1).isEmpty,
@@ -193,9 +194,11 @@ object Extensions {
         "reproduce the from-scratch capped graph — merge != rebuild")
     val (warm, rw) = G.pageRankConverge(merged, eps,
       Some(rankTap.read(s)), 16)
-    G.releaseRoot(merged)
+    f.adopt(warm)
+    f.release(merged)
     val (cold, rc) = G.pageRankConverge(scratch, eps, None, 16)
-    G.releaseRoot(scratch)
+    f.adopt(cold)
+    f.release(scratch)
     require(rc >= 2 && rc <= 12,
       s"q314/q298: cold stop at $rc rounds — outside the oracle's " +
         "unrolled window [2, 12]")
@@ -209,8 +212,7 @@ object Extensions {
     require(drift <= eps,
       s"q314/q298: warm stop sits $drift units from cold — above " +
         "the ε pin")
-    G.releaseRoot(warm)
-    cold.select(col("v").as("vertex"),
+    f.keep(cold).select(col("v").as("vertex"),
       col("r").as("rank_scaled"), lit(rc.toLong).as("rounds"))
   }
 

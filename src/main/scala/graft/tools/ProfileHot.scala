@@ -286,15 +286,14 @@ object ProfileHot {
       val key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
       val qs = Seq("q112_stream_session_window", "q114_stream_static_join",
         "q96_stream_sliding", "q123_stream_checkpoint_recovery")
-      Seq("true", "false", "true", "false").zipWithIndex.foreach {
+      try Seq("true", "false", "true", "false").zipWithIndex.foreach {
         case (on, i) =>
           s.conf.set(key, on)
           qs.foreach { q =>
             t(s"$tag#$i $q checksum=$on")(noop(
               graft.SparkEntry.queries(q)(s, dir)))
           }
-      }
-      s.conf.unset(key)
+      } finally s.conf.unset(key)
     }
 
     def roundplan(tag: String): Unit = {
@@ -323,16 +322,16 @@ object ProfileHot {
           next.queryExecution.executedPlan.toString
             .split("== Initial Plan ==").head
         }
-        val br16 = rows.localCheckpoint(false)
-        println(s"===== $tag round plan: r16 construction =====")
-        println(round(br16, br16))
-        val P = s.sessionState.conf.numShufflePartitions
-        val br17 = graft.functions.Dedup.checkpointPartitioned(
-          rows, P, col("id"))
-        val br17B = graft.functions.Dedup.checkpointPartitioned(
-          br17, P, col("band"), col("key"))
-        println(s"===== $tag round plan: r17 construction =====")
-        println(round(br17, br17B))
+        graft.exec.Frames { f =>
+          val br16 = f.lazily(rows)
+          println(s"===== $tag round plan: r16 construction =====")
+          println(round(br16, br16))
+          val P = s.sessionState.conf.numShufflePartitions
+          val br17 = f.partitioned(rows, P, col("id"))
+          val br17B = f.partitioned(br17, P, col("band"), col("key"))
+          println(s"===== $tag round plan: r17 construction =====")
+          println(round(br17, br17B))
+        }
       } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
     }
 

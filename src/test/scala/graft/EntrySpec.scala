@@ -17,6 +17,11 @@ class EntrySpec extends SparkSpec {
     assert(missing == Set("q42_approx_distinct", "q54_sample",
       "q89_approx_percentile"))
   }
+  test("bench run id is sanitized before it names a file") {
+    assert(Bench.fileTag("../x/y") == "___x_y")
+    assert(Bench.fileTag("c32") == "c32")
+    assert(Bench.fileTag("r17_sub-1") == "r17_sub-1")
+  }
   test("oracle map has no orphan keys") {
     assert((SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet).isEmpty)
   }

@@ -283,7 +283,12 @@ class FormulaPinSpec extends SparkSpec {
           (repr.replace(s" $l $r ", s" $l$r "), cnt) }
       }
     }
-    val got = SparkEntry.queries("q150_bpe_merges")(spark, dir)
+    val before = persistentRdds
+    val learned = SparkEntry.queries("q150_bpe_merges")(spark, dir)
+    // the 8 merge frames are all released: the result is a local relation
+    assert(persistentRdds <= before,
+      s"$persistentRdds persistent RDDs after learning, $before before")
+    val got = learned
       .collect().map(r =>
         (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
       .sortBy(_._1)
@@ -366,33 +371,41 @@ class FormulaPinSpec extends SparkSpec {
       3L -> "on the mat sat the cat",
       4L -> "the cat the cat the cat")
     val dir = stageDocs(texts.toSeq.map { case (id, t) => (id, t, "s") })
-    val rounds = 2; val perRound = 3
-    var reprs = texts.map { case (id, t) => id -> (" " + t + " ") }
-    for (_ <- 1 to rounds) {
-      val pc = scala.collection.mutable.Map[(String, String), Long]()
-      for ((_, repr) <- reprs) {
-        val t = repr.trim.split(" ")
-        for (i <- 0 until t.length - 1) {
-          pc((t(i), t(i + 1))) = pc.getOrElse((t(i), t(i + 1)), 0L) + 1
+    val perRound = 3
+    for (rounds <- Seq(2, 3)) {
+      var reprs = texts.map { case (id, t) => id -> (" " + t + " ") }
+      for (_ <- 1 to rounds) {
+        val pc = scala.collection.mutable.Map[(String, String), Long]()
+        for ((_, repr) <- reprs) {
+          val t = repr.trim.split(" ")
+          for (i <- 0 until t.length - 1) {
+            pc((t(i), t(i + 1))) = pc.getOrElse((t(i), t(i + 1)), 0L) + 1
+          }
+        }
+        val top = pc.toSeq
+          .sortBy { case ((l, r), c) => (-c, l, r) }.take(perRound)
+        reprs = reprs.map { case (id, repr) =>
+          var s = repr
+          for (((l, r), _) <- top) s = s.replace(s" $l $r ", s" ${l}_$r ")
+          id -> s
         }
       }
-      val top = pc.toSeq
-        .sortBy { case ((l, r), c) => (-c, l, r) }.take(perRound)
-      reprs = reprs.map { case (id, repr) =>
-        var s = repr
-        for (((l, r), _) <- top) s = s.replace(s" $l $r ", s" ${l}_$r ")
-        id -> s
-      }
-    }
-    val expect = texts.map { case (id, t) =>
-      id -> (t.split(" ").length, reprs(id).trim.split(" ").length) }
-    val got = graft.functions.Vocab.phraseBpe(
+      val expect = texts.map { case (id, t) =>
+        id -> (t.split(" ").length, reprs(id).trim.split(" ").length) }
+      val before = persistentRdds
+      val out = graft.functions.Vocab.phraseBpe(
         spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
         rounds, perRound)
-      .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2))).toMap
-    assert(got == expect, s"got=$got expect=$expect")
-    // non-degeneracy: at least one phrase merge fired
-    assert(got.exists { case (_, (nw, ns)) => ns < nw })
+      // every round's frame is released except the last, which the
+      // returned relation reads (caller-owned)
+      assert(persistentRdds <= before + 1,
+        s"rounds=$rounds: $persistentRdds persistent RDDs, $before before")
+      val got = out.collect()
+        .map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2))).toMap
+      assert(got == expect, s"rounds=$rounds: got=$got expect=$expect")
+      // non-degeneracy: at least one phrase merge fired
+      assert(got.exists { case (_, (nw, ns)) => ns < nw })
+    }
   }
 
   test("q151 vocab growth: hand-computed Heaps curve, including a bucket " +

@@ -104,11 +104,15 @@ class GraphSpec extends SparkSpec {
     assert(cm.keySet == wm.keySet)
     cm.foreach { case (k, v) =>
       assert(math.abs(v - wm(k)) <= 2, s"$k: cold=$v warm=${wm(k)}") }
-    // directed failure when the round budget can't reach a fixed point
-    val ex = intercept[IllegalArgumentException] {
+    // directed failure when the round budget can't reach a fixed point,
+    // cold or warm, with every checkpointed frame released
+    val ex = interceptNoLeak[IllegalArgumentException] {
       Graph.hitsConverge(post, maxIters = 1)
     }
     assert(ex.getMessage.contains("fixed point"))
+    interceptNoLeak[IllegalArgumentException] {
+      Graph.hitsConverge(post, Some(aPre), maxIters = 1)
+    }
   }
 
   test("pageRankConverge: tolerance stop, agreement with the unrolled " +
@@ -149,11 +153,14 @@ class GraphSpec extends SparkSpec {
     val (init, _) = Graph.pageRankConverge(path, eps,
       Some(Seq((2L, 900000000L), (99L, 5L)).toDF("v", "r")))
     assert(init.collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
-    // directed failure when the budget can't reach tolerance
-    val ex = intercept[IllegalArgumentException] {
-      Graph.pageRankConverge(path, epsUnits = 0L, maxIters = 2)
+    // directed failure when the budget can't reach tolerance, with
+    // every checkpointed frame released
+    for (budget <- Seq(1, 2)) {
+      val ex = interceptNoLeak[IllegalArgumentException] {
+        Graph.pageRankConverge(path, epsUnits = 0L, maxIters = budget)
+      }
+      assert(ex.getMessage.contains("units"))
     }
-    assert(ex.getMessage.contains("units"))
   }
 
   test("pair-weight artifact: appended batches merge to the from-scratch " +

@@ -633,6 +633,14 @@ class LoweringSpec extends SparkSpec {
     assert(ck.count() == 4)
     assert(ck.queryExecution.optimizedPlan.collectLeaves()
       .forall(!_.toString.contains("DataFrameTap")))
+    // a flow run to its sink releases the tapless checkpoint's frame
+    val before = persistentRdds
+    Flow.writeAll(Seq((
+      pipe(lhs).checkpoint().groupBy("num").every(Aggs.count("n")),
+      graft.sources.ParquetTap(s"$dir/flow"), graft.sources.SinkMode.Replace)))
+    assert(spark.read.parquet(s"$dir/flow").count() == 3)
+    assert(persistentRdds <= before,
+      s"$persistentRdds persistent RDDs after the flow, $before before")
   }
 
   test("debug pipe passes rows through; persist marks the plan cached") {
@@ -641,6 +649,15 @@ class LoweringSpec extends SparkSpec {
     val cached = Flow.toDF(pipe(lhs).persist())
     assert(cached.storageLevel.useMemory)
     cached.unpersist()
+    // a persist pipe's cache stays the caller's: a flow run to its sink
+    // over a caller-owned checkpoint leaves that checkpoint readable
+    val ck = lhs.localCheckpoint(true)
+    val dir = java.nio.file.Files.createTempDirectory("persist").toString
+    Flow.writeAll(Seq((pipe(ck).persist().groupBy("num").every(Aggs.count("n")),
+      graft.sources.ParquetTap(s"$dir/flow"), graft.sources.SinkMode.Replace)))
+    assert(spark.read.parquet(s"$dir/flow").count() == 3)
+    assert(ck.count() == 4, "the caller's checkpoint survives the flow")
+    ck.unpersist()
   }
 
   test("nullSafe coGroup groups null keys together (Cascading semantics)") {

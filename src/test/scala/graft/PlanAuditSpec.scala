@@ -617,38 +617,38 @@ class PlanAuditSpec extends SparkSpec {
         .toDF("id", "band", "key")
       val P = spark.sessionState.conf.numShufflePartitions
       // the transitiveClustersOver construction, verbatim
-      val br = graft.functions.Dedup.checkpointPartitioned(
-        rows, P, col("id"))
-      val brByBucket = graft.functions.Dedup.checkpointPartitioned(
-        br, P, col("band"), col("key"))
-      val labels = br.select(col("id")).distinct()
-        .withColumn("label", col("id"))
-      // one full round: labels hop + bucket-min + bucket hop + id-min
-      val bucketLabel = br.join(labels, "id")
-        .groupBy(col("band"), col("key"))
-        .agg(min(col("label")).as("blabel"))
-      val next = brByBucket.join(bucketLabel, Seq("band", "key"))
-        .groupBy(col("id")).agg(min(col("blabel")).as("label"))
-      next.collect() // AQE finalizes at runtime — audit the FINAL plan
-      val full = next.queryExecution.executedPlan.toString
-      val plan = full.split("== Initial Plan ==").head
-      // the round's only id-exchange is the FINAL per-id min aggregate's
-      // (partial minima, O(nodes)); br's captured HashPartitioning(id, P)
-      // serves both children of the labels-hop join (labels derives from
-      // br), so the per-round EDGE shuffle by id is gone
-      assert("Exchange hashpartitioning\\(id"
-        .r.findAllMatchIn(plan).size == 1, plan)
-      // the bucket hop: only the bucket-min aggregate exchanges on
-      // (band, key); brByBucket's captured partitioning serves its side
-      assert("Exchange hashpartitioning\\(band"
-        .r.findAllMatchIn(plan).size == 1, plan)
-      // neither checkpointed edge copy is re-exchanged or re-sorted: a
-      // Scan ExistingRDD may sit under a Filter, but never under a Sort
-      // or an Exchange (the captured partitioning + ordering serve the
-      // merge joins directly)
-      val reshuffled =
-        "(Sort|Exchange)[^\\n]*\\n[^\\n]*Scan ExistingRDD".r
-      assert(reshuffled.findFirstIn(plan).isEmpty, plan)
+      graft.exec.Frames { f =>
+        val br = f.partitioned(rows, P, col("id"))
+        val brByBucket = f.partitioned(br, P, col("band"), col("key"))
+        val labels = br.select(col("id")).distinct()
+          .withColumn("label", col("id"))
+        // one full round: labels hop + bucket-min + bucket hop + id-min
+        val bucketLabel = br.join(labels, "id")
+          .groupBy(col("band"), col("key"))
+          .agg(min(col("label")).as("blabel"))
+        val next = brByBucket.join(bucketLabel, Seq("band", "key"))
+          .groupBy(col("id")).agg(min(col("blabel")).as("label"))
+        next.collect() // AQE finalizes at runtime — audit the FINAL plan
+        val full = next.queryExecution.executedPlan.toString
+        val plan = full.split("== Initial Plan ==").head
+        // the round's only id-exchange is the FINAL per-id min aggregate's
+        // (partial minima, O(nodes)); br's captured HashPartitioning(id, P)
+        // serves both children of the labels-hop join (labels derives from
+        // br), so the per-round EDGE shuffle by id is gone
+        assert("Exchange hashpartitioning\\(id"
+          .r.findAllMatchIn(plan).size == 1, plan)
+        // the bucket hop: only the bucket-min aggregate exchanges on
+        // (band, key); brByBucket's captured partitioning serves its side
+        assert("Exchange hashpartitioning\\(band"
+          .r.findAllMatchIn(plan).size == 1, plan)
+        // neither checkpointed edge copy is re-exchanged or re-sorted: a
+        // Scan ExistingRDD may sit under a Filter, but never under a Sort
+        // or an Exchange (the captured partitioning + ordering serve the
+        // merge joins directly)
+        val reshuffled =
+          "(Sort|Exchange)[^\\n]*\\n[^\\n]*Scan ExistingRDD".r
+        assert(reshuffled.findFirstIn(plan).isEmpty, plan)
+      }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 }
