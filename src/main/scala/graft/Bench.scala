@@ -31,14 +31,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus, Sessions.NanosAsLong, Sessions.Adaptive)
     spark.sparkContext.setLogLevel("WARN")
     // The streaming queries (q123 especially: kill + checkpoint restart)
     // spray ChecksumCheckpointFileManager "no checksum file" WARNs into
@@ -51,7 +44,7 @@ object Bench {
     // noop-format write: evaluates every output expression. A count() lets
     // Catalyst prune projection-only queries down to a row count, which
     // would under-measure the scan+compute work.
-    def run(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
+    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
             dir: String): Unit =
       fn(spark, dir).write.mode("overwrite").format("noop").save()
     // Measurement methodology (documented in BASELINE.md):
@@ -115,7 +108,7 @@ object Bench {
     val errorCounts = scala.collection.mutable.LinkedHashMap[String, Int]()
     val errorMsgs = scala.collection.mutable.LinkedHashMap[String, String]()
     def timedPass(name: String,
-        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
       try { run(fn, sfDir); Some((System.nanoTime() - t0) / 1e9) }

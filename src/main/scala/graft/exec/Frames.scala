@@ -2,6 +2,7 @@ package graft.exec
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
 
@@ -54,29 +55,15 @@ final class Frames private[graft] () {
   def persist(df: DataFrame): DataFrame =
     track(df.persist(StorageLevel.MEMORY_AND_DISK), cached = true)
 
-  /** Hash-partition `df` on `keys` into exactly `n` partitions, sort
-    * within partitions on the same keys, and lazily localCheckpoint —
-    * so the resulting LogicalRDD CAPTURES HashPartitioning(keys, n) and
-    * the sort order, and every later join/aggregate on those keys
-    * consumes the frame with NO exchange and NO sort (the r17 loop-input
-    * discipline). AQE is disabled while the checkpoint Dataset is
-    * created: `AdaptiveSparkPlanExec` does not override
-    * `outputPartitioning`, so a checkpoint taken under AQE records
-    * UnknownPartitioning and every downstream join re-exchanges the
-    * frame (verified empirically; the PlanAuditSpec propagation-round
-    * audit pins the working shape). Only plan CAPTURE runs non-adaptive
-    * — the one REPARTITION_BY_NUM shuffle below is exempt from AQE
-    * coalescing anyway, and consumers plan under the session's normal
-    * conf. */
-  def partitioned(df: DataFrame, n: Int, keys: Column*): DataFrame = {
-    val s = df.sparkSession
-    val key = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(key)
-    try {
-      s.conf.set(key, "false")
-      lazily(df.repartition(n, keys: _*).sortWithinPartitions(keys: _*))
-    } finally s.conf.set(key, prev)
-  }
+  /** Lazy localCheckpoint hash-partitioned on `keys` into exactly `n`
+    * partitions and sorted within them, whose LogicalRDD DECLARES that
+    * partitioning and order, so every later join/aggregate on those
+    * keys consumes the frame with NO exchange and NO sort (the r17
+    * loop-input discipline; the PlanAuditSpec propagation-round audit
+    * pins the shape). Reads and writes no conf: see
+    * `PlanBridge.partitionedCheckpoint`. */
+  def partitioned(df: DataFrame, n: Int, keys: Column*): DataFrame =
+    track(PlanBridge.partitionedCheckpoint(df, n, keys), cached = false)
 
   /** Eager localCheckpoint the caller owns (not recorded): the
     * function's result, or a frame its result reads. */

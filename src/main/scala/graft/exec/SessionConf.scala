@@ -1,0 +1,23 @@
+package graft.exec
+
+import org.apache.spark.sql.SparkSession
+
+/** The one place a query sets session conf. Only toggles with no
+  * plan-level form come here: ANSI evaluation, the bucketed-scan rule,
+  * and a stateful stream's shuffle-partition count (fixed at stream
+  * start). Join strategy and partitioning live in the plan instead
+  * (`PlanBridge.mergeJoins`, `Frames.partitioned`).
+  *
+  * The setting is session-global while `body` runs: a query planned
+  * concurrently on the same session sees it too. `key` must be a
+  * registered SQL conf; its previous value is restored on every exit
+  * path. */
+object SessionConf {
+  def scoped[T](s: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = s.conf.get(key)
+    try {
+      s.conf.set(key, value)
+      body
+    } finally s.conf.set(key, prev)
+  }
+}

@@ -130,6 +130,7 @@ object Contamination {
     val bs = sourceGramRows(batch, textCol, srcCol, n, wideHash)
       .repartition(indexBuckets, col("h"))
       .groupBy(col("h")).agg(sort_array(collect_set(col("source"))).as("bss"))
+    // a full outer join never broadcasts: the shape needs no hint
     val joined = corpusIndex.join(bs, Seq("h"), "full_outer")
     if (assertBucketScan) {
       val plan = joined.queryExecution.executedPlan.toString

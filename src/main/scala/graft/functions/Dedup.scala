@@ -576,13 +576,15 @@ object Dedup {
     // against the batch hashes — h is the index's bucket column, so the
     // corpus side plans with no exchange and the (small) batch-hash side
     // exchanges exactly once (a pre-distinct would cost a second
-    // h-exchange to re-align with the bucket count; semi join needs none)
-    val cmRaw = corpusIndex.join(bfp.select(col("h")), Seq("h"), "leftsemi")
+    // h-exchange to re-align with the bucket count; semi join needs none).
+    // The merge hint keeps that shape at every batch size.
+    val cmRaw = corpusIndex
+      .join(bfp.select(col("h")).hint("merge"), Seq("h"), "leftsemi")
       .select(col("id").as("corpus_id"), col("h"))
     if (assertBucketScan) {
       // the q180 plan discipline, asserted in-query: corpus side must be
       // the bucket-aware index scan; only the touched-hash side may
-      // exchange on h (callers disable auto-broadcast around this)
+      // exchange on h
       val plan = cmRaw.queryExecution.executedPlan.toString
       val exchanges = "Exchange hashpartitioning\\(h".r
         .findAllMatchIn(plan).size

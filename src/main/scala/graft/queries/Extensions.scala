@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.PlanBridge.mergeJoins
+import graft.exec.SessionConf
 import graft.functions.{Dedup, Similarity, TextAnalysis => TA}
 
 /** Training-data-pipeline extension queries: text analysis, dedup,
@@ -104,9 +106,9 @@ object Extensions {
     graft.functions.Profile.ColSpec("l_returnflag", "string"),
     graft.functions.Profile.ColSpec("l_shipdate", "ts"))
 
-  /** Run `body` with the shuffle-partition count sized for a stateful
-    * streaming query, restoring the session's setting after. Stateful
-    * streaming cost at fixed data volume is dominated by PER-PARTITION
+  /** Run `body` with 8 shuffle partitions, the count sized for a
+    * stateful streaming query, restoring the session's setting after.
+    * Stateful streaming cost at fixed data volume is dominated by PER-PARTITION
     * state-store commits (each micro-batch writes every partition's store
     * delta + checkpoint), so the partition count should track the state
     * size, not the session's batch-shuffle default — 32 partitions of
@@ -115,11 +117,8 @@ object Extensions {
     * volume (state stores scale out per partition). NOTE: the partition
     * count is baked into the checkpoint at stream START; freshStreamDirs
     * wipes the checkpoint each run, so changing it here is safe. */
-  private def withStreamPartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private def withStreamPartitions[T](s: SparkSession)(body: => T): T =
+    SessionConf.scoped(s, "spark.sql.shuffle.partitions", "8")(body)
 
   /** Staged CATALOG-TABLE name with a per-process nonce — the
     * freshStreamDirs discipline for saveAsTable state: two concurrent
@@ -291,11 +290,13 @@ object Extensions {
     s.createDataFrame(java.util.Arrays.asList(qRows: _*), qSel.schema)
   }
 
-  private def withoutAutoBucketedScan[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = s.conf.get(key)
-    try { s.conf.set(key, "false"); body } finally s.conf.set(key, prev)
-  }
+  /** Keep bucketed scans bucketed while `body` plans: Spark's
+    * DisableUnnecessaryBucketedScan would otherwise drop the bucket
+    * layout (and its pruning) wherever no operator needs it. A physical
+    * rule read from conf, so it has no plan-level form. */
+  private def withoutAutoBucketedScan[T](s: SparkSession)(body: => T): T =
+    SessionConf.scoped(s,
+      "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")(body)
 
   /** The composed-stack serving-plan contract (q313, held on the
     * multi-query plan by q326): artifacts only — no corpus scan on
@@ -593,7 +594,7 @@ object Extensions {
         .withColumn("ts", expr("timestamp'2100-01-01 00:00:00'"))
         .withColumn("event_type", lit("__flush"))
       stageTimeSliced(in, ev, "ts", sentinel)
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.windowedCounts(
           graft.streaming.StreamOps.readStream(s, in, ev.schema,
             Map("maxFilesPerTrigger" -> "1")),
@@ -644,7 +645,7 @@ object Extensions {
       stageTimeSliced(in, ev, "ts", sentinel)
       // 4 micro-batches × per-partition state commits: size partitions to
       // the state, not the batch-shuffle default (see withStreamPartitions)
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
           Map("maxFilesPerTrigger" -> "1"))
         val sessions = {
@@ -685,7 +686,7 @@ object Extensions {
       views.coalesce(1).write.parquet(s"$in/v")
       // stream-stream join keeps FOUR state stores per partition; size the
       // partition count to the (small) state, not the batch default
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val joined = graft.streaming.StreamOps.streamStreamJoin(
           graft.streaming.StreamOps.readStream(s, s"$in/p", purchases.schema),
           graft.streaming.StreamOps.readStream(s, s"$in/v", views.schema),
@@ -716,7 +717,7 @@ object Extensions {
         // the initial watermark value is border-dropped by the dedup state
         .withColumn("ts", expr("timestamp_micros((doc_id + 86400) * 1000000)"))
       docs.coalesce(1).write.parquet(in)
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val deduped = graft.streaming.StreamOps.dedupStream(
           graft.streaming.StreamOps.readStream(s, in, docs.schema),
           "ts", "text", watermark = "1 hour")
@@ -1053,7 +1054,7 @@ object Extensions {
         .withColumn("ts", expr("timestamp'2100-01-01 00:00:00'"))
         .withColumn("event_type", lit("__flush"))
       stageTimeSliced(in, ev, "ts", sentinel)
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.slidingCounts(
           graft.streaming.StreamOps.readStream(s, in, ev.schema,
             Map("maxFilesPerTrigger" -> "1")),
@@ -1155,9 +1156,9 @@ object Extensions {
     // O(batch) side) are exchanged into the index's bucket layout. The
     // corpus is never re-signatured per batch. The query asserts the plan
     // property itself (exactly ONE hashpartitioning exchange on the join
-    // key — the batch side — and a bucket-aware index scan; broadcast
-    // disabled while building so the bucket-join path is what's planned);
-    // the oracle gates the values.
+    // key — the batch side — and a bucket-aware index scan; the merge
+    // hint keeps the bucket-join path planned, at the sink too); the
+    // oracle gates the values.
     "q127_incremental_neardup" -> ((s, dir) => {
       val table = stagedTable("graft_q127_bandidx")
       graft.queries.Tables.dropStagedTable(s, table)
@@ -1169,22 +1170,18 @@ object Extensions {
         Dedup.bandIndex(docs.filter(col("doc_id") % 10 =!= 7),
           "doc_id", "text", wideHash = false),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = Dedup.incrementalNearDupsAgainstIndex(
-          corpusIndex = s.table(table),
-          batch = docs.filter(col("doc_id") % 10 === 7),
-          "doc_id", "text", wideHash = false)
-        val plan = df.queryExecution.executedPlan.toString
-        val exchanges = "Exchange hashpartitioning\\(band".r
-          .findAllMatchIn(plan).size
-        require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-          s"band rows (got $exchanges (band, key) exchanges)")
-        require(plan.contains("SelectedBucketsCount"),
-          "corpus side must be the bucket-aware index scan")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(Dedup.incrementalNearDupsAgainstIndex(
+        corpusIndex = s.table(table),
+        batch = docs.filter(col("doc_id") % 10 === 7),
+        "doc_id", "text", wideHash = false))
+      val plan = df.queryExecution.executedPlan.toString
+      val exchanges = "Exchange hashpartitioning\\(band".r
+        .findAllMatchIn(plan).size
+      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
+        s"band rows (got $exchanges (band, key) exchanges)")
+      require(plan.contains("SelectedBucketsCount"),
+        "corpus side must be the bucket-aware index scan")
+      df
     }),
 
     // --- streaming arrival against the persisted near-dup index: the q127
@@ -1213,7 +1210,7 @@ object Extensions {
         batch.filter(col("doc_id") % 30 === 7),
         batch.filter(col("doc_id") % 30 === 17),
         batch.filter(col("doc_id") % 30 === 27)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val index = s.table(table).withColumnRenamed("id", "corpus_id")
         val stream = graft.streaming.StreamOps.readStream(s, in, batch.schema,
           Map("maxFilesPerTrigger" -> "1"))
@@ -1669,7 +1666,7 @@ object Extensions {
         .withColumn("ts", expr("timestamp'2100-01-01 00:00:00'"))
         .withColumn("user_id", lit(-1L))
       stageTimeSliced(in, ev, "ts", sentinel)
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
             Map("maxFilesPerTrigger" -> "1"))
           .withWatermark("ts", "4 hours")
@@ -1726,7 +1723,7 @@ object Extensions {
         .withColumn("ts", expr("timestamp'2100-01-01 00:00:00'"))
         .withColumn("user_id", lit(-1L))
       stageTimeSliced(in, ev, "ts", sentinel)
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
             Map("maxFilesPerTrigger" -> "1"))
           .withWatermark("ts", "4 hours")
@@ -1968,7 +1965,7 @@ object Extensions {
       def ms = unix_millis(col("ts"))
       def commits: Int = Option(new java.io.File(s"$chk/commits").listFiles())
         .toSeq.flatten.count(_.getName.forall(_.isDigit))
-      val run1CommitCount = withStreamPartitions(s, 8) {
+      val run1CommitCount = withStreamPartitions(s) {
         def start(trigger: org.apache.spark.sql.streaming.Trigger) =
           graft.streaming.StreamOps.readStream(s, in, ev.schema,
               Map("maxFilesPerTrigger" -> "1"))
@@ -2038,7 +2035,7 @@ object Extensions {
       def ms = unix_millis(col("ts"))
       def commits: Int = Option(new java.io.File(s"$chk/commits").listFiles())
         .toSeq.flatten.count(_.getName.forall(_.isDigit))
-      val run1CommitCount = withStreamPartitions(s, 8) {
+      val run1CommitCount = withStreamPartitions(s) {
         def start(trigger: org.apache.spark.sql.streaming.Trigger) = {
           val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
             Map("maxFilesPerTrigger" -> "1"))
@@ -2098,28 +2095,24 @@ object Extensions {
     // survivors. Result-identical to the plain semi join (bloom FPs die in
     // the exact join): the sketch can only REMOVE probe-side shuffle
     // bytes, never change the answer — which is why the oracle is the
-    // plain EXISTS. Broadcast is forced off so the gate exercises the
-    // shuffled path the pruning exists for.
+    // plain EXISTS. The merge hint keeps the gate on the shuffled path
+    // the pruning exists for.
     "q141_bloom_semijoin" -> ((s, dir) => {
       val li = s.read.parquet(s"$dir/lineitem.parquet")
       val hot = s.read.parquet(s"$dir/orders.parquet")
         .filter(col("o_totalprice") > 475000.0)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val joined = graft.functions.BloomPrune.semiJoin(
-          li, hot, "l_orderkey", "o_orderkey",
-          estItems = 1000L, numBits = 8192L)
-        val df = joined.groupBy(col("l_returnflag"))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("l_quantity").cast("bigint")).as("sum_qty"))
-        val plan = df.queryExecution.executedPlan.toString
-        require(plan.contains("might_contain"),
-          "probe side must carry the bloom prefilter below its exchange")
-        require(!plan.contains("BroadcastHashJoin"),
-          "gate must exercise the shuffled-join path the pruning targets")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val joined = graft.functions.BloomPrune.semiJoin(
+        li, hot, "l_orderkey", "o_orderkey",
+        estItems = 1000L, numBits = 8192L)
+      val df = mergeJoins(joined.groupBy(col("l_returnflag"))
+        .agg(count(lit(1)).as("n_rows"),
+          sum(col("l_quantity").cast("bigint")).as("sum_qty")))
+      val plan = df.queryExecution.executedPlan.toString
+      require(plan.contains("might_contain"),
+        "probe side must carry the bloom prefilter below its exchange")
+      require(!plan.contains("BroadcastHashJoin"),
+        "gate must exercise the shuffled-join path the pruning targets")
+      df
     }),
 
     // --- snapshot upsert: MERGE a daily batch (71 updates re-texted 'v2 ',
@@ -2146,22 +2139,19 @@ object Extensions {
         .unionAll(docs.filter(col("doc_id") % 50 === 11)
           .select((col("doc_id") + 1000000L).as("doc_id"), col("text"),
             lit("ingest").as("source")))
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val merged = graft.functions.Snapshot.upsert(s.table(table), batch,
-          "doc_id", Seq("text", "source"), "version")
-          .select(col("doc_id"), md5(col("text")).as("text_md5"),
-            col("source"), col("version"))
-        val plan = merged.queryExecution.executedPlan.toString
-        val exchanges = "Exchange hashpartitioning\\(".r
-          .findAllMatchIn(plan).size
-        require(exchanges == 1 && plan.contains("hashpartitioning(b_key"),
-          s"merge must shuffle ONLY the batch side (got $exchanges exchanges)")
-        require(plan.contains("SelectedBucketsCount"),
-          "snapshot side must be the bucket-aware scan")
-        merged
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val merged = mergeJoins(graft.functions.Snapshot.upsert(
+        s.table(table), batch,
+        "doc_id", Seq("text", "source"), "version")
+        .select(col("doc_id"), md5(col("text")).as("text_md5"),
+          col("source"), col("version")))
+      val plan = merged.queryExecution.executedPlan.toString
+      val exchanges = "Exchange hashpartitioning\\(".r
+        .findAllMatchIn(plan).size
+      require(exchanges == 1 && plan.contains("hashpartitioning(b_key"),
+        s"merge must shuffle ONLY the batch side (got $exchanges exchanges)")
+      require(plan.contains("SelectedBucketsCount"),
+        "snapshot side must be the bucket-aware scan")
+      merged
     }),
 
     // --- model-based quality scoring (hashing-trick linear classifier):
@@ -2198,11 +2188,7 @@ object Extensions {
       // read off here (the downstream agg keys on id, not term) — and
       // with it the bucket PRUNING the layout exists for; pin the scan
       // bucketed so the probe provably reads only the terms' buckets.
-      val autoScan = s.conf.get(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled")
-      try {
-        s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-          "false")
+      withoutAutoBucketedScan(s) {
         val df = graft.functions.InvertedIndex.queryAll(
             s.table(table), Seq("join", "scan", "merge"))
           .withColumnRenamed("id", "doc_id")
@@ -2213,8 +2199,7 @@ object Extensions {
         require(sel.get.group(1).toInt < sel.get.group(2).toInt,
           "3-term probe must read strictly fewer buckets than the layout")
         df
-      } finally s.conf.set(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled", autoScan)
+      }
     }),
 
     // --- BM25 served FROM the persisted postings index at ARRIVAL
@@ -2250,11 +2235,7 @@ object Extensions {
         graft.sources.SinkMode.Update)
       statsTap.write(R.corpusStats(batch, "text"),
         graft.sources.SinkMode.Update)
-      val autoScan = s.conf.get(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled")
-      try {
-        s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-          "false")
+      withoutAutoBucketedScan(s) {
         val df = R.bm25FromIndex(s.table(table), statsTap.read(s),
             Bm25Terms, topK = 20)
           .withColumnRenamed("id", "doc_id")
@@ -2270,8 +2251,7 @@ object Extensions {
           "q300: the probe must read strictly fewer buckets than the " +
             "layout")
         df
-      } finally s.conf.set(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled", autoScan)
+      }
     }),
 
     // --- the PageRank rank-ARTIFACT maintenance loop (r14 verdict #3 —
@@ -2396,7 +2376,7 @@ object Extensions {
       stageSliced(in, Seq(
         batch.filter(col("doc_id") % 2 === 1),
         batch.filter(col("doc_id") % 2 === 0)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream1 = graft.streaming.StreamOps.readStream(s, in,
           batch.schema, Map("maxFilesPerTrigger" -> "1"))
         val q1 = I.postingRowsPerDoc(stream1, "doc_id", "text")
@@ -2644,7 +2624,7 @@ object Extensions {
     // and today's corpus snapshots live in the SAME bucketed layout, so
     // the full-outer comparison plans with ZERO exchanges — both sides
     // are bucket-aware scans and the merge join runs inside co-located
-    // buckets (asserted; broadcast forced off so the assert can't be
+    // buckets (asserted; the merge hint keeps the assert from being
     // satisfied vacuously by a broadcast plan). Inserts/deletes/updates
     // are synthesized deterministically; unchanged keys must vanish.
     "q145_snapshot_diff" -> ((s, dir) => {
@@ -2662,20 +2642,16 @@ object Extensions {
               .otherwise(col("text")).as("text"),
             col("source")),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = graft.functions.Snapshot.diff(
-            s.table(t1), s.table(t2), "doc_id", Seq("text", "source"))
-          .select(col("doc_id"), col("change"),
-            md5(col("text")).as("text_md5"), col("source"))
-        val plan = df.queryExecution.executedPlan.toString
-        require(!plan.contains("Exchange"),
-          "co-bucketed snapshot diff must plan with ZERO exchanges")
-        require("SelectedBucketsCount".r.findAllMatchIn(plan).size == 2,
-          "both snapshot versions must be bucket-aware scans")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(graft.functions.Snapshot.diff(
+          s.table(t1), s.table(t2), "doc_id", Seq("text", "source"))
+        .select(col("doc_id"), col("change"),
+          md5(col("text")).as("text_md5"), col("source")))
+      val plan = df.queryExecution.executedPlan.toString
+      require(!plan.contains("Exchange"),
+        "co-bucketed snapshot diff must plan with ZERO exchanges")
+      require("SelectedBucketsCount".r.findAllMatchIn(plan).size == 2,
+        "both snapshot versions must be bucket-aware scans")
+      df
     }),
 
     // --- STREAMING upsert sink: the q142 merge as a live foreachBatch
@@ -2706,7 +2682,7 @@ object Extensions {
               concat(lit("ins "), col("text")).as("text"), col("source"))),
         docs.filter(col("doc_id") % 4 <= 2)
           .withColumn("text", concat(lit("b2 "), col("text")))))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in, docs.schema,
           Map("maxFilesPerTrigger" -> "1"))
         val q = stream.writeStream
@@ -2782,13 +2758,9 @@ object Extensions {
         graft.functions.Contamination.sourceGramIndex(
           corpus, "text", "source", n = 8, wideHash = false),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        graft.functions.Contamination.sourceOverlapMatrixIndexed(
-          s.table(table), batch, "text", "source", n = 8,
-          assertBucketScan = true, wideHash = false)
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      graft.functions.Contamination.sourceOverlapMatrixIndexed(
+        s.table(table), batch, "text", "source", n = 8,
+        assertBucketScan = true, wideHash = false)
     }),
 
     // --- BPE merge induction (tokenizer training). The corpus is scanned
@@ -2864,7 +2836,7 @@ object Extensions {
         aug.filter(col("doc_id") % 3 === 0),
         aug.filter(col("doc_id") % 3 === 1),
         aug.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in,
           aug.schema, Map("maxFilesPerTrigger" -> "1"))
         val q = V.wordPieceEncode(stream, "doc_id", "text", vocab)
@@ -3145,25 +3117,22 @@ object Extensions {
     // prefix-decomposability argument in UnigramSegment.scala are all
     // independently verified. Plan asserts: the ONE corpus scan is
     // checkpointed away, so the EM chain's final plan is corpus-free,
-    // and the per-piece bits join is the explicit broadcast
-    // (auto-broadcast pinned off).
+    // and the per-piece bits join is the explicit broadcast (every
+    // other join carries the merge hint).
     "q281_unigram_em_segment" -> ((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = graft.functions.Vocab.unigramEmSegmented(docs, "text")
-        val ps = df.queryExecution.executedPlan.toString
-        require(!ps.contains("documents.parquet"),
-          "q281: the EM chain must be corpus-free after the checkpointed " +
-          "word table (one corpus scan total)")
-        require("unigram_segment".r.findAllMatchIn(ps).nonEmpty,
-          "q281: the Viterbi expression node is missing from the plan")
-        require(ps.contains("BroadcastHashJoin"),
-          "q281: the per-piece bits join must execute the broadcast " +
-          "(auto-broadcast is off — only the hint can plan one)")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(
+        graft.functions.Vocab.unigramEmSegmented(docs, "text"))
+      val ps = df.queryExecution.executedPlan.toString
+      require(!ps.contains("documents.parquet"),
+        "q281: the EM chain must be corpus-free after the checkpointed " +
+        "word table (one corpus scan total)")
+      require("unigram_segment".r.findAllMatchIn(ps).nonEmpty,
+        "q281: the Viterbi expression node is missing from the plan")
+      require(ps.contains("BroadcastHashJoin"),
+        "q281: the per-piece bits join must execute the broadcast " +
+        "(only the hint can plan one)")
+      df
     }),
 
     // --- MULTI-ROUND unigram EM with the SHRINKING-VOCABULARY pruning
@@ -3262,21 +3231,18 @@ object Extensions {
             array(novel.map(lit): _*),
             (col("doc_id") % 5 + 1).cast("int"))).as("text"))
         .localCheckpoint()
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = graft.functions.Vocab.scoreUnigramArrivals(tap.read(s), batch)
-        val ps = df.queryExecution.executedPlan.toString
-        require(!ps.contains("documents.parquet"),
-          "q282: arrival scoring must never rescan the corpus — the " +
-          "frozen model tap is the only file scan allowed in this plan")
-        require(ps.contains("graft_q282_unigram_model"),
-          "q282: the frozen model tap scan is missing from the plan")
-        require("BroadcastHashJoin".r.findAllMatchIn(ps).size >= 2,
-          "q282: the piece-bits join and the word-seg join-back must " +
-          "both execute as explicit broadcasts (auto-broadcast is off)")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(
+        graft.functions.Vocab.scoreUnigramArrivals(tap.read(s), batch))
+      val ps = df.queryExecution.executedPlan.toString
+      require(!ps.contains("documents.parquet"),
+        "q282: arrival scoring must never rescan the corpus — the " +
+        "frozen model tap is the only file scan allowed in this plan")
+      require(ps.contains("graft_q282_unigram_model"),
+        "q282: the frozen model tap scan is missing from the plan")
+      require("BroadcastHashJoin".r.findAllMatchIn(ps).size >= 2,
+        "q282: the piece-bits join and the word-seg join-back must " +
+        "both execute as explicit broadcasts")
+      df
     }),
 
     // --- the unigram family at a REALISTIC WORD SPACE (the q276
@@ -3296,19 +3262,15 @@ object Extensions {
           regexp_replace(col("text"), lit("(\\S+)"),
             concat(lit("$1~"), (col("doc_id") % 512).cast("string")))
             .as("text"))
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = graft.functions.Vocab.unigramEmSegmented(docs, "text",
-          maxPieceLen = 4, topK = 4096, minMultiPieces = 2048)
-        val ps = df.queryExecution.executedPlan.toString
-        require(!ps.contains("documents.parquet"),
-          "q287: the EM chain must be corpus-free after the checkpointed " +
-          "word table (one corpus scan total)")
-        require(ps.contains("BroadcastHashJoin"),
-          "q287: the per-piece bits join must execute the broadcast")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(graft.functions.Vocab.unigramEmSegmented(docs, "text",
+        maxPieceLen = 4, topK = 4096, minMultiPieces = 2048))
+      val ps = df.queryExecution.executedPlan.toString
+      require(!ps.contains("documents.parquet"),
+        "q287: the EM chain must be corpus-free after the checkpointed " +
+        "word table (one corpus scan total)")
+      require(ps.contains("BroadcastHashJoin"),
+        "q287: the per-piece bits join must execute the broadcast")
+      df
     }),
 
     // --- PII scrubbing (the compliance redaction pass): email/phone/
@@ -3341,7 +3303,7 @@ object Extensions {
         docs.filter(col("doc_id") % 3 === 0),
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in,
           docs.schema, Map("maxFilesPerTrigger" -> "1"))
         val q = piiScrubProjection(stream).writeStream
@@ -3371,15 +3333,11 @@ object Extensions {
       val nCells = sketch.count()
       require(nCells <= K.CmsDepth.toLong * (1L << (4 * K.CmsNibbles)),
         s"q290: sketch has $nCells cells — exceeds the fixed-memory bound")
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = K.cmsEstimates(sketch, docs, "text")
-        require(df.queryExecution.executedPlan.toString
-            .contains("BroadcastHashJoin"),
-          "q290: the estimate lookup must broadcast the bounded sketch")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(K.cmsEstimates(sketch, docs, "text"))
+      require(df.queryExecution.executedPlan.toString
+          .contains("BroadcastHashJoin"),
+        "q290: the estimate lookup must broadcast the bounded sketch")
+      df
     }),
 
     // --- the tokenizer-to-trainer composition: unigram piece counts
@@ -3392,27 +3350,23 @@ object Extensions {
     // window (q128's assert repeated here).
     "q293_tokenize_and_pack" -> ((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val wnp = graft.functions.Vocab.unigramEmSegmented(docs, "text")
-          .select(col("w"), col("n_pieces")).localCheckpoint()
-        val dnp = docs
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-          .filter(length(col("w")) > 0)
-          .join(broadcast(wnp), Seq("w"))
-          .groupBy("doc_id").agg(sum(col("n_pieces")).as("n_pieces"))
-        val df = graft.functions.SequencePack.pack(
-          docs.select(col("source"), col("doc_id")).join(dnp, Seq("doc_id")),
-          "source", "doc_id", "n_pieces", budget = 512L, substreams = 4)
-        val ps = df.queryExecution.executedPlan.toString
-        require("windowspecdefinition\\(source#\\d+, sub#\\d+L".r
-            .findFirstIn(ps).isDefined,
-          "q293: packing window must partition by (source, sub)")
-        require(ps.contains("BroadcastHashJoin"),
-          "q293: the word→pieces lookup must broadcast the vocab table")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val wnp = graft.functions.Vocab.unigramEmSegmented(docs, "text")
+        .select(col("w"), col("n_pieces")).localCheckpoint()
+      val dnp = docs
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+        .filter(length(col("w")) > 0)
+        .join(broadcast(wnp), Seq("w"))
+        .groupBy("doc_id").agg(sum(col("n_pieces")).as("n_pieces"))
+      val df = mergeJoins(graft.functions.SequencePack.pack(
+        docs.select(col("source"), col("doc_id")).join(dnp, Seq("doc_id")),
+        "source", "doc_id", "n_pieces", budget = 512L, substreams = 4))
+      val ps = df.queryExecution.executedPlan.toString
+      require("windowspecdefinition\\(source#\\d+, sub#\\d+L".r
+          .findFirstIn(ps).isDefined,
+        "q293: packing window must partition by (source, sub)")
+      require(ps.contains("BroadcastHashJoin"),
+        "q293: the word→pieces lookup must broadcast the vocab table")
+      df
     }),
 
     // --- blocklist screening (Curation.BlockTerms scaladoc): the whole
@@ -3489,7 +3443,7 @@ object Extensions {
         docs.filter(col("doc_id") % 3 === 0),
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in,
           docs.schema, Map("maxFilesPerTrigger" -> "1"))
         val q = C.blocklistScreenWith(stream, terms).writeStream
@@ -3527,20 +3481,16 @@ object Extensions {
         .localCheckpoint()
       val merged = tap.read(s).unionByName(batchCells)
         .groupBy("j", "cell").agg(sum(col("n")).as("n"))
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = K.cmsEstimates(merged, salted(docs), "text")
-        val ps = df.queryExecution.executedPlan.toString
-        require("documents\\.parquet".r.findAllMatchIn(ps).size == 1,
-          "q291: the corpus may be scanned ONCE (the estimate token " +
-          "list) — the sketch side must come from the tap + the batch")
-        require(ps.contains("graft_q291_cms"),
-          "q291: the persisted sketch tap scan is missing from the plan")
-        require(ps.contains("BroadcastHashJoin"),
-          "q291: the estimate lookup must broadcast the merged sketch")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(K.cmsEstimates(merged, salted(docs), "text"))
+      val ps = df.queryExecution.executedPlan.toString
+      require("documents\\.parquet".r.findAllMatchIn(ps).size == 1,
+        "q291: the corpus may be scanned ONCE (the estimate token " +
+        "list) — the sketch side must come from the tap + the batch")
+      require(ps.contains("graft_q291_cms"),
+        "q291: the persisted sketch tap scan is missing from the plan")
+      require(ps.contains("BroadcastHashJoin"),
+        "q291: the estimate lookup must broadcast the merged sketch")
+      df
     }),
 
     // --- CMS at SLIDING-WINDOW cadence (round-13 verdict item 7 — the
@@ -3573,15 +3523,11 @@ object Extensions {
         "q297: the expiring window holds no mass — eviction is vacuous")
       val live = K.cmsLive(windowed, Seq(1L, 2L, 3L))
       val liveDocs = docs.filter(col("doc_id") % 4 =!= 0)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = K.cmsEstimates(live, liveDocs, "text")
-        require(df.queryExecution.executedPlan.toString
-            .contains("BroadcastHashJoin"),
-          "q297: the estimate lookup must broadcast the live sketch")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(K.cmsEstimates(live, liveDocs, "text"))
+      require(df.queryExecution.executedPlan.toString
+          .contains("BroadcastHashJoin"),
+        "q297: the estimate lookup must broadcast the live sketch")
+      df
     }),
 
     // --- CMS with EXPONENTIAL DECAY (q297's sliding window's smooth
@@ -3606,16 +3552,12 @@ object Extensions {
       require(windowed.filter(col("win") < 3).limit(1).count() == 1 &&
           windowed.filter(col("win") === 3).limit(1).count() == 1,
         "q301: decay needs mass in BOTH an aged window and the newest")
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = K.cmsDecayedEstimates(windowed, docs, "win", "text",
-          curWin = 3L)
-        require(df.queryExecution.executedPlan.toString
-            .contains("BroadcastHashJoin"),
-          "q301: the estimate lookup must broadcast the decayed sketch")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(K.cmsDecayedEstimates(windowed, docs, "win", "text",
+        curWin = 3L))
+      require(df.queryExecution.executedPlan.toString
+          .contains("BroadcastHashJoin"),
+        "q301: the estimate lookup must broadcast the decayed sketch")
+      df
     }),
 
     // --- the NB KERNEL form (the q157/q263 same-values-new-plan
@@ -3623,10 +3565,12 @@ object Extensions {
     // in the codegen reference objects, zero joins, zero exchanges
     // (asserted: the plan is a single scan-shaped projection). Oracle is
     // q283's VERBATIM — the kernel changes the plan, never the numbers.
-    "q288_nb_kernel" -> ((s, dir) => {
+    // The model frame is read only by the build-time collects that fill
+    // the kernel, so the scope releases it before the query returns.
+    "q288_nb_kernel" -> ((s, dir) => graft.exec.Frames { f =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val model = graft.functions.Classify
-        .nbTrainCounts(docs, "lang", "text").localCheckpoint()
+      val model = f.eagerly(graft.functions.Classify
+        .nbTrainCounts(docs, "lang", "text"))
       val df = graft.functions.Classify.scoreNaiveBayesKernel(model, docs)
       val ps = df.queryExecution.executedPlan.toString
       require(!ps.contains("Exchange") && !ps.contains("Join"),
@@ -3657,7 +3601,7 @@ object Extensions {
       stageSliced(in, Seq(
         batch.filter(col("doc_id") % 2 === 0),
         batch.filter(col("doc_id") % 2 === 1)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in,
           batch.schema, Map("maxFilesPerTrigger" -> "1"))
         val q = graft.functions.Classify
@@ -3683,18 +3627,14 @@ object Extensions {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val model = graft.functions.Classify
         .nbTrainCounts(docs, "lang", "text").localCheckpoint()
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = graft.functions.Classify.scoreNaiveBayes(model, docs)
-        val ps = df.queryExecution.executedPlan.toString
-        require(ps.contains("BroadcastHashJoin"),
-          "q283: the wc-slice lookup must execute the broadcast " +
-          "(auto-broadcast is off — only the hint can plan one)")
-        require(ps.contains("BroadcastNestedLoopJoin"),
-          "q283: the class cross join must broadcast the O(classes) side")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(graft.functions.Classify.scoreNaiveBayes(model, docs))
+      val ps = df.queryExecution.executedPlan.toString
+      require(ps.contains("BroadcastHashJoin"),
+        "q283: the wc-slice lookup must execute the broadcast " +
+        "(only the hint can plan one)")
+      require(ps.contains("BroadcastNestedLoopJoin"),
+        "q283: the class cross join must broadcast the O(classes) side")
+      df
     }),
 
     // --- the frozen-classifier ARRIVAL cadence: model trained on %50≠3
@@ -3718,22 +3658,18 @@ object Extensions {
           lit(" qz"), (col("doc_id") % 5).cast("string"),
           lit(" qw"), (col("doc_id") % 5).cast("string")).as("text"))
         .localCheckpoint()
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = graft.functions.Classify.scoreNaiveBayes(tap.read(s), batch)
-        val ps = df.queryExecution.executedPlan.toString
-        require(!ps.contains("documents.parquet"),
-          "q284: arrival scoring must never rescan the corpus — the " +
-          "frozen model tap is the only file scan allowed in this plan")
-        require(ps.contains("graft_q284_nb_model"),
-          "q284: the frozen model tap scan is missing from the plan")
-        require(ps.contains("BroadcastHashJoin") &&
-                ps.contains("BroadcastNestedLoopJoin"),
-          "q284: both scoring joins must broadcast explicitly " +
-          "(auto-broadcast is off)")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(
+        graft.functions.Classify.scoreNaiveBayes(tap.read(s), batch))
+      val ps = df.queryExecution.executedPlan.toString
+      require(!ps.contains("documents.parquet"),
+        "q284: arrival scoring must never rescan the corpus — the " +
+        "frozen model tap is the only file scan allowed in this plan")
+      require(ps.contains("graft_q284_nb_model"),
+        "q284: the frozen model tap scan is missing from the plan")
+      require(ps.contains("BroadcastHashJoin") &&
+              ps.contains("BroadcastNestedLoopJoin"),
+        "q284: both scoring joins must broadcast explicitly")
+      df
     }),
 
     // --- bigram-LM conditional surprisal (the CCNet perplexity filter,
@@ -3753,8 +3689,8 @@ object Extensions {
     // key of all five scoring lookups), then the batch scored with ZERO
     // exchange on the count-table side (asserted in-plan: no
     // hashpartitioning on the count table's gram column, five
-    // bucket-aware index scans; broadcast disabled so the bucket-join
-    // path is what's planned). Oracle = q155's oracle: identical values.
+    // bucket-aware index scans; the merge hint keeps the bucket-join
+    // path planned). Oracle = q155's oracle: identical values.
     "q159_sb_fluency_indexed" -> ((s, dir) => {
       val table = stagedTable("graft_q159_lmcounts")
       graft.queries.Tables.dropStagedTable(s, table)
@@ -3767,19 +3703,13 @@ object Extensions {
       graft.functions.LanguageModel.countsTap(table, 8).write(
         graft.functions.LanguageModel.trainCounts(train),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
       // DisableUnnecessaryBucketedScan de-buckets some of the five count
       // scans once shuffle partitions exceed the bucket count (observed at
       // 32 vs 8: one lookup regained a gram-keyed exchange) — pin the
       // bucketed read, as in q144
-      val autoScan = s.conf.get(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-          "false")
-        val df = graft.functions.LanguageModel.scoreAgainstCounts(
-          s.table(table), batch)
+      withoutAutoBucketedScan(s) {
+        val df = mergeJoins(graft.functions.LanguageModel.scoreAgainstCounts(
+          s.table(table), batch))
         val plan = df.queryExecution.executedPlan.toString
         val gramExchanges = "Exchange hashpartitioning\\(g#".r
           .findAllMatchIn(plan).size
@@ -3789,10 +3719,6 @@ object Extensions {
         require(bucketScans >= 5, "all five count lookups must be " +
           s"bucket-aware index scans (got $bucketScans)")
         df
-      } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-        s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-          autoScan)
       }
     }),
 
@@ -3854,7 +3780,7 @@ object Extensions {
             col("text"), dims = 4096, salt = "w#") >= 0L)
         pp.applyBatch(survivors, id)
       }
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in, batch.schema,
           Map("maxFilesPerTrigger" -> "1"))
         val q = stream.writeStream
@@ -4132,7 +4058,7 @@ object Extensions {
         docs.filter(col("doc_id") % 3 === 0),
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in,
           docs.schema, Map("maxFilesPerTrigger" -> "1"))
         val q = graft.functions.Classify.scoreNaiveBayesKernel(model, stream)
@@ -4471,7 +4397,7 @@ object Extensions {
       stageSliced(in, qids.map(q =>
         queryFeed.filter(col("query_id") === q)))
       withoutAutoBucketedScan(s) {
-        withStreamPartitions(s, 8) {
+        withStreamPartitions(s) {
           val stream = graft.streaming.StreamOps.readStream(s, in,
             queryFeed.schema, Map("maxFilesPerTrigger" -> "1"))
           val q = stream.writeStream
@@ -4593,25 +4519,21 @@ object Extensions {
         Dedup.winnowIndex(docs.filter(col("doc_id") % 10 =!= 7),
           "doc_id", "text"),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        // wideHash = false pinned: THIS gate's index is the legacy
-        // 40-bit build (q194 is the wide twin) — width must match the
-        // index or the join silently matches nothing
-        val df = Dedup.winnowMatchesAgainstIndex(
-          corpusIndex = s.table(table),
-          batch = docs.filter(col("doc_id") % 10 === 7),
-          "doc_id", "text", minShared = 2L, wideHash = false)
-        val plan = df.queryExecution.executedPlan.toString
-        val exchanges = "Exchange hashpartitioning\\(h".r
-          .findAllMatchIn(plan).size
-        require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-          s"fingerprints (got $exchanges h-exchanges)")
-        require(plan.contains("SelectedBucketsCount"),
-          "corpus side must be the bucket-aware index scan")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      // wideHash = false pinned: THIS gate's index is the legacy
+      // 40-bit build (q194 is the wide twin) — width must match the
+      // index or the join silently matches nothing
+      val df = mergeJoins(Dedup.winnowMatchesAgainstIndex(
+        corpusIndex = s.table(table),
+        batch = docs.filter(col("doc_id") % 10 === 7),
+        "doc_id", "text", minShared = 2L, wideHash = false))
+      val plan = df.queryExecution.executedPlan.toString
+      val exchanges = "Exchange hashpartitioning\\(h".r
+        .findAllMatchIn(plan).size
+      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
+        s"fingerprints (got $exchanges h-exchanges)")
+      require(plan.contains("SelectedBucketsCount"),
+        "corpus side must be the bucket-aware index scan")
+      df
     }),
 
     // --- SemDeDup with adaptive plane escalation: dense sign-bucket
@@ -4654,7 +4576,7 @@ object Extensions {
         batch.filter(col("doc_id") % 30 === 7),
         batch.filter(col("doc_id") % 30 === 17),
         batch.filter(col("doc_id") % 30 === 27)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val index = s.table(table).withColumnRenamed("id", "corpus_id")
         val stream = graft.streaming.StreamOps.readStream(s, in, batch.schema,
           Map("maxFilesPerTrigger" -> "1"))
@@ -4721,28 +4643,24 @@ object Extensions {
       val families = Dedup.winnowClustersFromIndex(
           s.table(table), corpus, "doc_id", maxIters = 40)
         .withColumnRenamed("cluster_id", "family_id")
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        // 40 rounds (vs the old 8): the subgraph EXCLUDES
-        // corpus-corpus edges on untouched hashes, so batch-to-batch
-        // chains that the full pass shortcuts through the corpus need
-        // more hops here; the convergence guard still fails directed
-        // past 40 (measured diameter at sf0.1: 19 rounds for the FULL
-        // corpus — round-8's 8-round state was a silently non-converged
-        // partial labeling that matched an equally-partial oracle; at the
-        // synthesized sf1 ONE 40-bit winnow-hash collision bridges two
-        // replicas and pushes the depth to 27, the measured preview of
-        // hash-width-as-correctness-knob at corpus scale)
-        // wideHash = false pinned: this gate's index/families are the
-        // legacy 40-bit build (q196 is the wide twin) — width must
-        // match the index or adoption silently finds no matches
-        Dedup.winnowFamiliesIncremental(
-          corpusIndex = s.table(table), corpusFamilies = families,
-          batch = batch, idCol = "doc_id", textCol = "text",
-          n = 4, w = 8, maxIters = 40, assertBucketScan = true,
-          wideHash = false)
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      // 40 rounds (vs the old 8): the subgraph EXCLUDES
+      // corpus-corpus edges on untouched hashes, so batch-to-batch
+      // chains that the full pass shortcuts through the corpus need
+      // more hops here; the convergence guard still fails directed
+      // past 40 (measured diameter at sf0.1: 19 rounds for the FULL
+      // corpus — round-8's 8-round state was a silently non-converged
+      // partial labeling that matched an equally-partial oracle; at the
+      // synthesized sf1 ONE 40-bit winnow-hash collision bridges two
+      // replicas and pushes the depth to 27, the measured preview of
+      // hash-width-as-correctness-knob at corpus scale)
+      // wideHash = false pinned: this gate's index/families are the
+      // legacy 40-bit build (q196 is the wide twin) — width must
+      // match the index or adoption silently finds no matches
+      Dedup.winnowFamiliesIncremental(
+        corpusIndex = s.table(table), corpusFamilies = families,
+        batch = batch, idCol = "doc_id", textCol = "text",
+        n = 4, w = 8, maxIters = 40, assertBucketScan = true,
+        wideHash = false)
     }),
 
     // --- Cavnar–Trenkle profile language ID: per-doc verdict of the
@@ -4795,20 +4713,16 @@ object Extensions {
       graft.functions.Multimodal.dhashIndexTap(table, 8).write(
         graft.functions.Multimodal.dhashIndex(corpus, "doc_id", "text"),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = graft.functions.Multimodal.imageMatchesAgainstIndex(
-          s.table(table), batch, "doc_id", "text")
-        val plan = df.queryExecution.executedPlan.toString
-        val exchanges = "Exchange hashpartitioning\\(key".r
-          .findAllMatchIn(plan).size
-        require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-          s"band keys (got $exchanges key-exchanges)")
-        require(plan.contains("SelectedBucketsCount"),
-          "corpus side must be the bucket-aware index scan")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(graft.functions.Multimodal.imageMatchesAgainstIndex(
+        s.table(table), batch, "doc_id", "text"))
+      val plan = df.queryExecution.executedPlan.toString
+      val exchanges = "Exchange hashpartitioning\\(key".r
+        .findAllMatchIn(plan).size
+      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
+        s"band keys (got $exchanges key-exchanges)")
+      require(plan.contains("SelectedBucketsCount"),
+        "corpus side must be the bucket-aware index scan")
+      df
     }),
 
     // --- streaming image arrivals against the persisted dHash index
@@ -4834,7 +4748,7 @@ object Extensions {
         batch.filter(col("doc_id") % 30 === 7),
         batch.filter(col("doc_id") % 30 === 17),
         batch.filter(col("doc_id") % 30 === 27)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val index = s.table(table).select(col("h").as("ch"), col("key"))
         val stream = graft.streaming.StreamOps.readStream(s, in,
           batch.schema, Map("maxFilesPerTrigger" -> "1"))
@@ -4876,22 +4790,18 @@ object Extensions {
         Dedup.winnowIndexWide(docs.filter(col("doc_id") % 10 =!= 7),
           "doc_id", "text"),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = Dedup.winnowMatchesAgainstIndex(
-          corpusIndex = s.table(table),
-          batch = docs.filter(col("doc_id") % 10 === 7),
-          "doc_id", "text", minShared = 2L, wideHash = true)
-        val plan = df.queryExecution.executedPlan.toString
-        val exchanges = "Exchange hashpartitioning\\(h".r
-          .findAllMatchIn(plan).size
-        require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-          s"fingerprints (got $exchanges h-exchanges)")
-        require(plan.contains("SelectedBucketsCount"),
-          "corpus side must be the bucket-aware index scan")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(Dedup.winnowMatchesAgainstIndex(
+        corpusIndex = s.table(table),
+        batch = docs.filter(col("doc_id") % 10 === 7),
+        "doc_id", "text", minShared = 2L, wideHash = true))
+      val plan = df.queryExecution.executedPlan.toString
+      val exchanges = "Exchange hashpartitioning\\(h".r
+        .findAllMatchIn(plan).size
+      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
+        s"fingerprints (got $exchanges h-exchanges)")
+      require(plan.contains("SelectedBucketsCount"),
+        "corpus side must be the bucket-aware index scan")
+      df
     }),
 
     // --- WIDE twin of q186: transitive winnow families at the 60-bit
@@ -4919,15 +4829,11 @@ object Extensions {
       val families = Dedup.winnowClustersFromIndex(
           s.table(table), corpus, "doc_id", maxIters = 40)
         .withColumnRenamed("cluster_id", "family_id")
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        Dedup.winnowFamiliesIncremental(
-          corpusIndex = s.table(table), corpusFamilies = families,
-          batch = batch, idCol = "doc_id", textCol = "text",
-          n = 4, w = 8, maxIters = 40, assertBucketScan = true,
-          wideHash = true)
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      Dedup.winnowFamiliesIncremental(
+        corpusIndex = s.table(table), corpusFamilies = families,
+        batch = batch, idCol = "doc_id", textCol = "text",
+        n = 4, w = 8, maxIters = 40, assertBucketScan = true,
+        wideHash = true)
     }),
 
     // --- WIDE twin of q64: transitive MinHash clusters over 61-bit
@@ -4953,22 +4859,18 @@ object Extensions {
         Dedup.bandIndex(docs.filter(col("doc_id") % 10 =!= 7),
           "doc_id", "text", wideHash = true),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = Dedup.incrementalNearDupsAgainstIndex(
-          corpusIndex = s.table(table),
-          batch = docs.filter(col("doc_id") % 10 === 7),
-          "doc_id", "text", wideHash = true)
-        val plan = df.queryExecution.executedPlan.toString
-        val exchanges = "Exchange hashpartitioning\\(band".r
-          .findAllMatchIn(plan).size
-        require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-          s"band rows (got $exchanges (band, key) exchanges)")
-        require(plan.contains("SelectedBucketsCount"),
-          "corpus side must be the bucket-aware index scan")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(Dedup.incrementalNearDupsAgainstIndex(
+        corpusIndex = s.table(table),
+        batch = docs.filter(col("doc_id") % 10 === 7),
+        "doc_id", "text", wideHash = true))
+      val plan = df.queryExecution.executedPlan.toString
+      val exchanges = "Exchange hashpartitioning\\(band".r
+        .findAllMatchIn(plan).size
+      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
+        s"band rows (got $exchanges (band, key) exchanges)")
+      require(plan.contains("SelectedBucketsCount"),
+        "corpus side must be the bucket-aware index scan")
+      df
     }),
 
     // --- INCREMENTAL SemDeDup at index cadence (the q133 append
@@ -5000,27 +4902,23 @@ object Extensions {
       val tap = SIM.signBucketIndexTap(table, 8)
       tap.write(SIM.signBucketIndex(day0, "vec_id", "embedding"),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        // day-1 ingest: verdict against the day-0 index (the daily
-        // question), then append day-1's own bucket rows
-        SIM.semanticDedupAgainstIndex(s.table(table), day1,
-            "vec_id", "embedding", simThreshold = 0.95)
-          .write.mode("overwrite").format("noop").save()
-        tap.write(SIM.signBucketIndex(day1, "vec_id", "embedding"),
-          graft.sources.SinkMode.Update)
-        val df = SIM.semanticDedupAgainstIndex(s.table(table), day2,
+      // day-1 ingest: verdict against the day-0 index (the daily
+      // question), then append day-1's own bucket rows
+      SIM.semanticDedupAgainstIndex(s.table(table), day1,
           "vec_id", "embedding", simThreshold = 0.95)
-        val plan = df.queryExecution.executedPlan.toString
-        val exchanges = "Exchange hashpartitioning\\(bucket".r
-          .findAllMatchIn(plan).size
-        require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-          s"bucket rows (got $exchanges bucket-exchanges)")
-        require(plan.contains("SelectedBucketsCount"),
-          "corpus side must be the bucket-aware index scan")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        .write.mode("overwrite").format("noop").save()
+      tap.write(SIM.signBucketIndex(day1, "vec_id", "embedding"),
+        graft.sources.SinkMode.Update)
+      val df = mergeJoins(SIM.semanticDedupAgainstIndex(s.table(table),
+        day2, "vec_id", "embedding", simThreshold = 0.95))
+      val plan = df.queryExecution.executedPlan.toString
+      val exchanges = "Exchange hashpartitioning\\(bucket".r
+        .findAllMatchIn(plan).size
+      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
+        s"bucket rows (got $exchanges bucket-exchanges)")
+      require(plan.contains("SelectedBucketsCount"),
+        "corpus side must be the bucket-aware index scan")
+      df
     }),
 
     // --- STREAMING family adoption (the q182/q193 discipline on q187):
@@ -5051,7 +4949,7 @@ object Extensions {
         batch.filter(col("doc_id") % 30 === 7),
         batch.filter(col("doc_id") % 30 === 17),
         batch.filter(col("doc_id") % 30 === 27)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in, batch.schema,
           Map("maxFilesPerTrigger" -> "1"))
         val fps = Dedup.winnow(stream, "doc_id", "text", n = 4, w = 8)
@@ -5067,15 +4965,11 @@ object Extensions {
         q.awaitTermination()
       }
       val sink = s.read.parquet(out)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        Dedup.winnowFamiliesAdopt(
-          corpusIndex = s.table(table), corpusFamilies = families,
-          batchFps = sink.filter(col("h").isNotNull),
-          batchIds = sink.select(col("id")).distinct(),
-          maxIters = 40, assertBucketScan = true)
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      Dedup.winnowFamiliesAdopt(
+        corpusIndex = s.table(table), corpusFamilies = families,
+        batchFps = sink.filter(col("h").isNotNull),
+        batchIds = sink.select(col("id")).distinct(),
+        maxIters = 40, assertBucketScan = true)
     }),
 
     // --- perceptual image dedup over REAL DECODED PIXELS: texts
@@ -5344,26 +5238,22 @@ object Extensions {
         MM.videoKeyframeIndex(
           MM.withSynthAviPayload(corpus, "doc_id", "text"), "id", "payload"),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val bkf = MM.videoKeyframeHashes(
-          MM.withSynthAviPayload(batch, "doc_id", "text"), "id", "payload")
-        val df = MM.matchesAgainstIndexFromHashes(
-          s.table(table), bkf.select(col("id"), col("h")))
-        val plan = df.queryExecution.executedPlan.toString
-        val exchanges = "Exchange hashpartitioning\\(key".r
-          .findAllMatchIn(plan).size
-        require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-          s"band keys (got $exchanges key-exchanges)")
-        require(plan.contains("SelectedBucketsCount"),
-          "corpus side must be the bucket-aware index scan")
-        val decodes = "\\bMapPartitions\\b".r.findAllMatchIn(plan).size
-        require(decodes == 2, s"decode must run on the BATCH side only " +
-          s"(batch synth + batch frame-hash = 2 MapPartitions nodes; got " +
-          s"$decodes — the index side is a parquet scan, never a re-decode)")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val bkf = MM.videoKeyframeHashes(
+        MM.withSynthAviPayload(batch, "doc_id", "text"), "id", "payload")
+      val df = mergeJoins(MM.matchesAgainstIndexFromHashes(
+        s.table(table), bkf.select(col("id"), col("h"))))
+      val plan = df.queryExecution.executedPlan.toString
+      val exchanges = "Exchange hashpartitioning\\(key".r
+        .findAllMatchIn(plan).size
+      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
+        s"band keys (got $exchanges key-exchanges)")
+      require(plan.contains("SelectedBucketsCount"),
+        "corpus side must be the bucket-aware index scan")
+      val decodes = "\\bMapPartitions\\b".r.findAllMatchIn(plan).size
+      require(decodes == 2, s"decode must run on the BATCH side only " +
+        s"(batch synth + batch frame-hash = 2 MapPartitions nodes; got " +
+        s"$decodes — the index side is a parquet scan, never a re-decode)")
+      df
     }),
 
     // --- structure-aware extraction, part 1 — the BLOCK table: texts
@@ -5531,7 +5421,7 @@ object Extensions {
         docs.filter(col("doc_id") % 3 === 0),
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in,
           docs.schema, Map("maxFilesPerTrigger" -> "1"))
         val cells = H.htmlTableCells(
@@ -5569,7 +5459,7 @@ object Extensions {
         docs.filter(col("doc_id") % 3 === 0),
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in,
           docs.schema, Map("maxFilesPerTrigger" -> "1"))
         val items = H.htmlListItems(
@@ -5709,7 +5599,7 @@ object Extensions {
         docs.filter(col("doc_id") % 3 === 0),
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in,
           docs.schema, Map("maxFilesPerTrigger" -> "1"))
         val blocks = H.htmlBlocks(
@@ -5806,11 +5696,7 @@ object Extensions {
       val tap = H.linkIndexTap(table, 8)
       tap.write(pairsOf(docs.filter(col("doc_id") % 10 =!= 7)),
         graft.sources.SinkMode.Replace)
-      val autoScan = s.conf.get(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled")
-      try {
-        s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-          "false")
+      withoutAutoBucketedScan(s) {
         def idxEdges() = s.table(table)
           .select(col("id").as("src"), col("href").as("dst"))
         // previous cadence: converged ranks over the pre-append index
@@ -5835,9 +5721,6 @@ object Extensions {
           "q277: warm fixed point drifted > 2 units from cold — beyond " +
           "the floor-arithmetic ulp bound")
         aCold.select(col("dst").as("target"), col("a").as("authority_scaled"))
-      } finally {
-        s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-          autoScan)
       }
     }),
 
@@ -5891,20 +5774,14 @@ object Extensions {
       graft.functions.LanguageModel.bigramCountsTap(table, 8).write(
         graft.functions.LanguageModel.bigramTrainCounts(docs),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val autoScan = s.conf.get(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled")
-      try {
-        // auto-broadcast OFF: the bucket-join path must be what's
-        // planned for the bigram lookup; the context broadcast is the
-        // EXPLICIT hint, so any BroadcastHashJoin in this plan is the
-        // executed top-V path, not a size-threshold accident
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-          "false")
-        val df = graft.functions.LanguageModel
+      // the merge hint pins the bucket-join path for the bigram lookup;
+      // the context broadcast is the EXPLICIT hint, so any
+      // BroadcastHashJoin in this plan is the executed top-V path, not a
+      // size-threshold accident
+      withoutAutoBucketedScan(s) {
+        val df = mergeJoins(graft.functions.LanguageModel
           .scoreBigramBitsAgainstCounts(s.table(table), docs)
-          .select(col("doc_id"), col("n_bi"), col("bigram_bits"))
+          .select(col("doc_id"), col("n_bi"), col("bigram_bits")))
         val plan = df.queryExecution.executedPlan.toString
         val gramExchanges = "Exchange hashpartitioning\\(g#".r
           .findAllMatchIn(plan).size
@@ -5914,12 +5791,8 @@ object Extensions {
           "q273: the bigram count lookup must be a bucket-aware scan")
         require("BroadcastHashJoin".r.findAllMatchIn(plan).size >= 1,
           "q273: the context lookup must execute the broadcast unigram " +
-          "slice (auto-broadcast is off — only the hint can plan one)")
+          "slice (only the hint can plan one)")
         df
-      } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-        s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-          autoScan)
       }
     }),
 
@@ -5980,16 +5853,10 @@ object Extensions {
       graft.functions.LanguageModel.bigramCountsTap(table, 8).write(
         graft.functions.LanguageModel.bigramTrainCounts(docs),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val autoScan = s.conf.get(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-          "false")
-        val df = graft.functions.LanguageModel
+      withoutAutoBucketedScan(s) {
+        val df = mergeJoins(graft.functions.LanguageModel
           .scoreKneserNeyAgainstCounts(s.table(table), docs)
-          .select(col("doc_id"), col("n_bi"), col("kn_micros"))
+          .select(col("doc_id"), col("n_bi"), col("kn_micros")))
         val plan = df.queryExecution.executedPlan.toString
         val gramExchanges = "Exchange hashpartitioning\\(g#".r
           .findAllMatchIn(plan).size
@@ -6001,10 +5868,6 @@ object Extensions {
           "q274: both unigram-slice lookups (context stats + " +
           "continuation types) must execute as broadcasts")
         df
-      } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-        s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-          autoScan)
       }
     }),
 
@@ -6015,8 +5878,9 @@ object Extensions {
     // DENSIFY as data grows — the cap is the scale lever, O(V·k) state,
     // wedges ≤ V·k² downstream), and 4 damping-0.85 iterations run in
     // floor-division int64 so the oracle unrolls them bit-identically.
-    // One keyed shuffle per iteration; per-iteration persist +
-    // predecessor unpersist (the q186 discipline).
+    // One keyed shuffle per iteration; each iteration is a lazy
+    // checkpoint frame, counted before its predecessor is released
+    // (Graph.pageRankTopK).
     "q249_pagerank" -> ((s, dir) => {
       val G = graft.functions.Graph
       val edges = G.coOccurrenceEdges(
@@ -6293,7 +6157,7 @@ object Extensions {
         .withColumn("event_id", lit(Long.MaxValue))
         .withColumn("vm", lit(0L))
       stageTimeSliced(in, ev, "ts", sentinel)
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
           Map("maxFilesPerTrigger" -> "1"))
         val folded = {
@@ -6430,13 +6294,9 @@ object Extensions {
         graft.functions.Contamination.sourceGramIndex(
           corpus, "text", "source", n = 8, wideHash = true),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        graft.functions.Contamination.sourceOverlapMatrixIndexed(
-          s.table(table), batch, "text", "source", n = 8,
-          assertBucketScan = true, wideHash = true)
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      graft.functions.Contamination.sourceOverlapMatrixIndexed(
+        s.table(table), batch, "text", "source", n = 8,
+        assertBucketScan = true, wideHash = true)
     }),
 
     // --- index COMPACTION under the gate: the q133 append loop decays
@@ -6468,21 +6328,17 @@ object Extensions {
       require(filesAfter < filesBefore && filesAfter <= 8,
         s"compaction must collapse the file count to ≤ buckets " +
           s"(before=$filesBefore after=$filesAfter)")
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = Dedup.incrementalNearDupsAgainstIndex(
-          corpusIndex = s.table(table), batch = batch, "doc_id", "text",
-          wideHash = false)
-        val plan = df.queryExecution.executedPlan.toString
-        val exchanges = "Exchange hashpartitioning\\(band".r
-          .findAllMatchIn(plan).size
-        require(exchanges == 1, s"post-compaction index join must " +
-          s"shuffle ONLY the batch band rows (got $exchanges)")
-        require(plan.contains("SelectedBucketsCount"),
-          "bucket metadata must survive the compaction swap")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(Dedup.incrementalNearDupsAgainstIndex(
+        corpusIndex = s.table(table), batch = batch, "doc_id", "text",
+        wideHash = false))
+      val plan = df.queryExecution.executedPlan.toString
+      val exchanges = "Exchange hashpartitioning\\(band".r
+        .findAllMatchIn(plan).size
+      require(exchanges == 1, s"post-compaction index join must " +
+        s"shuffle ONLY the batch band rows (got $exchanges)")
+      require(plan.contains("SelectedBucketsCount"),
+        "bucket metadata must survive the compaction swap")
+      df
     }),
 
     // --- q205's maintenance loop UNDER CONCURRENT READERS: the same
@@ -6521,21 +6377,17 @@ object Extensions {
       require(filesAfter < filesBefore && filesAfter <= 8,
         s"compaction must collapse the file count to ≤ buckets " +
           s"(before=$filesBefore after=$filesAfter)")
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = Dedup.incrementalNearDupsAgainstIndex(
-          corpusIndex = s.table(table), batch = batch, "doc_id", "text",
-          wideHash = false)
-        val plan = df.queryExecution.executedPlan.toString
-        val exchanges = "Exchange hashpartitioning\\(band".r
-          .findAllMatchIn(plan).size
-        require(exchanges == 1, s"post-compaction index join must " +
-          s"shuffle ONLY the batch band rows (got $exchanges)")
-        require(plan.contains("SelectedBucketsCount"),
-          "bucket metadata must survive the view + generation swap")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val df = mergeJoins(Dedup.incrementalNearDupsAgainstIndex(
+        corpusIndex = s.table(table), batch = batch, "doc_id", "text",
+        wideHash = false))
+      val plan = df.queryExecution.executedPlan.toString
+      val exchanges = "Exchange hashpartitioning\\(band".r
+        .findAllMatchIn(plan).size
+      require(exchanges == 1, s"post-compaction index join must " +
+        s"shuffle ONLY the batch band rows (got $exchanges)")
+      require(plan.contains("SelectedBucketsCount"),
+        "bucket metadata must survive the view + generation swap")
+      df
     }),
 
     // --- q82 AT ARRIVAL TIME: the decontamination screen as a stream.
@@ -6583,7 +6435,7 @@ object Extensions {
         arrivals.filter(col("doc_id") % 30 === 7),
         arrivals.filter(col("doc_id") % 30 === 17),
         arrivals.filter(col("doc_id") % 30 === 27)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val index = s.table(table)
         val stream = graft.streaming.StreamOps.readStream(s, in,
           arrivals.schema, Map("maxFilesPerTrigger" -> "1"))
@@ -6935,7 +6787,7 @@ object Extensions {
         arrivals.filter(col("vec_id") % 30 === 7),
         arrivals.filter(col("vec_id") % 30 === 17),
         arrivals.filter(col("vec_id") % 30 === 27)))
-      withStreamPartitions(s, 8) {
+      withStreamPartitions(s) {
         val stream = graft.streaming.StreamOps.readStream(s, in,
           arrivals.schema, Map("maxFilesPerTrigger" -> "1"))
         val encoded = Similarity.pqEncodeWithBook(stream, s.table(bookT),

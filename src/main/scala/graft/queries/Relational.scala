@@ -415,15 +415,13 @@ object Relational {
       // session see their original semantics. materializeTraps writes the
       // trap sink and releases the split intermediate — the returned
       // relation reads the trap PARQUET.
-      val prevAnsi = s.conf.get("spark.sql.ansi.enabled")
       val trapPath = stagePath("graft_trap_q52", dir)
-      try {
-        s.conf.set("spark.sql.ansi.enabled", "true")
+      graft.exec.SessionConf.scoped(s, "spark.sql.ansi.enabled", "true") {
         Flow.materializeTraps(P(dir, "documents").retain("doc_id")
           .each(ExpressionFunction("septile", "doc_id div (doc_id % 7)", LongType),
             args = FieldSelector.All, out = FieldSelector.All,
             trap = Some(ParquetTap(trapPath))))(s)
-      } finally s.conf.set("spark.sql.ansi.enabled", prevAnsi)
+      }
       s.read.parquet(trapPath).select(col("doc_id"))
     }),
 
@@ -731,9 +729,9 @@ object Relational {
     // write time (bucketBy custkey), then the fact-dim join runs with NO
     // exchange on the join keys — the canonical 100 TB co-location
     // strategy. The query checks the plan property itself (no
-    // hashpartitioning exchange on either key; broadcast disabled while
-    // building so the co-located sort-merge path is what's planned) and
-    // the oracle gates the values.
+    // hashpartitioning exchange on either key; the merge hint keeps the
+    // co-located sort-merge path planned, at the sink too) and the
+    // oracle gates the values.
     "q72_bucketed_join" -> ((s, dir) => {
       val (otN, ctN) = (s"graft_q72_orders_p${ProcessHandle.current.pid}",
         s"graft_q72_customer_p${ProcessHandle.current.pid}")
@@ -749,21 +747,18 @@ object Relational {
       ct.write(s.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_mktsegment")),
         graft.sources.SinkMode.Replace)
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val df = Flow.toDF(
+      val df = org.apache.spark.sql.graftbridge.PlanBridge.mergeJoins(
+        Flow.toDF(
           Pipe.source(ct)
             .coGroup(Seq("c_custkey"), Pipe.source(ot), Seq("o_custkey"))
             .groupBy("c_mktsegment")
             .every(Aggs.agg("total", xsum("o_totalprice")),
-                   Aggs.count("n_orders")))(s)
-        val plan = df.queryExecution.executedPlan.toString
-        require(!plan.contains("Exchange hashpartitioning(c_custkey") &&
-          !plan.contains("Exchange hashpartitioning(o_custkey"),
-          "co-bucketed join must not shuffle on the bucket keys")
-        df
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+                   Aggs.count("n_orders")))(s))
+      val plan = df.queryExecution.executedPlan.toString
+      require(!plan.contains("Exchange hashpartitioning(c_custkey") &&
+        !plan.contains("Exchange hashpartitioning(o_custkey"),
+        "co-bucketed join must not shuffle on the bucket keys")
+      df
     }),
 
     // GroupAssertion under the gate: a per-group predicate (group size and

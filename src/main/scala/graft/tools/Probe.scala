@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc stage profiler used during performance work (not part of the
@@ -10,10 +9,7 @@ import org.apache.spark.sql.functions._
 object Probe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local("32")
     spark.sparkContext.setLogLevel("ERROR")
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-phase decomposition of the round-16 optimization targets (the
@@ -17,18 +16,12 @@ object ProfileHot {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     new java.io.File("/tmp/sparklogs").mkdirs()
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.eventLog.enabled",
-        sys.env.getOrElse("GRAFT_EVENTLOG", "false"))
-      .config("spark.eventLog.dir", "/tmp/sparklogs")
-      .config("spark.eventLog.compress", "false")
-      .config("spark.eventLog.rolling.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(cpus,
+      graft.Sessions.NanosAsLong, graft.Sessions.Adaptive,
+      "spark.eventLog.enabled" -> sys.env.getOrElse("GRAFT_EVENTLOG", "false"),
+      "spark.eventLog.dir" -> "/tmp/sparklogs",
+      "spark.eventLog.compress" -> "false",
+      "spark.eventLog.rolling.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()

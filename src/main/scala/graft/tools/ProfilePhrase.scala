@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-phase decomposition of q158 (phraseBpe) at sf0.1 — identifies
@@ -7,12 +6,7 @@ import org.apache.spark.sql.functions._
   * materializations, or the merge application. */
 object ProfilePhrase {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("32", graft.Sessions.Adaptive)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.1"
     def t[A](label: String)(f: => A): A = {
