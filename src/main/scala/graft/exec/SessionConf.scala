@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The one place a query sets session conf. Only toggles with no
   * plan-level form come here: ANSI evaluation, the bucketed-scan rule,
-  * and a stateful stream's shuffle-partition count (fixed at stream
-  * start). Join strategy and partitioning live in the plan instead
-  * (`PlanBridge.mergeJoins`, `Frames.partitioned`).
+  * and a stream's shuffle-partition count (fixed at stream start), which
+  * has a single call site, the `graft.streaming.StreamOps` runner that
+  * every stream runs through. Join strategy and partitioning live in the
+  * plan instead (`PlanBridge.mergeJoins`, `Frames.partitioned`).
   *
   * The setting is session-global while `body` runs: a query planned
   * concurrently on the same session sees it too. `key` must be a

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.exec.Frames
+import scala.jdk.CollectionConverters._
 
 /** Graph analytics over co-occurrence projections — the OLAP-adjacent
   * graph class (entity graphs mined from fact tables: co-purchase,
@@ -118,12 +119,16 @@ object Graph {
       f.release(rank)
       rank = next
     }
-    // eager: the k-row result keeps its blocks after the iteration
-    // frames are released
-    f.result(rank.orderBy(col("r").desc, col("v"))
+    collected(rank.orderBy(col("r").desc, col("v"))
       .limit(k)
       .select(col("v").as("vertex"), col("r").as("rank_scaled")))
   }
+
+  /** A fixed-k result collected into a driver-local relation before the
+    * loop's frames are released: it holds no blocks, so it leaves the
+    * caller nothing to release. */
+  private def collected(topK: DataFrame): DataFrame =
+    topK.sparkSession.createDataFrame(topK.collect().toSeq.asJava, topK.schema)
 
   /** WEIGHTED exact-integer PageRank: like [[pageRankTopK]] but each
     * neighbor receives mass proportional to its EDGE WEIGHT —
@@ -155,7 +160,7 @@ object Graph {
       f.release(rank)
       rank = next
     }
-    f.result(rank.orderBy(col("r").desc, col("v"))
+    collected(rank.orderBy(col("r").desc, col("v"))
       .limit(k)
       .select(col("v").as("vertex"), col("r").as("rank_scaled")))
   }
@@ -646,7 +651,7 @@ object Graph {
         hub = nextHub
       }
     }
-    f.result(auth.orderBy(col("a").desc, col("dst"))
+    collected(auth.orderBy(col("a").desc, col("dst"))
       .limit(k)
       .select(col("dst").as("target"), col("a").as("authority_scaled")))
   }

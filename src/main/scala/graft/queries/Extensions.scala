@@ -106,28 +106,6 @@ object Extensions {
     graft.functions.Profile.ColSpec("l_returnflag", "string"),
     graft.functions.Profile.ColSpec("l_shipdate", "ts"))
 
-  /** Run `body` with 8 shuffle partitions, the count sized for a
-    * stateful streaming query, restoring the session's setting after.
-    * Stateful streaming cost at fixed data volume is dominated by PER-PARTITION
-    * state-store commits (each micro-batch writes every partition's store
-    * delta + checkpoint), so the partition count should track the state
-    * size, not the session's batch-shuffle default — 32 partitions of
-    * near-empty state quadruple the commit I/O of 8 with zero parallelism
-    * benefit. On a real cluster this is the same knob sized to state
-    * volume (state stores scale out per partition). NOTE: the partition
-    * count is baked into the checkpoint at stream START; freshStreamDirs
-    * wipes the checkpoint each run, so changing it here is safe. */
-  private def withStreamPartitions[T](s: SparkSession)(body: => T): T =
-    SessionConf.scoped(s, "spark.sql.shuffle.partitions", "8")(body)
-
-  /** Staged CATALOG-TABLE name with a per-process nonce — the
-    * freshStreamDirs discipline for saveAsTable state: two concurrent
-    * gate JVMs (driver correctness + bench) otherwise drop/replace the
-    * SAME warehouse table mid-read. Re-runs within one JVM reuse the
-    * name and clean it via dropStagedTable. */
-  private def stagedTable(name: String): String =
-    s"${name}_p${ProcessHandle.current.pid}"
-
   /** The CONSOLIDATED PageRank honesty bundle (r15 verdict #3): the full
     * q314 contract — pair-weight artifact staging + append, merge ≡
     * rebuild asserted as a multiset equality, pre/warm/cold converge
@@ -149,9 +127,8 @@ object Extensions {
     graft.exec.Frames { f =>
     val G = graft.functions.Graph
     val eps = 500000L
-    val edgeT = stagedTable("graft_q314_pairw")
-    val rankT = stagedTable("graft_q314_ranks")
-    Seq(edgeT, rankT).foreach(graft.queries.Tables.dropStagedTable(s, _))
+    val edgeT = Tables.stagedTable(s, "graft_q314_pairw")
+    val rankT = Tables.stagedTable(s, "graft_q314_ranks")
     val li = s.read.parquet(s"$dir/lineitem.parquet")
     val edgeTap = graft.sources.BucketedTap(edgeT, 8, Seq("src"))
     edgeTap.write(
@@ -232,9 +209,9 @@ object Extensions {
                                       tag: String): RetrievalArtifacts = {
     val I = graft.functions.InvertedIndex
     val R = graft.functions.Relevance
-    val postT = stagedTable(s"graft_${tag}_postings")
-    val codesT = stagedTable(s"graft_${tag}_ivf_codes")
-    val vecsT = stagedTable(s"graft_${tag}_raw_vecs")
+    val postT = Tables.stagedTable(s, s"graft_${tag}_postings")
+    val codesT = Tables.stagedTable(s, s"graft_${tag}_ivf_codes")
+    val vecsT = Tables.stagedTable(s, s"graft_${tag}_raw_vecs")
     // r17 (verdict #4, guide §5 driver work): only the three BUCKETED
     // artifacts need catalog tables (bucket metadata lives in the
     // metastore); the two tiny unbucketed ones (IVF centroids, dense PQ
@@ -242,8 +219,6 @@ object Extensions {
     // parquet paths, dropping two saveAsTable create/drop round-trips
     // plus two DROP TABLE statements per invocation. Layouts and serving
     // plans are unchanged (both sides were always broadcast).
-    Seq(postT, codesT, vecsT)
-      .foreach(graft.queries.Tables.dropStagedTable(s, _))
     val docs = s.read.parquet(s"$dir/documents.parquet")
     val e = s.read.parquet(s"$dir/embeddings.parquet")
     // the lexical artifacts (the q300 layout)
@@ -323,20 +298,10 @@ object Extensions {
         "corpus-side row exchange")
   }
 
-  /** Fresh (in, out, checkpoint) dirs under a per-query tmp root, deleting
-    * any previous run's tree — shared by the streaming gate queries. The
-    * pid suffix (the stagePath pattern, Relational.scala:30) keeps
-    * concurrent gate JVMs — driver correctness + bench, or a parallel test
-    * run — from wiping each other's live staging/checkpoints: the wipe
-    * below only ever hits THIS process's previous tree. */
+  /** Fresh (in, out, checkpoint) dirs under one staged root — shared by
+    * the streaming gate queries. */
   private def freshStreamDirs(name: String): (String, String, String) = {
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"${name}_p${ProcessHandle.current.pid}")
-    def rmr(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmr)
-      f.delete(); ()
-    }
-    if (root.exists()) rmr(root)
+    val root = Tables.stagedDir(name)
     (s"$root/in", s"$root/out", s"$root/chk")
   }
 
@@ -370,23 +335,23 @@ object Extensions {
     }
   }
 
-  /** The shared staging recipe of every multi-batch streaming gate query:
-    * split `ev` into three equal time slices on `tsCol`, append the
-    * caller's sentinel slice (far-future row(s) that advance the
-    * watermark past all real data), and stage as one file per slice so
-    * `maxFilesPerTrigger=1` yields 4 real micro-batches in order. */
-  private def stageTimeSliced(in: String, ev: DataFrame, tsCol: String,
-                              sentinel: DataFrame): Unit = {
+  /** `ev` split into three equal time slices on `tsCol`, in time order. */
+  private def timeSlices(ev: DataFrame, tsCol: String): Seq[DataFrame] = {
     val Array(tMin, tMax) = ev.agg(min(col(tsCol)), max(col(tsCol))).head()
       .toSeq.map(_.asInstanceOf[java.sql.Timestamp].getTime).toArray
     val (t1, t2) = (tMin + (tMax - tMin) / 3, tMin + 2 * (tMax - tMin) / 3)
     def ms = unix_millis(col(tsCol))
-    stageSliced(in, Seq(
-      ev.filter(ms < t1),
-      ev.filter(ms >= t1 && ms < t2),
-      ev.filter(ms >= t2),
-      sentinel))
+    Seq(ev.filter(ms < t1), ev.filter(ms >= t1 && ms < t2), ev.filter(ms >= t2))
   }
+
+  /** The shared staging recipe of every multi-batch streaming gate query:
+    * the three [[timeSlices]] of `ev` plus the caller's sentinel slice
+    * (far-future row(s) that advance the watermark past all real data),
+    * staged as one file per slice so `maxFilesPerTrigger=1` yields 4 real
+    * micro-batches in order. */
+  private def stageTimeSliced(in: String, ev: DataFrame, tsCol: String,
+                              sentinel: DataFrame): Unit =
+    stageSliced(in, timeSlices(ev, tsCol) :+ sentinel)
 
   /** q132 mixture constants, shared by the Spark query and the oracle SQL
     * (a wrong formula generated into both spellings is invisible to the
@@ -594,19 +559,11 @@ object Extensions {
         .withColumn("ts", expr("timestamp'2100-01-01 00:00:00'"))
         .withColumn("event_type", lit("__flush"))
       stageTimeSliced(in, ev, "ts", sentinel)
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.windowedCounts(
-          graft.streaming.StreamOps.readStream(s, in, ev.schema,
-            Map("maxFilesPerTrigger" -> "1")),
-          "ts", "event_type", "1 hour", "2 hours")
-        val q = stream.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.windowedCounts(
+        graft.streaming.StreamOps.readStream(s, in, ev.schema,
+          Map("maxFilesPerTrigger" -> "1")),
+        "ts", "event_type", "1 hour", "2 hours")
+      graft.streaming.StreamOps.runToParquet(stream, out, chk)
       // watermark withholding already keeps the far-future sentinel window
       // out of the Append output, but that is a TIMING property — filter
       // the sentinel explicitly (q112-style) so a future watermark-delay
@@ -643,24 +600,14 @@ object Extensions {
         .withColumn("ts", expr("timestamp'2100-01-01 00:00:00'"))
         .withColumn("value", lit(0.0))
       stageTimeSliced(in, ev, "ts", sentinel)
-      // 4 micro-batches × per-partition state commits: size partitions to
-      // the state, not the batch-shuffle default (see withStreamPartitions)
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
-          Map("maxFilesPerTrigger" -> "1"))
-        val sessions = {
-          import s.implicits._
-          graft.streaming.StreamOps.sessionize(
-            stream.as[graft.streaming.StreamOps.SessionEvent], 1800)
-        }
-        val q = sessions.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
+        Map("maxFilesPerTrigger" -> "1"))
+      val sessions = {
+        import s.implicits._
+        graft.streaming.StreamOps.sessionize(
+          stream.as[graft.streaming.StreamOps.SessionEvent], 1800)
       }
+      graft.streaming.StreamOps.runToParquet(sessions, out, chk)
       val w = Window.partitionBy(col("user_id")).orderBy(col("start_ts"))
       s.read.parquet(out)
         .withColumn("session_id", row_number().over(w).cast("long"))
@@ -684,24 +631,13 @@ object Extensions {
           col("ts").as("v_ts"))
       purchases.coalesce(1).write.parquet(s"$in/p")
       views.coalesce(1).write.parquet(s"$in/v")
-      // stream-stream join keeps FOUR state stores per partition; size the
-      // partition count to the (small) state, not the batch default
-      withStreamPartitions(s) {
-        val joined = graft.streaming.StreamOps.streamStreamJoin(
-          graft.streaming.StreamOps.readStream(s, s"$in/p", purchases.schema),
-          graft.streaming.StreamOps.readStream(s, s"$in/v", views.schema),
-          "p_user", "v_user", "p_ts", "v_ts",
-          watermark = "1 hour", maxDelaySeconds = 600L)
-        val q = joined
-          .select(col("p_id"), col("p_user"), col("p_ts"), col("v_id"), col("v_ts"))
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val joined = graft.streaming.StreamOps.streamStreamJoin(
+        graft.streaming.StreamOps.readStream(s, s"$in/p", purchases.schema),
+        graft.streaming.StreamOps.readStream(s, s"$in/v", views.schema),
+        "p_user", "v_user", "p_ts", "v_ts",
+        watermark = "1 hour", maxDelaySeconds = 600L)
+      graft.streaming.StreamOps.runToParquet(joined.select(col("p_id"),
+        col("p_user"), col("p_ts"), col("v_id"), col("v_ts")), out, chk)
       s.read.parquet(out)
     }),
 
@@ -717,20 +653,12 @@ object Extensions {
         // the initial watermark value is border-dropped by the dedup state
         .withColumn("ts", expr("timestamp_micros((doc_id + 86400) * 1000000)"))
       docs.coalesce(1).write.parquet(in)
-      withStreamPartitions(s) {
-        val deduped = graft.streaming.StreamOps.dedupStream(
-          graft.streaming.StreamOps.readStream(s, in, docs.schema),
-          "ts", "text", watermark = "1 hour")
-        val q = deduped
-          .select(graft.functions.Dedup.contentHash(col("text")).as("content_hash"))
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val deduped = graft.streaming.StreamOps.dedupStream(
+        graft.streaming.StreamOps.readStream(s, in, docs.schema),
+        "ts", "text", watermark = "1 hour")
+      graft.streaming.StreamOps.runToParquet(deduped.select(
+        graft.functions.Dedup.contentHash(col("text")).as("content_hash")),
+        out, chk)
       s.read.parquet(out)
     }),
 
@@ -1054,19 +982,11 @@ object Extensions {
         .withColumn("ts", expr("timestamp'2100-01-01 00:00:00'"))
         .withColumn("event_type", lit("__flush"))
       stageTimeSliced(in, ev, "ts", sentinel)
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.slidingCounts(
-          graft.streaming.StreamOps.readStream(s, in, ev.schema,
-            Map("maxFilesPerTrigger" -> "1")),
-          "ts", "event_type", "2 hours", "1 hour", "4 hours")
-        val q = stream.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.slidingCounts(
+        graft.streaming.StreamOps.readStream(s, in, ev.schema,
+          Map("maxFilesPerTrigger" -> "1")),
+        "ts", "event_type", "2 hours", "1 hour", "4 hours")
+      graft.streaming.StreamOps.runToParquet(stream, out, chk)
       // watermark withholding already keeps the far-future sentinel window
       // out of the Append output, but that is a TIMING property — filter
       // the sentinel explicitly (q112-style) so a future watermark-delay
@@ -1160,8 +1080,7 @@ object Extensions {
     // hint keeps the bucket-join path planned, at the sink too); the
     // oracle gates the values.
     "q127_incremental_neardup" -> ((s, dir) => {
-      val table = stagedTable("graft_q127_bandidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q127_bandidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       // one-time index build (the amortized cost in the daily loop)
       Dedup.bandIndexTap(table, 8).write(
@@ -1194,8 +1113,7 @@ object Extensions {
     // final per-doc aggregate runs batch over the sink (the gate surface);
     // a production loop would keep it in-stream with update mode.
     "q130_stream_neardup_index" -> ((s, dir) => {
-      val table = stagedTable("graft_q130_bandidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q130_bandidx")
       val (in, out, chk) = freshStreamDirs("graft_q130_stream")
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
@@ -1210,22 +1128,14 @@ object Extensions {
         batch.filter(col("doc_id") % 30 === 7),
         batch.filter(col("doc_id") % 30 === 17),
         batch.filter(col("doc_id") % 30 === 27)))
-      withStreamPartitions(s) {
-        val index = s.table(table).withColumnRenamed("id", "corpus_id")
-        val stream = graft.streaming.StreamOps.readStream(s, in, batch.schema,
-          Map("maxFilesPerTrigger" -> "1"))
-        val flagged = Dedup.bandIndex(stream, "doc_id", "text",
-            wideHash = false)
-          .join(index, Seq("band", "key"))
-          .select(col("id"), col("corpus_id"))
-        val q = flagged.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val index = s.table(table).withColumnRenamed("id", "corpus_id")
+      val stream = graft.streaming.StreamOps.readStream(s, in, batch.schema,
+        Map("maxFilesPerTrigger" -> "1"))
+      val flagged = Dedup.bandIndex(stream, "doc_id", "text",
+          wideHash = false)
+        .join(index, Seq("band", "key"))
+        .select(col("id"), col("corpus_id"))
+      graft.streaming.StreamOps.runToParquet(flagged, out, chk)
       s.read.parquet(out).groupBy(col("id"))
         .agg(min(col("corpus_id")).as("nearest_corpus_id"),
           count_distinct(col("corpus_id")).as("n_corpus_matches"))
@@ -1241,9 +1151,8 @@ object Extensions {
     // every query batch pays only its own probed-list cosine scan.
     "q131_ivf_index" -> ((s, dir) => {
       val (centsT, listsT) =
-        (stagedTable("graft_q131_ivf_cents"), stagedTable("graft_q131_ivf_lists"))
-      Seq(centsT, listsT)
-        .foreach(graft.queries.Tables.dropStagedTable(s, _))
+        (Tables.stagedTable(s, "graft_q131_ivf_cents"),
+         Tables.stagedTable(s, "graft_q131_ivf_lists"))
       val e = s.read.parquet(s"$dir/embeddings.parquet")
       val (cents, lists) = Similarity.ivfKMeansBuild(
         e, "vec_id", "embedding", nlist = 16, iters = 2)
@@ -1272,8 +1181,7 @@ object Extensions {
     // index — ingest appends O(batch) band rows; nothing ever re-scans
     // the corpus.
     "q133_index_maintenance" -> ((s, dir) => {
-      val table = stagedTable("graft_q133_bandidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q133_bandidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val day0 = docs.filter(col("doc_id") % 10 =!= 7 &&
@@ -1325,8 +1233,7 @@ object Extensions {
     "q136_shard_export" -> ((s, dir) => {
       val back = graft.functions.Governance.shardExport(
         s.read.parquet(s"$dir/documents.parquet").select(col("doc_id")),
-        "doc_id", 16, "q136",
-        s"/tmp/graft_q136_shards_p${ProcessHandle.current.pid}")
+        "doc_id", 16, "q136", Tables.stagedDir("graft_q136_shards"))
       back.groupBy(col("shard").cast("int").as("shard"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("pos") * (col("doc_id") % 1000003L)).as("order_checksum"),
@@ -1666,24 +1573,16 @@ object Extensions {
         .withColumn("ts", expr("timestamp'2100-01-01 00:00:00'"))
         .withColumn("user_id", lit(-1L))
       stageTimeSliced(in, ev, "ts", sentinel)
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
-            Map("maxFilesPerTrigger" -> "1"))
-          .withWatermark("ts", "4 hours")
-          .groupBy(col("user_id"),
-            session_window(col("ts"), "30 minutes").as("sw"))
-          .agg(count(lit(1)).as("n_events"),
-            graft.catalyst.ExactMicrosSum.sum(col("value")).as("sum_value"))
-          .select(col("user_id"), col("sw.start").as("start_ts"),
-            col("sw.end").as("end_ts"), col("n_events"), col("sum_value"))
-        val q = stream.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
+          Map("maxFilesPerTrigger" -> "1"))
+        .withWatermark("ts", "4 hours")
+        .groupBy(col("user_id"),
+          session_window(col("ts"), "30 minutes").as("sw"))
+        .agg(count(lit(1)).as("n_events"),
+          graft.catalyst.ExactMicrosSum.sum(col("value")).as("sum_value"))
+        .select(col("user_id"), col("sw.start").as("start_ts"),
+          col("sw.end").as("end_ts"), col("n_events"), col("sum_value"))
+      graft.streaming.StreamOps.runToParquet(stream, out, chk)
       s.read.parquet(out)
         .filter(col("user_id") =!= -1L)
         .select("user_id", "start_ts", "end_ts", "n_events", "sum_value")
@@ -1723,24 +1622,16 @@ object Extensions {
         .withColumn("ts", expr("timestamp'2100-01-01 00:00:00'"))
         .withColumn("user_id", lit(-1L))
       stageTimeSliced(in, ev, "ts", sentinel)
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
-            Map("maxFilesPerTrigger" -> "1"))
-          .withWatermark("ts", "4 hours")
-          .join(broadcast(cust), col("user_id") === col("c_custkey"))
-          .groupBy(window(col("ts"), "1 hour").as("w"), col("c_mktsegment"))
-          .agg(count(lit(1)).as("n"),
-            graft.catalyst.ExactMicrosSum.sum(col("value")).as("sum_value"))
-          .select(col("w.start").as("w_start"), col("c_mktsegment"),
-            col("n"), col("sum_value"))
-        val q = stream.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
+          Map("maxFilesPerTrigger" -> "1"))
+        .withWatermark("ts", "4 hours")
+        .join(broadcast(cust), col("user_id") === col("c_custkey"))
+        .groupBy(window(col("ts"), "1 hour").as("w"), col("c_mktsegment"))
+        .agg(count(lit(1)).as("n"),
+          graft.catalyst.ExactMicrosSum.sum(col("value")).as("sum_value"))
+        .select(col("w.start").as("w_start"), col("c_mktsegment"),
+          col("n"), col("sum_value"))
+      graft.streaming.StreamOps.runToParquet(stream, out, chk)
       // the user_id=-1 sentinel can never join a real customer key, and
       // the watermark withholds its window — but both are indirect; bound
       // the output to pre-sentinel windows explicitly so neither property
@@ -1959,14 +1850,9 @@ object Extensions {
       val sentinel = ev.limit(1)
         .withColumn("ts", expr("timestamp'2100-01-01 00:00:00'"))
         .withColumn("user_id", lit(-1L))
-      val Array(tMin, tMax) = ev.agg(min(col("ts")), max(col("ts"))).head()
-        .toSeq.map(_.asInstanceOf[java.sql.Timestamp].getTime).toArray
-      val (t1, t2) = (tMin + (tMax - tMin) / 3, tMin + 2 * (tMax - tMin) / 3)
-      def ms = unix_millis(col("ts"))
-      def commits: Int = Option(new java.io.File(s"$chk/commits").listFiles())
-        .toSeq.flatten.count(_.getName.forall(_.isDigit))
-      val run1CommitCount = withStreamPartitions(s) {
-        def start(trigger: org.apache.spark.sql.streaming.Trigger) =
+      val Seq(slice1, slice2, slice3) = timeSlices(ev, "ts")
+      stageSliced(in, Seq(slice1, slice2))
+      val run1Commits = graft.streaming.StreamOps.killAndResume(() =>
           graft.streaming.StreamOps.readStream(s, in, ev.schema,
               Map("maxFilesPerTrigger" -> "1"))
             .withWatermark("ts", "4 hours")
@@ -1975,33 +1861,11 @@ object Extensions {
             .agg(count(lit(1)).as("n_events"),
               graft.catalyst.ExactMicrosSum.sum(col("value")).as("sum_value"))
             .select(col("user_id"), col("sw.start").as("start_ts"),
-              col("sw.end").as("end_ts"), col("n_events"), col("sum_value"))
-            .writeStream
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-            .format("parquet").option("path", out)
-            .option("checkpointLocation", chk)
-            .trigger(trigger)
-            .start()
-        // run 1: two slices, live trigger, killed after both batches commit
-        stageSliced(in, Seq(ev.filter(ms < t1),
-          ev.filter(ms >= t1 && ms < t2)))
-        val q1 = start(
-          org.apache.spark.sql.streaming.Trigger.ProcessingTime("200 milliseconds"))
-        val deadline = System.nanoTime + 120L * 1000000000L
-        while (commits < 2 && System.nanoTime < deadline) Thread.sleep(100)
-        q1.stop(); q1.awaitTermination()
-        val run1Commits = commits
-        require(run1Commits >= 2,
-          s"run 1 committed only $run1Commits batches before the kill")
-        // run 2: remaining slices + sentinel, fresh query, same checkpoint
-        stageSliced(in, Seq(ev.filter(ms >= t2), sentinel), baseIdx = 2)
-        val q2 = start(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        q2.awaitTermination()
-        run1Commits
+              col("sw.end").as("end_ts"), col("n_events"), col("sum_value")),
+          out, chk) {
+        stageSliced(in, Seq(slice3, sentinel), baseIdx = 2)
       }
-      // the block yields run-1's commit count; more commits exist now iff
-      // the restarted query processed batches of its own
-      val spansRestart = commits > run1CommitCount
+      val spansRestart = graft.streaming.StreamOps.commits(chk) > run1Commits
       s.read.parquet(out)
         .filter(col("user_id") =!= -1L)
         .select(col("user_id"), col("start_ts"), col("end_ts"),
@@ -2029,46 +1893,18 @@ object Extensions {
       val sentinel = ev.select(col("user_id")).distinct()
         .withColumn("ts", expr("timestamp'2100-01-01 00:00:00'"))
         .withColumn("value", lit(0.0))
-      val Array(tMin, tMax) = ev.agg(min(col("ts")), max(col("ts"))).head()
-        .toSeq.map(_.asInstanceOf[java.sql.Timestamp].getTime).toArray
-      val (t1, t2) = (tMin + (tMax - tMin) / 3, tMin + 2 * (tMax - tMin) / 3)
-      def ms = unix_millis(col("ts"))
-      def commits: Int = Option(new java.io.File(s"$chk/commits").listFiles())
-        .toSeq.flatten.count(_.getName.forall(_.isDigit))
-      val run1CommitCount = withStreamPartitions(s) {
-        def start(trigger: org.apache.spark.sql.streaming.Trigger) = {
-          val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
-            Map("maxFilesPerTrigger" -> "1"))
-          val sessions = {
-            import s.implicits._
-            graft.streaming.StreamOps.sessionize(
-              stream.as[graft.streaming.StreamOps.SessionEvent], 1800)
-          }
-          sessions.writeStream
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-            .format("parquet").option("path", out)
-            .option("checkpointLocation", chk)
-            .trigger(trigger)
-            .start()
-        }
-        // run 1: two time slices, live trigger, killed after both commit
-        stageSliced(in, Seq(ev.filter(ms < t1),
-          ev.filter(ms >= t1 && ms < t2)))
-        val q1 = start(
-          org.apache.spark.sql.streaming.Trigger.ProcessingTime("200 milliseconds"))
-        val deadline = System.nanoTime + 120L * 1000000000L
-        while (commits < 2 && System.nanoTime < deadline) Thread.sleep(100)
-        q1.stop(); q1.awaitTermination()
-        val run1Commits = commits
-        require(run1Commits >= 2,
-          s"run 1 committed only $run1Commits batches before the kill")
-        // run 2: final slice + per-user sentinels, fresh query, same chk
-        stageSliced(in, Seq(ev.filter(ms >= t2), sentinel), baseIdx = 2)
-        val q2 = start(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        q2.awaitTermination()
-        run1Commits
+      val Seq(slice1, slice2, slice3) = timeSlices(ev, "ts")
+      stageSliced(in, Seq(slice1, slice2))
+      val run1Commits = graft.streaming.StreamOps.killAndResume(() => {
+          import s.implicits._
+          graft.streaming.StreamOps.sessionize(
+            graft.streaming.StreamOps.readStream(s, in, ev.schema,
+              Map("maxFilesPerTrigger" -> "1"))
+              .as[graft.streaming.StreamOps.SessionEvent], 1800)
+        }, out, chk) {
+        stageSliced(in, Seq(slice3, sentinel), baseIdx = 2)
       }
-      val spansRestart = commits > run1CommitCount
+      val spansRestart = graft.streaming.StreamOps.commits(chk) > run1Commits
       val w = Window.partitionBy(col("user_id")).orderBy(col("start_ts"))
       s.read.parquet(out)
         .withColumn("session_id", row_number().over(w).cast("long"))
@@ -2126,8 +1962,7 @@ object Extensions {
     // snapshot, so a lost update, a dropped carry-through row, or a wrong
     // version bump anywhere fails.
     "q142_snapshot_upsert" -> ((s, dir) => {
-      val table = stagedTable("graft_q142_snapshot")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q142_snapshot")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       graft.functions.Snapshot.snapshotTap(table, 8, "doc_id").write(
         docs.select(col("doc_id"), col("text"), col("source"),
@@ -2178,8 +2013,7 @@ object Extensions {
     // layout total), so the O(index)-per-question plan can never silently
     // return. The amortization counterpart of q81's scan-shaped BM25.
     "q144_inverted_index" -> ((s, dir) => {
-      val table = stagedTable("graft_q144_postings")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q144_postings")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       graft.functions.InvertedIndex.indexTap(table, 16).write(
         graft.functions.InvertedIndex.build(docs, "doc_id", "text"),
@@ -2218,8 +2052,7 @@ object Extensions {
     "q300_bm25_from_index" -> ((s, dir) => {
       val I = graft.functions.InvertedIndex
       val R = graft.functions.Relevance
-      val table = stagedTable("graft_q300_postings")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q300_postings")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val pre = docs.filter(col("doc_id") % 50 =!= 3)
       val batch = docs.filter(col("doc_id") % 50 === 3)
@@ -2356,8 +2189,7 @@ object Extensions {
     "q316_stream_bm25_arrival" -> ((s, dir) => {
       val I = graft.functions.InvertedIndex
       val R = graft.functions.Relevance
-      val table = stagedTable("graft_q316_postings")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q316_postings")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val pre = docs.filter(col("doc_id") % 50 =!= 3)
       val batch = docs.filter(col("doc_id") % 50 === 3)
@@ -2376,28 +2208,14 @@ object Extensions {
       stageSliced(in, Seq(
         batch.filter(col("doc_id") % 2 === 1),
         batch.filter(col("doc_id") % 2 === 0)))
-      withStreamPartitions(s) {
-        val stream1 = graft.streaming.StreamOps.readStream(s, in,
-          batch.schema, Map("maxFilesPerTrigger" -> "1"))
-        val q1 = I.postingRowsPerDoc(stream1, "doc_id", "text")
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", outPost)
-          .option("checkpointLocation", chkPost)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q1.awaitTermination()
-        val stream2 = graft.streaming.StreamOps.readStream(s, in,
-          batch.schema, Map("maxFilesPerTrigger" -> "1"))
-        val q2 = I.statsRowsPerDoc(stream2, "text")
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", outStats)
-          .option("checkpointLocation", chkStats)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q2.awaitTermination()
-      }
+      val stream1 = graft.streaming.StreamOps.readStream(s, in,
+        batch.schema, Map("maxFilesPerTrigger" -> "1"))
+      graft.streaming.StreamOps.runToParquet(
+        I.postingRowsPerDoc(stream1, "doc_id", "text"), outPost, chkPost)
+      val stream2 = graft.streaming.StreamOps.readStream(s, in,
+        batch.schema, Map("maxFilesPerTrigger" -> "1"))
+      graft.streaming.StreamOps.runToParquet(
+        I.statsRowsPerDoc(stream2, "text"), outStats, chkStats)
       val streamedPost = s.read.parquet(outPost)
       val streamedStats = s.read.parquet(outStats)
       // non-vacuity: the stream leg must actually have contributed, and
@@ -2499,8 +2317,7 @@ object Extensions {
     "q328_kn_perplexity_mixture" -> ((s, dir) => {
       val G = graft.functions.Governance
       val LM = graft.functions.LanguageModel
-      val table = stagedTable("graft_q328_bgcounts")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q328_bgcounts")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val tap = LM.bigramCountsTap(table, 16)
       tap.write(LM.bigramTrainCounts(docs), graft.sources.SinkMode.Replace)
@@ -2628,8 +2445,8 @@ object Extensions {
     // satisfied vacuously by a broadcast plan). Inserts/deletes/updates
     // are synthesized deterministically; unchanged keys must vanish.
     "q145_snapshot_diff" -> ((s, dir) => {
-      val (t1, t2) = (stagedTable("graft_q145_snap_v1"), stagedTable("graft_q145_snap_v2"))
-      Seq(t1, t2).foreach(graft.queries.Tables.dropStagedTable(s, _))
+      val (t1, t2) = (Tables.stagedTable(s, "graft_q145_snap_v1"),
+        Tables.stagedTable(s, "graft_q145_snap_v2"))
       val docs = s.read.parquet(s"$dir/documents.parquet")
       graft.functions.Snapshot.snapshotTap(t1, 8, "doc_id").write(
         docs.filter(col("doc_id") % 11 =!= 5)
@@ -2670,7 +2487,7 @@ object Extensions {
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"), col("source"))
       val pp = new graft.functions.Snapshot.PingPong(
-        s, stagedTable("graft_q146_snap"), 8, "doc_id", Seq("text", "source"), "version")
+        s, Tables.processLocal("graft_q146_snap"), 8, "doc_id", Seq("text", "source"), "version")
       pp.bootstrap(docs.withColumn("version", lit(1L)))
       stageSliced(in, Seq(
         docs.filter(col("doc_id") % 4 === 0)
@@ -2682,17 +2499,9 @@ object Extensions {
               concat(lit("ins "), col("text")).as("text"), col("source"))),
         docs.filter(col("doc_id") % 4 <= 2)
           .withColumn("text", concat(lit("b2 "), col("text")))))
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in, docs.schema,
-          Map("maxFilesPerTrigger" -> "1"))
-        val q = stream.writeStream
-          .foreachBatch((b: org.apache.spark.sql.Dataset[
-              org.apache.spark.sql.Row], id: Long) => pp.applyBatch(b, id))
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in, docs.schema,
+        Map("maxFilesPerTrigger" -> "1"))
+      graft.streaming.StreamOps.runForeachBatch(stream, chk)(pp.applyBatch)
       pp.live.select(col("doc_id"), md5(col("text")).as("text_md5"),
         col("source"), col("version"))
     }),
@@ -2748,8 +2557,7 @@ object Extensions {
     // plan-asserted), merges sets by union, and must equal the
     // from-scratch q149 matrix over old ∪ batch — the oracle IS q149's
     "q192_source_overlap_indexed" -> ((s, dir) => {
-      val table = stagedTable("graft_q192_gramidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q192_gramidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
       val batch = docs.filter(col("doc_id") % 10 === 7)
@@ -2836,18 +2644,10 @@ object Extensions {
         aug.filter(col("doc_id") % 3 === 0),
         aug.filter(col("doc_id") % 3 === 1),
         aug.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in,
-          aug.schema, Map("maxFilesPerTrigger" -> "1"))
-        val q = V.wordPieceEncode(stream, "doc_id", "text", vocab)
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in,
+        aug.schema, Map("maxFilesPerTrigger" -> "1"))
+      graft.streaming.StreamOps.runToParquet(
+        V.wordPieceEncode(stream, "doc_id", "text", vocab), out, chk)
       s.read.parquet(out)
     }),
 
@@ -3303,17 +3103,10 @@ object Extensions {
         docs.filter(col("doc_id") % 3 === 0),
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in,
-          docs.schema, Map("maxFilesPerTrigger" -> "1"))
-        val q = piiScrubProjection(stream).writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in,
+        docs.schema, Map("maxFilesPerTrigger" -> "1"))
+      graft.streaming.StreamOps.runToParquet(
+        piiScrubProjection(stream), out, chk)
       s.read.parquet(out)
     }),
 
@@ -3443,17 +3236,10 @@ object Extensions {
         docs.filter(col("doc_id") % 3 === 0),
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in,
-          docs.schema, Map("maxFilesPerTrigger" -> "1"))
-        val q = C.blocklistScreenWith(stream, terms).writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in,
+        docs.schema, Map("maxFilesPerTrigger" -> "1"))
+      graft.streaming.StreamOps.runToParquet(
+        C.blocklistScreenWith(stream, terms), out, chk)
       s.read.parquet(out)
     }),
 
@@ -3601,18 +3387,11 @@ object Extensions {
       stageSliced(in, Seq(
         batch.filter(col("doc_id") % 2 === 0),
         batch.filter(col("doc_id") % 2 === 1)))
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in,
-          batch.schema, Map("maxFilesPerTrigger" -> "1"))
-        val q = graft.functions.Classify
-          .scoreNaiveBayesKernel(tap.read(s), stream).writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in,
+        batch.schema, Map("maxFilesPerTrigger" -> "1"))
+      graft.streaming.StreamOps.runToParquet(
+        graft.functions.Classify.scoreNaiveBayesKernel(tap.read(s), stream),
+        out, chk)
       s.read.parquet(out)
     }),
 
@@ -3692,8 +3471,7 @@ object Extensions {
     // bucket-aware index scans; the merge hint keeps the bucket-join
     // path planned). Oracle = q155's oracle: identical values.
     "q159_sb_fluency_indexed" -> ((s, dir) => {
-      val table = stagedTable("graft_q159_lmcounts")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q159_lmcounts")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val train = docs.filter(col("doc_id") % 50 =!= 3)
       val batch = docs.filter(col("doc_id") % 50 === 3)
@@ -3743,8 +3521,7 @@ object Extensions {
     // the novel twins. Oracle pins the full survivor set × version
     // lineage × payload md5.
     "q160_stream_curation" -> ((s, dir) => {
-      val idxTable = stagedTable("graft_q160_bandidx")
-      graft.queries.Tables.dropStagedTable(s, idxTable)
+      val idxTable = Tables.stagedTable(s, "graft_q160_bandidx")
       val (in, _, chk) = freshStreamDirs("graft_q160_stream")
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"), col("source"))
@@ -3755,7 +3532,7 @@ object Extensions {
           "doc_id", "text", wideHash = false),
         graft.sources.SinkMode.Replace)
       val pp = new graft.functions.Snapshot.PingPong(
-        s, stagedTable("graft_q160_snap"), 8, "doc_id", Seq("text", "source"), "version")
+        s, Tables.processLocal("graft_q160_snap"), 8, "doc_id", Seq("text", "source"), "version")
       pp.bootstrap(docs.filter(lit(false)).withColumn("version", lit(1L)))
       val orig = docs.filter(col("doc_id") % 10 === 7)
       val novel = orig.select((col("doc_id") + 3000000L).as("doc_id"),
@@ -3780,16 +3557,9 @@ object Extensions {
             col("text"), dims = 4096, salt = "w#") >= 0L)
         pp.applyBatch(survivors, id)
       }
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in, batch.schema,
-          Map("maxFilesPerTrigger" -> "1"))
-        val q = stream.writeStream
-          .foreachBatch(curate)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in, batch.schema,
+        Map("maxFilesPerTrigger" -> "1"))
+      graft.streaming.StreamOps.runForeachBatch(stream, chk)(curate)
       pp.live.select(col("doc_id"), md5(col("text")).as("text_md5"),
         col("source"), col("version"))
     }),
@@ -4058,18 +3828,11 @@ object Extensions {
         docs.filter(col("doc_id") % 3 === 0),
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in,
-          docs.schema, Map("maxFilesPerTrigger" -> "1"))
-        val q = graft.functions.Classify.scoreNaiveBayesKernel(model, stream)
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in,
+        docs.schema, Map("maxFilesPerTrigger" -> "1"))
+      graft.streaming.StreamOps.runToParquet(
+        graft.functions.Classify.scoreNaiveBayesKernel(model, stream),
+        out, chk)
       s.read.parquet(out).join(labels, Seq("doc_id"))
         .select(col("doc_id"), col("c").as("label"), col("pred"),
           (col("c") === col("pred")).as("agree"),
@@ -4396,43 +4159,36 @@ object Extensions {
       val (in, out, chk) = freshStreamDirs("graft_q327_queries")
       stageSliced(in, qids.map(q =>
         queryFeed.filter(col("query_id") === q)))
+      val stream = graft.streaming.StreamOps.readStream(s, in,
+        queryFeed.schema, Map("maxFilesPerTrigger" -> "1"))
       withoutAutoBucketedScan(s) {
-        withStreamPartitions(s) {
-          val stream = graft.streaming.StreamOps.readStream(s, in,
-            queryFeed.schema, Map("maxFilesPerTrigger" -> "1"))
-          val q = stream.writeStream
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-            .option("checkpointLocation", chk)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              val rows = batch.collect() // bounded: the arriving queries
-              if (rows.nonEmpty) {
-                val batchTerms = rows.map(r => (r.getLong(0),
-                  r.getSeq[String](2).toSeq)).toSeq
-                val vecSchema = org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("vec_id",
-                    org.apache.spark.sql.types.LongType),
-                  batch.schema("embedding")))
-                val qDf = s.createDataFrame(
-                  java.util.Arrays.asList(rows.map(r =>
-                    org.apache.spark.sql.Row(r.getLong(0), r.get(1))): _*),
-                  vecSchema)
-                val lexRanked = R.rankByScorePerQuery(
-                  R.bm25FromIndexMulti(s.table(a.postings), a.stats.read(s),
-                    batchTerms, legK = 100))
-                val dense = Similarity.ivfAdcRerankTopK(a.ivfCents.read(s),
-                    a.pqBook.read(s), s.table(a.ivfCodes),
-                    s.table(a.rawVecs), qDf, "vec_id", "embedding",
-                    k = 5, rerankR = 16, nprobe = 4,
-                    m = 8, kSub = 16, dim = 64)
-                  .select(col("query_id"), col("nn_id").as("doc_id"),
-                    col("rk").as("dr"))
-                R.rrfFusePerQuery(lexRanked, dense, topK = 20)
-                  .write.mode("append").parquet(out)
-              }
+        graft.streaming.StreamOps.runForeachBatch(stream, chk) {
+          (batch: DataFrame, _: Long) =>
+            val rows = batch.collect() // bounded: the arriving queries
+            if (rows.nonEmpty) {
+              val batchTerms = rows.map(r => (r.getLong(0),
+                r.getSeq[String](2).toSeq)).toSeq
+              val vecSchema = org.apache.spark.sql.types.StructType(Seq(
+                org.apache.spark.sql.types.StructField("vec_id",
+                  org.apache.spark.sql.types.LongType),
+                batch.schema("embedding")))
+              val qDf = s.createDataFrame(
+                java.util.Arrays.asList(rows.map(r =>
+                  org.apache.spark.sql.Row(r.getLong(0), r.get(1))): _*),
+                vecSchema)
+              val lexRanked = R.rankByScorePerQuery(
+                R.bm25FromIndexMulti(s.table(a.postings), a.stats.read(s),
+                  batchTerms, legK = 100))
+              val dense = Similarity.ivfAdcRerankTopK(a.ivfCents.read(s),
+                  a.pqBook.read(s), s.table(a.ivfCodes),
+                  s.table(a.rawVecs), qDf, "vec_id", "embedding",
+                  k = 5, rerankR = 16, nprobe = 4,
+                  m = 8, kSub = 16, dim = 64)
+                .select(col("query_id"), col("nn_id").as("doc_id"),
+                  col("rk").as("dr"))
+              R.rrfFusePerQuery(lexRanked, dense, topK = 20)
+                .write.mode("append").parquet(out)
             }
-            .start()
-          q.awaitTermination()
         }
       }
       val served = s.read.parquet(out)
@@ -4512,8 +4268,7 @@ object Extensions {
     // corpus-side exchange (asserted in-query); run-level matches via
     // ≥ minShared distinct shared fingerprints
     "q180_winnow_index" -> ((s, dir) => {
-      val table = stagedTable("graft_q180_winnowidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q180_winnowidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.winnowIndexTap(table, 8).write(
         Dedup.winnowIndex(docs.filter(col("doc_id") % 10 =!= 7),
@@ -4562,8 +4317,7 @@ object Extensions {
     // stream-static join the bucketed index; the ≥ minShared aggregate
     // runs batch over the sink, the gate surface
     "q182_stream_winnow" -> ((s, dir) => {
-      val table = stagedTable("graft_q182_winnowidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q182_winnowidx")
       val (in, out, chk) = freshStreamDirs("graft_q182_stream")
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
@@ -4576,22 +4330,14 @@ object Extensions {
         batch.filter(col("doc_id") % 30 === 7),
         batch.filter(col("doc_id") % 30 === 17),
         batch.filter(col("doc_id") % 30 === 27)))
-      withStreamPartitions(s) {
-        val index = s.table(table).withColumnRenamed("id", "corpus_id")
-        val stream = graft.streaming.StreamOps.readStream(s, in, batch.schema,
-          Map("maxFilesPerTrigger" -> "1"))
-        val matched = Dedup.winnow(stream, "doc_id", "text")
-          .select(col("doc_id").as("id"), col("h"))
-          .join(index, Seq("h"))
-          .select(col("id"), col("corpus_id"), col("h"))
-        val q = matched.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val index = s.table(table).withColumnRenamed("id", "corpus_id")
+      val stream = graft.streaming.StreamOps.readStream(s, in, batch.schema,
+        Map("maxFilesPerTrigger" -> "1"))
+      val matched = Dedup.winnow(stream, "doc_id", "text")
+        .select(col("doc_id").as("id"), col("h"))
+        .join(index, Seq("h"))
+        .select(col("id"), col("corpus_id"), col("h"))
+      graft.streaming.StreamOps.runToParquet(matched, out, chk)
       s.read.parquet(out).groupBy(col("id"), col("corpus_id"))
         .agg(count_distinct(col("h")).as("n_shared"))
         .filter(col("n_shared") >= 2L)
@@ -4628,8 +4374,7 @@ object Extensions {
     // with the refresh labels, and the fixed point runs over the
     // O(batch) subgraph. Full q186 propagation drops to refresh cadence.
     "q187_winnow_incremental" -> ((s, dir) => {
-      val table = stagedTable("graft_q187_winnowidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q187_winnowidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
       val batch = docs.filter(col("doc_id") % 10 === 7)
@@ -4705,8 +4450,7 @@ object Extensions {
     // images hash in-flight and join the index with no corpus-side
     // exchange (plan-asserted), Hamming-verified
     "q191_image_dhash_index" -> ((s, dir) => {
-      val table = stagedTable("graft_q191_dhashidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q191_dhashidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
       val batch = docs.filter(col("doc_id") % 10 === 7)
@@ -4734,8 +4478,7 @@ object Extensions {
     // the batch path flags.
     "q193_stream_image_dhash" -> ((s, dir) => {
       val MM = graft.functions.Multimodal
-      val table = stagedTable("graft_q193_dhashidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q193_dhashidx")
       val (in, out, chk) = freshStreamDirs("graft_q193_stream")
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
@@ -4748,25 +4491,17 @@ object Extensions {
         batch.filter(col("doc_id") % 30 === 7),
         batch.filter(col("doc_id") % 30 === 17),
         batch.filter(col("doc_id") % 30 === 27)))
-      withStreamPartitions(s) {
-        val index = s.table(table).select(col("h").as("ch"), col("key"))
-        val stream = graft.streaming.StreamOps.readStream(s, in,
-          batch.schema, Map("maxFilesPerTrigger" -> "1"))
-        val matched = stream
-          .select(col("doc_id").as("id"), MM.dHashStub(col("text")).as("bh"))
-          .select(col("id"), col("bh"),
-            explode(MM.bandKeys(col("bh"))).as("bk"))
-          .select(col("id"), col("bh"), col("bk.key").as("key"))
-          .join(index, Seq("key"))
-          .select(col("id"), col("bh"), col("ch"))
-        val q = matched.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val index = s.table(table).select(col("h").as("ch"), col("key"))
+      val stream = graft.streaming.StreamOps.readStream(s, in,
+        batch.schema, Map("maxFilesPerTrigger" -> "1"))
+      val matched = stream
+        .select(col("doc_id").as("id"), MM.dHashStub(col("text")).as("bh"))
+        .select(col("id"), col("bh"),
+          explode(MM.bandKeys(col("bh"))).as("bk"))
+        .select(col("id"), col("bh"), col("bk.key").as("key"))
+        .join(index, Seq("key"))
+        .select(col("id"), col("bh"), col("ch"))
+      graft.streaming.StreamOps.runToParquet(matched, out, chk)
       s.read.parquet(out).select(col("id"), col("bh"), col("ch"))
         .distinct()
         .filter(MM.hamming(col("bh"), col("ch")) <= 3)
@@ -4783,8 +4518,7 @@ object Extensions {
     // wide index build is also one exchange cheaper: the kernel emits
     // per-doc-distinct hashes, so no dedup shuffle.
     "q194_winnow_index_wide" -> ((s, dir) => {
-      val table = stagedTable("graft_q194_winnowidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q194_winnowidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.winnowIndexTap(table, 8).write(
         Dedup.winnowIndexWide(docs.filter(col("doc_id") % 10 =!= 7),
@@ -4818,8 +4552,7 @@ object Extensions {
     // persisted index — same seeded-subgraph propagation, same in-query
     // plan assertion, collision-safe key domain
     "q196_winnow_incremental_wide" -> ((s, dir) => {
-      val table = stagedTable("graft_q196_winnowidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q196_winnowidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
       val batch = docs.filter(col("doc_id") % 10 === 7)
@@ -4852,8 +4585,7 @@ object Extensions {
     // --- WIDE twin of q127: the persisted band index at 61-bit keys —
     // same bucketed layout, same one-batch-side-exchange plan assert
     "q198_band_index_wide" -> ((s, dir) => {
-      val table = stagedTable("graft_q198_bandidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q198_bandidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.bandIndexTap(table, 8).write(
         Dedup.bandIndex(docs.filter(col("doc_id") % 10 =!= 7),
@@ -4883,8 +4615,7 @@ object Extensions {
     // if the append leg actually landed.
     "q199_semdedup_incremental" -> ((s, dir) => {
       val SIM = graft.functions.Similarity
-      val table = stagedTable("graft_q199_signidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q199_signidx")
       val e = s.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("embedding"))
       val day0 = e.filter(col("vec_id") % 10 =!= 7 &&
@@ -4932,8 +4663,7 @@ object Extensions {
     // EXACTLY what q187's one-shot batch adoption assigns (shared
     // oracle).
     "q200_stream_winnow_families" -> ((s, dir) => {
-      val table = stagedTable("graft_q200_winnowidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q200_winnowidx")
       val (in, out, chk) = freshStreamDirs("graft_q200_stream")
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
@@ -4949,21 +4679,13 @@ object Extensions {
         batch.filter(col("doc_id") % 30 === 7),
         batch.filter(col("doc_id") % 30 === 17),
         batch.filter(col("doc_id") % 30 === 27)))
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in, batch.schema,
-          Map("maxFilesPerTrigger" -> "1"))
-        val fps = Dedup.winnow(stream, "doc_id", "text", n = 4, w = 8)
-          .select(col("doc_id").as("id"), col("h"))
-          .unionByName(stream.select(col("doc_id").as("id"),
-            lit(null).cast("long").as("h")))
-        val q = fps.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in, batch.schema,
+        Map("maxFilesPerTrigger" -> "1"))
+      val fps = Dedup.winnow(stream, "doc_id", "text", n = 4, w = 8)
+        .select(col("doc_id").as("id"), col("h"))
+        .unionByName(stream.select(col("doc_id").as("id"),
+          lit(null).cast("long").as("h")))
+      graft.streaming.StreamOps.runToParquet(fps, out, chk)
       val sink = s.read.parquet(out)
       Dedup.winnowFamiliesAdopt(
         corpusIndex = s.table(table), corpusFamilies = families,
@@ -5228,8 +4950,7 @@ object Extensions {
     // bands only), bucket-aware corpus scan.
     "q265_video_keyframe_index" -> ((s, dir) => {
       val MM = graft.functions.Multimodal
-      val table = stagedTable("graft_q265_vkfidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q265_vkfidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
@@ -5421,26 +5142,17 @@ object Extensions {
         docs.filter(col("doc_id") % 3 === 0),
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in,
-          docs.schema, Map("maxFilesPerTrigger" -> "1"))
-        val cells = H.htmlTableCells(
-          H.withSynthTableHtml(stream, "doc_id", "text"), "id", "html")
-        val q = cells.select(
-            when(col("table_idx").isNull, raise_error(concat(
-              lit("q307: table HTML for id "), col("id").cast("string"),
-              lit(" failed to parse in-stream"))))
-              .otherwise(col("id")).as("doc_id"),
-            col("table_idx"), col("row_idx"), col("col_idx"),
-            col("is_header"), col("text"))
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in,
+        docs.schema, Map("maxFilesPerTrigger" -> "1"))
+      val cells = H.htmlTableCells(
+        H.withSynthTableHtml(stream, "doc_id", "text"), "id", "html")
+      graft.streaming.StreamOps.runToParquet(cells.select(
+          when(col("table_idx").isNull, raise_error(concat(
+            lit("q307: table HTML for id "), col("id").cast("string"),
+            lit(" failed to parse in-stream"))))
+            .otherwise(col("id")).as("doc_id"),
+          col("table_idx"), col("row_idx"), col("col_idx"),
+          col("is_header"), col("text")), out, chk)
       s.read.parquet(out)
     }),
 
@@ -5459,25 +5171,17 @@ object Extensions {
         docs.filter(col("doc_id") % 3 === 0),
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in,
-          docs.schema, Map("maxFilesPerTrigger" -> "1"))
-        val items = H.htmlListItems(
-          H.withSynthListHtml(stream, "doc_id", "text"), "id", "html")
-        val q = items.select(
-            when(col("list_idx").isNull, raise_error(concat(
-              lit("q333: list HTML for id "), col("id").cast("string"),
-              lit(" failed to parse in-stream"))))
-              .otherwise(col("id")).as("doc_id"),
-            col("list_idx"), col("ordered"), col("item_idx"), col("text"))
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in,
+        docs.schema, Map("maxFilesPerTrigger" -> "1"))
+      val items = H.htmlListItems(
+        H.withSynthListHtml(stream, "doc_id", "text"), "id", "html")
+      graft.streaming.StreamOps.runToParquet(items.select(
+          when(col("list_idx").isNull, raise_error(concat(
+            lit("q333: list HTML for id "), col("id").cast("string"),
+            lit(" failed to parse in-stream"))))
+            .otherwise(col("id")).as("doc_id"),
+          col("list_idx"), col("ordered"), col("item_idx"), col("text")),
+        out, chk)
       s.read.parquet(out)
     }),
 
@@ -5599,19 +5303,11 @@ object Extensions {
         docs.filter(col("doc_id") % 3 === 0),
         docs.filter(col("doc_id") % 3 === 1),
         docs.filter(col("doc_id") % 3 === 2)))
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in,
-          docs.schema, Map("maxFilesPerTrigger" -> "1"))
-        val blocks = H.htmlBlocks(
-          H.withSynthHtml(stream, "doc_id", "text"), "id", "html")
-        val q = blocks.drop("links").writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in,
+        docs.schema, Map("maxFilesPerTrigger" -> "1"))
+      val blocks = H.htmlBlocks(
+        H.withSynthHtml(stream, "doc_id", "text"), "id", "html")
+      graft.streaming.StreamOps.runToParquet(blocks.drop("links"), out, chk)
       val verified = s.read.parquet(out).select(
         when(col("block_idx").isNull, raise_error(concat(
           lit("q270: HTML for id "), col("id").cast("string"),
@@ -5634,8 +5330,7 @@ object Extensions {
     // q268's SQL verbatim) — the rebuild-equality discipline.
     "q272_link_index_maintenance" -> ((s, dir) => {
       val H = graft.functions.Html
-      val table = stagedTable("graft_q272_linkidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q272_linkidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
       def pairsOf(d: org.apache.spark.sql.DataFrame) = {
@@ -5679,8 +5374,7 @@ object Extensions {
     "q277_hits_warm_refresh" -> ((s, dir) => {
       val H = graft.functions.Html
       val G = graft.functions.Graph
-      val table = stagedTable("graft_q277_linkidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q277_linkidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
       def pairsOf(d: org.apache.spark.sql.DataFrame) = {
@@ -5768,8 +5462,7 @@ object Extensions {
     // point). Oracle = q264's oracle verbatim: the index changes the
     // plan, never the numbers (self-scoring → n_oov ≡ 0, projected out).
     "q273_bigram_bits_indexed" -> ((s, dir) => {
-      val table = stagedTable("graft_q273_bgcounts")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q273_bgcounts")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       graft.functions.LanguageModel.bigramCountsTap(table, 8).write(
         graft.functions.LanguageModel.bigramTrainCounts(docs),
@@ -5806,8 +5499,7 @@ object Extensions {
     // gate proves the frozen-table SEMANTICS under a DuckDB oracle that
     // implements the same rules from the train/batch split.
     "q279_bigram_bits_arrival" -> ((s, dir) => {
-      val table = stagedTable("graft_q279_bgcounts")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q279_bgcounts")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val train = docs.filter(col("doc_id") % 50 =!= 3)
       val batch = docs.filter(col("doc_id") % 50 === 3)
@@ -5823,8 +5515,7 @@ object Extensions {
     }),
 
     "q280_kneser_ney_arrival" -> ((s, dir) => {
-      val table = stagedTable("graft_q280_bgcounts")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q280_bgcounts")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val train = docs.filter(col("doc_id") % 50 =!= 3)
       val batch = docs.filter(col("doc_id") % 50 === 3)
@@ -5847,8 +5538,7 @@ object Extensions {
     // (Σ n1f — no second corpus pass), zero count-side exchange.
     // Oracle = q269's oracle verbatim.
     "q274_kneser_ney_indexed" -> ((s, dir) => {
-      val table = stagedTable("graft_q274_bgcounts")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q274_bgcounts")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       graft.functions.LanguageModel.bigramCountsTap(table, 8).write(
         graft.functions.LanguageModel.bigramTrainCounts(docs),
@@ -6157,24 +5847,16 @@ object Extensions {
         .withColumn("event_id", lit(Long.MaxValue))
         .withColumn("vm", lit(0L))
       stageTimeSliced(in, ev, "ts", sentinel)
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
-          Map("maxFilesPerTrigger" -> "1"))
-        val folded = {
-          import s.implicits._
-          graft.streaming.StreamOps.ewmaFold(
-            stream.as[graft.streaming.StreamOps.EwmaEvent],
-            sentinelUs = java.time.Instant.parse("2100-01-01T00:00:00Z")
-              .getEpochSecond * 1000000L)
-        }
-        val q = folded.toDF().writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      val stream = graft.streaming.StreamOps.readStream(s, in, ev.schema,
+        Map("maxFilesPerTrigger" -> "1"))
+      val folded = {
+        import s.implicits._
+        graft.streaming.StreamOps.ewmaFold(
+          stream.as[graft.streaming.StreamOps.EwmaEvent],
+          sentinelUs = java.time.Instant.parse("2100-01-01T00:00:00Z")
+            .getEpochSecond * 1000000L)
       }
+      graft.streaming.StreamOps.runToParquet(folded, out, chk)
       s.read.parquet(out)
         .select(col("user_id"), col("n_events"), col("ewma_micros"))
     }),
@@ -6213,10 +5895,7 @@ object Extensions {
       // the eager localCheckpoint above fully materialized `out`, so the
       // staged label parquet is dead — delete it here instead of leaking
       // one temp directory per gate/bench run (round-11 advice)
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete()
-      }
-      rm(new java.io.File(tmp))
+      Tables.deleteRecursively(new java.io.File(tmp))
       out
     }),
 
@@ -6285,8 +5964,7 @@ object Extensions {
     // the 60-bit key (a collision only inflates a count by one, but the
     // persisted layout should entrench collision-safe with the rest)
     "q204_source_overlap_wide" -> ((s, dir) => {
-      val table = stagedTable("graft_q204_gramidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q204_gramidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
       val batch = docs.filter(col("doc_id") % 10 === 7)
@@ -6308,8 +5986,7 @@ object Extensions {
     // still plans a bucket-aware scan with ONE batch-side exchange),
     // and the oracle gates that compaction changed NO values.
     "q205_index_compaction" -> ((s, dir) => {
-      val table = stagedTable("graft_q205_bandidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q205_bandidx")
       s.sql(s"DROP TABLE IF EXISTS ${table}__compact")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val day0 = docs.filter(col("doc_id") % 10 =!= 7 &&
@@ -6352,7 +6029,7 @@ object Extensions {
     // Same zero-exchange plan asserts as q205 — the view is transparent
     // to bucketing metadata.
     "q216_compact_pingpong" -> ((s, dir) => {
-      val table = stagedTable("graft_q216_bandidx")
+      val table = Tables.processLocal("graft_q216_bandidx")
       val tap = graft.sources.PingPongBucketedTap(table, 8, Seq("band", "key"))
       tap.drop(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -6399,8 +6076,7 @@ object Extensions {
     // same per-doc overlap computed from scratch in SQL — stream ≡ batch
     // screen is the gate (the q182/q200 decomposition applied to q82).
     "q206_stream_decontaminate" -> ((s, dir) => {
-      val table = stagedTable("graft_q206_evalidx")
-      graft.queries.Tables.dropStagedTable(s, table)
+      val table = Tables.stagedTable(s, "graft_q206_evalidx")
       val (in, out, chk) = freshStreamDirs("graft_q206_stream")
       // planted contamination (the q161 fixture discipline): every eval
       // doc and HALF the arrival slice carry a fixed phrase, so the gate
@@ -6435,21 +6111,13 @@ object Extensions {
         arrivals.filter(col("doc_id") % 30 === 7),
         arrivals.filter(col("doc_id") % 30 === 17),
         arrivals.filter(col("doc_id") % 30 === 27)))
-      withStreamPartitions(s) {
-        val index = s.table(table)
-        val stream = graft.streaming.StreamOps.readStream(s, in,
-          arrivals.schema, Map("maxFilesPerTrigger" -> "1"))
-        val matched = C.docGramKeys(stream, "doc_id", "text", DecontamN)
-          .join(index, Seq("h"))
-          .select(col("id"), col("h"))
-        val q = matched.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val index = s.table(table)
+      val stream = graft.streaming.StreamOps.readStream(s, in,
+        arrivals.schema, Map("maxFilesPerTrigger" -> "1"))
+      val matched = C.docGramKeys(stream, "doc_id", "text", DecontamN)
+        .join(index, Seq("h"))
+        .select(col("id"), col("h"))
+      graft.streaming.StreamOps.runToParquet(matched, out, chk)
       s.read.parquet(out).groupBy(col("id").as("doc_id"))
         .agg(count(lit(1)).as("n_overlap"))
     }),
@@ -6585,8 +6253,8 @@ object Extensions {
     // window form — the oracle is shared verbatim.
     "q212_pq_index" -> ((s, dir) => {
       val (bookT, codesT) =
-        (stagedTable("graft_q212_pq_book"), stagedTable("graft_q212_pq_codes"))
-      Seq(bookT, codesT).foreach(graft.queries.Tables.dropStagedTable(s, _))
+        (Tables.stagedTable(s, "graft_q212_pq_book"),
+         Tables.stagedTable(s, "graft_q212_pq_codes"))
       val e = s.read.parquet(s"$dir/embeddings.parquet")
       val (cents, codes) = Similarity.pqBuild(
         e, "vec_id", "embedding", m = 8, kSub = 16, iters = 2, dim = 64)
@@ -6616,10 +6284,10 @@ object Extensions {
     // The probe ranking windows queries × nlist rows (tiny, by design);
     // the corpus-sized codes side is plan-asserted exchange-free.
     "q213_ivfadc" -> ((s, dir) => {
-      val (centsT, bookT, codesT) = (stagedTable("graft_q213_ivf_cents"),
-        stagedTable("graft_q213_pq_book"), stagedTable("graft_q213_ivf_codes"))
-      Seq(centsT, bookT, codesT)
-        .foreach(graft.queries.Tables.dropStagedTable(s, _))
+      val (centsT, bookT, codesT) = (
+        Tables.stagedTable(s, "graft_q213_ivf_cents"),
+        Tables.stagedTable(s, "graft_q213_pq_book"),
+        Tables.stagedTable(s, "graft_q213_ivf_codes"))
       val e = s.read.parquet(s"$dir/embeddings.parquet")
       val (ivfCents, lists) = Similarity.ivfKMeansBuild(
         e, "vec_id", "embedding", nlist = 16, iters = 2)
@@ -6651,10 +6319,10 @@ object Extensions {
     // broadcasts INTO the vector scan, so at 100 TB stage 2 reads
     // R/|corpus| of the raw bytes instead of re-running brute force.
     "q223_ivfadc_rerank" -> ((s, dir) => {
-      val (centsT, bookT, codesT) = (stagedTable("graft_q223_ivf_cents"),
-        stagedTable("graft_q223_pq_book"), stagedTable("graft_q223_ivf_codes"))
-      Seq(centsT, bookT, codesT)
-        .foreach(graft.queries.Tables.dropStagedTable(s, _))
+      val (centsT, bookT, codesT) = (
+        Tables.stagedTable(s, "graft_q223_ivf_cents"),
+        Tables.stagedTable(s, "graft_q223_pq_book"),
+        Tables.stagedTable(s, "graft_q223_ivf_codes"))
       val e = s.read.parquet(s"$dir/embeddings.parquet")
       val (ivfCents, lists) = Similarity.ivfKMeansBuild(
         e, "vec_id", "embedding", nlist = 16, iters = 2)
@@ -6688,9 +6356,8 @@ object Extensions {
     // rebuild); the serving scan is exchange-free with query codes
     // broadcast in and MinKPairsAgg heap partials as the only shuffle.
     "q224_sq8_topk" -> ((s, dir) => {
-      val (boundsT, codesT) = (stagedTable("graft_q224_sq8_bounds"),
-        stagedTable("graft_q224_sq8_codes"))
-      Seq(boundsT, codesT).foreach(graft.queries.Tables.dropStagedTable(s, _))
+      val (boundsT, codesT) = (Tables.stagedTable(s, "graft_q224_sq8_bounds"),
+        Tables.stagedTable(s, "graft_q224_sq8_codes"))
       val e = s.read.parquet(s"$dir/embeddings.parquet")
       val (bounds, codes) =
         Similarity.sq8Build(e, "vec_id", "embedding", dim = 64)
@@ -6719,10 +6386,10 @@ object Extensions {
     // — still tiny, still broadcast; same exchange-free codes scan and
     // O(queries × k) heap shuffle, plan-asserted.
     "q218_ivfadc_residual" -> ((s, dir) => {
-      val (centsT, bookT, codesT) = (stagedTable("graft_q218_ivf_cents"),
-        stagedTable("graft_q218_pq_book"), stagedTable("graft_q218_ivf_codes"))
-      Seq(centsT, bookT, codesT)
-        .foreach(graft.queries.Tables.dropStagedTable(s, _))
+      val (centsT, bookT, codesT) = (
+        Tables.stagedTable(s, "graft_q218_ivf_cents"),
+        Tables.stagedTable(s, "graft_q218_pq_book"),
+        Tables.stagedTable(s, "graft_q218_ivf_codes"))
       val e = s.read.parquet(s"$dir/embeddings.parquet")
       val (ivfCents, book, ivfCodes) = Similarity.ivfPqResidualBuild(
         e, "vec_id", "embedding", nlist = 16, ivfIters = 2,
@@ -6770,8 +6437,8 @@ object Extensions {
     // oracle never sees the dense-index storage detail.
     "q221_stream_pq_encode" -> ((s, dir) => {
       val (bookT, codesT) =
-        (stagedTable("graft_q221_pq_book"), stagedTable("graft_q221_pq_codes"))
-      Seq(bookT, codesT).foreach(graft.queries.Tables.dropStagedTable(s, _))
+        (Tables.stagedTable(s, "graft_q221_pq_book"),
+         Tables.stagedTable(s, "graft_q221_pq_codes"))
       val (in, out, chk) = freshStreamDirs("graft_q221_stream")
       val e = s.read.parquet(s"$dir/embeddings.parquet")
       val day0 = e.filter(col("vec_id") % 10 =!= 7)
@@ -6787,19 +6454,11 @@ object Extensions {
         arrivals.filter(col("vec_id") % 30 === 7),
         arrivals.filter(col("vec_id") % 30 === 17),
         arrivals.filter(col("vec_id") % 30 === 27)))
-      withStreamPartitions(s) {
-        val stream = graft.streaming.StreamOps.readStream(s, in,
-          arrivals.schema, Map("maxFilesPerTrigger" -> "1"))
-        val encoded = Similarity.pqEncodeWithBook(stream, s.table(bookT),
-          "vec_id", "embedding", m = 8, kSub = 16, dim = 64)
-        val q = encoded.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-          .format("parquet").option("path", out)
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val stream = graft.streaming.StreamOps.readStream(s, in,
+        arrivals.schema, Map("maxFilesPerTrigger" -> "1"))
+      val encoded = Similarity.pqEncodeWithBook(stream, s.table(bookT),
+        "vec_id", "embedding", m = 8, kSub = 16, dim = 64)
+      graft.streaming.StreamOps.runToParquet(encoded, out, chk)
       tap.write(s.read.parquet(out), graft.sources.SinkMode.Update)
       s.table(codesT)
         .select(col("nn_id"), posexplode(col("codes")).as(Seq("sub", "code_ix")))

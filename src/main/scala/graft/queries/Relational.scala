@@ -31,7 +31,7 @@ object Relational {
     * 32-bit dir-hash collision) from sharing a path across processes. */
   private[queries] def stagePath(name: String, dir: String): String =
     new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"${name}_${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current.pid}")
+      Tables.processLocal(s"${name}_${Integer.toHexString(dir.hashCode)}"))
       .toString
 
   /** sum(x) as exact decimal, emitted as double. */
@@ -733,10 +733,8 @@ object Relational {
     // co-located sort-merge path planned, at the sink too) and the
     // oracle gates the values.
     "q72_bucketed_join" -> ((s, dir) => {
-      val (otN, ctN) = (s"graft_q72_orders_p${ProcessHandle.current.pid}",
-        s"graft_q72_customer_p${ProcessHandle.current.pid}")
-      Seq(otN, ctN)
-        .foreach(graft.queries.Tables.dropStagedTable(s, _))
+      val (otN, ctN) = (Tables.stagedTable(s, "graft_q72_orders"),
+        Tables.stagedTable(s, "graft_q72_customer"))
       val ot = graft.sources.BucketedTap(otN, 8,
         Seq("o_custkey"), Seq("o_custkey"))
       val ct = graft.sources.BucketedTap(ctN, 8,

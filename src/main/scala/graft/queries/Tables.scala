@@ -25,6 +25,30 @@ object Tables {
     }
   }
 
+  /** The per-process staging name `<name>_p<pid>`: two JVMs on one box
+    * (a correctness run beside a bench run) otherwise drop or overwrite
+    * each other's staged tables and directories mid-read. Re-runs within
+    * one JVM reuse the name, so each staging helper wipes it first. */
+  def processLocal(name: String): String =
+    s"${name}_p${ProcessHandle.current.pid}"
+
+  /** This process's staging table `name`, already dropped with its
+    * warehouse directory. */
+  def stagedTable(s: SparkSession, name: String): String = {
+    val table = processLocal(name)
+    dropStagedTable(s, table)
+    table
+  }
+
+  /** This process's staging directory `name` under `java.io.tmpdir`,
+    * wiped of any earlier run's files. */
+  def stagedDir(name: String): String = {
+    val d = new java.io.File(System.getProperty("java.io.tmpdir"),
+      processLocal(name))
+    deleteRecursively(d)
+    d.toString
+  }
+
   /** Drop a staging table AND its warehouse directory. `DROP TABLE` alone
     * is not enough under the gate: a crashed earlier run can leave the
     * data directory behind with no catalog entry, and the next
@@ -38,10 +62,13 @@ object Tables {
     val warehouse = new java.io.File(
       if (uri.getScheme == "file" || uri.getScheme == null) uri.getPath
       else raw)
-    val loc = new java.io.File(warehouse, table)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
-    }
-    if (loc.exists()) rm(loc)
+    deleteRecursively(new java.io.File(warehouse, table))
+  }
+
+  /** Delete `f` and everything under it; a missing file is left alone. */
+  def deleteRecursively(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete()
+    ()
   }
 }

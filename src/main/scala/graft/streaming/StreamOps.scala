@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import graft.exec.SessionConf
 
 /** Structured Streaming variants of the engine's aggregation operators.
   *
@@ -196,13 +197,97 @@ object StreamOps {
       .dropDuplicatesWithinWatermark("__content_hash")
       .drop("__content_hash")
 
+  /** Shuffle partitions every stream here plans with. Stateful streaming
+    * cost at fixed data volume is dominated by per-partition state-store
+    * commits (each micro-batch writes every partition's store delta and
+    * checkpoint), so the count tracks the state size, not the session's
+    * batch-shuffle default: 32 partitions of near-empty state quadruple
+    * the commit I/O of 8 with no parallelism benefit. The count is baked
+    * into the checkpoint at the first start, so a changed count needs a
+    * fresh checkpoint. */
+  private val Partitions = "8"
+
+  /** Hold [[Partitions]] shuffle partitions while `body` runs: from a
+    * stream's `start()` until it has terminated, because a foreachBatch
+    * body plans its batch jobs on the parent session while the stream
+    * runs. The one place a stream sets session conf. */
+  private def streamPartitions[T](s: SparkSession)(body: => T): T =
+    SessionConf.scoped(s, "spark.sql.shuffle.partitions", Partitions)(body)
+
+  /** Start `ds` through the configured writer with checkpoint `chk`;
+    * `await` decides when the run ends, and the query is stopped on every
+    * exit path. */
+  private def running[T, R](ds: Dataset[T], chk: String, trigger: Trigger)(
+      configure: DataStreamWriter[T] => DataStreamWriter[T])(
+      await: StreamingQuery => R): R = {
+    val q = configure(ds.writeStream)
+      .option("checkpointLocation", chk).trigger(trigger).start()
+    try await(q) finally q.stop()
+  }
+
+  /** Run the stream to completion under `Trigger.AvailableNow`. */
+  private def run[T](ds: Dataset[T], chk: String)(
+      configure: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery =
+    streamPartitions(ds.sparkSession) {
+      running(ds, chk, Trigger.AvailableNow())(configure) { q =>
+        q.awaitTermination()
+        q
+      }
+    }
+
+  private def parquetAppend[T](out: String)(w: DataStreamWriter[T]) =
+    w.outputMode(OutputMode.Append).format("parquet").option("path", out)
+
+  /** Stream everything available into parquet files under `out`
+    * (Append), checkpointed at `chk`, and block until done. */
+  def runToParquet[T](ds: Dataset[T], out: String,
+                      chk: String): StreamingQuery =
+    run(ds, chk)(parquetAppend(out))
+
+  /** Hand each micro-batch of everything available to `body`, in batch
+    * order, checkpointed at `chk`, and block until done. A failing body
+    * fails the run. */
+  def runForeachBatch[T](ds: Dataset[T], chk: String)(
+      body: (Dataset[T], Long) => Unit): StreamingQuery =
+    run(ds, chk)(_.foreachBatch(body))
+
   /** Run a streaming query into an in-memory table and block until the
     * available data is fully processed (test/driver harness). */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode = OutputMode.Append): StreamingQuery = {
-    val q = df.writeStream.outputMode(mode).format("memory")
-      .queryName(name).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
+  def runToMemory(df: DataFrame, name: String,
+                  mode: OutputMode = OutputMode.Append): StreamingQuery =
+    run(df, graft.queries.Tables.stagedDir(s"graft_${name}_chk"))(
+      _.outputMode(mode).format("memory").queryName(name))
+
+  /** Batches committed under checkpoint `chk`. */
+  def commits(chk: String): Int =
+    Option(new java.io.File(s"$chk/commits").listFiles()).toSeq.flatten
+      .count(_.getName.forall(_.isDigit))
+
+  /** Kill-and-resume over ONE checkpoint, streaming `stream()` into
+    * parquet under `out` (Append). Run 1 runs on a live ProcessingTime
+    * trigger until at least 2 batches have committed (so it stays up
+    * after catching up) and is then stopped; `stageRest` stages the
+    * remaining input; run 2 — a new query from a fresh `stream()` on the
+    * same checkpoint — processes it under AvailableNow. Returns run 1's
+    * commit count; more commits afterwards show run 2 processed batches
+    * of its own. */
+  def killAndResume[T](stream: () => Dataset[T], out: String, chk: String)(
+      stageRest: => Unit): Int = {
+    val first = stream()
+    streamPartitions(first.sparkSession) {
+      val run1 = running(first, chk,
+          Trigger.ProcessingTime("200 milliseconds"))(parquetAppend(out)) { q =>
+        val deadline = System.nanoTime + 120L * 1000000000L
+        while (commits(chk) < 2 && System.nanoTime < deadline) Thread.sleep(100)
+        q.stop(); q.awaitTermination()
+        commits(chk)
+      }
+      require(run1 >= 2, s"run 1 committed only $run1 batches before the kill")
+      stageRest
+      running(stream(), chk, Trigger.AvailableNow())(parquetAppend(out))(
+        _.awaitTermination())
+      run1
+    }
   }
 
   // ---- streaming EWMA (custom ordered-fold state machine) ----------------

@@ -48,17 +48,13 @@ object ProfileHot {
         D.winnowClustersFromIndex(
           s.table(table), corpus, "doc_id", maxIters = 40)
           .withColumnRenamed("cluster_id", "family_id"))
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val out = t(s"$tag q187.4 familiesIncremental (adopt)")(
-          D.winnowFamiliesIncremental(
-            corpusIndex = s.table(table), corpusFamilies = families,
-            batch = batch, idCol = "doc_id", textCol = "text",
-            n = 4, w = 8, maxIters = 40, assertBucketScan = true,
-            wideHash = false))
-        t(s"$tag q187.5 final noop write")(noop(out))
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val out = t(s"$tag q187.4 familiesIncremental (adopt)")(
+        D.winnowFamiliesIncremental(
+          corpusIndex = s.table(table), corpusFamilies = families,
+          batch = batch, idCol = "doc_id", textCol = "text",
+          n = 4, w = 8, maxIters = 40, assertBucketScan = true,
+          wideHash = false))
+      t(s"$tag q187.5 final noop write")(noop(out))
       graft.queries.Tables.dropStagedTable(s, table)
     }
 

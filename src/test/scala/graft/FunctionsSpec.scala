@@ -116,12 +116,20 @@ class FunctionsSpec extends SparkSpec {
 
   test("langIdProfile kernel path is row-identical to the HOF reference " +
     "path on the corpus") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
+    // the file is one split: spread its rows over every core in a
+    // materialized frame, or the interpreted HOF path runs the whole
+    // corpus in one task (the filter below would be pushed beneath a
+    // bare repartition, back into the scan)
+    graft.exec.Frames { f =>
+    val docs = f.eagerly(
+      spark.read.parquet(s"${sf()}/documents.parquet")
+        .select(col("doc_id"), col("text"))
+        .repartition(spark.sparkContext.defaultParallelism))
     val both = docs.select(col("doc_id"),
       TA.langIdProfile(col("text")).as("k"),
       TA.langIdProfile(col("text"), useKernel = false).as("h"))
     assert(both.filter(col("k") =!= col("h")).count() == 0)
+    }
     // and on the discrimination fixtures incl. empty/noise edges
     val fx = Seq("", "12345 !!!", "hi there",
       "der alte Mann ging mit dem Hund durch die Stadt")

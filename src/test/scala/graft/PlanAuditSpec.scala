@@ -502,10 +502,9 @@ class PlanAuditSpec extends SparkSpec {
   test("q271 shape: a HITS half-iteration + top-k is keyed aggregate + " +
        "broadcast 1-row max + TakeOrderedAndProject — no window, no " +
        "cartesian, no global sort") {
-    // hitsTopK eagerly localCheckpoints its k-row result (the PageRank
-    // block-retention discipline), so its own executed plan reads as an
-    // RDD scan after the fact; audit the structurally identical
-    // half-iteration inline instead. The source must be parquet-backed:
+    // hitsTopK returns its k-row result as a driver-local relation, so
+    // its own executed plan reads as a local table scan after the fact;
+    // audit the structurally identical half-iteration inline instead. The source must be parquet-backed:
     // a local table's KNOWN maxRows lets EliminateLimits drop the
     // Limit (maxRows ≤ k) and the TakeOrderedAndProject never forms.
     import org.apache.spark.sql.functions._

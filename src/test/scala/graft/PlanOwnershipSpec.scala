@@ -123,19 +123,37 @@ class PlanOwnershipSpec extends SparkSpec {
     assert(spark.conf.get(key) == prev)
   }
 
-  test("no session conf is written in graft.{exec,functions,queries} " +
-       "outside SessionConf") {
+  /** `file:line: text` of each line of the `.scala` files in these
+    * `graft` packages that `pattern` matches. */
+  private def sourceLines(pkgs: Seq[String], pattern: String): Seq[String] = {
     val root = Paths.get("src/main/scala/graft")
-    val writes = "\\.conf\\.(set|unset)\\(".r
-    val offenders = Seq("exec", "functions", "queries").flatMap { pkg =>
+    pkgs.flatMap { pkg =>
       Files.list(root.resolve(pkg)).iterator.asScala
-        .filter(p => p.toString.endsWith(".scala") &&
-          p.getFileName.toString != "SessionConf.scala")
+        .filter(_.toString.endsWith(".scala"))
         .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if writes.findFirstIn(line).isDefined =>
+          case (line, i) if pattern.r.findFirstIn(line).isDefined =>
             s"$p:${i + 1}: ${line.trim}"
         })
     }
+  }
+
+  // the scan covers graft.streaming too
+  test("no session conf is written in graft.{exec,functions,queries} " +
+       "outside SessionConf") {
+    val offenders = sourceLines(
+      Seq("exec", "functions", "queries", "streaming"),
+      "\\.conf\\.(set|unset)\\(")
+      .filterNot(_.contains("/SessionConf.scala:"))
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("graft.queries runs every stream through StreamOps and names " +
+       "per-process staging only through Tables.processLocal") {
+    val streams = sourceLines(Seq("queries"), "\\.writeStream\\b")
+    val pids = sourceLines(Seq("queries"), "ProcessHandle\\.current")
+    assert(streams.isEmpty &&
+      pids.size == 1 && pids.head.contains("/Tables.scala:"),
+      s"${streams.size} writeStream, ${pids.size} pid sites:\n" +
+        (streams ++ pids).mkString("\n"))
   }
 }

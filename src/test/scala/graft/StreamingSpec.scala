@@ -170,4 +170,38 @@ class StreamingSpec extends SparkSpec {
       assert(rows.head.getAs[java.sql.Timestamp]("start_ts").getTime == 100 * 1000L)
     } finally q.stop()
   }
+
+  test("the stream runner plans with 8 shuffle partitions and restores " +
+       "the session's count, also when a foreachBatch body throws") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    assert(prev != "8")
+    val tmp = java.nio.file.Files.createTempDirectory("stream_runner")
+    val in = tmp.resolve("in").toString
+    spark.range(20).toDF("id").coalesce(1).write.parquet(in)
+    def stream = StreamOps.readStream(spark, in,
+      new StructType().add("id", LongType))
+    def recorded(chk: String): String =
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(chk, "offsets", "0")), "UTF-8")
+
+    val (out, chk) = (tmp.resolve("out").toString, tmp.resolve("chk").toString)
+    StreamOps.runToParquet(stream, out, chk)
+    assert(recorded(chk).contains(s""""$key":"8""""), recorded(chk))
+    assert(spark.conf.get(key) == prev)
+    assert(spark.read.parquet(out).count() == 20L)
+
+    val failChk = tmp.resolve("fail_chk").toString
+    var inBody: Option[String] = None
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamOps.runForeachBatch(stream, failChk) { (_, _) =>
+        inBody = spark.conf.getOption(key)
+        throw new IllegalStateException("batch body failed")
+      }
+    }
+    // the parent session holds the count while the body plans its jobs
+    assert(inBody.contains("8"))
+    assert(recorded(failChk).contains(s""""$key":"8""""))
+    assert(spark.conf.get(key) == prev)
+  }
 }
