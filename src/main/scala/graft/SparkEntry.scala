@@ -12,6 +12,12 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.queries.Relational.queries ++ graft.queries.Extensions.queries
 
+  /** The plan contract of every query that declares one, checked on the
+    * plan it builds and, by PlanContractSpec, on the plan its sink runs. */
+  def contracts: Map[String, graft.exec.PlanContract] = queries.collect {
+    case (q, c: graft.exec.PlanContract.Contracted) => q -> c.contract
+  }
+
   /** For each key in queries, equivalent SQL runnable by DuckDB on the same
     * parquet tables. Omitted keys get a weaker rows-only check. */
   def oracleSql: Map[String, String] =

@@ -2,12 +2,12 @@ package graft.exec
 
 import org.apache.spark.sql.SparkSession
 
-/** The one place a query sets session conf. Only toggles with no
-  * plan-level form come here: ANSI evaluation, the bucketed-scan rule,
-  * and a stream's shuffle-partition count (fixed at stream start), which
-  * has a single call site, the `graft.streaming.StreamOps` runner that
+/** The one place session conf is set, for the one toggle with no
+  * plan-level form: a stream's shuffle-partition count, fixed at stream
+  * start. Its only caller is the `graft.streaming.StreamOps` runner that
   * every stream runs through. Join strategy and partitioning live in the
-  * plan instead (`PlanBridge.mergeJoins`, `Frames.partitioned`).
+  * plan instead (`PlanBridge.mergeJoins`, `Frames.partitioned`), and plan
+  * shapes are declared as `PlanContract`s, not forced by conf.
   *
   * The setting is session-global while `body` runs: a query planned
   * concurrently on the same session sees it too. `key` must be a

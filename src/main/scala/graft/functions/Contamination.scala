@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
+import graft.exec.PlanContract
+import graft.exec.PlanContract.{BucketedScan, ExchangeOn}
 
 /** Benchmark decontamination — the standard LLM-training hygiene step:
   * find corpus documents that share word n-grams with an evaluation
@@ -132,15 +134,11 @@ object Contamination {
       .groupBy(col("h")).agg(sort_array(collect_set(col("source"))).as("bss"))
     // a full outer join never broadcasts: the shape needs no hint
     val joined = corpusIndex.join(bs, Seq("h"), "full_outer")
-    if (assertBucketScan) {
-      val plan = joined.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning\\(h".r
-        .findAllMatchIn(plan).size
-      require(exchanges == 1, s"indexed matrix must shuffle ONLY the " +
-        s"batch gram sets (got $exchanges h-exchanges)")
-      require(plan.contains("SelectedBucketsCount"),
-        "corpus side must be the bucket-aware index scan")
-    }
+    if (assertBucketScan) PlanContract(
+      ExchangeOn("h").exactly(1,
+        "indexed matrix must shuffle ONLY the batch gram sets"),
+      BucketedScan.present("corpus side must be the bucket-aware index scan")
+    ).check(joined)
     pairMatrixOf(joined.select(array_sort(array_union(
       coalesce(col("ss"), lit(Array.empty[String])),
       coalesce(col("bss"), lit(Array.empty[String])))).as("ss")))

@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import TextAnalysis.{tokens, tokenHash}
-import graft.exec.Frames
+import graft.exec.{Frames, PlanContract}
+import graft.exec.PlanContract.{BucketedScan, ExchangeOn}
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard.
@@ -581,18 +582,14 @@ object Dedup {
     val cmRaw = corpusIndex
       .join(bfp.select(col("h")).hint("merge"), Seq("h"), "leftsemi")
       .select(col("id").as("corpus_id"), col("h"))
-    if (assertBucketScan) {
-      // the q180 plan discipline, asserted in-query: corpus side must be
-      // the bucket-aware index scan; only the touched-hash side may
-      // exchange on h
-      val plan = cmRaw.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning\\(h".r
-        .findAllMatchIn(plan).size
-      require(exchanges == 1, s"incremental maintenance must shuffle ONLY " +
-        s"the touched hashes (got $exchanges h-exchanges)")
-      require(plan.contains("SelectedBucketsCount"),
-        "corpus side must be the bucket-aware index scan")
-    }
+    // the q180 plan discipline, asserted in-query: corpus side must be
+    // the bucket-aware index scan; only the touched-hash side may
+    // exchange on h
+    if (assertBucketScan) PlanContract(
+      ExchangeOn("h").exactly(1,
+        "incremental maintenance must shuffle ONLY the touched hashes"),
+      BucketedScan.present("corpus side must be the bucket-aware index scan")
+    ).check(cmRaw)
     // FAMILY-REP REDUCTION (r16 optimization, guide §2.3/§2.4 — shuffle
     // fewer bytes per propagation round): the only role corpus-side rows
     // play in the adopt subgraph is linking batch hashes to FAMILIES —

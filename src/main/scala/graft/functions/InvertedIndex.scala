@@ -18,8 +18,10 @@ import TextAnalysis.tokens
   * Spark prunes buckets on bucket-column equality/IN predicates, so a
   * k-term lookup reads ONLY the buckets those k terms hash into — at
   * 100 TB the probe cost is O(postings of the query terms), never
-  * O(index); the plan-visible witness is `SelectedBucketsCount: k-ish of
-  * B` on the index scan (asserted inside the q144 gate).
+  * O(index); the plan-visible witness is the index scan's bucket set,
+  * k-ish of B buckets (the q144 gate's `PrunedScan` contract). The scan
+  * prunes to those buckets' files whether or not the planner reads it
+  * bucketed.
   *
   * Build shape: one corpus scan, explode to (term, id), count into tf —
   * the agg keys are (term, id) pairs, near-uniform even though terms

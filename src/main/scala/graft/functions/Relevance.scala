@@ -108,8 +108,8 @@ object Relevance {
       s"bm25FromIndex: 1..32 literal query terms, got ${terms.size}")
     // read twice (dfs + pivot) — two bucket-pruned scans of the query
     // terms' buckets, both O(query postings); deliberately NOT
-    // checkpointed so the probing scan stays plan-visible (q300 asserts
-    // SelectedBucketsCount on it)
+    // checkpointed so the probing scan stays plan-visible (q300's
+    // contract finds its pruned bucket set)
     val probe = postings.filter(col("term").isin(terms: _*))
     val dfAggs = terms.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t, 1L).otherwise(0L))

@@ -3,8 +3,13 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.graftbridge.PlanBridge.mergeJoins
-import graft.exec.SessionConf
+import graft.exec.PlanContract
+import graft.exec.PlanContract.{BucketedScan, ExchangeOn, Expr, Holds, Node,
+  PrunedScan, Scan, contracted}
 import graft.functions.{Dedup, Similarity, TextAnalysis => TA}
 
 /** Training-data-pipeline extension queries: text analysis, dedup,
@@ -265,38 +270,43 @@ object Extensions {
     s.createDataFrame(java.util.Arrays.asList(qRows: _*), qSel.schema)
   }
 
-  /** Keep bucketed scans bucketed while `body` plans: Spark's
-    * DisableUnnecessaryBucketedScan would otherwise drop the bucket
-    * layout (and its pruning) wherever no operator needs it. A physical
-    * rule read from conf, so it has no plan-level form. */
-  private def withoutAutoBucketedScan[T](s: SparkSession)(body: => T): T =
-    SessionConf.scoped(s,
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")(body)
-
   /** The composed-stack serving-plan contract (q313, held on the
     * multi-query plan by q326): artifacts only — no corpus scan on
     * either leg, a strictly bucket-pruned term probe, no codes-side
     * or rerank-side corpus exchange. */
-  private def assertComposedServingPlan(plan: String,
-                                        qname: String): Unit = {
-    require(!plan.contains("documents.parquet") &&
-        !plan.contains("embeddings.parquet"),
-      s"$qname: the composed serving plan must read ONLY the persisted " +
-        "artifacts — a corpus scan on either leg is what the indexes " +
-        "amortize away")
-    val sel = "SelectedBucketsCount: (\\d+)\\D+(\\d+)".r
-      .findFirstMatchIn(plan)
-    require(sel.isDefined,
-      s"$qname: the term probe must be a bucket-pruned scan")
-    require(sel.get.group(1).toInt < sel.get.group(2).toInt,
-      s"$qname: the probe must read strictly fewer buckets than the " +
-        "layout")
-    require(!plan.contains("Exchange hashpartitioning(cent"),
-      s"$qname: probed ADC must never exchange the codes side")
-    require(!plan.contains("Exchange hashpartitioning(nn_id"),
-      s"$qname: rerank top-k must move as heap partials, never a " +
-        "corpus-side row exchange")
+  private def composedServingPlan(qname: String): Seq[PlanContract.Clause] = {
+    val artifactsOnly = s"$qname: the composed serving plan must read " +
+      "ONLY the persisted artifacts — a corpus scan on either leg is " +
+      "what the indexes amortize away"
+    Seq(Scan("documents.parquet").absent(artifactsOnly),
+      Scan("embeddings.parquet").absent(artifactsOnly),
+      PrunedScan.present(s"$qname: the term probe must be a bucket-pruned " +
+        "scan reading strictly fewer buckets than the layout"),
+      ExchangeOn("cent").absent(
+        s"$qname: probed ADC must never exchange the codes side"),
+      ExchangeOn("nn_id").absent(s"$qname: rerank top-k must move as heap " +
+        "partials, never a corpus-side row exchange"))
   }
+
+  /** The persisted-index join contract: only the batch side shuffles on
+    * `key` (its `rows`), into the layout of the bucket-aware index scan
+    * on the corpus side. */
+  private def indexJoin(key: String, rows: String): Seq[PlanContract.Clause] =
+    Seq(ExchangeOn(key).exactly(1, s"index join must shuffle ONLY the " +
+        s"batch $rows"),
+      BucketedScan.present("corpus side must be the bucket-aware index scan"))
+
+  /** A single scan-shaped projection: no exchange, no join. */
+  private def scanShaped(why: String): Seq[PlanContract.Clause] =
+    Seq(Node("Exchange").absent(why), Node("Join").absent(why))
+
+  /** Some window of the plan partitions by `keys` first, in order. */
+  private def windowPartitionedBy(keys: String*)(plan: SparkPlan): Boolean =
+    PlanContract.operators(plan).exists {
+      case w: WindowExec => w.partitionSpec.take(keys.size).collect {
+        case a: Attribute => a.name } == keys
+      case _ => false
+    }
 
   /** Fresh (in, out, checkpoint) dirs under one staged root — shared by
     * the streaming gate queries. */
@@ -1054,18 +1064,16 @@ object Extensions {
     // The query asserts the plan property itself: the window partition
     // spec must carry BOTH keys — a window keyed on source alone is the
     // one-task-per-source straggler this op exists to avoid.
-    "q128_sequence_packing" -> ((s, dir) => {
-      val df = graft.functions.SequencePack.pack(
+    "q128_sequence_packing" -> contracted(
+      Holds("packing window must partition by (source, sub), not source " +
+        "alone")(windowPartitionedBy("source", "sub"))
+    ) { (s, dir) =>
+      graft.functions.SequencePack.pack(
         s.read.parquet(s"$dir/documents.parquet")
           .select(col("source"), col("doc_id"),
             TA.tokenCount(col("text")).as("n_tok")),
         "source", "doc_id", "n_tok", budget = 256L, substreams = 4)
-      val plan = df.queryExecution.executedPlan.toString
-      require("windowspecdefinition\\(source#\\d+, sub#\\d+L".r
-          .findFirstIn(plan).isDefined,
-        "packing window must partition by (source, sub), not source alone")
-      df
-    }),
+    },
 
     // --- incremental NEAR-dup (the q98 shape at near-duplicate
     // granularity): arriving-batch docs that LSH-collide with the existing
@@ -1079,7 +1087,8 @@ object Extensions {
     // key — the batch side — and a bucket-aware index scan; the merge
     // hint keeps the bucket-join path planned, at the sink too); the
     // oracle gates the values.
-    "q127_incremental_neardup" -> ((s, dir) => {
+    "q127_incremental_neardup" -> contracted(
+        indexJoin("band", "band rows"): _*) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q127_bandidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       // one-time index build (the amortized cost in the daily loop)
@@ -1089,19 +1098,11 @@ object Extensions {
         Dedup.bandIndex(docs.filter(col("doc_id") % 10 =!= 7),
           "doc_id", "text", wideHash = false),
         graft.sources.SinkMode.Replace)
-      val df = mergeJoins(Dedup.incrementalNearDupsAgainstIndex(
+      mergeJoins(Dedup.incrementalNearDupsAgainstIndex(
         corpusIndex = s.table(table),
         batch = docs.filter(col("doc_id") % 10 === 7),
         "doc_id", "text", wideHash = false))
-      val plan = df.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning\\(band".r
-        .findAllMatchIn(plan).size
-      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-        s"band rows (got $exchanges (band, key) exchanges)")
-      require(plan.contains("SelectedBucketsCount"),
-        "corpus side must be the bucket-aware index scan")
-      df
-    }),
+    },
 
     // --- streaming arrival against the persisted near-dup index: the q127
     // daily-ingest loop as an ACTUAL stream — batch docs arrive in 3
@@ -1149,7 +1150,10 @@ object Extensions {
     // lists join, so the corpus-sized lists side is never exchanged
     // (plan-asserted); at 100 TB the index refresh is a scheduled job and
     // every query batch pays only its own probed-list cosine scan.
-    "q131_ivf_index" -> ((s, dir) => {
+    "q131_ivf_index" -> contracted(
+      ExchangeOn("cent").absent(
+        "probed query must never exchange the corpus-sized lists side")
+    ) { (s, dir) =>
       val (centsT, listsT) =
         (Tables.stagedTable(s, "graft_q131_ivf_cents"),
          Tables.stagedTable(s, "graft_q131_ivf_lists"))
@@ -1159,15 +1163,11 @@ object Extensions {
       cents.write.mode("overwrite").saveAsTable(centsT)
       graft.sources.BucketedTap(listsT, 8, Seq("cent"))
         .write(lists, graft.sources.SinkMode.Replace)
-      val df = Similarity.ivfProbedQuery(
+      Similarity.ivfProbedQuery(
         s.table(centsT), s.table(listsT),
         e.filter(col("vec_id") < 10), "vec_id", "embedding",
         k = 3, nprobe = 4)
-      val plan = df.queryExecution.executedPlan.toString
-      require(!plan.contains("Exchange hashpartitioning(cent"),
-        "probed query must never exchange the corpus-sized lists side")
-      df
-    }),
+    },
 
     // --- band-index MAINTENANCE (the complete daily loop): day-0 builds
     // the bucketed corpus band index, day-1's arrivals are flagged and
@@ -1933,23 +1933,22 @@ object Extensions {
     // bytes, never change the answer — which is why the oracle is the
     // plain EXISTS. The merge hint keeps the gate on the shuffled path
     // the pruning exists for.
-    "q141_bloom_semijoin" -> ((s, dir) => {
+    "q141_bloom_semijoin" -> contracted(
+      Expr("might_contain").present(
+        "probe side must carry the bloom prefilter below its exchange"),
+      Node("BroadcastHashJoin").absent(
+        "gate must exercise the shuffled-join path the pruning targets")
+    ) { (s, dir) =>
       val li = s.read.parquet(s"$dir/lineitem.parquet")
       val hot = s.read.parquet(s"$dir/orders.parquet")
         .filter(col("o_totalprice") > 475000.0)
       val joined = graft.functions.BloomPrune.semiJoin(
         li, hot, "l_orderkey", "o_orderkey",
         estItems = 1000L, numBits = 8192L)
-      val df = mergeJoins(joined.groupBy(col("l_returnflag"))
+      mergeJoins(joined.groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n_rows"),
           sum(col("l_quantity").cast("bigint")).as("sum_qty")))
-      val plan = df.queryExecution.executedPlan.toString
-      require(plan.contains("might_contain"),
-        "probe side must carry the bloom prefilter below its exchange")
-      require(!plan.contains("BroadcastHashJoin"),
-        "gate must exercise the shuffled-join path the pruning targets")
-      df
-    }),
+    },
 
     // --- snapshot upsert: MERGE a daily batch (71 updates re-texted 'v2 ',
     // 10 inserts at ids +1e6) into the corpus snapshot persisted BUCKETED
@@ -1961,7 +1960,12 @@ object Extensions {
     // gate hashes (id, md5(text), source, version) of the WHOLE merged
     // snapshot, so a lost update, a dropped carry-through row, or a wrong
     // version bump anywhere fails.
-    "q142_snapshot_upsert" -> ((s, dir) => {
+    "q142_snapshot_upsert" -> contracted(
+      ExchangeOn("b_key").exactly(1,
+        "merge must shuffle ONLY the batch side"),
+      Node("Exchange").exactly(1, "merge must shuffle ONLY the batch side"),
+      BucketedScan.present("snapshot side must be the bucket-aware scan")
+    ) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q142_snapshot")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       graft.functions.Snapshot.snapshotTap(table, 8, "doc_id").write(
@@ -1974,20 +1978,12 @@ object Extensions {
         .unionAll(docs.filter(col("doc_id") % 50 === 11)
           .select((col("doc_id") + 1000000L).as("doc_id"), col("text"),
             lit("ingest").as("source")))
-      val merged = mergeJoins(graft.functions.Snapshot.upsert(
+      mergeJoins(graft.functions.Snapshot.upsert(
         s.table(table), batch,
         "doc_id", Seq("text", "source"), "version")
         .select(col("doc_id"), md5(col("text")).as("text_md5"),
           col("source"), col("version")))
-      val plan = merged.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning\\(".r
-        .findAllMatchIn(plan).size
-      require(exchanges == 1 && plan.contains("hashpartitioning(b_key"),
-        s"merge must shuffle ONLY the batch side (got $exchanges exchanges)")
-      require(plan.contains("SelectedBucketsCount"),
-        "snapshot side must be the bucket-aware scan")
-      merged
-    }),
+    },
 
     // --- model-based quality scoring (hashing-trick linear classifier):
     // the fastText-shaped "does this look like reference text" filter a
@@ -2009,32 +2005,25 @@ object Extensions {
     // corpus scan, near-uniform (term,doc) agg keys even under zipfian
     // terms), persist bucketed BY TERM, then answer a conjunctive 3-term
     // lookup by probing ONLY those terms' buckets — the gate asserts the
-    // scan is bucket-pruned (SelectedBucketsCount strictly under the
-    // layout total), so the O(index)-per-question plan can never silently
+    // scan is bucket-pruned (its bucket set strictly under the layout
+    // total), so the O(index)-per-question plan can never silently
     // return. The amortization counterpart of q81's scan-shaped BM25.
-    "q144_inverted_index" -> ((s, dir) => {
+    "q144_inverted_index" -> contracted(
+      PrunedScan.present("3-term probe must be a bucket-pruned scan " +
+        "reading strictly fewer buckets than the layout")
+    ) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q144_postings")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       graft.functions.InvertedIndex.indexTap(table, 16).write(
         graft.functions.InvertedIndex.build(docs, "doc_id", "text"),
         graft.sources.SinkMode.Replace)
-      // Spark's DisableUnnecessaryBucketedScan would turn the bucketed
-      // read off here (the downstream agg keys on id, not term) — and
-      // with it the bucket PRUNING the layout exists for; pin the scan
-      // bucketed so the probe provably reads only the terms' buckets.
-      withoutAutoBucketedScan(s) {
-        val df = graft.functions.InvertedIndex.queryAll(
-            s.table(table), Seq("join", "scan", "merge"))
-          .withColumnRenamed("id", "doc_id")
-        val plan = df.queryExecution.executedPlan.toString
-        val sel = "SelectedBucketsCount: (\\d+)\\D+(\\d+)".r
-          .findFirstMatchIn(plan)
-        require(sel.isDefined, "term lookup must be a bucket-pruned scan")
-        require(sel.get.group(1).toInt < sel.get.group(2).toInt,
-          "3-term probe must read strictly fewer buckets than the layout")
-        df
-      }
-    }),
+      // the downstream agg keys on id, not term, so the planner reads
+      // the postings unbucketed; the scan's bucket set still prunes it
+      // to the probed terms' bucket files
+      graft.functions.InvertedIndex.queryAll(
+          s.table(table), Seq("join", "scan", "merge"))
+        .withColumnRenamed("id", "doc_id")
+    },
 
     // --- BM25 served FROM the persisted postings index at ARRIVAL
     // cadence (the q144 layout promoted to a scoring surface; the
@@ -2049,7 +2038,13 @@ object Extensions {
     // never the numbers. Plan asserts: the term probe bucket-prunes
     // (strictly fewer buckets than the layout) and the SERVING plan
     // never scans documents.parquet — the amortization claim itself.
-    "q300_bm25_from_index" -> ((s, dir) => {
+    "q300_bm25_from_index" -> contracted(
+      Scan("documents.parquet").absent("q300: serving must read ONLY the " +
+        "index + stats taps — the corpus scan is what the index amortizes " +
+        "away"),
+      PrunedScan.present("q300: the term probe must be a bucket-pruned " +
+        "scan reading strictly fewer buckets than the layout")
+    ) { (s, dir) =>
       val I = graft.functions.InvertedIndex
       val R = graft.functions.Relevance
       val table = Tables.stagedTable(s, "graft_q300_postings")
@@ -2068,24 +2063,9 @@ object Extensions {
         graft.sources.SinkMode.Update)
       statsTap.write(R.corpusStats(batch, "text"),
         graft.sources.SinkMode.Update)
-      withoutAutoBucketedScan(s) {
-        val df = R.bm25FromIndex(s.table(table), statsTap.read(s),
-            Bm25Terms, topK = 20)
-          .withColumnRenamed("id", "doc_id")
-        val plan = df.queryExecution.executedPlan.toString
-        require(!plan.contains("documents.parquet"),
-          "q300: serving must read ONLY the index + stats taps — the " +
-            "corpus scan is what the index amortizes away")
-        val sel = "SelectedBucketsCount: (\\d+)\\D+(\\d+)".r
-          .findFirstMatchIn(plan)
-        require(sel.isDefined,
-          "q300: the term probe must be a bucket-pruned scan")
-        require(sel.get.group(1).toInt < sel.get.group(2).toInt,
-          "q300: the probe must read strictly fewer buckets than the " +
-            "layout")
-        df
-      }
-    }),
+      R.bm25FromIndex(s.table(table), statsTap.read(s), Bm25Terms, topK = 20)
+        .withColumnRenamed("id", "doc_id")
+    },
 
     // --- the PageRank rank-ARTIFACT maintenance loop (r14 verdict #3 —
     // q298's contract at production cadence, the q277/q253 shape):
@@ -2244,11 +2224,14 @@ object Extensions {
     // (dashed) plants are Luhn-valid and redact. The oracle replays
     // the Luhn arithmetic itself — the checksum is under the hash.
     // Composes with the q285 rules: regex scrub first, card fold after.
-    "q317_pii_card" -> ((s, dir) => {
+    "q317_pii_card" -> contracted(
+      Node("Exchange").absent(
+        "q317: the card redaction pass must be a single exchange-free scan")
+    ) { (s, dir) =>
       val C = graft.functions.Curation
       def plant(m: Int, dirt: String) =
         when(col("doc_id") % m === 0, lit(dirt)).otherwise(lit(""))
-      val df = s.read.parquet(s"$dir/documents.parquet")
+      s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), concat(col("text"),
           plant(17, " pay 4111 1111 1111 1111 ok"),
           plant(19, " order 1234 5678 9012 3456 ref"),
@@ -2257,11 +2240,7 @@ object Extensions {
           C.cardCount(col("text")).as("n_cards"),
           C.cardMatches(col("text")).as("cards_found"),
           md5(C.cardScrub(C.piiScrub(col("text")))).as("clean_md5"))
-      require(!df.queryExecution.executedPlan.toString.contains("Exchange"),
-        "q317: the card redaction pass must be a single exchange-free " +
-          "scan")
-      df
-    }),
+    },
 
     // --- PERPLEXITY-BUCKETED mixture sampling (the CCNet recipe,
     // Wenzek et al. 2020): per-source head/middle/tail by LM surprisal,
@@ -2444,7 +2423,12 @@ object Extensions {
     // buckets (asserted; the merge hint keeps the assert from being
     // satisfied vacuously by a broadcast plan). Inserts/deletes/updates
     // are synthesized deterministically; unchanged keys must vanish.
-    "q145_snapshot_diff" -> ((s, dir) => {
+    "q145_snapshot_diff" -> contracted(
+      Node("Exchange").absent(
+        "co-bucketed snapshot diff must plan with ZERO exchanges"),
+      BucketedScan.exactly(2,
+        "both snapshot versions must be bucket-aware scans")
+    ) { (s, dir) =>
       val (t1, t2) = (Tables.stagedTable(s, "graft_q145_snap_v1"),
         Tables.stagedTable(s, "graft_q145_snap_v2"))
       val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -2459,17 +2443,11 @@ object Extensions {
               .otherwise(col("text")).as("text"),
             col("source")),
         graft.sources.SinkMode.Replace)
-      val df = mergeJoins(graft.functions.Snapshot.diff(
+      mergeJoins(graft.functions.Snapshot.diff(
           s.table(t1), s.table(t2), "doc_id", Seq("text", "source"))
         .select(col("doc_id"), col("change"),
           md5(col("text")).as("text_md5"), col("source")))
-      val plan = df.queryExecution.executedPlan.toString
-      require(!plan.contains("Exchange"),
-        "co-bucketed snapshot diff must plan with ZERO exchanges")
-      require("SelectedBucketsCount".r.findAllMatchIn(plan).size == 2,
-        "both snapshot versions must be bucket-aware scans")
-      df
-    }),
+    },
 
     // --- STREAMING upsert sink: the q142 merge as a live foreachBatch
     // loop with blue/green publication — each micro-batch upserts into
@@ -2856,26 +2834,22 @@ object Extensions {
     // a constant tree depth — merge count is data (a reference object
     // the generated code loops over), never plan shape. FunctionsSpec
     // pins depth(perRound=2) == depth(perRound=512) on a toy corpus.
-    "q263_phrase_bpe4k" -> ((s, dir) => {
-      val df = graft.functions.Vocab.phraseBpe(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-        rounds = 8, perRound = 512, requireFullRounds = true)
-      val plan = df.queryExecution.executedPlan
-      def depth(p: org.apache.spark.sql.execution.SparkPlan): Int =
-        1 + (if (p.children.isEmpty) 0 else p.children.map(depth).max)
-      val d = depth(plan)
-      require(d <= 16, s"q263: executed-plan depth $d after 4096 merges — " +
-        "the flat encoder's depth must be constant in merge count")
-      val ps = plan.toString
-      require("bpe_encode".r.findAllMatchIn(ps).size == 1,
+    "q263_phrase_bpe4k" -> contracted(
+      Holds("q263: executed-plan depth above 16 after 4096 merges — the " +
+        "flat encoder's depth must be constant in merge count")(
+        PlanContract.depth(_) <= 16),
+      Expr("bpe_encode").exactly(1,
         "q263: final plan must carry exactly ONE flat BpeEncode node " +
         "(localCheckpoint truncates prior rounds; merges live in the " +
-        "node's reference table, not the plan)")
-      require(!ps.contains("replace("),
+        "node's reference table, not the plan)"),
+      Expr("replace").absent(
         "q263: a nested replace chain leaked into the plan — the " +
         "unanalyzable-at-50k form q157/q263 exist to prevent")
-      df
-    }),
+    ) { (s, dir) =>
+      graft.functions.Vocab.phraseBpe(
+        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        rounds = 8, perRound = 512, requireFullRounds = true)
+    },
 
     // --- the 4096-merge gate at a REALISTIC VOCABULARY (round-12
     // verdict item 3): token ⊕ doc-id salting widens the 31-word synth
@@ -2886,26 +2860,22 @@ object Extensions {
     // round's pair space runs dry; the driver carry stays 1024 rows per
     // round; the plan asserts are q263's verbatim (ONE flat bpe_encode
     // node, constant depth — 16k merges are DATA, not plan shape).
-    "q276_phrase_bpe16k" -> ((s, dir) => {
+    "q276_phrase_bpe16k" -> contracted(
+      Holds("q276: executed-plan depth above 16 after 16384 merges — the " +
+        "flat encoder's depth must be constant in merge count")(
+        PlanContract.depth(_) <= 16),
+      Expr("bpe_encode").exactly(1,
+        "q276: final plan must carry exactly ONE flat BpeEncode node"),
+      Expr("replace").absent(
+        "q276: a nested replace chain leaked into the plan")
+    ) { (s, dir) =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"),
           regexp_replace(col("text"), lit("(\\S+)"),
             concat(lit("$1~"), col("doc_id").cast("string"))).as("text"))
-      val df = graft.functions.Vocab.phraseBpe(docs, "doc_id", "text",
+      graft.functions.Vocab.phraseBpe(docs, "doc_id", "text",
         rounds = 16, perRound = 1024, requireFullRounds = true)
-      val plan = df.queryExecution.executedPlan
-      def depth(p: org.apache.spark.sql.execution.SparkPlan): Int =
-        1 + (if (p.children.isEmpty) 0 else p.children.map(depth).max)
-      val d = depth(plan)
-      require(d <= 16, s"q276: executed-plan depth $d after 16384 merges " +
-        "— the flat encoder's depth must be constant in merge count")
-      val ps = plan.toString
-      require("bpe_encode".r.findAllMatchIn(ps).size == 1,
-        "q276: final plan must carry exactly ONE flat BpeEncode node")
-      require(!ps.contains("replace("),
-        "q276: a nested replace chain leaked into the plan")
-      df
-    }),
+    },
 
     // --- the OTHER subword-tokenizer family: unigram-LM Viterbi
     // segmentation + ONE hard-EM re-estimation round (Kudo 2018 /
@@ -2919,21 +2889,19 @@ object Extensions {
     // checkpointed away, so the EM chain's final plan is corpus-free,
     // and the per-piece bits join is the explicit broadcast (every
     // other join carries the merge hint).
-    "q281_unigram_em_segment" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      val df = mergeJoins(
-        graft.functions.Vocab.unigramEmSegmented(docs, "text"))
-      val ps = df.queryExecution.executedPlan.toString
-      require(!ps.contains("documents.parquet"),
+    "q281_unigram_em_segment" -> contracted(
+      Scan("documents.parquet").absent(
         "q281: the EM chain must be corpus-free after the checkpointed " +
-        "word table (one corpus scan total)")
-      require("unigram_segment".r.findAllMatchIn(ps).nonEmpty,
-        "q281: the Viterbi expression node is missing from the plan")
-      require(ps.contains("BroadcastHashJoin"),
+        "word table (one corpus scan total)"),
+      Expr("unigram_segment").present(
+        "q281: the Viterbi expression node is missing from the plan"),
+      Node("BroadcastHashJoin").present(
         "q281: the per-piece bits join must execute the broadcast " +
         "(only the hint can plan one)")
-      df
-    }),
+    ) { (s, dir) =>
+      val docs = s.read.parquet(s"$dir/documents.parquet")
+      mergeJoins(graft.functions.Vocab.unigramEmSegmented(docs, "text"))
+    },
 
     // --- MULTI-ROUND unigram EM with the SHRINKING-VOCABULARY pruning
     // schedule (round-13 verdict item 3): 3 rounds of Viterbi →
@@ -2948,7 +2916,13 @@ object Extensions {
     // grows back above the previous round's kept set. Plan: the q281
     // contract — corpus-free after the one checkpointed word-table
     // scan, Viterbi as the codegen'd expression node.
-    "q294_unigram_pruned_em" -> ((s, dir) => {
+    "q294_unigram_pruned_em" -> contracted(
+      Scan("documents.parquet").absent(
+        "q294: the EM schedule must be corpus-free after the " +
+          "checkpointed word table (one corpus scan total)"),
+      Expr("unigram_segment").present(
+        "q294: the Viterbi expression node is missing from the plan")
+    ) { (s, dir) =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val (df, schedule) = graft.functions.Vocab.unigramEmPruned(
         docs, "text", rounds = 3, keepPct = 50)
@@ -2961,14 +2935,8 @@ object Extensions {
         case _ => true
       }, s"q294: used-piece counts grew across rounds ($schedule) — " +
         "a pruned piece came back")
-      val ps = df.queryExecution.executedPlan.toString
-      require(!ps.contains("documents.parquet"),
-        "q294: the EM schedule must be corpus-free after the " +
-          "checkpointed word table (one corpus scan total)")
-      require("unigram_segment".r.findAllMatchIn(ps).nonEmpty,
-        "q294: the Viterbi expression node is missing from the plan")
       df
-    }),
+    },
 
     // --- the pruning schedule at the REALISTIC word space (q287 × q294
     // composition): the %512-salted ~12k-type vocabulary (SF-stable by
@@ -2980,7 +2948,13 @@ object Extensions {
     // ~NNN). Demonstrates the schedule's scale contract: rounds are
     // vocab-sized, the model carry shrinks geometrically, plan shape is
     // constant in both round count and vocabulary size.
-    "q299_unigram_pruned_salted" -> ((s, dir) => {
+    "q299_unigram_pruned_salted" -> contracted(
+      Scan("documents.parquet").absent(
+        "q299: the EM schedule must be corpus-free after the " +
+          "checkpointed word table"),
+      Expr("unigram_segment").present(
+        "q299: the Viterbi expression node is missing from the plan")
+    ) { (s, dir) =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"),
           regexp_replace(col("text"), lit("(\\S+)"),
@@ -2995,14 +2969,8 @@ object Extensions {
       schedule.foreach { case (m, k) =>
         require(k < m, s"q299: a round kept $k of $m — vacuous prune")
       }
-      val ps = df.queryExecution.executedPlan.toString
-      require(!ps.contains("documents.parquet"),
-        "q299: the EM schedule must be corpus-free after the " +
-          "checkpointed word table")
-      require("unigram_segment".r.findAllMatchIn(ps).nonEmpty,
-        "q299: the Viterbi expression node is missing from the plan")
       df
-    }),
+    },
 
     // --- the frozen-tokenizer ARRIVAL cadence (the q159/q273
     // amortization discipline applied to the unigram model): train on
@@ -3016,7 +2984,16 @@ object Extensions {
     // Plan asserts: the scoring plan never rescans the corpus (batch is
     // checkpointed; the only file scan is the model tap) and both the
     // piece-bits join and the word-seg join-back broadcast explicitly.
-    "q282_unigram_frozen_arrival" -> ((s, dir) => {
+    "q282_unigram_frozen_arrival" -> contracted(
+      Scan("documents.parquet").absent(
+        "q282: arrival scoring must never rescan the corpus — the " +
+        "frozen model tap is the only file scan allowed in this plan"),
+      Scan("graft_q282_unigram_model").present(
+        "q282: the frozen model tap scan is missing from the plan"),
+      Node("BroadcastHashJoin").atLeast(2,
+        "q282: the piece-bits join and the word-seg join-back must " +
+        "both execute as explicit broadcasts")
+    ) { (s, dir) =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val tap = graft.functions.Vocab.unigramModelTap(
         graft.queries.Relational.stagePath("graft_q282_unigram_model", dir))
@@ -3031,19 +3008,9 @@ object Extensions {
             array(novel.map(lit): _*),
             (col("doc_id") % 5 + 1).cast("int"))).as("text"))
         .localCheckpoint()
-      val df = mergeJoins(
+      mergeJoins(
         graft.functions.Vocab.scoreUnigramArrivals(tap.read(s), batch))
-      val ps = df.queryExecution.executedPlan.toString
-      require(!ps.contains("documents.parquet"),
-        "q282: arrival scoring must never rescan the corpus — the " +
-        "frozen model tap is the only file scan allowed in this plan")
-      require(ps.contains("graft_q282_unigram_model"),
-        "q282: the frozen model tap scan is missing from the plan")
-      require("BroadcastHashJoin".r.findAllMatchIn(ps).size >= 2,
-        "q282: the piece-bits join and the word-seg join-back must " +
-        "both execute as explicit broadcasts")
-      df
-    }),
+    },
 
     // --- the unigram family at a REALISTIC WORD SPACE (the q276
     // realism discipline applied to q281): token ⊕ (doc_id % 512)
@@ -3056,22 +3023,21 @@ object Extensions {
     // free-after-checkpoint and explicit-broadcast plan asserts as q281;
     // the Viterbi table here carries thousands of entries as DATA in the
     // expression's reference object — plan shape unchanged.
-    "q287_unigram_salted" -> ((s, dir) => {
+    "q287_unigram_salted" -> contracted(
+      Scan("documents.parquet").absent(
+        "q287: the EM chain must be corpus-free after the checkpointed " +
+        "word table (one corpus scan total)"),
+      Node("BroadcastHashJoin").present(
+        "q287: the per-piece bits join must execute the broadcast")
+    ) { (s, dir) =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"),
           regexp_replace(col("text"), lit("(\\S+)"),
             concat(lit("$1~"), (col("doc_id") % 512).cast("string")))
             .as("text"))
-      val df = mergeJoins(graft.functions.Vocab.unigramEmSegmented(docs, "text",
+      mergeJoins(graft.functions.Vocab.unigramEmSegmented(docs, "text",
         maxPieceLen = 4, topK = 4096, minMultiPieces = 2048))
-      val ps = df.queryExecution.executedPlan.toString
-      require(!ps.contains("documents.parquet"),
-        "q287: the EM chain must be corpus-free after the checkpointed " +
-        "word table (one corpus scan total)")
-      require(ps.contains("BroadcastHashJoin"),
-        "q287: the per-piece bits join must execute the broadcast")
-      df
-    }),
+    },
 
     // --- PII scrubbing (the compliance redaction pass): email/phone/
     // IPv4 rules from ONE shared constant table (Curation.PiiRules)
@@ -3082,12 +3048,12 @@ object Extensions {
     // residue intersections; the gate hashes the scrubbed text and the
     // extracted VALUES, not just counts. Plan assert: the whole query is
     // ONE scan-shaped projection — exchange-free.
-    "q285_pii_scrub" -> ((s, dir) => {
-      val df = piiScrubProjection(s.read.parquet(s"$dir/documents.parquet"))
-      require(!df.queryExecution.executedPlan.toString.contains("Exchange"),
+    "q285_pii_scrub" -> contracted(
+      Node("Exchange").absent(
         "q285: the redaction pass must be a single exchange-free scan")
-      df
-    }),
+    ) { (s, dir) =>
+      piiScrubProjection(s.read.parquet(s"$dir/documents.parquet"))
+    },
 
     // --- the STREAMING PII screen (the q270 stateless-in-stream
     // discipline): the same planted corpus arrives as file micro-batches,
@@ -3117,7 +3083,10 @@ object Extensions {
     // guarantee is IN the gated values via the `over` column). Plan
     // asserts: the sketch is hard-bounded (d × 4096 rows, an action on
     // the bounded table) and the estimate join broadcasts it.
-    "q290_countmin" -> ((s, dir) => {
+    "q290_countmin" -> contracted(
+      Node("BroadcastHashJoin").present(
+        "q290: the estimate lookup must broadcast the bounded sketch")
+    ) { (s, dir) =>
       val K = graft.functions.Sketch
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(regexp_replace(col("text"), lit("(\\S+)"),
@@ -3126,12 +3095,8 @@ object Extensions {
       val nCells = sketch.count()
       require(nCells <= K.CmsDepth.toLong * (1L << (4 * K.CmsNibbles)),
         s"q290: sketch has $nCells cells — exceeds the fixed-memory bound")
-      val df = mergeJoins(K.cmsEstimates(sketch, docs, "text"))
-      require(df.queryExecution.executedPlan.toString
-          .contains("BroadcastHashJoin"),
-        "q290: the estimate lookup must broadcast the bounded sketch")
-      df
-    }),
+      mergeJoins(K.cmsEstimates(sketch, docs, "text"))
+    },
 
     // --- the tokenizer-to-trainer composition: unigram piece counts
     // (the q281 EM chain) decide the q128 packing's bin boundaries —
@@ -3141,7 +3106,12 @@ object Extensions {
     // one corpus scan for words (checkpointed), per-doc sums through the
     // broadcast word→pieces table, the (source, sub)-namespaced packing
     // window (q128's assert repeated here).
-    "q293_tokenize_and_pack" -> ((s, dir) => {
+    "q293_tokenize_and_pack" -> contracted(
+      Holds("q293: packing window must partition by (source, sub)")(
+        windowPartitionedBy("source", "sub")),
+      Node("BroadcastHashJoin").present(
+        "q293: the word→pieces lookup must broadcast the vocab table")
+    ) { (s, dir) =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val wnp = graft.functions.Vocab.unigramEmSegmented(docs, "text")
         .select(col("w"), col("n_pieces")).localCheckpoint()
@@ -3150,17 +3120,10 @@ object Extensions {
         .filter(length(col("w")) > 0)
         .join(broadcast(wnp), Seq("w"))
         .groupBy("doc_id").agg(sum(col("n_pieces")).as("n_pieces"))
-      val df = mergeJoins(graft.functions.SequencePack.pack(
+      mergeJoins(graft.functions.SequencePack.pack(
         docs.select(col("source"), col("doc_id")).join(dnp, Seq("doc_id")),
         "source", "doc_id", "n_pieces", budget = 512L, substreams = 4))
-      val ps = df.queryExecution.executedPlan.toString
-      require("windowspecdefinition\\(source#\\d+, sub#\\d+L".r
-          .findFirstIn(ps).isDefined,
-        "q293: packing window must partition by (source, sub)")
-      require(ps.contains("BroadcastHashJoin"),
-        "q293: the word→pieces lookup must broadcast the vocab table")
-      df
-    }),
+    },
 
     // --- blocklist screening (Curation.BlockTerms scaladoc): the whole
     // banned-term list in ONE Aho–Corasick pass per document (a 10k-term
@@ -3168,16 +3131,14 @@ object Extensions {
     // carries the full per-term count VECTOR, overlapping occurrences
     // included, against a brute positional-enumeration oracle. Plan:
     // scan-only, exchange-free (asserted).
-    "q292_blocklist_screen" -> ((s, dir) => {
-      val df = graft.functions.Curation.blocklistScreen(
+    "q292_blocklist_screen" -> contracted(scanShaped(
+        "q292: the blocklist screen must be a single exchange-free scan") :+
+      Expr("multi_match").present(
+        "q292: the MultiMatch automaton node is missing from the plan"): _*
+    ) { (s, dir) =>
+      graft.functions.Curation.blocklistScreen(
         s.read.parquet(s"$dir/documents.parquet"))
-      val ps = df.queryExecution.executedPlan.toString
-      require(!ps.contains("Exchange") && !ps.contains("Join"),
-        "q292: the blocklist screen must be a single exchange-free scan")
-      require(ps.contains("multi_match"),
-        "q292: the MultiMatch automaton node is missing from the plan")
-      df
-    }),
+    },
 
     // --- the blocklist as a VERSIONED DATA ARTIFACT (round-13 verdict
     // item 6 — the q133 maintenance shape applied to the compliance
@@ -3190,7 +3151,12 @@ object Extensions {
     // pick is also asserted directly. Plan: same exchange-free
     // single-scan shape as q292 — the artifact costs a bounded driver
     // carry, never a join.
-    "q295_blocklist_tap" -> ((s, dir) => {
+    "q295_blocklist_tap" -> contracted(scanShaped(
+        "q295: the artifact-driven screen must stay a single " +
+          "exchange-free scan") :+
+      Expr("multi_match").present(
+        "q295: the MultiMatch automaton node is missing from the plan"): _*
+    ) { (s, dir) =>
       val C = graft.functions.Curation
       val tap = graft.sources.ParquetTap(
         graft.queries.Relational.stagePath("graft_q295_blocklist", dir))
@@ -3202,16 +3168,9 @@ object Extensions {
       require(version == 2L && terms.length == C.BlockTerms.length,
         s"q295: expected the v2 list, got v$version with " +
           s"${terms.length} terms")
-      val df = C.blocklistScreenWith(
+      C.blocklistScreenWith(
         s.read.parquet(s"$dir/documents.parquet"), terms)
-      val ps = df.queryExecution.executedPlan.toString
-      require(!ps.contains("Exchange") && !ps.contains("Join"),
-        "q295: the artifact-driven screen must stay a single " +
-          "exchange-free scan")
-      require(ps.contains("multi_match"),
-        "q295: the MultiMatch automaton node is missing from the plan")
-      df
-    }),
+    },
 
     // --- the STREAMING blocklist screen (q286's scrub-before-land
     // discipline on q292): documents arrive as file micro-batches and
@@ -3252,7 +3211,15 @@ object Extensions {
     // asserts: the corpus is scanned ONCE (the estimate side's token
     // list; the sketch side reads only the tap + the checkpointed
     // batch).
-    "q291_cms_arrival" -> ((s, dir) => {
+    "q291_cms_arrival" -> contracted(
+      Scan("documents.parquet").exactly(1,
+        "q291: the corpus may be scanned ONCE (the estimate token " +
+        "list) — the sketch side must come from the tap + the batch"),
+      Scan("graft_q291_cms").present(
+        "q291: the persisted sketch tap scan is missing from the plan"),
+      Node("BroadcastHashJoin").present(
+        "q291: the estimate lookup must broadcast the merged sketch")
+    ) { (s, dir) =>
       val K = graft.functions.Sketch
       def salted(d: org.apache.spark.sql.DataFrame) =
         d.select(regexp_replace(col("text"), lit("(\\S+)"),
@@ -3267,17 +3234,8 @@ object Extensions {
         .localCheckpoint()
       val merged = tap.read(s).unionByName(batchCells)
         .groupBy("j", "cell").agg(sum(col("n")).as("n"))
-      val df = mergeJoins(K.cmsEstimates(merged, salted(docs), "text"))
-      val ps = df.queryExecution.executedPlan.toString
-      require("documents\\.parquet".r.findAllMatchIn(ps).size == 1,
-        "q291: the corpus may be scanned ONCE (the estimate token " +
-        "list) — the sketch side must come from the tap + the batch")
-      require(ps.contains("graft_q291_cms"),
-        "q291: the persisted sketch tap scan is missing from the plan")
-      require(ps.contains("BroadcastHashJoin"),
-        "q291: the estimate lookup must broadcast the merged sketch")
-      df
-    }),
+      mergeJoins(K.cmsEstimates(merged, salted(docs), "text"))
+    },
 
     // --- CMS at SLIDING-WINDOW cadence (round-13 verdict item 7 — the
     // q121 drift-monitor's frequency companion): per-window d×4096 cell
@@ -3291,7 +3249,10 @@ object Extensions {
     // inflates every estimate, not just collision victims — eviction
     // failure breaks the hash everywhere. Non-vacuity: the expired
     // window must hold real mass (asserted).
-    "q297_cms_window" -> ((s, dir) => {
+    "q297_cms_window" -> contracted(
+      Node("BroadcastHashJoin").present(
+        "q297: the estimate lookup must broadcast the live sketch")
+    ) { (s, dir) =>
       val K = graft.functions.Sketch
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"),
@@ -3309,12 +3270,8 @@ object Extensions {
         "q297: the expiring window holds no mass — eviction is vacuous")
       val live = K.cmsLive(windowed, Seq(1L, 2L, 3L))
       val liveDocs = docs.filter(col("doc_id") % 4 =!= 0)
-      val df = mergeJoins(K.cmsEstimates(live, liveDocs, "text"))
-      require(df.queryExecution.executedPlan.toString
-          .contains("BroadcastHashJoin"),
-        "q297: the estimate lookup must broadcast the live sketch")
-      df
-    }),
+      mergeJoins(K.cmsEstimates(live, liveDocs, "text"))
+    },
 
     // --- CMS with EXPONENTIAL DECAY (q297's sliding window's smooth
     // sibling — the drift monitor that forgets gradually): a window
@@ -3326,7 +3283,10 @@ object Extensions {
     // the `over` column carries the guarantee into the hash. Non-
     // vacuity: at least one aged window must hold mass (else the decay
     // never fires) and the newest window must too (weight 1 arm).
-    "q301_cms_decayed" -> ((s, dir) => {
+    "q301_cms_decayed" -> contracted(
+      Node("BroadcastHashJoin").present(
+        "q301: the estimate lookup must broadcast the decayed sketch")
+    ) { (s, dir) =>
       val K = graft.functions.Sketch
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select((col("doc_id") % 4).as("win"),
@@ -3338,13 +3298,9 @@ object Extensions {
       require(windowed.filter(col("win") < 3).limit(1).count() == 1 &&
           windowed.filter(col("win") === 3).limit(1).count() == 1,
         "q301: decay needs mass in BOTH an aged window and the newest")
-      val df = mergeJoins(K.cmsDecayedEstimates(windowed, docs, "win", "text",
+      mergeJoins(K.cmsDecayedEstimates(windowed, docs, "win", "text",
         curWin = 3L))
-      require(df.queryExecution.executedPlan.toString
-          .contains("BroadcastHashJoin"),
-        "q301: the estimate lookup must broadcast the decayed sketch")
-      df
-    }),
+    },
 
     // --- the NB KERNEL form (the q157/q263 same-values-new-plan
     // discipline): the whole posterior as ONE NbScore expression — model
@@ -3353,19 +3309,18 @@ object Extensions {
     // q283's VERBATIM — the kernel changes the plan, never the numbers.
     // The model frame is read only by the build-time collects that fill
     // the kernel, so the scope releases it before the query returns.
-    "q288_nb_kernel" -> ((s, dir) => graft.exec.Frames { f =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      val model = f.eagerly(graft.functions.Classify
-        .nbTrainCounts(docs, "lang", "text"))
-      val df = graft.functions.Classify.scoreNaiveBayesKernel(model, docs)
-      val ps = df.queryExecution.executedPlan.toString
-      require(!ps.contains("Exchange") && !ps.contains("Join"),
-        "q288: the kernel form must plan as a single scan-shaped " +
-        "projection — no exchange, no join")
-      require(ps.contains("nb_score"),
-        "q288: the NbScore kernel node is missing from the plan")
-      df
-    }),
+    "q288_nb_kernel" -> contracted(scanShaped("q288: the kernel form must " +
+        "plan as a single scan-shaped projection — no exchange, no join") :+
+      Expr("nb_score").present(
+        "q288: the NbScore kernel node is missing from the plan"): _*
+    ) { (s, dir) =>
+      graft.exec.Frames { f =>
+        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val model = f.eagerly(graft.functions.Classify
+          .nbTrainCounts(docs, "lang", "text"))
+        graft.functions.Classify.scoreNaiveBayesKernel(model, docs)
+      }
+    },
 
     // --- the STREAMING NB router: the kernel form is stateless, so the
     // frozen-model arrival scoring of q284 runs per-row in Append mode —
@@ -3402,19 +3357,18 @@ object Extensions {
     // model table is localCheckpoint'ed so the one training scan never
     // re-executes under the scoring plan's three references (wc slice +
     // two bounded driver carries).
-    "q283_nb_posterior" -> ((s, dir) => {
+    "q283_nb_posterior" -> contracted(
+      Node("BroadcastHashJoin").present(
+        "q283: the wc-slice lookup must execute the broadcast " +
+        "(only the hint can plan one)"),
+      Node("BroadcastNestedLoopJoin").present(
+        "q283: the class cross join must broadcast the O(classes) side")
+    ) { (s, dir) =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val model = graft.functions.Classify
         .nbTrainCounts(docs, "lang", "text").localCheckpoint()
-      val df = mergeJoins(graft.functions.Classify.scoreNaiveBayes(model, docs))
-      val ps = df.queryExecution.executedPlan.toString
-      require(ps.contains("BroadcastHashJoin"),
-        "q283: the wc-slice lookup must execute the broadcast " +
-        "(only the hint can plan one)")
-      require(ps.contains("BroadcastNestedLoopJoin"),
-        "q283: the class cross join must broadcast the O(classes) side")
-      df
-    }),
+      mergeJoins(graft.functions.Classify.scoreNaiveBayes(model, docs))
+    },
 
     // --- the frozen-classifier ARRIVAL cadence: model trained on %50≠3
     // once, persisted through the tap, batch = %50=3 docs carrying the
@@ -3424,7 +3378,17 @@ object Extensions {
     // just the code. Plan asserts: scoring never rescans the corpus (the
     // batch is checkpointed; the model tap is the only file scan) and
     // both join shapes broadcast explicitly.
-    "q284_nb_frozen_arrival" -> ((s, dir) => {
+    "q284_nb_frozen_arrival" -> contracted(
+      Scan("documents.parquet").absent(
+        "q284: arrival scoring must never rescan the corpus — the " +
+        "frozen model tap is the only file scan allowed in this plan"),
+      Scan("graft_q284_nb_model").present(
+        "q284: the frozen model tap scan is missing from the plan"),
+      Node("BroadcastHashJoin").present(
+        "q284: both scoring joins must broadcast explicitly"),
+      Node("BroadcastNestedLoopJoin").present(
+        "q284: both scoring joins must broadcast explicitly")
+    ) { (s, dir) =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val tap = graft.functions.Classify.nbModelTap(
         graft.queries.Relational.stagePath("graft_q284_nb_model", dir))
@@ -3437,19 +3401,9 @@ object Extensions {
           lit(" qz"), (col("doc_id") % 5).cast("string"),
           lit(" qw"), (col("doc_id") % 5).cast("string")).as("text"))
         .localCheckpoint()
-      val df = mergeJoins(
+      mergeJoins(
         graft.functions.Classify.scoreNaiveBayes(tap.read(s), batch))
-      val ps = df.queryExecution.executedPlan.toString
-      require(!ps.contains("documents.parquet"),
-        "q284: arrival scoring must never rescan the corpus — the " +
-        "frozen model tap is the only file scan allowed in this plan")
-      require(ps.contains("graft_q284_nb_model"),
-        "q284: the frozen model tap scan is missing from the plan")
-      require(ps.contains("BroadcastHashJoin") &&
-              ps.contains("BroadcastNestedLoopJoin"),
-        "q284: both scoring joins must broadcast explicitly")
-      df
-    }),
+    },
 
     // --- bigram-LM conditional surprisal (the CCNet perplexity filter,
     // exact-bits spelling): per doc, Σ ⌊log2 c(prev·)⌋ − ⌊log2 c(prev
@@ -3470,7 +3424,11 @@ object Extensions {
     // hashpartitioning on the count table's gram column, five
     // bucket-aware index scans; the merge hint keeps the bucket-join
     // path planned). Oracle = q155's oracle: identical values.
-    "q159_sb_fluency_indexed" -> ((s, dir) => {
+    "q159_sb_fluency_indexed" -> contracted(
+      ExchangeOn("g").absent("scoring must never exchange the count table"),
+      BucketedScan.atLeast(5,
+        "all five count lookups must be bucket-aware index scans")
+    ) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q159_lmcounts")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val train = docs.filter(col("doc_id") % 50 =!= 3)
@@ -3481,24 +3439,12 @@ object Extensions {
       graft.functions.LanguageModel.countsTap(table, 8).write(
         graft.functions.LanguageModel.trainCounts(train),
         graft.sources.SinkMode.Replace)
-      // DisableUnnecessaryBucketedScan de-buckets some of the five count
-      // scans once shuffle partitions exceed the bucket count (observed at
-      // 32 vs 8: one lookup regained a gram-keyed exchange) — pin the
-      // bucketed read, as in q144
-      withoutAutoBucketedScan(s) {
-        val df = mergeJoins(graft.functions.LanguageModel.scoreAgainstCounts(
-          s.table(table), batch))
-        val plan = df.queryExecution.executedPlan.toString
-        val gramExchanges = "Exchange hashpartitioning\\(g#".r
-          .findAllMatchIn(plan).size
-        require(gramExchanges == 0, "scoring must never exchange the " +
-          s"count table (got $gramExchanges gram-keyed exchanges)")
-        val bucketScans = "SelectedBucketsCount".r.findAllMatchIn(plan).size
-        require(bucketScans >= 5, "all five count lookups must be " +
-          s"bucket-aware index scans (got $bucketScans)")
-        df
-      }
-    }),
+      // the five lookups' merge joins consume the bucket layout, so the
+      // planner keeps those scans bucketed; the sixth count scan (the
+      // broadcast total) reads unbucketed
+      mergeJoins(graft.functions.LanguageModel.scoreAgainstCounts(
+        s.table(table), batch))
+    },
 
     // --- STREAMING curation pipeline end-to-end: the q148 composition
     // under continuous ingestion. Arrivals (three overlapping
@@ -3781,7 +3727,10 @@ object Extensions {
     // oracle chains the shared gopherRulesSqlExpr into the NB oracle
     // (both spellings shared with their own gates q171/q283). Plan:
     // the scoring leg is the q288 kernel (one nb_score node, asserted).
-    "q304_quality_distill" -> ((s, dir) => {
+    "q304_quality_distill" -> contracted(
+      Expr("nb_score").present(
+        "q304: scoring must run the NbScore kernel node")
+    ) { (s, dir) =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val labels = graft.functions.TextAnalysis.gopherRules(
@@ -3797,14 +3746,11 @@ object Extensions {
         .localCheckpoint()
       val scored = graft.functions.Classify.scoreNaiveBayesKernel(
         model, labeled)
-      require(scored.queryExecution.executedPlan.toString
-          .contains("nb_score"),
-        "q304: scoring must run the NbScore kernel node")
       scored.join(labeled.select(col("doc_id"), col("c")), Seq("doc_id"))
         .select(col("doc_id"), col("c").as("label"), col("pred"),
           (col("c") === col("pred")).as("agree"),
           col("best_bits"), col("margin"))
-    }),
+    },
 
     // --- the distilled quality model as a STREAMING ROUTER (q289's
     // discipline on q304): the NB model trains batch-side on the Gopher
@@ -4066,29 +4012,25 @@ object Extensions {
     // two legs' existing oracle chains (q81's corpus-scan BM25, q223's
     // unrolled ADC+rerank chain via the shared ivfAdcRerankChainCtes
     // builder) composed into q241's fusion spelling.
-    "q313_indexed_rrf" -> ((s, dir) => {
+    "q313_indexed_rrf" -> contracted(
+        composedServingPlan("q313"): _*) { (s, dir) =>
       val R = graft.functions.Relevance
       val a = buildRetrievalArtifacts(s, dir, "q313")
       // the probe vector: a 1-row driver carry (the known-query shape —
       // reading it from embeddings.parquet inside the serving plan
       // would defeat the no-corpus-scan assert)
       val qDf = probeVectors(s, dir, Seq(0L), "q313")
-      withoutAutoBucketedScan(s) {
-        val lexRanked = R.rankByScore(
-          R.bm25FromIndex(s.table(a.postings), a.stats.read(s),
-              Bm25Terms, topK = 100)
-            .withColumnRenamed("id", "doc_id"))
-        val dense = Similarity.ivfAdcRerankTopK(a.ivfCents.read(s),
-            a.pqBook.read(s), s.table(a.ivfCodes), s.table(a.rawVecs),
-            qDf, "vec_id", "embedding", k = 5, rerankR = 16, nprobe = 4,
-            m = 8, kSub = 16, dim = 64)
-          .select(col("nn_id").as("doc_id"), col("rk").as("dr"))
-        val df = R.rrfFuse(lexRanked, dense, topK = 20)
-        assertComposedServingPlan(
-          df.queryExecution.executedPlan.toString, "q313")
-        df
-      }
-    }),
+      val lexRanked = R.rankByScore(
+        R.bm25FromIndex(s.table(a.postings), a.stats.read(s),
+            Bm25Terms, topK = 100)
+          .withColumnRenamed("id", "doc_id"))
+      val dense = Similarity.ivfAdcRerankTopK(a.ivfCents.read(s),
+          a.pqBook.read(s), s.table(a.ivfCodes), s.table(a.rawVecs),
+          qDf, "vec_id", "embedding", k = 5, rerankR = 16, nprobe = 4,
+          m = 8, kSub = 16, dim = 64)
+        .select(col("nn_id").as("doc_id"), col("rk").as("dr"))
+      R.rrfFuse(lexRanked, dense, topK = 20)
+    },
 
     // --- BATCH-of-queries serving for the composed stack (r15 verdict
     // #2 — production serves K queries, not one): THREE probe rows
@@ -4102,38 +4044,35 @@ object Extensions {
     // window. The q313 plan asserts hold on the MULTI-query plan.
     // Oracle = q313's per-query chain instantiated per query and
     // unioned over probes.
-    "q326_indexed_rrf_batch" -> ((s, dir) => {
+    "q326_indexed_rrf_batch" -> contracted(
+        composedServingPlan("q326"): _*) { (s, dir) =>
       val R = graft.functions.Relevance
       val a = buildRetrievalArtifacts(s, dir, "q326")
       val qids = MultiQueryTerms.map(_._1)
       val qDf = probeVectors(s, dir, qids, "q326")
-      withoutAutoBucketedScan(s) {
-        val lexRanked = R.rankByScorePerQuery(
-          R.bm25FromIndexMulti(s.table(a.postings), a.stats.read(s),
-            MultiQueryTerms, legK = 100))
-        val dense = Similarity.ivfAdcRerankTopK(a.ivfCents.read(s),
-            a.pqBook.read(s), s.table(a.ivfCodes), s.table(a.rawVecs),
-            qDf, "vec_id", "embedding", k = 5, rerankR = 16, nprobe = 4,
-            m = 8, kSub = 16, dim = 64)
-          .select(col("query_id"), col("nn_id").as("doc_id"),
-            col("rk").as("dr"))
-        val df = R.rrfFusePerQuery(lexRanked, dense, topK = 20)
-        assertComposedServingPlan(
-          df.queryExecution.executedPlan.toString, "q326")
-        // non-vacuity: every probe must be served, and the batch must
-        // not degenerate to one shared answer list (the three queries
-        // carry different term sets AND different probe vectors)
-        val lists = df.select(col("query_id"), col("doc_id")).collect()
-          .groupBy(_.getLong(0)).view
-          .mapValues(_.map(_.getLong(1)).toSet).toMap
-        require(lists.keySet == qids.toSet,
-          s"q326: served ${lists.keySet}, expected ${qids.toSet}")
-        require(lists.values.toSeq.distinct.size > 1,
-          "q326: all per-query fused lists are identical — the " +
-            "multi-query batch is vacuous")
-        df
-      }
-    }),
+      val lexRanked = R.rankByScorePerQuery(
+        R.bm25FromIndexMulti(s.table(a.postings), a.stats.read(s),
+          MultiQueryTerms, legK = 100))
+      val dense = Similarity.ivfAdcRerankTopK(a.ivfCents.read(s),
+          a.pqBook.read(s), s.table(a.ivfCodes), s.table(a.rawVecs),
+          qDf, "vec_id", "embedding", k = 5, rerankR = 16, nprobe = 4,
+          m = 8, kSub = 16, dim = 64)
+        .select(col("query_id"), col("nn_id").as("doc_id"),
+          col("rk").as("dr"))
+      val df = R.rrfFusePerQuery(lexRanked, dense, topK = 20)
+      // non-vacuity: every probe must be served, and the batch must
+      // not degenerate to one shared answer list (the three queries
+      // carry different term sets AND different probe vectors)
+      val lists = df.select(col("query_id"), col("doc_id")).collect()
+        .groupBy(_.getLong(0)).view
+        .mapValues(_.map(_.getLong(1)).toSet).toMap
+      require(lists.keySet == qids.toSet,
+        s"q326: served ${lists.keySet}, expected ${qids.toSet}")
+      require(lists.values.toSeq.distinct.size > 1,
+        "q326: all per-query fused lists are identical — the " +
+          "multi-query batch is vacuous")
+      df
+    },
 
     // --- the ARRIVAL side of multi-query serving (r15 verdict #2's
     // second half, the q316 discipline on the QUERY side): queries
@@ -4161,35 +4100,33 @@ object Extensions {
         queryFeed.filter(col("query_id") === q)))
       val stream = graft.streaming.StreamOps.readStream(s, in,
         queryFeed.schema, Map("maxFilesPerTrigger" -> "1"))
-      withoutAutoBucketedScan(s) {
-        graft.streaming.StreamOps.runForeachBatch(stream, chk) {
-          (batch: DataFrame, _: Long) =>
-            val rows = batch.collect() // bounded: the arriving queries
-            if (rows.nonEmpty) {
-              val batchTerms = rows.map(r => (r.getLong(0),
-                r.getSeq[String](2).toSeq)).toSeq
-              val vecSchema = org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("vec_id",
-                  org.apache.spark.sql.types.LongType),
-                batch.schema("embedding")))
-              val qDf = s.createDataFrame(
-                java.util.Arrays.asList(rows.map(r =>
-                  org.apache.spark.sql.Row(r.getLong(0), r.get(1))): _*),
-                vecSchema)
-              val lexRanked = R.rankByScorePerQuery(
-                R.bm25FromIndexMulti(s.table(a.postings), a.stats.read(s),
-                  batchTerms, legK = 100))
-              val dense = Similarity.ivfAdcRerankTopK(a.ivfCents.read(s),
-                  a.pqBook.read(s), s.table(a.ivfCodes),
-                  s.table(a.rawVecs), qDf, "vec_id", "embedding",
-                  k = 5, rerankR = 16, nprobe = 4,
-                  m = 8, kSub = 16, dim = 64)
-                .select(col("query_id"), col("nn_id").as("doc_id"),
-                  col("rk").as("dr"))
-              R.rrfFusePerQuery(lexRanked, dense, topK = 20)
-                .write.mode("append").parquet(out)
-            }
-        }
+      graft.streaming.StreamOps.runForeachBatch(stream, chk) {
+        (batch: DataFrame, _: Long) =>
+          val rows = batch.collect() // bounded: the arriving queries
+          if (rows.nonEmpty) {
+            val batchTerms = rows.map(r => (r.getLong(0),
+              r.getSeq[String](2).toSeq)).toSeq
+            val vecSchema = org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("vec_id",
+                org.apache.spark.sql.types.LongType),
+              batch.schema("embedding")))
+            val qDf = s.createDataFrame(
+              java.util.Arrays.asList(rows.map(r =>
+                org.apache.spark.sql.Row(r.getLong(0), r.get(1))): _*),
+              vecSchema)
+            val lexRanked = R.rankByScorePerQuery(
+              R.bm25FromIndexMulti(s.table(a.postings), a.stats.read(s),
+                batchTerms, legK = 100))
+            val dense = Similarity.ivfAdcRerankTopK(a.ivfCents.read(s),
+                a.pqBook.read(s), s.table(a.ivfCodes),
+                s.table(a.rawVecs), qDf, "vec_id", "embedding",
+                k = 5, rerankR = 16, nprobe = 4,
+                m = 8, kSub = 16, dim = 64)
+              .select(col("query_id"), col("nn_id").as("doc_id"),
+                col("rk").as("dr"))
+            R.rrfFusePerQuery(lexRanked, dense, topK = 20)
+              .write.mode("append").parquet(out)
+          }
       }
       val served = s.read.parquet(out)
       val servedQs = served.select(col("query_id")).distinct()
@@ -4267,7 +4204,8 @@ object Extensions {
     // bucketed by h; the batch winnows in-flight and joins with ZERO
     // corpus-side exchange (asserted in-query); run-level matches via
     // ≥ minShared distinct shared fingerprints
-    "q180_winnow_index" -> ((s, dir) => {
+    "q180_winnow_index" -> contracted(
+        indexJoin("h", "fingerprints"): _*) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q180_winnowidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.winnowIndexTap(table, 8).write(
@@ -4277,19 +4215,11 @@ object Extensions {
       // wideHash = false pinned: THIS gate's index is the legacy
       // 40-bit build (q194 is the wide twin) — width must match the
       // index or the join silently matches nothing
-      val df = mergeJoins(Dedup.winnowMatchesAgainstIndex(
+      mergeJoins(Dedup.winnowMatchesAgainstIndex(
         corpusIndex = s.table(table),
         batch = docs.filter(col("doc_id") % 10 === 7),
         "doc_id", "text", minShared = 2L, wideHash = false))
-      val plan = df.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning\\(h".r
-        .findAllMatchIn(plan).size
-      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-        s"fingerprints (got $exchanges h-exchanges)")
-      require(plan.contains("SelectedBucketsCount"),
-        "corpus side must be the bucket-aware index scan")
-      df
-    }),
+    },
 
     // --- SemDeDup with adaptive plane escalation: dense sign-bucket
     // regions refine themselves (6 → 10 → 14 planes at maxBucket=12 so
@@ -4449,7 +4379,8 @@ object Extensions {
     // on images): corpus hashes band into a key-bucketed tap, arriving
     // images hash in-flight and join the index with no corpus-side
     // exchange (plan-asserted), Hamming-verified
-    "q191_image_dhash_index" -> ((s, dir) => {
+    "q191_image_dhash_index" -> contracted(
+        indexJoin("key", "band keys"): _*) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q191_dhashidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
@@ -4457,17 +4388,9 @@ object Extensions {
       graft.functions.Multimodal.dhashIndexTap(table, 8).write(
         graft.functions.Multimodal.dhashIndex(corpus, "doc_id", "text"),
         graft.sources.SinkMode.Replace)
-      val df = mergeJoins(graft.functions.Multimodal.imageMatchesAgainstIndex(
+      mergeJoins(graft.functions.Multimodal.imageMatchesAgainstIndex(
         s.table(table), batch, "doc_id", "text"))
-      val plan = df.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning\\(key".r
-        .findAllMatchIn(plan).size
-      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-        s"band keys (got $exchanges key-exchanges)")
-      require(plan.contains("SelectedBucketsCount"),
-        "corpus side must be the bucket-aware index scan")
-      df
-    }),
+    },
 
     // --- streaming image arrivals against the persisted dHash index
     // (the q182 discipline on q191): 3 micro-batches hash IN-STREAM
@@ -4517,26 +4440,19 @@ object Extensions {
     // synthesized sf1) manufacture false matches at corpus scale. The
     // wide index build is also one exchange cheaper: the kernel emits
     // per-doc-distinct hashes, so no dedup shuffle.
-    "q194_winnow_index_wide" -> ((s, dir) => {
+    "q194_winnow_index_wide" -> contracted(
+        indexJoin("h", "fingerprints"): _*) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q194_winnowidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.winnowIndexTap(table, 8).write(
         Dedup.winnowIndexWide(docs.filter(col("doc_id") % 10 =!= 7),
           "doc_id", "text"),
         graft.sources.SinkMode.Replace)
-      val df = mergeJoins(Dedup.winnowMatchesAgainstIndex(
+      mergeJoins(Dedup.winnowMatchesAgainstIndex(
         corpusIndex = s.table(table),
         batch = docs.filter(col("doc_id") % 10 === 7),
         "doc_id", "text", minShared = 2L, wideHash = true))
-      val plan = df.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning\\(h".r
-        .findAllMatchIn(plan).size
-      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-        s"fingerprints (got $exchanges h-exchanges)")
-      require(plan.contains("SelectedBucketsCount"),
-        "corpus side must be the bucket-aware index scan")
-      df
-    }),
+    },
 
     // --- WIDE twin of q186: transitive winnow families at the 60-bit
     // key — the propagation engine is width-agnostic; what changes is
@@ -4584,26 +4500,19 @@ object Extensions {
 
     // --- WIDE twin of q127: the persisted band index at 61-bit keys —
     // same bucketed layout, same one-batch-side-exchange plan assert
-    "q198_band_index_wide" -> ((s, dir) => {
+    "q198_band_index_wide" -> contracted(
+        indexJoin("band", "band rows"): _*) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q198_bandidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.bandIndexTap(table, 8).write(
         Dedup.bandIndex(docs.filter(col("doc_id") % 10 =!= 7),
           "doc_id", "text", wideHash = true),
         graft.sources.SinkMode.Replace)
-      val df = mergeJoins(Dedup.incrementalNearDupsAgainstIndex(
+      mergeJoins(Dedup.incrementalNearDupsAgainstIndex(
         corpusIndex = s.table(table),
         batch = docs.filter(col("doc_id") % 10 === 7),
         "doc_id", "text", wideHash = true))
-      val plan = df.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning\\(band".r
-        .findAllMatchIn(plan).size
-      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-        s"band rows (got $exchanges (band, key) exchanges)")
-      require(plan.contains("SelectedBucketsCount"),
-        "corpus side must be the bucket-aware index scan")
-      df
-    }),
+    },
 
     // --- INCREMENTAL SemDeDup at index cadence (the q133 append
     // discipline on q156): the corpus's sign-bucket table persists
@@ -4613,7 +4522,8 @@ object Extensions {
     // own rows (SinkMode.Update) so day N+1 sees them. Day-2's gated
     // verdict includes exact and near copies of day-1 rows — green ONLY
     // if the append leg actually landed.
-    "q199_semdedup_incremental" -> ((s, dir) => {
+    "q199_semdedup_incremental" -> contracted(
+        indexJoin("bucket", "bucket rows"): _*) { (s, dir) =>
       val SIM = graft.functions.Similarity
       val table = Tables.stagedTable(s, "graft_q199_signidx")
       val e = s.read.parquet(s"$dir/embeddings.parquet")
@@ -4640,17 +4550,9 @@ object Extensions {
         .write.mode("overwrite").format("noop").save()
       tap.write(SIM.signBucketIndex(day1, "vec_id", "embedding"),
         graft.sources.SinkMode.Update)
-      val df = mergeJoins(SIM.semanticDedupAgainstIndex(s.table(table),
+      mergeJoins(SIM.semanticDedupAgainstIndex(s.table(table),
         day2, "vec_id", "embedding", simThreshold = 0.95))
-      val plan = df.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning\\(bucket".r
-        .findAllMatchIn(plan).size
-      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-        s"bucket rows (got $exchanges bucket-exchanges)")
-      require(plan.contains("SelectedBucketsCount"),
-        "corpus side must be the bucket-aware index scan")
-      df
-    }),
+    },
 
     // --- STREAMING family adoption (the q182/q193 discipline on q187):
     // arrivals winnow IN-STREAM (the scan-shaped stage rides the
@@ -4948,7 +4850,12 @@ object Extensions {
     // nodes (batch synth + batch frame-hash — the index side must be a
     // pure bucket scan, never a re-decode), one key-exchange (batch
     // bands only), bucket-aware corpus scan.
-    "q265_video_keyframe_index" -> ((s, dir) => {
+    "q265_video_keyframe_index" -> contracted(
+      indexJoin("key", "band keys") :+ Node("MapPartitions").exactly(2,
+        "decode must run on the BATCH side only (batch synth + batch " +
+        "frame-hash = 2 MapPartitions nodes — the index side is a parquet " +
+        "scan, never a re-decode)"): _*
+    ) { (s, dir) =>
       val MM = graft.functions.Multimodal
       val table = Tables.stagedTable(s, "graft_q265_vkfidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -4961,21 +4868,9 @@ object Extensions {
         graft.sources.SinkMode.Replace)
       val bkf = MM.videoKeyframeHashes(
         MM.withSynthAviPayload(batch, "doc_id", "text"), "id", "payload")
-      val df = mergeJoins(MM.matchesAgainstIndexFromHashes(
+      mergeJoins(MM.matchesAgainstIndexFromHashes(
         s.table(table), bkf.select(col("id"), col("h"))))
-      val plan = df.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning\\(key".r
-        .findAllMatchIn(plan).size
-      require(exchanges == 1, s"index join must shuffle ONLY the batch " +
-        s"band keys (got $exchanges key-exchanges)")
-      require(plan.contains("SelectedBucketsCount"),
-        "corpus side must be the bucket-aware index scan")
-      val decodes = "\\bMapPartitions\\b".r.findAllMatchIn(plan).size
-      require(decodes == 2, s"decode must run on the BATCH side only " +
-        s"(batch synth + batch frame-hash = 2 MapPartitions nodes; got " +
-        s"$decodes — the index side is a parquet scan, never a re-decode)")
-      df
-    }),
+    },
 
     // --- structure-aware extraction, part 1 — the BLOCK table: texts
     // synthesize REAL HTML (prose <p>, link-dense <div> with a quoted
@@ -5328,7 +5223,13 @@ object Extensions {
     // column so it plans with ZERO exchange (asserted). The gate demands
     // the post-append stats equal the FULL-corpus rebuild (oracle =
     // q268's SQL verbatim) — the rebuild-equality discipline.
-    "q272_link_index_maintenance" -> ((s, dir) => {
+    "q272_link_index_maintenance" -> contracted(
+      ExchangeOn("href").absent(
+        "q272: the stats aggregate keys on the index's bucket column — " +
+        "it must plan with NO href exchange (bucket-local partials)"),
+      BucketedScan.present(
+        "q272: the index side must be the bucket-aware scan")
+    ) { (s, dir) =>
       val H = graft.functions.Html
       val table = Tables.stagedTable(s, "graft_q272_linkidx")
       val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -5348,15 +5249,8 @@ object Extensions {
         graft.sources.SinkMode.Replace)
       tap.write(pairsOf(docs.filter(col("doc_id") % 10 === 7)),
         graft.sources.SinkMode.Update)
-      val df = graft.functions.Html.linkTargetsFromIndex(s.table(table))
-      val plan = df.queryExecution.executedPlan.toString
-      require(!plan.contains("Exchange hashpartitioning(href"),
-        "q272: the stats aggregate keys on the index's bucket column — " +
-        "it must plan with NO href exchange (bucket-local partials)")
-      require(plan.contains("SelectedBucketsCount"),
-        "q272: the index side must be the bucket-aware scan")
-      df
-    }),
+      graft.functions.Html.linkTargetsFromIndex(s.table(table))
+    },
 
     // --- INCREMENTAL RANK REFRESH over the persisted link index
     // (round-12 verdict item 5): q272 maintains the index; this gate
@@ -5390,32 +5284,32 @@ object Extensions {
       val tap = H.linkIndexTap(table, 8)
       tap.write(pairsOf(docs.filter(col("doc_id") % 10 =!= 7)),
         graft.sources.SinkMode.Replace)
-      withoutAutoBucketedScan(s) {
-        def idxEdges() = s.table(table)
-          .select(col("id").as("src"), col("href").as("dst"))
-        // previous cadence: converged ranks over the pre-append index
-        val (aPre, _) = G.hitsConverge(idxEdges())
-        tap.write(pairsOf(docs.filter(col("doc_id") % 10 === 7)),
-          graft.sources.SinkMode.Update)
-        val post = idxEdges()
-        require(post.queryExecution.executedPlan.toString
-            .contains("SelectedBucketsCount"),
-          "q277: refresh reads must be bucket-aware index scans")
-        val (aCold, tCold) = G.hitsConverge(post)
-        val (aWarm, tWarm) = G.hitsConverge(post, Some(aPre))
-        require(tWarm < tCold, "q277: warm start must converge in fewer " +
-          s"rounds than cold (warm=$tWarm, cold=$tCold)")
-        require(tCold <= 14, s"q277: cold start took $tCold rounds — " +
-          "beyond the oracle's 14-round unroll")
-        require(
-          aWarm.as("w").join(aCold.as("c"), Seq("dst"), "full")
-            .filter(col("w.a").isNull || col("c.a").isNull ||
-              abs(col("w.a") - col("c.a")) > 2)
-            .limit(1).isEmpty,
-          "q277: warm fixed point drifted > 2 units from cold — beyond " +
-          "the floor-arithmetic ulp bound")
-        aCold.select(col("dst").as("target"), col("a").as("authority_scaled"))
-      }
+      def idxEdges() = s.table(table)
+        .select(col("id").as("src"), col("href").as("dst"))
+      // previous cadence: converged ranks over the pre-append index
+      val (aPre, _) = G.hitsConverge(idxEdges())
+      tap.write(pairsOf(docs.filter(col("doc_id") % 10 === 7)),
+        graft.sources.SinkMode.Update)
+      val post = idxEdges()
+      // the refresh's first read, hitsConverge's distinct edge frame,
+      // groups on the index's href buckets: a bucketed scan, no exchange
+      PlanContract(BucketedScan.present(
+        "q277: refresh reads must be bucket-aware index scans"))
+        .check(post.distinct())
+      val (aCold, tCold) = G.hitsConverge(post)
+      val (aWarm, tWarm) = G.hitsConverge(post, Some(aPre))
+      require(tWarm < tCold, "q277: warm start must converge in fewer " +
+        s"rounds than cold (warm=$tWarm, cold=$tCold)")
+      require(tCold <= 14, s"q277: cold start took $tCold rounds — " +
+        "beyond the oracle's 14-round unroll")
+      require(
+        aWarm.as("w").join(aCold.as("c"), Seq("dst"), "full")
+          .filter(col("w.a").isNull || col("c.a").isNull ||
+            abs(col("w.a") - col("c.a")) > 2)
+          .limit(1).isEmpty,
+        "q277: warm fixed point drifted > 2 units from cold — beyond " +
+        "the floor-arithmetic ulp bound")
+      aCold.select(col("dst").as("target"), col("a").as("authority_scaled"))
     }),
 
     // --- HITS authorities over the EXTRACTED link graph (Kleinberg
@@ -5461,7 +5355,14 @@ object Extensions {
     // join-back exchanges on the raw bigram (the declared AQE-skew
     // point). Oracle = q264's oracle verbatim: the index changes the
     // plan, never the numbers (self-scoring → n_oov ≡ 0, projected out).
-    "q273_bigram_bits_indexed" -> ((s, dir) => {
+    "q273_bigram_bits_indexed" -> contracted(
+      ExchangeOn("g").absent("q273: scoring must never exchange the count " +
+        "table"),
+      BucketedScan.present(
+        "q273: the bigram count lookup must be a bucket-aware scan"),
+      Node("BroadcastHashJoin").present("q273: the context lookup must " +
+        "execute the broadcast unigram slice (only the hint can plan one)")
+    ) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q273_bgcounts")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       graft.functions.LanguageModel.bigramCountsTap(table, 8).write(
@@ -5471,23 +5372,10 @@ object Extensions {
       // the context broadcast is the EXPLICIT hint, so any
       // BroadcastHashJoin in this plan is the executed top-V path, not a
       // size-threshold accident
-      withoutAutoBucketedScan(s) {
-        val df = mergeJoins(graft.functions.LanguageModel
-          .scoreBigramBitsAgainstCounts(s.table(table), docs)
-          .select(col("doc_id"), col("n_bi"), col("bigram_bits")))
-        val plan = df.queryExecution.executedPlan.toString
-        val gramExchanges = "Exchange hashpartitioning\\(g#".r
-          .findAllMatchIn(plan).size
-        require(gramExchanges == 0, "q273: scoring must never exchange " +
-          s"the count table (got $gramExchanges gram-keyed exchanges)")
-        require("SelectedBucketsCount".r.findAllMatchIn(plan).nonEmpty,
-          "q273: the bigram count lookup must be a bucket-aware scan")
-        require("BroadcastHashJoin".r.findAllMatchIn(plan).size >= 1,
-          "q273: the context lookup must execute the broadcast unigram " +
-          "slice (only the hint can plan one)")
-        df
-      }
-    }),
+      mergeJoins(graft.functions.LanguageModel
+        .scoreBigramBitsAgainstCounts(s.table(table), docs)
+        .select(col("doc_id"), col("n_bi"), col("bigram_bits")))
+    },
 
     // --- the TRUE ARRIVAL cadence for the bigram filters (the q159
     // batch shape): the count table freezes on the %50≠3 corpus, the
@@ -5537,29 +5425,24 @@ object Extensions {
     // continuation type counts), ntypes reduced from the unigram slice
     // (Σ n1f — no second corpus pass), zero count-side exchange.
     // Oracle = q269's oracle verbatim.
-    "q274_kneser_ney_indexed" -> ((s, dir) => {
+    "q274_kneser_ney_indexed" -> contracted(
+      ExchangeOn("g").absent("q274: scoring must never exchange the count " +
+        "table"),
+      BucketedScan.present(
+        "q274: the bigram count lookup must be a bucket-aware scan"),
+      Node("BroadcastHashJoin").atLeast(2, "q274: both unigram-slice " +
+        "lookups (context stats + continuation types) must execute as " +
+        "broadcasts")
+    ) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q274_bgcounts")
       val docs = s.read.parquet(s"$dir/documents.parquet")
       graft.functions.LanguageModel.bigramCountsTap(table, 8).write(
         graft.functions.LanguageModel.bigramTrainCounts(docs),
         graft.sources.SinkMode.Replace)
-      withoutAutoBucketedScan(s) {
-        val df = mergeJoins(graft.functions.LanguageModel
-          .scoreKneserNeyAgainstCounts(s.table(table), docs)
-          .select(col("doc_id"), col("n_bi"), col("kn_micros")))
-        val plan = df.queryExecution.executedPlan.toString
-        val gramExchanges = "Exchange hashpartitioning\\(g#".r
-          .findAllMatchIn(plan).size
-        require(gramExchanges == 0, "q274: scoring must never exchange " +
-          s"the count table (got $gramExchanges gram-keyed exchanges)")
-        require("SelectedBucketsCount".r.findAllMatchIn(plan).nonEmpty,
-          "q274: the bigram count lookup must be a bucket-aware scan")
-        require("BroadcastHashJoin".r.findAllMatchIn(plan).size >= 2,
-          "q274: both unigram-slice lookups (context stats + " +
-          "continuation types) must execute as broadcasts")
-        df
-      }
-    }),
+      mergeJoins(graft.functions.LanguageModel
+        .scoreKneserNeyAgainstCounts(s.table(table), docs)
+        .select(col("doc_id"), col("n_bi"), col("kn_micros")))
+    },
 
     // --- exact-integer PageRank over the co-order supplier graph:
     // suppliers sharing an order are edges (group-key self-join, fan-out
@@ -5746,11 +5629,10 @@ object Extensions {
     // directions emitted. One group-key self-join (fan-out bounded by
     // basket size) + two tiny aggregates; the classic retail-analytics
     // op the co-occurrence projection was built from.
-    "q260_association_rules" -> ((s, dir) => {
-      val su = s.read.parquet(s"$dir/lineitem.parquet")
+    "q260_association_rules" -> ((s, dir) => graft.exec.Frames { f =>
+      val su = f.persist(s.read.parquet(s"$dir/lineitem.parquet")
         .select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .distinct())
       val n = su.select(col("k")).distinct().count()
       val item = su.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
       val pair = su.as("a").join(su.as("b"),
@@ -5762,7 +5644,7 @@ object Extensions {
           col("cp"))
         .unionByName(pair.select(col("ib").as("ante"),
           col("ia").as("cons"), col("cp")))
-      val res = both
+      f.result(both
         .join(item.select(col("v").as("ante"), col("cnt").as("ca")),
           Seq("ante"))
         .join(item.select(col("v").as("cons"), col("cnt").as("cc")),
@@ -5771,10 +5653,7 @@ object Extensions {
           expr("(1000000 * cp) div ca").cast("bigint").as("conf_micros"),
           // literal×literal folds in Int under ANSI — pre-scale in Scala
           expr(s"(${1000000L * n} * cp) div (ca * cc)").cast("bigint")
-            .as("lift_micros"))
-        .localCheckpoint(true)
-      su.unpersist()
-      res
+            .as("lift_micros")))
     }),
 
     // --- cohort retention: users bucketed by FIRST-SEEN week (pure
@@ -5870,12 +5749,11 @@ object Extensions {
     // sizes must equal the FULL-graph batch recompute (oracle = q251's
     // SQL), for ANY edge split — incremental maintenance must be
     // indistinguishable from rebuild.
-    "q253_components_incremental" -> ((s, dir) => {
+    "q253_components_incremental" -> ((s, dir) => graft.exec.Frames { f =>
       val G = graft.functions.Graph
-      val edges = G.coOccurrenceEdges(
+      val edges = f.persist(G.coOccurrenceEdges(
           s.read.parquet(s"$dir/lineitem.parquet"),
-          "l_orderkey", "l_suppkey", maxDegree = 64)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          "l_orderkey", "l_suppkey", maxDegree = 64))
       val isNew = pmod(hash(col("src"), col("dst")), lit(5)) === 0
       // the label table is a PERSISTED artifact (parquet tap), exactly as
       // in production — and feeding one propagation's in-memory output
@@ -5884,19 +5762,16 @@ object Extensions {
       // rebuildable; checkpoint blocks are not)
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_q253_labels").toString
-      G.componentLabels(edges.filter(!isNew))
-        .write.mode("overwrite").parquet(tmp)
-      val labels = G.componentsIncremental(
-        s.read.parquet(tmp), edges.filter(isNew))
-      val out = labels.groupBy(col("cluster_id").as("component"))
-        .agg(count(lit(1)).as("size"))
-        .localCheckpoint(true)
-      edges.unpersist()
-      // the eager localCheckpoint above fully materialized `out`, so the
-      // staged label parquet is dead — delete it here instead of leaking
-      // one temp directory per gate/bench run (round-11 advice)
-      Tables.deleteRecursively(new java.io.File(tmp))
-      out
+      // the eager result below fully materializes the answer, so the
+      // staged label parquet is dead on every exit path
+      try {
+        G.componentLabels(edges.filter(!isNew))
+          .write.mode("overwrite").parquet(tmp)
+        val labels = G.componentsIncremental(
+          s.read.parquet(tmp), edges.filter(isNew))
+        f.result(labels.groupBy(col("cluster_id").as("component"))
+          .agg(count(lit(1)).as("size")))
+      } finally Tables.deleteRecursively(new java.io.File(tmp))
     }),
 
     // --- pseudo-relevance feedback (RM3-lite): BM25 with the original
@@ -5985,7 +5860,11 @@ object Extensions {
     // bucket, the bucket metadata survives the swap (the batch match
     // still plans a bucket-aware scan with ONE batch-side exchange),
     // and the oracle gates that compaction changed NO values.
-    "q205_index_compaction" -> ((s, dir) => {
+    "q205_index_compaction" -> contracted(
+      ExchangeOn("band").exactly(1, "post-compaction index join must " +
+        "shuffle ONLY the batch band rows"),
+      BucketedScan.present("bucket metadata must survive the compaction swap")
+    ) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q205_bandidx")
       s.sql(s"DROP TABLE IF EXISTS ${table}__compact")
       val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -6005,18 +5884,10 @@ object Extensions {
       require(filesAfter < filesBefore && filesAfter <= 8,
         s"compaction must collapse the file count to ≤ buckets " +
           s"(before=$filesBefore after=$filesAfter)")
-      val df = mergeJoins(Dedup.incrementalNearDupsAgainstIndex(
+      mergeJoins(Dedup.incrementalNearDupsAgainstIndex(
         corpusIndex = s.table(table), batch = batch, "doc_id", "text",
         wideHash = false))
-      val plan = df.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning\\(band".r
-        .findAllMatchIn(plan).size
-      require(exchanges == 1, s"post-compaction index join must " +
-        s"shuffle ONLY the batch band rows (got $exchanges)")
-      require(plan.contains("SelectedBucketsCount"),
-        "bucket metadata must survive the compaction swap")
-      df
-    }),
+    },
 
     // --- q205's maintenance loop UNDER CONCURRENT READERS: the same
     // build → append → compact → query cadence through the blue/green
@@ -6028,7 +5899,12 @@ object Extensions {
     // q205's drop+rename swap would have deleted its files mid-scan.
     // Same zero-exchange plan asserts as q205 — the view is transparent
     // to bucketing metadata.
-    "q216_compact_pingpong" -> ((s, dir) => {
+    "q216_compact_pingpong" -> contracted(
+      ExchangeOn("band").exactly(1, "post-compaction index join must " +
+        "shuffle ONLY the batch band rows"),
+      BucketedScan.present(
+        "bucket metadata must survive the view + generation swap")
+    ) { (s, dir) =>
       val table = Tables.processLocal("graft_q216_bandidx")
       val tap = graft.sources.PingPongBucketedTap(table, 8, Seq("band", "key"))
       tap.drop(s)
@@ -6045,8 +5921,9 @@ object Extensions {
       val filesBefore = s.table(table).inputFiles.length
       val expectedRows = s.table(table).count()
       // the concurrent reader: fully planned BEFORE the swap
-      val preSwap = s.table(table)
-      preSwap.queryExecution.executedPlan
+      val preSwap = PlanContract(Scan(table).present(
+        "a reader planned pre-swap scans the live generation")).check(
+        s.table(table))
       tap.compact(s)
       require(preSwap.count() == expectedRows,
         "a reader planned pre-swap must still read the full index")
@@ -6054,18 +5931,10 @@ object Extensions {
       require(filesAfter < filesBefore && filesAfter <= 8,
         s"compaction must collapse the file count to ≤ buckets " +
           s"(before=$filesBefore after=$filesAfter)")
-      val df = mergeJoins(Dedup.incrementalNearDupsAgainstIndex(
+      mergeJoins(Dedup.incrementalNearDupsAgainstIndex(
         corpusIndex = s.table(table), batch = batch, "doc_id", "text",
         wideHash = false))
-      val plan = df.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning\\(band".r
-        .findAllMatchIn(plan).size
-      require(exchanges == 1, s"post-compaction index join must " +
-        s"shuffle ONLY the batch band rows (got $exchanges)")
-      require(plan.contains("SelectedBucketsCount"),
-        "bucket metadata must survive the view + generation swap")
-      df
-    }),
+    },
 
     // --- q82 AT ARRIVAL TIME: the decontamination screen as a stream.
     // The benchmark's distinct 60-bit gram keys persist once (bucketed
@@ -6100,13 +5969,10 @@ object Extensions {
       // identical stream-static join, so a regression to a shuffled
       // join (e.g. dropped table stats) fails here, not silently in
       // production latency
-      locally {
-        val probe = C.docGramKeys(arrivals, "doc_id", "text", DecontamN)
-          .join(s.table(table), Seq("h"))
-        val pplan = probe.queryExecution.executedPlan.toString
-        require(pplan.contains("BroadcastHashJoin"),
-          "eval-gram index side must broadcast into the arrival scan")
-      }
+      PlanContract(Node("BroadcastHashJoin").present(
+          "eval-gram index side must broadcast into the arrival scan"))
+        .check(C.docGramKeys(arrivals, "doc_id", "text", DecontamN)
+          .join(s.table(table), Seq("h")))
       stageSliced(in, Seq(
         arrivals.filter(col("doc_id") % 30 === 7),
         arrivals.filter(col("doc_id") % 30 === 17),
@@ -6131,7 +5997,10 @@ object Extensions {
     // half the arrival slice), same shingles windows as the screen, so
     // strip coverage ≡ screen verdicts; gate hashes full cleaned text.
     // Index side plan-asserted broadcast (the q127 discipline).
-    "q215_decontaminate_strip" -> ((s, dir) => {
+    "q215_decontaminate_strip" -> contracted(
+      Node("BroadcastHashJoin").present(
+        "eval-gram index side must broadcast into the positional gram scan")
+    ) { (s, dir) =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"),
           concat(col("text"),
@@ -6140,16 +6009,12 @@ object Extensions {
       val C = graft.functions.Contamination
       val idx = C.evalGramIndex(docs.filter(col("doc_id") % 50 === 0),
         "text", DecontamN)
-      val df = C.stripContaminatedSpans(
+      C.stripContaminatedSpans(
           docs.filter(col("doc_id") % 10 === 7), idx,
           "doc_id", "text", DecontamN)
         .select(col("doc_id"), md5(col("clean_text")).as("clean_md5"),
           col("n_kept"), col("n_removed"))
-      val plan = df.queryExecution.executedPlan.toString
-      require(plan.contains("BroadcastHashJoin"),
-        "eval-gram index side must broadcast into the positional gram scan")
-      df
-    }),
+    },
 
     // --- URL canonicalization + URL-level dedup: the crawl pipeline's
     // first pass (one short-key hash agg drops ~1/3 of a raw crawl
@@ -6251,7 +6116,12 @@ object Extensions {
     // heap partials. Plan-asserted: no Window anywhere, no exchange of
     // the corpus-sized codes side. Same exact-integer ranks as q208's
     // window form — the oracle is shared verbatim.
-    "q212_pq_index" -> ((s, dir) => {
+    "q212_pq_index" -> contracted(
+      Node("Window").absent(
+        "ADC serving path must not window-sort the corpus"),
+      ExchangeOn("nn_id").absent("packed-codes side must never exchange — " +
+        "top-k moves as heap partials")
+    ) { (s, dir) =>
       val (bookT, codesT) =
         (Tables.stagedTable(s, "graft_q212_pq_book"),
          Tables.stagedTable(s, "graft_q212_pq_codes"))
@@ -6262,16 +6132,10 @@ object Extensions {
       book.write.mode("overwrite").saveAsTable(bookT)
       graft.sources.BucketedTap(codesT, 8, Seq("nn_id"))
         .write(Similarity.pqPackCodes(codes, book), graft.sources.SinkMode.Replace)
-      val df = Similarity.pqAdcTopKPacked(s.table(bookT), s.table(codesT),
+      Similarity.pqAdcTopKPacked(s.table(bookT), s.table(codesT),
         e.filter(col("vec_id") < 8), "vec_id", "embedding",
         k = 5, m = 8, kSub = 16, dim = 64)
-      val plan = df.queryExecution.executedPlan.toString
-      require(!plan.contains("Window"),
-        "ADC serving path must not window-sort the corpus")
-      require(!plan.contains("Exchange hashpartitioning(nn_id"),
-        "packed-codes side must never exchange — top-k moves as heap partials")
-      df
-    }),
+    },
 
     // --- IVFADC (Jégou et al. 2011 §III): the IVF coarse quantizer
     // prunes WHICH vectors are scanned (nprobe/nlist of the corpus), PQ
@@ -6283,7 +6147,12 @@ object Extensions {
     // broadcasts probes + distance maps and ranks via MinKPairsAgg.
     // The probe ranking windows queries × nlist rows (tiny, by design);
     // the corpus-sized codes side is plan-asserted exchange-free.
-    "q213_ivfadc" -> ((s, dir) => {
+    "q213_ivfadc" -> contracted(
+      ExchangeOn("cent").absent(
+        "probed ADC must never exchange the corpus-sized codes side"),
+      ExchangeOn("nn_id").absent(
+        "top-k must move as MinKPairsAgg heap partials, not row exchanges")
+    ) { (s, dir) =>
       val (centsT, bookT, codesT) = (
         Tables.stagedTable(s, "graft_q213_ivf_cents"),
         Tables.stagedTable(s, "graft_q213_pq_book"),
@@ -6300,16 +6169,10 @@ object Extensions {
         .join(Similarity.pqPackCodes(codes, book), Seq("nn_id"))
       graft.sources.BucketedTap(codesT, 8, Seq("cent"))
         .write(ivfCodes, graft.sources.SinkMode.Replace)
-      val df = Similarity.ivfAdcQuery(s.table(centsT), s.table(bookT),
+      Similarity.ivfAdcQuery(s.table(centsT), s.table(bookT),
         s.table(codesT), e.filter(col("vec_id") < 8), "vec_id", "embedding",
         k = 5, nprobe = 4, m = 8, kSub = 16, dim = 64)
-      val plan = df.queryExecution.executedPlan.toString
-      require(!plan.contains("Exchange hashpartitioning(cent"),
-        "probed ADC must never exchange the corpus-sized codes side")
-      require(!plan.contains("Exchange hashpartitioning(nn_id"),
-        "top-k must move as MinKPairsAgg heap partials, not row exchanges")
-      df
-    }),
+    },
 
     // --- TWO-STAGE serving: IVFADC recall (compressed scan, 16
     // candidates/query) + EXACT re-rank of only those survivors against
@@ -6318,7 +6181,13 @@ object Extensions {
     // asserted exchange-free: the O(queries × R) candidate set
     // broadcasts INTO the vector scan, so at 100 TB stage 2 reads
     // R/|corpus| of the raw bytes instead of re-running brute force.
-    "q223_ivfadc_rerank" -> ((s, dir) => {
+    "q223_ivfadc_rerank" -> contracted(
+      ExchangeOn("cent").absent(
+        "probed ADC must never exchange the corpus-sized codes side"),
+      ExchangeOn("nn_id").absent(
+        "candidates must broadcast into the raw-vector scan and top-k " +
+          "move as heap partials — never a corpus-side row exchange")
+    ) { (s, dir) =>
       val (centsT, bookT, codesT) = (
         Tables.stagedTable(s, "graft_q223_ivf_cents"),
         Tables.stagedTable(s, "graft_q223_pq_book"),
@@ -6335,18 +6204,11 @@ object Extensions {
         .join(Similarity.pqPackCodes(codes, book), Seq("nn_id"))
       graft.sources.BucketedTap(codesT, 8, Seq("cent"))
         .write(ivfCodes, graft.sources.SinkMode.Replace)
-      val df = Similarity.ivfAdcRerankTopK(s.table(centsT), s.table(bookT),
+      Similarity.ivfAdcRerankTopK(s.table(centsT), s.table(bookT),
         s.table(codesT), e, e.filter(col("vec_id") < 8), "vec_id",
         "embedding", k = 5, rerankR = 16, nprobe = 4, m = 8, kSub = 16,
         dim = 64)
-      val plan = df.queryExecution.executedPlan.toString
-      require(!plan.contains("Exchange hashpartitioning(cent"),
-        "probed ADC must never exchange the corpus-sized codes side")
-      require(!plan.contains("Exchange hashpartitioning(nn_id"),
-        "candidates must broadcast into the raw-vector scan and top-k " +
-          "move as heap partials — never a corpus-side row exchange")
-      df
-    }),
+    },
 
     // --- SCALAR (int8) quantization top-k: the 4× compression point on
     // the dense-serving spectrum (PQ/ADC is the 32× point) — symmetric
@@ -6355,7 +6217,12 @@ object Extensions {
     // bucketed codes tap — the q212 discipline, not an in-query
     // rebuild); the serving scan is exchange-free with query codes
     // broadcast in and MinKPairsAgg heap partials as the only shuffle.
-    "q224_sq8_topk" -> ((s, dir) => {
+    "q224_sq8_topk" -> contracted(
+      Node("Window").absent("SQ8 serving must not window-sort the corpus"),
+      ExchangeOn("nn_id").absent(
+        "codes side must never exchange — query codes broadcast in, " +
+          "top-k moves as heap partials")
+    ) { (s, dir) =>
       val (boundsT, codesT) = (Tables.stagedTable(s, "graft_q224_sq8_bounds"),
         Tables.stagedTable(s, "graft_q224_sq8_codes"))
       val e = s.read.parquet(s"$dir/embeddings.parquet")
@@ -6364,16 +6231,9 @@ object Extensions {
       bounds.write.mode("overwrite").saveAsTable(boundsT)
       graft.sources.BucketedTap(codesT, 8, Seq("nn_id"))
         .write(codes, graft.sources.SinkMode.Replace)
-      val df = Similarity.sq8TopK(s.table(boundsT), s.table(codesT),
+      Similarity.sq8TopK(s.table(boundsT), s.table(codesT),
         e.filter(col("vec_id") < 8), "vec_id", "embedding", k = 5, dim = 64)
-      val plan = df.queryExecution.executedPlan.toString
-      require(!plan.contains("Window"),
-        "SQ8 serving must not window-sort the corpus")
-      require(!plan.contains("Exchange hashpartitioning(nn_id"),
-        "codes side must never exchange — query codes broadcast in, " +
-          "top-k moves as heap partials")
-      df
-    }),
+    },
 
     // --- RESIDUAL-encoded IVFADC (the paper's §III.A formulation,
     // refining q213's raw-vector variant): each vector PQ-encodes its
@@ -6385,7 +6245,12 @@ object Extensions {
     // in the oracle. Query distance tables go per (query, probed cent)
     // — still tiny, still broadcast; same exchange-free codes scan and
     // O(queries × k) heap shuffle, plan-asserted.
-    "q218_ivfadc_residual" -> ((s, dir) => {
+    "q218_ivfadc_residual" -> contracted(
+      ExchangeOn("cent").absent(
+        "probed residual ADC must never exchange the corpus-sized codes side"),
+      ExchangeOn("nn_id").absent(
+        "top-k must move as MinKPairsAgg heap partials, not row exchanges")
+    ) { (s, dir) =>
       val (centsT, bookT, codesT) = (
         Tables.stagedTable(s, "graft_q218_ivf_cents"),
         Tables.stagedTable(s, "graft_q218_pq_book"),
@@ -6398,16 +6263,10 @@ object Extensions {
       book.write.mode("overwrite").saveAsTable(bookT)
       graft.sources.BucketedTap(codesT, 8, Seq("cent"))
         .write(ivfCodes, graft.sources.SinkMode.Replace)
-      val df = Similarity.ivfPqResidualQuery(s.table(centsT), s.table(bookT),
+      Similarity.ivfPqResidualQuery(s.table(centsT), s.table(bookT),
         s.table(codesT), e.filter(col("vec_id") < 8), "vec_id", "embedding",
         k = 5, nprobe = 4, m = 8, kSub = 16, dim = 64)
-      val plan = df.queryExecution.executedPlan.toString
-      require(!plan.contains("Exchange hashpartitioning(cent"),
-        "probed residual ADC must never exchange the corpus-sized codes side")
-      require(!plan.contains("Exchange hashpartitioning(nn_id"),
-        "top-k must move as MinKPairsAgg heap partials, not row exchanges")
-      df
-    }),
+    },
 
     // --- recall@5 audit of BOTH IVFADC encodings vs exact brute force:
     // does residual encoding actually buy recall on THIS corpus? One

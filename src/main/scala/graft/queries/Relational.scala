@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.model.{CFields, FieldSelector}
 import graft.pipes._
 import graft.exec.Flow
+import graft.exec.PlanContract.{ExchangeOn, contracted}
 import graft.sources.ParquetTap
 
 /** Parity query set — one entry per operator family in SURVEY.md §2, each
@@ -410,18 +411,15 @@ object Relational {
     // by zero when doc_id % 7 == 0) land in the trap sink; the query RETURNS
     // the trap contents so the oracle gates the diverted rows themselves
     "q52_trap" -> ((s, dir) => {
-      // ANSI on only while the trap flow is built+run (the div-by-zero must
-      // throw, not null out); restored so later queries in the shared
-      // session see their original semantics. materializeTraps writes the
-      // trap sink and releases the split intermediate — the returned
-      // relation reads the trap PARQUET.
+      // the div-by-zero throws under the session's ANSI evaluation (the
+      // default), so the row lands in the trap instead of nulling out.
+      // materializeTraps writes the trap sink and releases the split
+      // intermediate — the returned relation reads the trap PARQUET.
       val trapPath = stagePath("graft_trap_q52", dir)
-      graft.exec.SessionConf.scoped(s, "spark.sql.ansi.enabled", "true") {
-        Flow.materializeTraps(P(dir, "documents").retain("doc_id")
-          .each(ExpressionFunction("septile", "doc_id div (doc_id % 7)", LongType),
-            args = FieldSelector.All, out = FieldSelector.All,
-            trap = Some(ParquetTap(trapPath))))(s)
-      }
+      Flow.materializeTraps(P(dir, "documents").retain("doc_id")
+        .each(ExpressionFunction("septile", "doc_id div (doc_id % 7)", LongType),
+          args = FieldSelector.All, out = FieldSelector.All,
+          trap = Some(ParquetTap(trapPath))))(s)
       s.read.parquet(trapPath).select(col("doc_id"))
     }),
 
@@ -732,7 +730,12 @@ object Relational {
     // hashpartitioning exchange on either key; the merge hint keeps the
     // co-located sort-merge path planned, at the sink too) and the
     // oracle gates the values.
-    "q72_bucketed_join" -> ((s, dir) => {
+    "q72_bucketed_join" -> contracted(
+      ExchangeOn("c_custkey").absent(
+        "co-bucketed join must not shuffle on the bucket keys"),
+      ExchangeOn("o_custkey").absent(
+        "co-bucketed join must not shuffle on the bucket keys")
+    ) { (s, dir) =>
       val (otN, ctN) = (Tables.stagedTable(s, "graft_q72_orders"),
         Tables.stagedTable(s, "graft_q72_customer"))
       val ot = graft.sources.BucketedTap(otN, 8,
@@ -745,19 +748,14 @@ object Relational {
       ct.write(s.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_mktsegment")),
         graft.sources.SinkMode.Replace)
-      val df = org.apache.spark.sql.graftbridge.PlanBridge.mergeJoins(
+      org.apache.spark.sql.graftbridge.PlanBridge.mergeJoins(
         Flow.toDF(
           Pipe.source(ct)
             .coGroup(Seq("c_custkey"), Pipe.source(ot), Seq("o_custkey"))
             .groupBy("c_mktsegment")
             .every(Aggs.agg("total", xsum("o_totalprice")),
                    Aggs.count("n_orders")))(s))
-      val plan = df.queryExecution.executedPlan.toString
-      require(!plan.contains("Exchange hashpartitioning(c_custkey") &&
-        !plan.contains("Exchange hashpartitioning(o_custkey"),
-        "co-bucketed join must not shuffle on the bucket keys")
-      df
-    }),
+    },
 
     // GroupAssertion under the gate: a per-group predicate (group size and
     // aggregate consistency) kept in the executed flow — the assertion

@@ -254,30 +254,27 @@ class LoweringSpec extends SparkSpec {
   }
 
   test("REPLACE and ARGS selectors keep their semantics under a trap") {
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    try {
-      val dir = java.nio.file.Files.createTempDirectory("trapsel").toString
-      val p = pipe(lhs).each(
-        ExpressionFunction("num", "100 div (num - 2)", IntegerType),
-        args = FieldSelector("num"), out = FieldSelector.Replace,
-        trap = Some(graft.sources.ParquetTap(s"$dir/trap")))
-      val good = Flow.toDFWithTraps(p)
-      assert(good.columns.toSeq == Seq("num", "ch")) // replaced in place
-      assert(good.select("num").collect().map(_.getInt(0)).sorted.toSeq ==
-        Seq(-100, 50))
-      val trapped = spark.read.parquet(s"$dir/trap")
-      assert(trapped.columns.toSeq == Seq("num", "ch", "__trap_err"))
-      assert(trapped.select("num").collect().map(_.getInt(0)).toSeq == Seq(2, 2))
+    val dir = java.nio.file.Files.createTempDirectory("trapsel").toString
+    val p = pipe(lhs).each(
+      ExpressionFunction("num", "100 div (num - 2)", IntegerType),
+      args = FieldSelector("num"), out = FieldSelector.Replace,
+      trap = Some(graft.sources.ParquetTap(s"$dir/trap")))
+    val good = Flow.toDFWithTraps(p)
+    assert(good.columns.toSeq == Seq("num", "ch")) // replaced in place
+    assert(good.select("num").collect().map(_.getInt(0)).sorted.toSeq ==
+      Seq(-100, 50))
+    val trapped = spark.read.parquet(s"$dir/trap")
+    assert(trapped.columns.toSeq == Seq("num", "ch", "__trap_err"))
+    assert(trapped.select("num").collect().map(_.getInt(0)).toSeq == Seq(2, 2))
 
-      val dir2 = java.nio.file.Files.createTempDirectory("trapsel2").toString
-      val q = pipe(lhs).each(
-        ExpressionFunction("inv", "100 div (num - 2)", IntegerType),
-        args = FieldSelector("num"), out = FieldSelector.Args,
-        trap = Some(graft.sources.ParquetTap(s"$dir2/trap")))
-      val g2 = Flow.toDFWithTraps(q)
-      assert(g2.columns.toSeq == Seq("num")) // ARGS: argument fields only
-      assert(spark.read.parquet(s"$dir2/trap").count() == 2)
-    } finally spark.conf.set("spark.sql.ansi.enabled", "false")
+    val dir2 = java.nio.file.Files.createTempDirectory("trapsel2").toString
+    val q = pipe(lhs).each(
+      ExpressionFunction("inv", "100 div (num - 2)", IntegerType),
+      args = FieldSelector("num"), out = FieldSelector.Args,
+      trap = Some(graft.sources.ParquetTap(s"$dir2/trap")))
+    val g2 = Flow.toDFWithTraps(q)
+    assert(g2.columns.toSeq == Seq("num")) // ARGS: argument fields only
+    assert(spark.read.parquet(s"$dir2/trap").count() == 2)
   }
 
   test("generator honors ALL and negative-position Named selectors") {
@@ -474,7 +471,6 @@ class LoweringSpec extends SparkSpec {
 
   test("trap on ExpressionFunction diverts rows whose expression throws") {
     val dir = java.nio.file.Files.createTempDirectory("trapfn").toString
-    spark.conf.set("spark.sql.ansi.enabled", "true")
     val p = pipe(lhs).each(
       ExpressionFunction("inv", "100 div (num - 2)", IntegerType),
       args = FieldSelector.All, out = FieldSelector.All,
@@ -489,7 +485,6 @@ class LoweringSpec extends SparkSpec {
 
   test("trap on Filter diverts rows whose predicate throws, keeps filter semantics") {
     val dir = java.nio.file.Files.createTempDirectory("trapflt").toString
-    spark.conf.set("spark.sql.ansi.enabled", "true")
     val p = pipe(lhs).filterBy(
       SqlFilter("100 div (num - 2) > 20"),
       trap = Some(graft.sources.ParquetTap(s"$dir/trap")))
@@ -501,7 +496,6 @@ class LoweringSpec extends SparkSpec {
 
   test("trap on generator diverts rows whose expression throws") {
     val dir = java.nio.file.Files.createTempDirectory("trapgen").toString
-    spark.conf.set("spark.sql.ansi.enabled", "true")
     val gen = new CGenerator {
       val resultFields: CFields = CFields.typed("part" -> IntegerType)
       def apply(args: Seq[org.apache.spark.sql.Column]) =

@@ -8,8 +8,8 @@ import graft.exec.SessionConf
 
 /** Plans carry their own join strategy and partitioning: no query
   * shapes a plan by writing session conf, so the plan that runs at a
-  * sink is the plan its in-query asserts checked, and queries sharing a
-  * session cannot see each other's settings. */
+  * sink is the plan its contract checked, and queries sharing a session
+  * cannot see each other's settings. */
 class PlanOwnershipSpec extends SparkSpec {
   /** Every query whose shuffled-join shape is pinned by a `merge` join
     * hint instead of a broadcast-off conf block. */
@@ -58,14 +58,13 @@ class PlanOwnershipSpec extends SparkSpec {
     assert(df.count() > 0)
   }
 
-  test("q186 and q127 run concurrently on one session: each matches its " +
-       "single run, and no session conf they used to toggle changes") {
-    val keys = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold")
+  /** Run `queries` concurrently on the one session in 3 rounds: each
+    * round's result must match the query's single run, and none of the
+    * session confs `keys` may change while they run. */
+  private def concurrentRuns(queries: Seq[String], keys: Seq[String]): Unit = {
     def conf = keys.map(k => spark.conf.getOption(k))
     def rows(q: String): Seq[String] =
       SparkEntry.queries(q)(spark, sf()).collect().map(_.toString).toSeq.sorted
-    val queries = Seq("q186_winnow_clusters", "q127_incremental_neardup")
     val expected = queries.map(q => q -> rows(q)).toMap
     val initial = conf
     val changed = new AtomicReference[Option[Seq[Option[String]]]](None)
@@ -90,6 +89,19 @@ class PlanOwnershipSpec extends SparkSpec {
       pool.shutdown()
     }
     assert(changed.get.isEmpty, s"conf changed mid-run: $initial -> ${changed.get}")
+  }
+
+  test("q186 and q127 run concurrently on one session: each matches its " +
+       "single run, and no session conf they used to toggle changes") {
+    concurrentRuns(Seq("q186_winnow_clusters", "q127_incremental_neardup"),
+      Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold"))
+  }
+
+  test("q300 and q52 run concurrently on one session: each matches its " +
+       "single run, and neither toggles bucketed scans or ANSI") {
+    concurrentRuns(Seq("q300_bm25_from_index", "q52_trap"),
+      Seq("spark.sql.sources.bucketing.autoBucketedScan.enabled",
+        "spark.sql.ansi.enabled"))
   }
 
   test("Frames.partitioned declares the partitioning its exchange " +
@@ -124,7 +136,7 @@ class PlanOwnershipSpec extends SparkSpec {
   }
 
   /** `file:line: text` of each line of the `.scala` files in these
-    * `graft` packages that `pattern` matches. */
+    * `graft` packages (`""` for `graft` itself) that `pattern` matches. */
   private def sourceLines(pkgs: Seq[String], pattern: String): Seq[String] = {
     val root = Paths.get("src/main/scala/graft")
     pkgs.flatMap { pkg =>
@@ -145,6 +157,23 @@ class PlanOwnershipSpec extends SparkSpec {
       "\\.conf\\.(set|unset)\\(")
       .filterNot(_.contains("/SessionConf.scala:"))
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("SessionConf.scoped is called only from graft.streaming") {
+    val offenders = sourceLines(Seq("", "catalyst", "exec", "functions",
+        "model", "operators", "pipes", "queries", "sources", "streaming",
+        "tools"), "SessionConf\\.scoped\\(")
+      .filterNot(_.contains("/streaming/"))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("graft.queries and graft.functions read plans only through " +
+       "PlanContract and hold frames only in Frames scopes") {
+    val plans = sourceLines(Seq("queries", "functions"),
+      "executedPlan|SelectedBucketsCount")
+    // `f` is a Frames scope's handle
+    val frames = sourceLines(Seq("queries"), "(?<!\\bf)\\.(un)?persist\\(")
+    assert(plans.isEmpty && frames.isEmpty, (plans ++ frames).mkString("\n"))
   }
 
   test("graft.queries runs every stream through StreamOps and names " +

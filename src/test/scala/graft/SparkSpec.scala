@@ -3,16 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session base: one local SparkSession reused by every suite
-  * (getOrCreate in the forked test JVM). */
+/** Shared session base: one local SparkSession reused by every suite,
+  * built by the engine's own `Sessions.local` (getOrCreate in the forked
+  * test JVM). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local("4", Sessions.NanosAsLong)
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
