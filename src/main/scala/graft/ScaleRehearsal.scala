@@ -297,7 +297,7 @@ object ScaleRehearsal {
     System.err.println(s"[rehearsal] building 10x scale-up at $large ...")
     val n = 10
     def replicate(table: String)(tx: (DataFrame, Int) => DataFrame): Unit = {
-      val base = spark.read.parquet(s"$small/$table.parquet")
+      val base = graft.queries.Tables.read(spark, small, table)
       (0 until n).map(i => tx(base, i)).reduce(_ unionAll _)
         .write.mode("overwrite").parquet(s"$large/$table.parquet")
     }
@@ -329,7 +329,7 @@ object ScaleRehearsal {
     //    keeping replica-0's session structure), timestamps verbatim
     //    (same window, 10× density — the production shape of growth).
     Seq("region", "nation").foreach { t =>
-      spark.read.parquet(s"$small/$t.parquet")
+      graft.queries.Tables.read(spark, small, t)
         .write.mode("overwrite").parquet(s"$large/$t.parquet")
     }
     replicate("supplier")((df, i) =>

@@ -64,6 +64,31 @@ object Classify {
   def nbModelTap(path: String): graft.sources.ParquetTap =
     graft.sources.ParquetTap(path)
 
+  /** The model as the scorers carry it on the driver, read in ONE
+    * action: classes ascending, each class's prior bits
+    * ⌊log2 nDocs(c)⌋ − ⌊log2 N⌋ and per-position denominator bits
+    * ⌊log2 (tok(c) + V)⌋, with V the distinct non-null `w` of the wc
+    * rows, and the wc rows as (w, c, n). */
+  private final case class NbModel(classes: Array[String], prior: Array[Long],
+                                   denom: Array[Long],
+                                   wc: Array[(String, String, Long)])
+
+  private def readModel(model: DataFrame): NbModel = {
+    val rows = model.select(col("kind"), col("c"), col("w"), col("n")).collect()
+    def counts(kind: String) = rows.filter(_.getString(0) == kind)
+      .map(r => (r.getString(1), r.getLong(3)))
+    val docs = counts("docs").sortBy(_._1)
+    require(docs.nonEmpty, "nb: model has no class rows")
+    val tok = counts("tok").toMap
+    val wc = rows.filter(_.getString(0) == "wc")
+      .map(r => (r.getString(2), r.getString(1), r.getLong(3)))
+    val vocabV = wc.iterator.map(_._1).filter(_ != null).distinct.size.toLong
+    def b(x: Long): Long = (63 - java.lang.Long.numberOfLeadingZeros(x)).toLong
+    val nTotal = docs.map(_._2).sum
+    NbModel(docs.map(_._1), docs.map { case (_, nd) => b(nd) - b(nTotal) },
+      docs.map { case (c, _) => b(tok.getOrElse(c, 0L) + vocabV) }, wc)
+  }
+
   /** Score a batch against a (possibly frozen) model. Per batch doc:
     * (idCol, pred, best_bits, margin) — pred by (score DESC, class ASC),
     * margin = best − runner-up (≥ 0, exact). Docs with no tokens are
@@ -72,22 +97,12 @@ object Classify {
                       idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame = {
     val spark = model.sparkSession
-    // bounded driver carries: per-class stats (O(classes) rows) + the
-    // train vocab size V (one agg over the vocab-sized model)
-    val docsRows = model.filter(col("kind") === "docs")
-      .select(col("c"), col("n")).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val tokRows = model.filter(col("kind") === "tok")
-      .select(col("c"), col("n")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toMap
-    require(docsRows.nonEmpty, "nb: model has no class rows")
-    val vocabV = model.filter(col("kind") === "wc")
-      .select(countDistinct(col("w"))).collect().head.getLong(0)
-    def b(x: Long): Long = (63 - java.lang.Long.numberOfLeadingZeros(x)).toLong
-    val nTotal = docsRows.map(_._2).sum
-    val classes = spark.createDataFrame(docsRows.toSeq.map { case (c, nd) =>
+    // per-class stats from the model's one driver read; the wc slice is
+    // broadcast below, so its rows already cross the driver once
+    val m = readModel(model)
+    val classes = spark.createDataFrame(m.classes.indices.map { i =>
       // prior bits + the per-position denominator bits, both per class
-      (c, b(nd) - b(nTotal), b(tokRows.getOrElse(c, 0L) + vocabV))
+      (m.classes(i), m.prior(i), m.denom(i))
     }).toDF("c", "prior_bits", "denom_bits")
 
     val pos = batch
@@ -123,33 +138,17 @@ object Classify {
   def scoreNaiveBayesKernel(model: DataFrame, batch: DataFrame,
                             idCol: String = "doc_id",
                             textCol: String = "text"): DataFrame = {
-    val docsRows = model.filter(col("kind") === "docs")
-      .select(col("c"), col("n")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-    val tokRows = model.filter(col("kind") === "tok")
-      .select(col("c"), col("n")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toMap
-    require(docsRows.nonEmpty, "nb: model has no class rows")
-    val vocabV = model.filter(col("kind") === "wc")
-      .select(countDistinct(col("w"))).collect().head.getLong(0)
-    def b(x: Long): Long = (63 - java.lang.Long.numberOfLeadingZeros(x)).toLong
-    val nTotal = docsRows.map(_._2).sum
-    val classes = docsRows.map(_._1)
-    val idx = classes.zipWithIndex.toMap
-    val prior = docsRows.map { case (_, nd) => b(nd) - b(nTotal) }
-    val denom = classes.map(c => b(tokRows.getOrElse(c, 0L) + vocabV))
+    val m = readModel(model)
+    val idx = m.classes.zipWithIndex.toMap
     // O(V · classes) driver carry — the model IS the carry (merge-list
     // contract); absent (w, c) pairs stay 0 (the unseen arm)
-    val wcMap = model.filter(col("kind") === "wc")
-      .select(col("w"), col("c"), col("n")).collect()
-      .groupBy(_.getString(0))
-      .map { case (w, rows) =>
-        val a = new Array[Long](classes.length)
-        rows.foreach(r => a(idx(r.getString(1))) = r.getLong(2))
-        w -> a
-      }
+    val wcMap = m.wc.groupBy(_._1).map { case (w, rows) =>
+      val a = new Array[Long](m.classes.length)
+      rows.foreach { case (_, c, n) => a(idx(c)) = n }
+      w -> a
+    }
     val scored = graft.catalyst.NbScore(col(textCol),
-      classes.toSeq, prior.toSeq, denom.toSeq, wcMap)
+      m.classes.toSeq, m.prior.toSeq, m.denom.toSeq, wcMap)
     batch.select(col(idCol), scored.as("r"))
       .filter(col("r").isNotNull) // token-less docs: the join form drops them
       .select(col(idCol),

@@ -352,7 +352,7 @@ object Governance {
       .withColumn("pos", row_number().over(w).cast("long"))
       .sortWithinPartitions(col("shard"), col("pos"))
       .write.mode("overwrite").partitionBy("shard").parquet(outPath)
-    docs.sparkSession.read.parquet(outPath)
+    graft.sources.Parquet.read(docs.sparkSession, outPath)
   }
 
   /** Per-document FILTER ATTRIBUTION: evaluate the whole quality-filter

@@ -11,6 +11,7 @@ import graft.exec.PlanContract
 import graft.exec.PlanContract.{BucketedScan, ExchangeOn, Expr, Holds, Node,
   PrunedScan, Scan, contracted}
 import graft.functions.{Dedup, Similarity, TextAnalysis => TA}
+import graft.sources.Parquet
 
 /** Training-data-pipeline extension queries: text analysis, dedup,
   * similarity search, multimodal plumbing, sessionization, windowed
@@ -134,7 +135,7 @@ object Extensions {
     val eps = 500000L
     val edgeT = Tables.stagedTable(s, "graft_q314_pairw")
     val rankT = Tables.stagedTable(s, "graft_q314_ranks")
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.read(s, dir, "lineitem")
     val edgeTap = graft.sources.BucketedTap(edgeT, 8, Seq("src"))
     edgeTap.write(
       G.coOccurrencePairWeights(
@@ -224,8 +225,8 @@ object Extensions {
     // parquet paths, dropping two saveAsTable create/drop round-trips
     // plus two DROP TABLE statements per invocation. Layouts and serving
     // plans are unchanged (both sides were always broadcast).
-    val docs = s.read.parquet(s"$dir/documents.parquet")
-    val e = s.read.parquet(s"$dir/embeddings.parquet")
+    val docs = Tables.read(s, dir, "documents")
+    val e = Tables.read(s, dir, "embeddings")
     // the lexical artifacts (the q300 layout)
     val tap = I.indexTap(postT, 16)
     tap.write(I.buildWithDl(docs, "doc_id", "text"),
@@ -261,7 +262,7 @@ object Extensions {
     * serving plan would defeat the no-corpus-scan assert). */
   private def probeVectors(s: SparkSession, dir: String, ids: Seq[Long],
                            qname: String): DataFrame = {
-    val qSel = s.read.parquet(s"$dir/embeddings.parquet")
+    val qSel = Tables.read(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val qRows = qSel.filter(col("vec_id").isin(ids: _*)).collect()
     require(qRows.length == ids.size,
@@ -377,7 +378,7 @@ object Extensions {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- text analysis -----------------------------------------------------
     "q20_token_stats" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       d.select(col("doc_id"),
         TA.tokenCount(col("text")).as("n_tokens"),
         TA.distinctTokenCount(col("text")).as("n_distinct"),
@@ -386,18 +387,18 @@ object Extensions {
     }),
 
     "q21_langid" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       d.select(col("lang"), TA.langId(col("text")).as("pred_lang"))
         .groupBy("lang", "pred_lang").agg(count(lit(1)).as("n"))
     }),
 
     "q22_quality" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       d.select(col("doc_id"), TA.qualityScore(col("text")).as("quality"))
     }),
 
     "q23_fingerprint" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       d.select(col("doc_id"), TA.fingerprint(col("text")).as("fp"))
     }),
 
@@ -407,7 +408,7 @@ object Extensions {
     // absorbs the per-doc repetition) and only the single ordered LIMIT
     // gathers — the standard corpus-analysis pattern at 100 TB.
     "q75_ngram_topk" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       d.select(explode(Dedup.shingles(col("text"), 2)).as("bigram"))
         .groupBy("bigram").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("bigram").asc)
@@ -418,7 +419,7 @@ object Extensions {
     // quality filters): duplicate-bigram fraction and most-frequent-token
     // mass, both exact integer micros, both single-scan Column expressions
     "q76_repetition" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       d.select(col("doc_id"),
         TA.dupNgramFractionMicros(col("text"), 2).as("dup_bigram_micros"),
         TA.topTokenFractionMicros(col("text")).as("top_tok_micros"))
@@ -426,11 +427,11 @@ object Extensions {
 
     // --- dedup -------------------------------------------------------------
     "q24_dedup_exact" -> ((s, dir) =>
-      Dedup.exactDedup(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")),
+      Dedup.exactDedup(Tables.read(s, dir, "documents"), "doc_id", "text")),
 
     "q25_minhash_lsh" -> ((s, dir) =>
       Dedup.minhashClusters(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", k = 16, bands = 4)),
+        Tables.read(s, dir, "documents"), "doc_id", "text", k = 16, bands = 4)),
 
     // Transitive closure of the LSH near-dup graph (iterated min-label
     // propagation = connected components); oracle mirrors it as the same
@@ -441,27 +442,27 @@ object Extensions {
     // by round 8 -> both sides stop at exactly 8 rounds and still match
     "q64_minhash_transitive" -> ((s, dir) =>
       Dedup.minhashClustersTransitive(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 16, bands = 4, maxIters = 8)),
 
     "q26_simhash" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       d.select(col("doc_id"), Dedup.simhash32(col("text")).as("simhash"))
     }),
 
     "q27_neardup_jaccard" -> ((s, dir) =>
-      Dedup.nearDupPairs(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.nearDupPairs(Tables.read(s, dir, "documents"),
         "doc_id", "text", thresholdMicros = 400000L)),
 
     // --- similarity search -------------------------------------------------
     "q28_knn_brute" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       Similarity.bruteForceKnn(e, e.filter(col("vec_id") < 20),
         "vec_id", "embedding", k = 3)
     }),
 
     "q32_lsh_buckets" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       e.select(col("vec_id"),
           Similarity.hyperplaneBucket(col("embedding"), 8).as("bucket"))
         .groupBy("bucket").agg(count(lit(1)).as("n"))
@@ -474,7 +475,7 @@ object Extensions {
     // gates nothing) and must AGREE on at least one (a prefix that
     // retrieves nothing shared is a broken slice, not an audit).
     "q308_mrl_truncation" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       val df = graft.functions.Similarity.mrlTruncationAudit(
         e, e.filter(col("vec_id") < 20), "vec_id", "embedding",
         k = 3, dims = 16)
@@ -488,7 +489,7 @@ object Extensions {
     }),
 
     "q48_ivf_knn" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       graft.functions.Similarity.ivfKnn(e, e.filter(col("vec_id") < 10),
         "vec_id", "embedding", k = 3, nlist = 16, nprobe = 4)
     }),
@@ -497,20 +498,20 @@ object Extensions {
     // quantized centroids (floor(x*1e6) longs — every step IEEE-exact and
     // engine-portable), then probe + exact rank as in q48
     "q66_ivf_kmeans" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       graft.functions.Similarity.ivfKnnKMeans(e, e.filter(col("vec_id") < 10),
         "vec_id", "embedding", k = 3, nlist = 16, nprobe = 4, iters = 2)
     }),
 
     "q33_lsh_knn" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       Similarity.lshKnn(e, e.filter(col("vec_id") < 20),
         "vec_id", "embedding", k = 3, nPlanes = 8)
     }),
 
     // --- int8 embedding quantization (4x storage/shuffle reduction) -------
     "q58_quantize" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       val q = Similarity.quantizeInt8(col("embedding"))
       e.select(col("vec_id"), q.as("q"))
         .select(col("vec_id"),
@@ -578,7 +579,7 @@ object Extensions {
       // out of the Append output, but that is a TIMING property — filter
       // the sentinel explicitly (q112-style) so a future watermark-delay
       // or sentinel-timestamp change cannot silently leak it
-      s.read.parquet(out)
+      Parquet.read(s, out)
         .filter(col("event_type") =!= "__flush")
         .select("w_start", "event_type", "n", "sum_value")
     }),
@@ -619,7 +620,7 @@ object Extensions {
       }
       graft.streaming.StreamOps.runToParquet(sessions, out, chk)
       val w = Window.partitionBy(col("user_id")).orderBy(col("start_ts"))
-      s.read.parquet(out)
+      Parquet.read(s, out)
         .withColumn("session_id", row_number().over(w).cast("long"))
         .select(col("user_id"), col("session_id"), col("n_events"),
           col("start_ts"), col("end_ts"), col("sum_value"))
@@ -648,7 +649,7 @@ object Extensions {
         watermark = "1 hour", maxDelaySeconds = 600L)
       graft.streaming.StreamOps.runToParquet(joined.select(col("p_id"),
         col("p_user"), col("p_ts"), col("v_id"), col("v_ts")), out, chk)
-      s.read.parquet(out)
+      Parquet.read(s, out)
     }),
 
     // --- streaming exact dedup under the gate: content-hash
@@ -657,7 +658,7 @@ object Extensions {
     // deterministic SET of surviving content hashes (= batch DISTINCT).
     "q80_stream_dedup" -> ((s, dir) => {
       val (in, out, chk) = freshStreamDirs("graft_q80_stream")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         // offset the synthetic event time away from epoch 0: a ts equal to
         // the initial watermark value is border-dropped by the dedup state
@@ -669,26 +670,26 @@ object Extensions {
       graft.streaming.StreamOps.runToParquet(deduped.select(
         graft.functions.Dedup.contentHash(col("text")).as("content_hash")),
         out, chk)
-      s.read.parquet(out)
+      Parquet.read(s, out)
     }),
 
     // --- grouping sets (absent from reference — SURVEY §2.4 last row) -----
     "q38_rollup" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Tables.read(s, dir, "lineitem")
       li.rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"),
           graft.catalyst.ExactMicrosSum.sum(col("l_quantity")).as("sum_qty"))
     }),
 
     "q39_cube" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Tables.read(s, dir, "orders")
       o.cube(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n"))
     }),
 
     // --- analytic window functions: lag/lead running deltas ---------------
     "q40_lag_lead" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Tables.read(s, dir, "orders")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
@@ -702,16 +703,16 @@ object Extensions {
 
     // --- skew-safe salted aggregation (result equals plain count) ---------
     "q41_salted_count" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Tables.read(s, dir, "lineitem")
       graft.functions.Skew.saltedCount(li, Seq("l_returnflag"), 16, "n")
     }),
 
     // --- explicit salted join (skew path when AQE unavailable): result
     // must equal the plain join ---------------------------------------------
     "q61_salted_join" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Tables.read(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"))
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Tables.read(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"))
       graft.functions.Skew.saltedJoin(li, o, "l_orderkey", "o_orderkey", 8)
         .groupBy("o_orderstatus")
@@ -726,7 +727,7 @@ object Extensions {
     // rsd 0.05 is well inside that); EntrySpec asserts within_tol on every
     // row, so "rows-only" still gates the approximation quality ------------
     "q42_approx_distinct" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Tables.read(s, dir, "lineitem")
       li.groupBy(col("l_returnflag"))
         .agg(approx_count_distinct(col("l_partkey")).as("approx_parts"),
           count_distinct(col("l_partkey")).as("exact_parts"))
@@ -745,7 +746,7 @@ object Extensions {
     // perturbed vector still lands in its source's sign-bucket, which both
     // engines decide identically).
     "q43_emb_neardup" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val dups = e.filter(col("vec_id") < 5)
         .select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
@@ -763,7 +764,7 @@ object Extensions {
     // counter per distinct value — an OOM hazard on continuous columns at
     // 100 TB. Bucket state is bounded by value RANGE, not row count.
     "q44_percentile" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Tables.read(s, dir, "lineitem")
       // both percentiles in ONE corpus scan (tagged buckets, one shuffle)
       graft.functions.Percentile.microPercentiles(li, Seq("l_returnflag"),
         Seq(graft.functions.Percentile.Spec("l_quantity", 0.5, "p50"),
@@ -778,7 +779,7 @@ object Extensions {
     // 1% of the exact interpolated percentile computed in the SAME query
     // (accuracy=10000 is far tighter than that); EntrySpec asserts it.
     "q89_approx_percentile" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Tables.read(s, dir, "lineitem")
       val exact = graft.functions.Percentile.microPercentiles(
         li, Seq("l_returnflag"),
         Seq(graft.functions.Percentile.Spec("l_extendedprice", 0.9, "p90_exact")))
@@ -831,7 +832,7 @@ object Extensions {
     // of the UNION of token sets per language — one scan, k-long buffer
     // per group, map-side partial aggregation -----------------------------
     "q57_minhash_group" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       d.groupBy(col("lang"))
         .agg(graft.catalyst.MinHashAgg(
           graft.functions.TextAnalysis.tokens(col("text")), 16).as("sig"))
@@ -845,14 +846,14 @@ object Extensions {
     // engine-portable (see graft.functions.Relevance).
     "q81_bm25" -> ((s, dir) =>
       graft.functions.Relevance.bm25TopK(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         Bm25Terms, topK = 20)),
 
     // --- benchmark decontamination: corpus docs sharing any distinct
     // 4-gram with the (deterministic) eval slice doc_id % 50 = 0. Eval
     // n-gram set is broadcast; corpus side pays one scan + per-doc count.
     "q82_decontaminate" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       graft.functions.Contamination.overlapReport(
           d.filter(col("doc_id") % 50 =!= 0), d.filter(col("doc_id") % 50 === 0),
           "doc_id", "text", n = DecontamN)
@@ -864,7 +865,7 @@ object Extensions {
     // in-query, then counted and scrubbed; gated on the hit counts AND the
     // md5 of every redacted text. Pure Column pass, one scan.
     "q83_pii_redact" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       val G = graft.functions.Governance
       val injected = concat(col("text"),
         when(col("doc_id") % 5 === 0,
@@ -888,7 +889,7 @@ object Extensions {
     // per-language rates — the SAME rows survive on any engine/partitioning
     // (auditable corpus cuts, unlike rand()-based sample). Zero shuffles.
     "q84_hash_sample" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .filter(graft.functions.Governance.stratifiedKeep(
           col("doc_id"), col("lang"), SampleRates, SampleDefaultPct, SampleSalt))
         .select(col("doc_id"), col("lang"))),
@@ -896,7 +897,7 @@ object Extensions {
     // --- chunk-level exact dedup (exact-substring granularity): disjoint
     // 10-token chunks, first-occurrence-wins across the corpus
     "q85_chunk_dedup" -> ((s, dir) =>
-      Dedup.chunkDedup(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.chunkDedup(Tables.read(s, dir, "documents"),
           "doc_id", "text", w = 10)
         .withColumnRenamed("id", "doc_id")),
 
@@ -904,12 +905,12 @@ object Extensions {
     // graft.functions.Profile for the scale notes + approx twin pointer)
     "q86_profile" -> ((s, dir) =>
       graft.functions.Profile.profile(
-        s.read.parquet(s"$dir/lineitem.parquet"), ProfileSpecs)),
+        Tables.read(s, dir, "lineitem"), ProfileSpecs)),
 
     // --- distribution window functions (ntile / percent_rank / cume_dist):
     // rank-family ratios are exact IEEE divisions — portable across engines
     "q87_window_dist" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Tables.read(s, dir, "orders")
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       o.select(col("o_custkey"), col("o_orderkey"),
@@ -925,7 +926,7 @@ object Extensions {
     // one uniform-key shuffle; sampling is a scan-stage predicate. This is
     // the shape of a production 100 TB curation job.
     "q90_curation_pipeline" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       val enriched = d.select(col("doc_id"),
         TA.qualityScore(col("text")).as("quality"),
         TA.langId(col("text")).as("pred_lang"),
@@ -946,7 +947,7 @@ object Extensions {
     // function of (salt, doc_id), so no engine/run/partitioning can leak
     // rows across splits. Zero-shuffle assignment + one count aggregate.
     "q91_dataset_split" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .select(col("source"),
           graft.functions.Governance.splitAssign(
             col("doc_id"), 88, 7, SplitSalt).as("split"))
@@ -957,7 +958,7 @@ object Extensions {
     // widths of 10 tokens — the standard pre-training length audit. One
     // scan, partial+final count aggregate on ~10 bucket keys.
     "q92_length_histogram" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .select((floor(TA.tokenCount(col("text")).cast("long") / 10) * 10)
           .cast("bigint").as("tok_bucket"))
         .groupBy(col("tok_bucket"))
@@ -969,7 +970,7 @@ object Extensions {
     // final k per group (the window form sorts every group's full row
     // set). Values-only output keeps ties oracle-exact vs row_number.
     "q93_topk_agg" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Tables.read(s, dir, "lineitem")
       li.groupBy(col("l_returnflag"))
         .agg(graft.catalyst.TopKAgg(col("l_extendedprice"), 5).as("topv"))
         .select(col("l_returnflag"), posexplode(col("topv")).as(Seq("rk0", "price")))
@@ -1001,7 +1002,7 @@ object Extensions {
       // out of the Append output, but that is a TIMING property — filter
       // the sentinel explicitly (q112-style) so a future watermark-delay
       // or sentinel-timestamp change cannot silently leak it
-      s.read.parquet(out)
+      Parquet.read(s, out)
         .filter(col("event_type") =!= "__flush")
         .select("w_start", "event_type", "n", "sum_value")
     }),
@@ -1019,7 +1020,7 @@ object Extensions {
     // survivors vary with merge order.
     "q97_heavy_hitters" -> ((s, dir) => {
       import s.implicits._
-      val toks = s.read.parquet(s"$dir/documents.parquet")
+      val toks = Tables.read(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("tok"))
       val row = toks.agg(
         graft.catalyst.MisraGriesAgg(col("tok"), 2000).as("cands"),
@@ -1047,7 +1048,7 @@ object Extensions {
     // SkewAndHashSpec) pre-drops non-matching batch rows at the scan when
     // the corpus side is selective.
     "q98_incremental_dedup" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val batch = docs.filter(col("doc_id") % 10 === 7)
         .select(col("doc_id"), Dedup.contentHash(col("text")).as("ch"))
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
@@ -1069,7 +1070,7 @@ object Extensions {
         "alone")(windowPartitionedBy("source", "sub"))
     ) { (s, dir) =>
       graft.functions.SequencePack.pack(
-        s.read.parquet(s"$dir/documents.parquet")
+        Tables.read(s, dir, "documents")
           .select(col("source"), col("doc_id"),
             TA.tokenCount(col("text")).as("n_tok")),
         "source", "doc_id", "n_tok", budget = 256L, substreams = 4)
@@ -1090,7 +1091,7 @@ object Extensions {
     "q127_incremental_neardup" -> contracted(
         indexJoin("band", "band rows"): _*) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q127_bandidx")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       // one-time index build (the amortized cost in the daily loop)
       Dedup.bandIndexTap(table, 8).write(
         // narrow oracle-mirroring layout, pinned (production default
@@ -1116,7 +1117,7 @@ object Extensions {
     "q130_stream_neardup_index" -> ((s, dir) => {
       val table = Tables.stagedTable(s, "graft_q130_bandidx")
       val (in, out, chk) = freshStreamDirs("graft_q130_stream")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       Dedup.bandIndexTap(table, 8).write(
         // narrow oracle-mirroring layout, pinned (production default
@@ -1137,7 +1138,7 @@ object Extensions {
         .join(index, Seq("band", "key"))
         .select(col("id"), col("corpus_id"))
       graft.streaming.StreamOps.runToParquet(flagged, out, chk)
-      s.read.parquet(out).groupBy(col("id"))
+      Parquet.read(s, out).groupBy(col("id"))
         .agg(min(col("corpus_id")).as("nearest_corpus_id"),
           count_distinct(col("corpus_id")).as("n_corpus_matches"))
     }),
@@ -1157,7 +1158,7 @@ object Extensions {
       val (centsT, listsT) =
         (Tables.stagedTable(s, "graft_q131_ivf_cents"),
          Tables.stagedTable(s, "graft_q131_ivf_lists"))
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       val (cents, lists) = Similarity.ivfKMeansBuild(
         e, "vec_id", "embedding", nlist = 16, iters = 2)
       cents.write.mode("overwrite").saveAsTable(centsT)
@@ -1182,7 +1183,7 @@ object Extensions {
     // the corpus.
     "q133_index_maintenance" -> ((s, dir) => {
       val table = Tables.stagedTable(s, "graft_q133_bandidx")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val day0 = docs.filter(col("doc_id") % 10 =!= 7 &&
         col("doc_id") % 10 =!= 8)
@@ -1215,7 +1216,7 @@ object Extensions {
     // so the oracle reproduces the exact row set.
     "q132_mixture_sample" -> ((s, dir) =>
       graft.functions.Governance.mixtureSample(
-        s.read.parquet(s"$dir/documents.parquet")
+        Tables.read(s, dir, "documents")
           .select(col("source"), col("doc_id"),
             TA.tokenCount(col("text")).cast("long").as("n_tok")),
         "doc_id", "source", "n_tok",
@@ -1232,7 +1233,7 @@ object Extensions {
     // by the write); see Governance.shardExport for the 100 TB sizing.
     "q136_shard_export" -> ((s, dir) => {
       val back = graft.functions.Governance.shardExport(
-        s.read.parquet(s"$dir/documents.parquet").select(col("doc_id")),
+        Tables.read(s, dir, "documents").select(col("doc_id")),
         "doc_id", 16, "q136", Tables.stagedDir("graft_q136_shards"))
       back.groupBy(col("shard").cast("int").as("shard"))
         .agg(count(lit(1)).as("n_docs"),
@@ -1250,7 +1251,7 @@ object Extensions {
     // split on avg alone. Values are small ints: double accumulation is
     // exact, so avg hashes identically across engines.
     "q137_coerced_agg" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .withColumn("bucket", (col("doc_id") % 5).cast("int"))
         .withColumn("v", when(
           col("bucket") === 2 || col("doc_id") % 3 === 0,
@@ -1274,7 +1275,7 @@ object Extensions {
     // row per span; see Dedup.duplicatedSpans for the 100 TB notes.
     "q138_dup_spans" -> ((s, dir) =>
       graft.functions.Dedup.duplicatedSpans(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Tables.read(s, dir, "documents"),
         "doc_id", "text", n = 8, minDocs = 2)),
 
     // --- the 100 TB hash-width path of q138: 60-bit gram keys
@@ -1282,14 +1283,14 @@ object Extensions {
     // manufactures a FALSE dup span, so width is a correctness knob)
     "q176_dup_spans_wide" -> ((s, dir) =>
       graft.functions.Dedup.duplicatedSpans(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Tables.read(s, dir, "documents"),
         "doc_id", "text", n = 8, minDocs = 2, wideHash = true)),
 
     // --- the strip ACTION at the wide key (q139 ∘ q176): boilerplate
     // removal keyed 60-bit end to end
     "q184_strip_spans_wide" -> ((s, dir) =>
       graft.functions.Dedup.stripDuplicatedSpans(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Tables.read(s, dir, "documents"),
         "doc_id", "text", n = 8, minDocs = 2, wideHash = true)),
 
     // --- adjacent-token collocations: pair + unigram counts and an exact
@@ -1299,7 +1300,7 @@ object Extensions {
     // is vocab-sized and broadcasts.
     "q140_collocations" -> ((s, dir) =>
       graft.functions.TextAnalysis.collocations(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Tables.read(s, dir, "documents"),
         "text", minCount = 2L, k = 100)),
 
     // --- the ACTION companion of q138: boilerplate strip — every
@@ -1310,7 +1311,7 @@ object Extensions {
     // dropped token anywhere fails.
     "q139_strip_spans" -> ((s, dir) =>
       graft.functions.Dedup.stripDuplicatedSpans(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Tables.read(s, dir, "documents"),
         "doc_id", "text", n = 8, minDocs = 2)),
 
     // --- sliding-window token chunking: the context-window prep step of a
@@ -1321,7 +1322,7 @@ object Extensions {
     // identity is the md5 of the joined token slice (the downstream
     // exact-dedup key, q85's granularity knob made overlapping).
     "q99_chunk_windows" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("tl"))
         .withColumn("nch",
           expr("1 + (greatest(size(tl) - 50, 0) + 24) div 25").cast("int"))
@@ -1342,7 +1343,7 @@ object Extensions {
     // parser fails the hash. Construction is pure Column exprs (unhex of
     // concatenated hex), so the scan stays codegen'd.
     "q100_image_meta" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           (col("doc_id") % 997 + 1).cast("int").as("w"),
           ((col("doc_id") * 7) % 997 + 1).cast("int").as("h"))
@@ -1378,7 +1379,7 @@ object Extensions {
       // comparable bit-widths: Morton keys only cluster BOTH dimensions
       // when they occupy similar bit ranges — real implementations
       // rank-normalize first; here both dims are reduced to 11 bits
-      s.read.parquet(s"$dir/lineitem.parquet")
+      Tables.read(s, dir, "lineitem")
         .select(z.zkey(pmod(col("l_partkey"), lit(2048L)),
             pmod(col("l_orderkey"), lit(2048L))).as("zkey"),
           pmod(col("l_partkey"), lit(2048L)).as("xm"),
@@ -1402,7 +1403,7 @@ object Extensions {
       // length-bucket boundary (10→12 chars: bucket 5→6, the radius-1
       // expansion path), and a dist-3 pair that must NOT match.
       val probes = CraftedFuzzyWords.toDF("w")
-      val words = s.read.parquet(s"$dir/documents.parquet")
+      val words = Tables.read(s, dir, "documents")
         .select(regexp_extract(col("text"), "^([A-Za-z]+)", 1).as("w"))
         .union(probes)
         .filter(length(col("w")) >= 4)
@@ -1417,7 +1418,7 @@ object Extensions {
     // tolerance-gated.
     "q105_random_projection" -> ((s, dir) => {
       val p = graft.functions.Projection
-      s.read.parquet(s"$dir/embeddings.parquet")
+      Tables.read(s, dir, "embeddings")
         .select(col("vec_id") +:
           (0 until p.OutDim).map(j =>
             p.projMicros("embedding", j).as(s"p$j")): _*)
@@ -1430,7 +1431,7 @@ object Extensions {
     // aggregate. Empty cells coalesce to 0 (count semantics, and what the
     // oracle's FILTER spelling produces).
     "q106_pivot" -> ((s, dir) =>
-      s.read.parquet(s"$dir/orders.parquet")
+      Tables.read(s, dir, "orders")
         .groupBy(col("o_orderpriority"))
         .pivot("o_orderstatus", Seq("F", "O", "P"))
         .agg(count(lit(1)))
@@ -1460,7 +1461,7 @@ object Extensions {
     "q107_group_sample" -> ((s, dir) => {
       val nh = -conv(substring(md5(concat(lit("graft-r5c"),
           col("doc_id").cast("string"))), 1, 13), 16, 10).cast("double")
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
         .select(col("source"), col("doc_id"), nh.as("nh"))
       val ties = d.groupBy(col("source"))
         .agg(count(lit(1)).as("n"), count_distinct(col("nh")).as("nd"))
@@ -1482,7 +1483,7 @@ object Extensions {
     // from padding (count vs count(col)), and the oracle spells the
     // padding explicitly, gating the semantics.
     "q108_union_by_name" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Tables.read(s, dir, "orders")
       val a = o.filter(col("o_orderstatus") === "F")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val b = o.filter(col("o_totalprice") > 100000)
@@ -1501,7 +1502,7 @@ object Extensions {
     // positions, explode shape, and byte addressing are what's gated).
     "q109_frame_sample" -> ((s, dir) => {
       val n = 4
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
         .select(col("doc_id"),
           posexplode(graft.functions.Multimodal.sampleFrames(col("payload"), n))
@@ -1521,9 +1522,9 @@ object Extensions {
     // and the AQE skew split (SkewAndHashSpec): this form also relieves
     // the BUILD side, needs no sort, and works with AQE off.
     "q110_hybrid_skew_join" -> ((s, dir) => {
-      val orders = s.read.parquet(s"$dir/orders.parquet")
+      val orders = Tables.read(s, dir, "orders")
         .select(col("o_custkey"), col("o_totalprice"))
-      val cust = s.read.parquet(s"$dir/customer.parquet")
+      val cust = Tables.read(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
       val hot = orders.agg(graft.catalyst.MisraGriesAgg(
           col("o_custkey").cast("string"), 64).as("h"))
@@ -1583,7 +1584,7 @@ object Extensions {
         .select(col("user_id"), col("sw.start").as("start_ts"),
           col("sw.end").as("end_ts"), col("n_events"), col("sum_value"))
       graft.streaming.StreamOps.runToParquet(stream, out, chk)
-      s.read.parquet(out)
+      Parquet.read(s, out)
         .filter(col("user_id") =!= -1L)
         .select("user_id", "start_ts", "end_ts", "n_events", "sum_value")
     }),
@@ -1593,7 +1594,7 @@ object Extensions {
     // plans a single Expand + aggregate; n grouping sets ≠ n scans).
     // grouping_id disambiguates the all-NULL key rows from real NULLs.
     "q113_grouping_sets" -> ((s, dir) => {
-      s.read.parquet(s"$dir/orders.parquet")
+      Tables.read(s, dir, "orders")
         .createOrReplaceTempView("gs_orders")
       s.sql(
         """SELECT o_orderstatus, o_orderpriority,
@@ -1616,7 +1617,7 @@ object Extensions {
       val (in, out, chk) = freshStreamDirs("graft_q114_stream")
       val ev = Tables.events(s, dir)
         .select(col("ts"), col("user_id"), col("value"))
-      val cust = s.read.parquet(s"$dir/customer.parquet")
+      val cust = Tables.read(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
       val sentinel = ev.limit(1)
         .withColumn("ts", expr("timestamp'2100-01-01 00:00:00'"))
@@ -1636,7 +1637,7 @@ object Extensions {
       // the watermark withholds its window — but both are indirect; bound
       // the output to pre-sentinel windows explicitly so neither property
       // drifting can leak the flush row
-      s.read.parquet(out)
+      Parquet.read(s, out)
         .filter(col("w_start") < expr("timestamp'2099-01-01 00:00:00'"))
         .select("w_start", "c_mktsegment", "n", "sum_value")
     }),
@@ -1651,7 +1652,7 @@ object Extensions {
     // broadcast top-V vocab + an OOV default count; here the exact
     // shuffle join keeps the gate exact.
     "q115_surprisal" -> ((s, dir) => {
-      val toks = s.read.parquet(s"$dir/documents.parquet")
+      val toks = Tables.read(s, dir, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       val counts = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
       val total = toks.count()
@@ -1697,7 +1698,7 @@ object Extensions {
     // scan-stage predicate, zero exchanges, integer-exact hash compare —
     // the weighted generalization of q84's fixed-rate strata.
     "q117_weighted_sample" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
         .select(col("doc_id"), TA.qualityScore(col("text")).as("quality"))
       d.filter(graft.functions.Governance.weightedKeep(
           col("doc_id"), col("quality"), "graft-r5w"))
@@ -1711,7 +1712,7 @@ object Extensions {
     // path); the oracle recomputes channels/rate/bits arithmetically, so
     // an offset or endianness bug in the parser fails the hash.
     "q118_audio_meta" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           (col("doc_id") % 2 + 1).cast("int").as("ch"),
           (lit(8000) * (col("doc_id") % 5 + 1)).cast("int").as("rate"),
@@ -1738,8 +1739,8 @@ object Extensions {
     // it string_agg(... ORDER BY ...). Also emits the array length so
     // the gate checks structure, not just the rendered string.
     "q119_string_agg" -> ((s, dir) =>
-      s.read.parquet(s"$dir/nation.parquet")
-        .join(s.read.parquet(s"$dir/supplier.parquet"),
+      Tables.read(s, dir, "nation")
+        .join(Tables.read(s, dir, "supplier"),
           col("n_nationkey") === col("s_nationkey"))
         .groupBy(col("n_name"))
         .agg(count(lit(1)).cast("bigint").as("n_supp"),
@@ -1779,7 +1780,7 @@ object Extensions {
     // scan (conditional partial counts), ~10 bucket keys; the per-bucket
     // rows localize WHERE the drift is, the statistic rides along.
     "q121_drift" -> ((s, dir) => {
-      val b = s.read.parquet(s"$dir/documents.parquet")
+      val b = Tables.read(s, dir, "documents")
         .select((col("source") === "src0").as("is_probe"),
           (floor(TA.tokenCount(col("text")).cast("long") / 10) * 10)
             .cast("bigint").as("tok_bucket"))
@@ -1806,7 +1807,7 @@ object Extensions {
     // tree — no sqrt/libm), so even the double column hash-matches.
     "q122_exact_moments" -> ((s, dir) => {
       val M = graft.functions.ExactMoments
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Tables.read(s, dir, "lineitem")
         .select(col("l_returnflag"),
           M.guardX(col("l_quantity").cast("bigint")).as("x"),
           M.guardY(floor(col("l_discount") * 1e6).cast("bigint")).as("y"))
@@ -1866,7 +1867,7 @@ object Extensions {
         stageSliced(in, Seq(slice3, sentinel), baseIdx = 2)
       }
       val spansRestart = graft.streaming.StreamOps.commits(chk) > run1Commits
-      s.read.parquet(out)
+      Parquet.read(s, out)
         .filter(col("user_id") =!= -1L)
         .select(col("user_id"), col("start_ts"), col("end_ts"),
           col("n_events"), col("sum_value"),
@@ -1906,7 +1907,7 @@ object Extensions {
       }
       val spansRestart = graft.streaming.StreamOps.commits(chk) > run1Commits
       val w = Window.partitionBy(col("user_id")).orderBy(col("start_ts"))
-      s.read.parquet(out)
+      Parquet.read(s, out)
         .withColumn("session_id", row_number().over(w).cast("long"))
         .select(col("user_id"), col("session_id"), col("n_events"),
           col("start_ts"), col("end_ts"), col("sum_value"),
@@ -1915,7 +1916,7 @@ object Extensions {
 
     // --- multimodal plumbing ----------------------------------------------
     "q30_multimodal_meta" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       val payload = encode(col("text"), "UTF-8")
       d.select(col("doc_id"),
         octet_length(payload).as("byte_len"),
@@ -1939,8 +1940,8 @@ object Extensions {
       Node("BroadcastHashJoin").absent(
         "gate must exercise the shuffled-join path the pruning targets")
     ) { (s, dir) =>
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val hot = s.read.parquet(s"$dir/orders.parquet")
+      val li = Tables.read(s, dir, "lineitem")
+      val hot = Tables.read(s, dir, "orders")
         .filter(col("o_totalprice") > 475000.0)
       val joined = graft.functions.BloomPrune.semiJoin(
         li, hot, "l_orderkey", "o_orderkey",
@@ -1967,7 +1968,7 @@ object Extensions {
       BucketedScan.present("snapshot side must be the bucket-aware scan")
     ) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q142_snapshot")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       graft.functions.Snapshot.snapshotTap(table, 8, "doc_id").write(
         docs.select(col("doc_id"), col("text"), col("source"),
           lit(1L).as("version")),
@@ -1993,7 +1994,7 @@ object Extensions {
     // driver state — at 100 TB this op is scan-bound by construction.
     // All-integer arithmetic (40-bit hashes) keeps the gate engine-exact.
     "q143_hash_classifier" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       docs.select(col("doc_id"),
           TA.tokenCount(col("text")).as("n_tok"),
           graft.functions.Relevance.hashClassifierLogit(
@@ -2013,7 +2014,7 @@ object Extensions {
         "reading strictly fewer buckets than the layout")
     ) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q144_postings")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       graft.functions.InvertedIndex.indexTap(table, 16).write(
         graft.functions.InvertedIndex.build(docs, "doc_id", "text"),
         graft.sources.SinkMode.Replace)
@@ -2048,7 +2049,7 @@ object Extensions {
       val I = graft.functions.InvertedIndex
       val R = graft.functions.Relevance
       val table = Tables.stagedTable(s, "graft_q300_postings")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val pre = docs.filter(col("doc_id") % 50 =!= 3)
       val batch = docs.filter(col("doc_id") % 50 === 3)
       val tap = I.indexTap(table, 16)
@@ -2101,7 +2102,7 @@ object Extensions {
       import org.apache.spark.sql.expressions.Window
       val TA2 = graft.functions.TextAnalysis
       val C = graft.functions.Curation
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val base = docs
         .select(col("source"), col("text"),
           TA2.qualityScore(col("text")).as("q"),
@@ -2170,7 +2171,7 @@ object Extensions {
       val I = graft.functions.InvertedIndex
       val R = graft.functions.Relevance
       val table = Tables.stagedTable(s, "graft_q316_postings")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val pre = docs.filter(col("doc_id") % 50 =!= 3)
       val batch = docs.filter(col("doc_id") % 50 === 3)
         .select(col("doc_id"), col("text"))
@@ -2196,8 +2197,8 @@ object Extensions {
         batch.schema, Map("maxFilesPerTrigger" -> "1"))
       graft.streaming.StreamOps.runToParquet(
         I.statsRowsPerDoc(stream2, "text"), outStats, chkStats)
-      val streamedPost = s.read.parquet(outPost)
-      val streamedStats = s.read.parquet(outStats)
+      val streamedPost = Parquet.read(s, outPost)
+      val streamedStats = Parquet.read(s, outStats)
       // non-vacuity: the stream leg must actually have contributed, and
       // its per-doc stats rows must account for every batch doc
       require(!streamedPost.limit(1).isEmpty,
@@ -2231,7 +2232,7 @@ object Extensions {
       val C = graft.functions.Curation
       def plant(m: Int, dirt: String) =
         when(col("doc_id") % m === 0, lit(dirt)).otherwise(lit(""))
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .select(col("doc_id"), concat(col("text"),
           plant(17, " pay 4111 1111 1111 1111 ok"),
           plant(19, " order 1234 5678 9012 3456 ref"),
@@ -2256,7 +2257,7 @@ object Extensions {
     // (salt, doc_id) — auditable, engine-independent.
     "q318_perplexity_mixture" -> ((s, dir) => {
       val G = graft.functions.Governance
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val per = graft.functions.LanguageModel.bigramSurprisal(docs)
         .filter(col("n_bi") >= 1) // sub-2-token docs have no LM signal
         .select(col("doc_id"),
@@ -2297,7 +2298,7 @@ object Extensions {
       val G = graft.functions.Governance
       val LM = graft.functions.LanguageModel
       val table = Tables.stagedTable(s, "graft_q328_bgcounts")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val tap = LM.bigramCountsTap(table, 16)
       tap.write(LM.bigramTrainCounts(docs), graft.sources.SinkMode.Replace)
       val per = LM.scoreKneserNeyAgainstCounts(tap.read(s), docs)
@@ -2345,7 +2346,7 @@ object Extensions {
       val C = graft.functions.Curation
       val LM = graft.functions.LanguageModel
       val G = graft.functions.Governance
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val lid = docs.select(col("doc_id"), col("source"), col("text"),
         TA2.langIdProfile(col("text")).as("__lang")).localCheckpoint()
       val kept = lid.filter(col("__lang") =!= "unknown")
@@ -2399,7 +2400,7 @@ object Extensions {
     // scan is O(sources) rows.
     "q319_token_budget" -> ((s, dir) => {
       val G = graft.functions.Governance
-      val per = s.read.parquet(s"$dir/documents.parquet")
+      val per = Tables.read(s, dir, "documents")
         .select(col("source"),
           size(expr("filter(split(text, ' '), w -> w != '')"))
             .cast("long").as("ntok"))
@@ -2431,7 +2432,7 @@ object Extensions {
     ) { (s, dir) =>
       val (t1, t2) = (Tables.stagedTable(s, "graft_q145_snap_v1"),
         Tables.stagedTable(s, "graft_q145_snap_v2"))
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       graft.functions.Snapshot.snapshotTap(t1, 8, "doc_id").write(
         docs.filter(col("doc_id") % 11 =!= 5)
           .select(col("doc_id"), col("text"), col("source")),
@@ -2462,7 +2463,7 @@ object Extensions {
     // batchId guard is exactly the production foreachBatch contract.
     "q146_stream_upsert" -> ((s, dir) => {
       val (in, _, chk) = freshStreamDirs("graft_q146_stream")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("source"))
       val pp = new graft.functions.Snapshot.PingPong(
         s, Tables.processLocal("graft_q146_snap"), 8, "doc_id", Seq("text", "source"), "version")
@@ -2492,7 +2493,7 @@ object Extensions {
     // must equal the oracle's unrolled round count (the q64 discipline).
     "q147_leakage_safe_split" -> ((s, dir) =>
       graft.functions.Governance.leakageSafeSplit(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         88, 7, SplitSalt, k = 16, bands = 4, maxIters = 8)),
 
     // --- the curation pipeline END TO END: boilerplate strip (q139 op) →
@@ -2505,7 +2506,7 @@ object Extensions {
     // windows), the logit is a scan-local fold, the dedup agg keys on
     // md5(clean_text) — uniform; no stage adds a new scale hazard.
     "q148_curation_e2e" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val cleaned = graft.functions.Dedup.stripDuplicatedSpans(
         docs, "doc_id", "text", n = 8, minDocs = 2)
       cleaned.filter(col("n_kept") > 0L)
@@ -2527,7 +2528,7 @@ object Extensions {
     // costs one ≤S-element set row.
     "q149_source_overlap" -> ((s, dir) =>
       graft.functions.Contamination.sourceOverlapMatrix(
-        s.read.parquet(s"$dir/documents.parquet"), "text", "source", n = 8)),
+        Tables.read(s, dir, "documents"), "text", "source", n = 8)),
 
     // --- q149 at INDEX CADENCE (the q159 treatment): the corpus's
     // (h, source-set) rows persist bucketed by h; a new crawl's matrix
@@ -2536,7 +2537,7 @@ object Extensions {
     // from-scratch q149 matrix over old ∪ batch — the oracle IS q149's
     "q192_source_overlap_indexed" -> ((s, dir) => {
       val table = Tables.stagedTable(s, "graft_q192_gramidx")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
       val batch = docs.filter(col("doc_id") % 10 === 7)
       graft.functions.Contamination.sourceGramIndexTap(table, 8).write(
@@ -2556,7 +2557,7 @@ object Extensions {
     // chain, so merge application and tie-break cannot drift.
     "q150_bpe_merges" -> ((s, dir) =>
       graft.functions.Vocab.bpeMerges(
-        s.read.parquet(s"$dir/documents.parquet"), "text", nMerges = 8)),
+        Tables.read(s, dir, "documents"), "text", nMerges = 8)),
 
     // --- WORDPIECE training (Schuster & Nakajima 2012 — the BERT
     // tokenizer; the third subword family next to BPE/unigram-LM):
@@ -2569,7 +2570,7 @@ object Extensions {
     // argmax in the ORDER BY.
     "q320_wordpiece_merges" -> ((s, dir) =>
       graft.functions.Vocab.wordPieceMerges(
-        s.read.parquet(s"$dir/documents.parquet"), "text", nMerges = 8)),
+        Tables.read(s, dir, "documents"), "text", nMerges = 8)),
 
     // --- WORDPIECE encoding — greedy longest-match-first against the
     // q320-trained vocabulary (positional alphabet + all merged
@@ -2583,7 +2584,7 @@ object Extensions {
     // multi-piece encodes).
     "q321_wordpiece_encode" -> ((s, dir) => {
       val V = graft.functions.Vocab
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val merges = V.wordPieceMerges(docs, "text", nMerges = 8)
       val vocab = V.wordPieceVocab(docs, "text", merges)
@@ -2610,7 +2611,7 @@ object Extensions {
     // q321's VERBATIM).
     "q322_stream_wordpiece" -> ((s, dir) => {
       val V = graft.functions.Vocab
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val merges = V.wordPieceMerges(docs, "text", nMerges = 8)
       val vocab = V.wordPieceVocab(docs, "text", merges)
@@ -2626,7 +2627,7 @@ object Extensions {
         aug.schema, Map("maxFilesPerTrigger" -> "1"))
       graft.streaming.StreamOps.runToParquet(
         V.wordPieceEncode(stream, "doc_id", "text", vocab), out, chk)
-      s.read.parquet(out)
+      Parquet.read(s, out)
     }),
 
     // --- the WordPiece vocabulary as a VERSIONED artifact (the q295
@@ -2640,7 +2641,7 @@ object Extensions {
     // vocabulary is exactly v2's.
     "q323_wordpiece_model_tap" -> ((s, dir) => {
       val V = graft.functions.Vocab
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val merges = V.wordPieceMerges(docs, "text", nMerges = 8)
       val v1 = V.wordPieceVocab(docs, "text", merges.limit(0))
@@ -2679,7 +2680,7 @@ object Extensions {
     // flip is load-bearing).
     "q329_wordpiece_refresh" -> ((s, dir) => {
       val V = graft.functions.Vocab
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val grown = docs.select(col("doc_id"), concat(col("text"),
         when(col("doc_id") % 50 === WpRefreshResidue,
@@ -2722,7 +2723,7 @@ object Extensions {
     // cumulative window runs over O(buckets) rows.
     "q151_vocab_growth" -> ((s, dir) =>
       graft.functions.Vocab.vocabGrowth(
-        s.read.parquet(s"$dir/documents.parquet"), "text", "doc_id",
+        Tables.read(s, dir, "documents"), "text", "doc_id",
         bucketSize = 50L)),
 
     // --- tokenizer APPLICATION: learn 8 merges (q150's loop — an
@@ -2730,7 +2731,7 @@ object Extensions {
     // explode scan through the compiled replace chain; per-doc subword
     // stats under the hash prove the end-to-end learn→encode story.
     "q152_bpe_encode" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val merges = graft.functions.Vocab.bpeMerges(docs, "text", nMerges = 8)
         .collect().sortBy(_.getInt(0))
         .map(r => (r.getString(1), r.getString(2))).toSeq
@@ -2743,7 +2744,7 @@ object Extensions {
     // invisible to resemblance dedup) verified against the corpus via
     // shared band buckets only — the q127 batch-vs-corpus discipline.
     "q153_containment_arrival" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val t = split(col("text"), " ")
       val batch = docs.filter(col("doc_id") % 50 === 3)
         .select((col("doc_id") + 2000000L).as("doc_id"),
@@ -2759,7 +2760,7 @@ object Extensions {
     // range-partitioned two-pass scan — no per-source global sort.
     "q154_budget_curate" -> ((s, dir) =>
       graft.functions.Governance.budgetCurate(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "source",
+        Tables.read(s, dir, "documents"), "doc_id", "source",
         TA.qualityScore(col("text")), TA.tokenCount(col("text")),
         budgetPpm = 400000L, salt = "graft-r7-budget")),
 
@@ -2770,7 +2771,7 @@ object Extensions {
     // unseen trigram → bigram, unseen bigram → unigram, OOV → 0).
     // See LanguageModel.stupidBackoff for the 100 TB notes.
     "q155_sb_fluency" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val train = docs.filter(col("doc_id") % 50 =!= 3)
       val batch = docs.filter(col("doc_id") % 50 === 3)
         .select(col("doc_id"),
@@ -2786,7 +2787,7 @@ object Extensions {
     // sim 1.0; originals keep. Verdict rule (min-id survivor) documented at
     // Similarity.semanticDedup.
     "q156_semantic_dedup" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val dups = e.filter(col("vec_id") < 5)
         .select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
@@ -2805,7 +2806,7 @@ object Extensions {
     // positions. Oracle = q152's oracle verbatim: the two encode paths
     // are value-identical by construction, and the gate proves it.
     "q157_bpe_encode_flat" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val merges = graft.functions.Vocab.bpeMerges(docs, "text", nMerges = 8)
         .collect().sortBy(_.getInt(0))
         .map(r => (r.getString(1), r.getString(2))).toSeq
@@ -2821,7 +2822,7 @@ object Extensions {
     // sf0.01) sustains 4 full rounds.
     "q158_phrase_bpe256" -> ((s, dir) =>
       graft.functions.Vocab.phraseBpe(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         rounds = 4, perRound = 64)),
 
     // --- REALISTIC-VOCAB tokenizer: 8 rounds × 512 = 4096 derived
@@ -2847,7 +2848,7 @@ object Extensions {
         "unanalyzable-at-50k form q157/q263 exist to prevent")
     ) { (s, dir) =>
       graft.functions.Vocab.phraseBpe(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         rounds = 8, perRound = 512, requireFullRounds = true)
     },
 
@@ -2869,7 +2870,7 @@ object Extensions {
       Expr("replace").absent(
         "q276: a nested replace chain leaked into the plan")
     ) { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           regexp_replace(col("text"), lit("(\\S+)"),
             concat(lit("$1~"), col("doc_id").cast("string"))).as("text"))
@@ -2899,7 +2900,7 @@ object Extensions {
         "q281: the per-piece bits join must execute the broadcast " +
         "(only the hint can plan one)")
     ) { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       mergeJoins(graft.functions.Vocab.unigramEmSegmented(docs, "text"))
     },
 
@@ -2923,7 +2924,7 @@ object Extensions {
       Expr("unigram_segment").present(
         "q294: the Viterbi expression node is missing from the plan")
     ) { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val (df, schedule) = graft.functions.Vocab.unigramEmPruned(
         docs, "text", rounds = 3, keepPct = 50)
       schedule.foreach { case (m, k) =>
@@ -2955,7 +2956,7 @@ object Extensions {
       Expr("unigram_segment").present(
         "q299: the Viterbi expression node is missing from the plan")
     ) { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           regexp_replace(col("text"), lit("(\\S+)"),
             concat(lit("$1~"), (col("doc_id") % 512).cast("string")))
@@ -2994,7 +2995,7 @@ object Extensions {
         "q282: the piece-bits join and the word-seg join-back must " +
         "both execute as explicit broadcasts")
     ) { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val tap = graft.functions.Vocab.unigramModelTap(
         graft.queries.Relational.stagePath("graft_q282_unigram_model", dir))
       tap.write(
@@ -3030,7 +3031,7 @@ object Extensions {
       Node("BroadcastHashJoin").present(
         "q287: the per-piece bits join must execute the broadcast")
     ) { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           regexp_replace(col("text"), lit("(\\S+)"),
             concat(lit("$1~"), (col("doc_id") % 512).cast("string")))
@@ -3052,7 +3053,7 @@ object Extensions {
       Node("Exchange").absent(
         "q285: the redaction pass must be a single exchange-free scan")
     ) { (s, dir) =>
-      piiScrubProjection(s.read.parquet(s"$dir/documents.parquet"))
+      piiScrubProjection(Tables.read(s, dir, "documents"))
     },
 
     // --- the STREAMING PII screen (the q270 stateless-in-stream
@@ -3063,7 +3064,7 @@ object Extensions {
     // ingest cadence: scrub-before-land, not scrub-after-accumulate.
     "q286_stream_pii_screen" -> ((s, dir) => {
       val (in, out, chk) = freshStreamDirs("graft_q286_stream")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       stageSliced(in, Seq(
         docs.filter(col("doc_id") % 3 === 0),
@@ -3073,7 +3074,7 @@ object Extensions {
         docs.schema, Map("maxFilesPerTrigger" -> "1"))
       graft.streaming.StreamOps.runToParquet(
         piiScrubProjection(stream), out, chk)
-      s.read.parquet(out)
+      Parquet.read(s, out)
     }),
 
     // --- Count-Min sketch with deterministic md5-nibble hashing
@@ -3088,7 +3089,7 @@ object Extensions {
         "q290: the estimate lookup must broadcast the bounded sketch")
     ) { (s, dir) =>
       val K = graft.functions.Sketch
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(regexp_replace(col("text"), lit("(\\S+)"),
           concat(lit("$1~"), (col("doc_id") % 64).cast("string"))).as("text"))
       val sketch = K.cmsBuild(docs, "text").localCheckpoint()
@@ -3112,7 +3113,7 @@ object Extensions {
       Node("BroadcastHashJoin").present(
         "q293: the word→pieces lookup must broadcast the vocab table")
     ) { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val wnp = graft.functions.Vocab.unigramEmSegmented(docs, "text")
         .select(col("w"), col("n_pieces")).localCheckpoint()
       val dnp = docs
@@ -3137,7 +3138,7 @@ object Extensions {
         "q292: the MultiMatch automaton node is missing from the plan"): _*
     ) { (s, dir) =>
       graft.functions.Curation.blocklistScreen(
-        s.read.parquet(s"$dir/documents.parquet"))
+        Tables.read(s, dir, "documents"))
     },
 
     // --- the blocklist as a VERSIONED DATA ARTIFACT (round-13 verdict
@@ -3169,7 +3170,7 @@ object Extensions {
         s"q295: expected the v2 list, got v$version with " +
           s"${terms.length} terms")
       C.blocklistScreenWith(
-        s.read.parquet(s"$dir/documents.parquet"), terms)
+        Tables.read(s, dir, "documents"), terms)
     },
 
     // --- the STREAMING blocklist screen (q286's scrub-before-land
@@ -3189,7 +3190,7 @@ object Extensions {
       val (version, terms) = C.loadLatestBlockTerms(tap.read(s))
       require(version == 2L, s"q296: expected v2, got v$version")
       val (in, out, chk) = freshStreamDirs("graft_q296_stream")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       stageSliced(in, Seq(
         docs.filter(col("doc_id") % 3 === 0),
@@ -3199,7 +3200,7 @@ object Extensions {
         docs.schema, Map("maxFilesPerTrigger" -> "1"))
       graft.streaming.StreamOps.runToParquet(
         C.blocklistScreenWith(stream, terms), out, chk)
-      s.read.parquet(out)
+      Parquet.read(s, out)
     }),
 
     // --- CMS at ARRIVAL cadence (the q272 rebuild-equality discipline):
@@ -3224,7 +3225,7 @@ object Extensions {
       def salted(d: org.apache.spark.sql.DataFrame) =
         d.select(regexp_replace(col("text"), lit("(\\S+)"),
           concat(lit("$1~"), (col("doc_id") % 64).cast("string"))).as("text"))
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val tap = graft.sources.ParquetTap(
         graft.queries.Relational.stagePath("graft_q291_cms", dir))
       tap.write(K.cmsBuild(salted(docs.filter(col("doc_id") % 50 =!= 3)),
@@ -3254,7 +3255,7 @@ object Extensions {
         "q297: the estimate lookup must broadcast the live sketch")
     ) { (s, dir) =>
       val K = graft.functions.Sketch
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           regexp_replace(col("text"), lit("(\\S+)"),
             concat(lit("$1~"), (col("doc_id") % 61).cast("string")))
@@ -3288,7 +3289,7 @@ object Extensions {
         "q301: the estimate lookup must broadcast the decayed sketch")
     ) { (s, dir) =>
       val K = graft.functions.Sketch
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select((col("doc_id") % 4).as("win"),
           regexp_replace(col("text"), lit("(\\S+)"),
             concat(lit("$1~"), (col("doc_id") % 61).cast("string")))
@@ -3307,19 +3308,16 @@ object Extensions {
     // in the codegen reference objects, zero joins, zero exchanges
     // (asserted: the plan is a single scan-shaped projection). Oracle is
     // q283's VERBATIM — the kernel changes the plan, never the numbers.
-    // The model frame is read only by the build-time collects that fill
-    // the kernel, so the scope releases it before the query returns.
+    // The model is read by the one build-time collect that fills the
+    // kernel, so training runs once and no frame is held.
     "q288_nb_kernel" -> contracted(scanShaped("q288: the kernel form must " +
         "plan as a single scan-shaped projection — no exchange, no join") :+
       Expr("nb_score").present(
         "q288: the NbScore kernel node is missing from the plan"): _*
     ) { (s, dir) =>
-      graft.exec.Frames { f =>
-        val docs = s.read.parquet(s"$dir/documents.parquet")
-        val model = f.eagerly(graft.functions.Classify
-          .nbTrainCounts(docs, "lang", "text"))
-        graft.functions.Classify.scoreNaiveBayesKernel(model, docs)
-      }
+      val docs = Tables.read(s, dir, "documents")
+      graft.functions.Classify.scoreNaiveBayesKernel(
+        graft.functions.Classify.nbTrainCounts(docs, "lang", "text"), docs)
     },
 
     // --- the STREAMING NB router: the kernel form is stateless, so the
@@ -3327,7 +3325,7 @@ object Extensions {
     // classify-on-ingest (language routing at crawl cadence). The sink
     // is verified against q284's batch oracle VERBATIM.
     "q289_stream_nb_router" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val tap = graft.functions.Classify.nbModelTap(
         graft.queries.Relational.stagePath("graft_q289_nb_model", dir))
       tap.write(
@@ -3347,7 +3345,7 @@ object Extensions {
       graft.streaming.StreamOps.runToParquet(
         graft.functions.Classify.scoreNaiveBayesKernel(tap.read(s), stream),
         out, chk)
-      s.read.parquet(out)
+      Parquet.read(s, out)
     }),
 
     // --- multinomial Naive Bayes posterior in exact bits (the fastText-
@@ -3355,8 +3353,8 @@ object Extensions {
     // quantized formula — it IS the contract, recomputed verbatim by the
     // oracle). Self-scoring form: train = batch = the full corpus; the
     // model table is localCheckpoint'ed so the one training scan never
-    // re-executes under the scoring plan's three references (wc slice +
-    // two bounded driver carries).
+    // re-executes under the scoring plan's two references (wc slice +
+    // the one driver read of the per-class stats).
     "q283_nb_posterior" -> contracted(
       Node("BroadcastHashJoin").present(
         "q283: the wc-slice lookup must execute the broadcast " +
@@ -3364,7 +3362,7 @@ object Extensions {
       Node("BroadcastNestedLoopJoin").present(
         "q283: the class cross join must broadcast the O(classes) side")
     ) { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val model = graft.functions.Classify
         .nbTrainCounts(docs, "lang", "text").localCheckpoint()
       mergeJoins(graft.functions.Classify.scoreNaiveBayes(model, docs))
@@ -3389,7 +3387,7 @@ object Extensions {
       Node("BroadcastNestedLoopJoin").present(
         "q284: both scoring joins must broadcast explicitly")
     ) { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val tap = graft.functions.Classify.nbModelTap(
         graft.queries.Relational.stagePath("graft_q284_nb_model", dir))
       tap.write(
@@ -3415,7 +3413,7 @@ object Extensions {
     // (LanguageModel.bigramSurprisal scaladoc).
     "q264_bigram_surprisal" -> ((s, dir) =>
       graft.functions.LanguageModel.bigramSurprisal(
-        s.read.parquet(s"$dir/documents.parquet"))),
+        Tables.read(s, dir, "documents"))),
 
     // --- q155's Stupid Backoff scoring against a PERSISTED count table:
     // trainCounts written once through countsTap (bucketed by gram — the
@@ -3430,7 +3428,7 @@ object Extensions {
         "all five count lookups must be bucket-aware index scans")
     ) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q159_lmcounts")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val train = docs.filter(col("doc_id") % 50 =!= 3)
       val batch = docs.filter(col("doc_id") % 50 === 3)
         .select(col("doc_id"),
@@ -3469,7 +3467,7 @@ object Extensions {
     "q160_stream_curation" -> ((s, dir) => {
       val idxTable = Tables.stagedTable(s, "graft_q160_bandidx")
       val (in, _, chk) = freshStreamDirs("graft_q160_stream")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("source"))
       Dedup.bandIndexTap(idxTable, 8).write(
         // narrow oracle-mirroring layout, pinned (production default
@@ -3516,7 +3514,7 @@ object Extensions {
     // discipline) die everywhere except their global first occurrence;
     // unique prose paragraphs pass through untouched
     "q161_paragraph_dedup" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val aug = docs.select(col("doc_id"),
         concat(col("text"),
           when(col("doc_id") % 3 === 0, lit("\n" + Boiler1))
@@ -3534,7 +3532,7 @@ object Extensions {
     // punctuation, lorem ipsum, javascript) — so every rule provably
     // fires and line6's word-count rule varies with doc length
     "q162_c4_line_clean" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val aug = docs
         .select(col("doc_id"), split(col("text"), " ").as("__t"))
         .select(col("doc_id"), concat_ws("\n",
@@ -3556,7 +3554,7 @@ object Extensions {
     // clean single-spaced prose — n_removed gates how many codepoints
     // died, clean_md5 gates exactly which
     "q163_normalize_text" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val dirty = concat(lit("\u00A0\u200B  "),
         regexp_replace(col("text"), " ", "  \t"),
         lit(" \r\n\u0007 x\u2028y "))
@@ -3576,7 +3574,7 @@ object Extensions {
     // pair anywhere changes it — and rank_sum = n(n+1)/2 pins that grank
     // is a true 1..N permutation
     "q164_epoch_reshuffle" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       def one(e: Int) = graft.functions.Governance
         .epochOrder(docs, "doc_id", s"ep$e#", 8)
         .agg(count(lit(1)).as("n_docs"),
@@ -3593,7 +3591,7 @@ object Extensions {
     // DISTINCT word (q157 flat-depth node), aggregate subwords-per-word
     // and chars-per-subword as exact integer micros per corpus slice
     "q165_tokenizer_fertility" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val merges = graft.functions.Vocab.bpeMerges(docs, "text", nMerges = 8)
         .collect().sortBy(_.getInt(0))
         .map(r => (r.getString(1), r.getString(2))).toSeq
@@ -3608,7 +3606,7 @@ object Extensions {
     // tail survives whole. Tie-freedom of the 52-bit hash is asserted
     // over the WHOLE corpus before the gate trusts rank order.
     "q166_cluster_balanced_sample" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       val nh = -conv(substring(md5(concat(lit("graft-r8b"),
           col("vec_id").cast("string"))), 1, 13), 16, 10).cast("double")
       val ties = e.select(nh.as("nh"))
@@ -3627,7 +3625,7 @@ object Extensions {
     // survive exactly once — first occurrence, decided against the doc's
     // OWN line array, zero shuffles
     "q167_repeated_lines" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val aug = docs
         .select(col("doc_id"), split(col("text"), " ").as("__t"))
         .select(col("doc_id"), concat_ws("\n",
@@ -3650,7 +3648,7 @@ object Extensions {
     // individually gated (q163/q162/q161) — this gate proves they
     // COMPOSE (the q148 discipline for the structure ladder).
     "q168_curation_ladder" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val dirty = docs
         .select(col("doc_id"), split(col("text"), " ").as("__t"))
         .select(col("doc_id"), concat(
@@ -3677,7 +3675,7 @@ object Extensions {
     // upweight instead of drop); rep ≡ cluster min id asserted in-query
     "q169_dedup_reweight" -> ((s, dir) =>
       graft.functions.Dedup.dedupReweight(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 16, bands = 4, maxIters = 8)),
 
     // --- filter attribution: the whole quality-filter stack evaluated
@@ -3687,7 +3685,7 @@ object Extensions {
     // fire alongside the corpus-driven bits
     "q170_filter_attribution" -> ((s, dir) => {
       import s.implicits._
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       // each crafted doc fires a known rule set: the per-bit evidence the
       // corpus alone does not provide. Since the round-9 re-point at the
@@ -3709,7 +3707,7 @@ object Extensions {
     // discipline applied to the whole battery
     "q171_gopher_rules" -> ((s, dir) => {
       import s.implicits._
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val crafted = GopherFixtures.toSeq.toDF("doc_id", "text")
       graft.functions.TextAnalysis.gopherRules(
@@ -3731,7 +3729,7 @@ object Extensions {
       Expr("nb_score").present(
         "q304: scoring must run the NbScore kernel node")
     ) { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val labels = graft.functions.TextAnalysis.gopherRules(
           docs, "doc_id", "text", minWords = 60, maxWords = 1000)
@@ -3760,7 +3758,7 @@ object Extensions {
     // sink joins labels batch-side; oracle = q304's VERBATIM (the
     // stream changes the delivery, never the numbers).
     "q306_stream_quality_router" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val labels = graft.functions.TextAnalysis.gopherRules(
           docs, "doc_id", "text", minWords = 60, maxWords = 1000)
@@ -3779,7 +3777,7 @@ object Extensions {
       graft.streaming.StreamOps.runToParquet(
         graft.functions.Classify.scoreNaiveBayesKernel(model, stream),
         out, chk)
-      s.read.parquet(out).join(labels, Seq("doc_id"))
+      Parquet.read(s, out).join(labels, Seq("doc_id"))
         .select(col("doc_id"), col("c").as("label"), col("pred"),
           (col("c") === col("pred")).as("agree"),
           col("best_bits"), col("margin"))
@@ -3795,7 +3793,7 @@ object Extensions {
     // quality signals agreeing with their standalone gates' spellings).
     "q309_dataset_card" -> ((s, dir) => {
       val TA2 = graft.functions.TextAnalysis
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .select(col("source"), col("text"),
           TA2.qualityScore(col("text")).as("q"),
           size(expr("filter(split(text, ' '), w -> w != '')"))
@@ -3823,7 +3821,7 @@ object Extensions {
     // caption ordinal) diverges immediately.
     "q310_html_span_tables" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val cells = H.htmlTableCells(
         H.withSynthSpanTableHtml(docs, "doc_id", "text"), "id", "html")
@@ -3844,7 +3842,7 @@ object Extensions {
     // must land on the SAME expanded grid, headers+caption decorated.
     "q311_html_span_recovery" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val pages = H.withSynthSpanTableHtml(docs, "doc_id", "text",
         clsOf = id => (id % 3).toInt)
@@ -3876,7 +3874,7 @@ object Extensions {
     // span table's expanded grid becomes records, at table_idx 1)
     "q312_span_table_records" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val cells = H.htmlTableCells(
         H.withSynthNestedTableHtml(docs, "doc_id", "text"), "id", "html")
@@ -3904,7 +3902,7 @@ object Extensions {
     // inner ordinal plus two constant outer rows.
     "q324_html_nested_tables" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val cells = H.htmlTableCells(
         H.withSynthNestedTableHtml(docs, "doc_id", "text"), "id", "html")
@@ -3928,7 +3926,7 @@ object Extensions {
     // to 'main'.
     "q325_html_nested_recovery" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val pages = H.withSynthNestedTableHtml(docs, "doc_id", "text",
         clsOf = id => (id % 3).toInt)
@@ -3959,7 +3957,7 @@ object Extensions {
     // ordinals via ONE shared CTE (Html.listGridOracleCte).
     "q330_html_lists" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val items = H.htmlListItems(
         H.withSynthListHtml(docs, "doc_id", "text"), "id", "html")
@@ -3980,7 +3978,7 @@ object Extensions {
     // plain items decorated.
     "q331_html_lists_recovery" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val pages = H.withSynthListHtml(docs, "doc_id", "text",
         clsOf = id => (id % 3).toInt)
@@ -4089,7 +4087,7 @@ object Extensions {
       val a = buildRetrievalArtifacts(s, dir, "q327")
       val qids = MultiQueryTerms.map(_._1)
       val termRows = MultiQueryTerms.map { case (qid, ts) => (qid, ts) }
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       import s.implicits._
       val queryFeed = probeVectors(s, dir, qids, "q327")
         .join(termRows.toDF("vec_id", "terms"), Seq("vec_id"))
@@ -4128,7 +4126,7 @@ object Extensions {
               .write.mode("append").parquet(out)
           }
       }
-      val served = s.read.parquet(out)
+      val served = Parquet.read(s, out)
       val servedQs = served.select(col("query_id")).distinct()
         .collect().map(_.getLong(0)).toSet
       require(servedQs == qids.toSet,
@@ -4140,7 +4138,7 @@ object Extensions {
     // cross-source calibration step (a raw "70" means different things
     // from different sources); micro-bucket CDF, never a corpus window
     "q172_quantile_normalize" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           TA.qualityScore(col("text")).as("quality"))
       graft.functions.Governance.quantileNormalize(
@@ -4154,7 +4152,7 @@ object Extensions {
     // near-dup-dense corpus before the canonical form)
     "q173_minhash_accuracy" -> ((s, dir) =>
       graft.functions.Dedup.minhashAccuracy(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 16, bands = 4)),
 
     // --- training-delivery composition: the dataloader's epoch plan —
@@ -4163,7 +4161,7 @@ object Extensions {
     // bit-identical on re-run, no global sort anywhere)
     "q177_training_delivery" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       // n_tok CARRIES through the permutation's one exchange — joining
       // it back afterwards would cost two corpus exchanges on doc_id
       // plus a third back to shard partitioning (plan-asserted: the
@@ -4188,7 +4186,7 @@ object Extensions {
     // 6.5M-pair surprise (the measured q173 lesson, operationalized)
     "q178_lsh_load_profile" -> ((s, dir) =>
       graft.functions.Dedup.lshLoadProfile(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 16, bands = 4)),
 
     // --- winnowing fingerprints (Schleimer et al. 2003): rightmost
@@ -4196,7 +4194,7 @@ object Extensions {
     // ≥ w+n−1 tokens shares a fingerprint — scan-only, zero shuffles
     "q179_winnowing" -> ((s, dir) =>
       graft.functions.Dedup.winnow(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         n = 4, w = 4)),
 
     // --- incremental winnow dedup: the q127 persisted-index discipline
@@ -4207,7 +4205,7 @@ object Extensions {
     "q180_winnow_index" -> contracted(
         indexJoin("h", "fingerprints"): _*) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q180_winnowidx")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       Dedup.winnowIndexTap(table, 8).write(
         Dedup.winnowIndex(docs.filter(col("doc_id") % 10 =!= 7),
           "doc_id", "text"),
@@ -4227,7 +4225,7 @@ object Extensions {
     // failing the fixed-plane guard; lvl is part of the gated output,
     // so the escalation decision itself is oracle-checked per vector
     "q181_semantic_dedup_adaptive" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       // this corpus is ~119 tight template clusters with an 83-vector
       // floor (measured: max bucket 135 at 6 planes, 83 at 10/14/18 —
       // extra planes add NO discrimination inside a template cluster,
@@ -4249,7 +4247,7 @@ object Extensions {
     "q182_stream_winnow" -> ((s, dir) => {
       val table = Tables.stagedTable(s, "graft_q182_winnowidx")
       val (in, out, chk) = freshStreamDirs("graft_q182_stream")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       Dedup.winnowIndexTap(table, 8).write(
         Dedup.winnowIndex(docs.filter(col("doc_id") % 10 =!= 7),
@@ -4268,7 +4266,7 @@ object Extensions {
         .join(index, Seq("h"))
         .select(col("id"), col("corpus_id"), col("h"))
       graft.streaming.StreamOps.runToParquet(matched, out, chk)
-      s.read.parquet(out).groupBy(col("id"), col("corpus_id"))
+      Parquet.read(s, out).groupBy(col("id"), col("corpus_id"))
         .agg(count_distinct(col("h")).as("n_shared"))
         .filter(col("n_shared") >= 2L)
     }),
@@ -4278,7 +4276,7 @@ object Extensions {
     // survivors) — "which stage eats which source", one corpus scan
     "q183_curation_funnel" -> ((s, dir) =>
       graft.functions.Governance.curationFunnel(
-        s.read.parquet(s"$dir/documents.parquet"))),
+        Tables.read(s, dir, "documents"))),
 
     // --- transitive winnow families: connected components over shared
     // winnow fingerprints (a chain of shared ≥7-token runs links docs
@@ -4293,7 +4291,7 @@ object Extensions {
     // are no-ops once converged)
     "q186_winnow_clusters" -> ((s, dir) =>
       graft.functions.Dedup.winnowClustersTransitive(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         n = 4, w = 8, maxIters = 40)),
 
     // --- INCREMENTAL winnow-family maintenance (the q133 append
@@ -4305,7 +4303,7 @@ object Extensions {
     // O(batch) subgraph. Full q186 propagation drops to refresh cadence.
     "q187_winnow_incremental" -> ((s, dir) => {
       val table = Tables.stagedTable(s, "graft_q187_winnowidx")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
       val batch = docs.filter(col("doc_id") % 10 === 7)
       Dedup.winnowIndexTap(table, 8).write(
@@ -4343,7 +4341,7 @@ object Extensions {
     // profiles, one kernel pass per doc, exact-integer distance) — the
     // real replacement for the q21 stopword heuristic
     "q188_langid_profile" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           TA.langIdProfile(col("text")).as("lang_pred"))),
 
@@ -4357,7 +4355,7 @@ object Extensions {
     // set scaled WITH the corpus (exact leg O(corpus²/20), measured
     // 3.93× at 10× data — the round-9 `weak` finding).
     "q189_ann_recall" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       val probes = e.orderBy(
         conv(substring(md5(concat(lit("q189"),
           col("vec_id").cast("string"))), 1, 13), 16, 10)
@@ -4373,7 +4371,7 @@ object Extensions {
     // candidates, exact Hamming ≤ 3 verify
     "q190_image_dhash" -> ((s, dir) =>
       graft.functions.Multimodal.imageNearDupPairs(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")),
+        Tables.read(s, dir, "documents"), "doc_id", "text")),
 
     // --- persisted dHash band index + batch match (the q180 discipline
     // on images): corpus hashes band into a key-bucketed tap, arriving
@@ -4382,7 +4380,7 @@ object Extensions {
     "q191_image_dhash_index" -> contracted(
         indexJoin("key", "band keys"): _*) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q191_dhashidx")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
       val batch = docs.filter(col("doc_id") % 10 === 7)
       graft.functions.Multimodal.dhashIndexTap(table, 8).write(
@@ -4403,7 +4401,7 @@ object Extensions {
       val MM = graft.functions.Multimodal
       val table = Tables.stagedTable(s, "graft_q193_dhashidx")
       val (in, out, chk) = freshStreamDirs("graft_q193_stream")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       MM.dhashIndexTap(table, 8).write(
         MM.dhashIndex(docs.filter(col("doc_id") % 10 =!= 7),
@@ -4425,7 +4423,7 @@ object Extensions {
         .join(index, Seq("key"))
         .select(col("id"), col("bh"), col("ch"))
       graft.streaming.StreamOps.runToParquet(matched, out, chk)
-      s.read.parquet(out).select(col("id"), col("bh"), col("ch"))
+      Parquet.read(s, out).select(col("id"), col("bh"), col("ch"))
         .distinct()
         .filter(MM.hamming(col("bh"), col("ch")) <= 3)
         .select(col("id"), col("ch").as("corpus_h"),
@@ -4443,7 +4441,7 @@ object Extensions {
     "q194_winnow_index_wide" -> contracted(
         indexJoin("h", "fingerprints"): _*) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q194_winnowidx")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       Dedup.winnowIndexTap(table, 8).write(
         Dedup.winnowIndexWide(docs.filter(col("doc_id") % 10 =!= 7),
           "doc_id", "text"),
@@ -4461,7 +4459,7 @@ object Extensions {
     // sf1 rehearsal measured at 40 bits)
     "q195_winnow_clusters_wide" -> ((s, dir) =>
       graft.functions.Dedup.winnowClustersTransitive(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         n = 4, w = 8, maxIters = 40, wideHash = true)),
 
     // --- WIDE twin of q187: incremental family adoption over the 60-bit
@@ -4469,7 +4467,7 @@ object Extensions {
     // plan assertion, collision-safe key domain
     "q196_winnow_incremental_wide" -> ((s, dir) => {
       val table = Tables.stagedTable(s, "graft_q196_winnowidx")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
       val batch = docs.filter(col("doc_id") % 10 === 7)
       Dedup.winnowIndexTap(table, 8).write(
@@ -4495,7 +4493,7 @@ object Extensions {
     // entrench at.
     "q197_minhash_transitive_wide" -> ((s, dir) =>
       Dedup.minhashClustersTransitive(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         k = 16, bands = 4, maxIters = 8, wideHash = true)),
 
     // --- WIDE twin of q127: the persisted band index at 61-bit keys —
@@ -4503,7 +4501,7 @@ object Extensions {
     "q198_band_index_wide" -> contracted(
         indexJoin("band", "band rows"): _*) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q198_bandidx")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       Dedup.bandIndexTap(table, 8).write(
         Dedup.bandIndex(docs.filter(col("doc_id") % 10 =!= 7),
           "doc_id", "text", wideHash = true),
@@ -4526,7 +4524,7 @@ object Extensions {
         indexJoin("bucket", "bucket rows"): _*) { (s, dir) =>
       val SIM = graft.functions.Similarity
       val table = Tables.stagedTable(s, "graft_q199_signidx")
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val day0 = e.filter(col("vec_id") % 10 =!= 7 &&
         col("vec_id") % 10 =!= 8)
@@ -4567,7 +4565,7 @@ object Extensions {
     "q200_stream_winnow_families" -> ((s, dir) => {
       val table = Tables.stagedTable(s, "graft_q200_winnowidx")
       val (in, out, chk) = freshStreamDirs("graft_q200_stream")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
       val batch = docs.filter(col("doc_id") % 10 === 7)
@@ -4588,7 +4586,7 @@ object Extensions {
         .unionByName(stream.select(col("doc_id").as("id"),
           lit(null).cast("long").as("h")))
       graft.streaming.StreamOps.runToParquet(fps, out, chk)
-      val sink = s.read.parquet(out)
+      val sink = Parquet.read(s, out)
       Dedup.winnowFamiliesAdopt(
         corpusIndex = s.table(table), corpusFamilies = families,
         batchFps = sink.filter(col("h").isNotNull),
@@ -4607,7 +4605,7 @@ object Extensions {
     // the gate; a payload that fails to decode fails directed in-query.
     "q201_image_dhash_real" -> ((s, dir) => {
       val MM = graft.functions.Multimodal
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val hashed = MM.dhashFromPayload(
         MM.withSynthImagePayload(docs, "doc_id", "text"), "id", "payload")
@@ -4630,7 +4628,7 @@ object Extensions {
     // undecodable payload fails directed in-query.
     "q217_image_dhash_png" -> ((s, dir) => {
       val MM = graft.functions.Multimodal
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val hashed = MM.dhashFromPayload(
         MM.withSynthPngPayload(docs, "doc_id", "text"), "id", "payload")
@@ -4650,7 +4648,7 @@ object Extensions {
     // interlace reorder — any decoder divergence breaks the hash chain.
     "q222_image_dhash_gif" -> ((s, dir) => {
       val MM = graft.functions.Multimodal
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val hashed = MM.dhashFromPayload(
         MM.withSynthGifPayload(docs, "doc_id", "text"), "id", "payload")
@@ -4671,7 +4669,7 @@ object Extensions {
     // codec; any entropy/transform divergence breaks the hash chain.
     "q240_image_dhash_jpeg" -> ((s, dir) => {
       val MM = graft.functions.Multimodal
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val hashed = MM.dhashFromPayload(
         MM.withSynthJpegPayload(docs, "doc_id", "text"), "id", "payload")
@@ -4691,8 +4689,8 @@ object Extensions {
     // windows/join/top-k all operate on ≤100-row candidate lists.
     "q241_hybrid_rrf" -> ((s, dir) =>
       graft.functions.Relevance.hybridRrfTopK(
-        s.read.parquet(s"$dir/documents.parquet"),
-        s.read.parquet(s"$dir/embeddings.parquet"),
+        Tables.read(s, dir, "documents"),
+        Tables.read(s, dir, "embeddings"),
         "doc_id", "text", "vec_id", "embedding",
         Bm25Terms, queryVecId = 0L, legK = 100, topK = 20)),
 
@@ -4706,7 +4704,7 @@ object Extensions {
     // ordered). Oracle: the same 8 steps UNROLLED as chained CTEs.
     "q244_mmr_diversify" -> ((s, dir) =>
       graft.functions.Similarity.mmrDenseTopK(
-        s.read.parquet(s"$dir/embeddings.parquet"),
+        Tables.read(s, dir, "embeddings"),
         "vec_id", "embedding", queryVecId = 0L, candK = 20, k = 8)),
 
     // --- REAL audio decode + sample-domain features: texts synthesize
@@ -4719,7 +4717,7 @@ object Extensions {
     // undecodable payload fails directed in-query.
     "q245_audio_features" -> ((s, dir) => {
       val MM = graft.functions.Multimodal
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       MM.audioFeaturesFromPayload(
           MM.withSynthWavPayload(docs, "doc_id", "text"), "id", "payload")
@@ -4755,7 +4753,7 @@ object Extensions {
     // arithmetic both engines replay; FunctionsSpec pins the straddle.
     "q246_audio_fingerprint" -> ((s, dir) => {
       val MM = graft.functions.Multimodal
-      val base = s.read.parquet(s"$dir/documents.parquet")
+      val base = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       def twin(off: Long, tok56: String) = base
         .filter(col("doc_id") % 100 === 0)
@@ -4793,7 +4791,7 @@ object Extensions {
     "q247_video_scenes" -> ((s, dir) => {
       val MM = graft.functions.Multimodal
       val W = org.apache.spark.sql.expressions.Window
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val fh = MM.videoFrameHashes(
         MM.withSynthAviPayload(docs, "doc_id", "text"), "id", "payload")
@@ -4824,7 +4822,7 @@ object Extensions {
     "q248_keyframe_dedup" -> ((s, dir) => {
       val MM = graft.functions.Multimodal
       val W = org.apache.spark.sql.expressions.Window
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val fh = MM.videoFrameHashes(
         MM.withSynthAviPayload(docs, "doc_id", "text"), "id", "payload")
@@ -4858,7 +4856,7 @@ object Extensions {
     ) { (s, dir) =>
       val MM = graft.functions.Multimodal
       val table = Tables.stagedTable(s, "graft_q265_vkfidx")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
       val batch = docs.filter(col("doc_id") % 10 === 7)
@@ -4883,7 +4881,7 @@ object Extensions {
     // Malformed markup fails directed (the q245 decoder contract).
     "q266_html_blocks" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       H.htmlBlocks(H.withSynthHtml(docs, "doc_id", "text"), "id", "html")
         .select(
@@ -4908,7 +4906,7 @@ object Extensions {
     // SQL, which q266 gates against the strict walker.
     "q275_html_recovery" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val corrupted = H.withCorruptSynthHtml(docs, "doc_id", "text")
       require(
@@ -4956,7 +4954,7 @@ object Extensions {
     // over the dirtied stream.
     "q278_crawl_to_clean" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val full = concat(
         array(CrawlBoiler.map(lit): _*),
@@ -5010,7 +5008,7 @@ object Extensions {
     // ordinal drift, header attribution) diverges immediately.
     "q302_html_tables" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val cells = H.htmlTableCells(
         H.withSynthTableHtml(docs, "doc_id", "text"), "id", "html")
@@ -5031,7 +5029,7 @@ object Extensions {
     "q307_stream_html_tables" -> ((s, dir) => {
       val H = graft.functions.Html
       val (in, out, chk) = freshStreamDirs("graft_q307_stream")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       stageSliced(in, Seq(
         docs.filter(col("doc_id") % 3 === 0),
@@ -5048,7 +5046,7 @@ object Extensions {
             .otherwise(col("id")).as("doc_id"),
           col("table_idx"), col("row_idx"), col("col_idx"),
           col("is_header"), col("text")), out, chk)
-      s.read.parquet(out)
+      Parquet.read(s, out)
     }),
 
     // --- STREAMING list extraction (the q307 discipline on q330):
@@ -5060,7 +5058,7 @@ object Extensions {
     "q333_stream_html_lists" -> ((s, dir) => {
       val H = graft.functions.Html
       val (in, out, chk) = freshStreamDirs("graft_q333_stream")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       stageSliced(in, Seq(
         docs.filter(col("doc_id") % 3 === 0),
@@ -5077,7 +5075,7 @@ object Extensions {
             .otherwise(col("id")).as("doc_id"),
           col("list_idx"), col("ordered"), col("item_idx"), col("text")),
         out, chk)
-      s.read.parquet(out)
+      Parquet.read(s, out)
     }),
 
     // --- HEADER-KEYED table records (table understanding on q302's
@@ -5087,7 +5085,7 @@ object Extensions {
     // table k is corpus token 2c+k) and attaches it to every body cell.
     "q305_table_records" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val cells = H.htmlTableCells(
         H.withSynthTableHtml(docs, "doc_id", "text"), "id", "html")
@@ -5114,7 +5112,7 @@ object Extensions {
     // and must land on the SAME grid, headers decorated.
     "q303_html_tables_recovery" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val pages = H.withSynthTableHtml(docs, "doc_id", "text",
         clsOf = id => (id % 3).toInt)
@@ -5142,7 +5140,7 @@ object Extensions {
     // tail (3/7 = 428571) survives — the boundary the oracle pins.
     "q267_html_extract" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val blocks = H.htmlBlocks(
         H.withSynthHtml(docs, "doc_id", "text"), "id", "html")
@@ -5168,7 +5166,7 @@ object Extensions {
     // '>', name binding, anchor attribution) diverges.
     "q268_link_graph" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val blocks = H.htmlBlocks(
         H.withSynthHtml(docs, "doc_id", "text"), "id", "html")
@@ -5192,7 +5190,7 @@ object Extensions {
     "q270_stream_html_extract" -> ((s, dir) => {
       val H = graft.functions.Html
       val (in, out, chk) = freshStreamDirs("graft_q270_stream")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       stageSliced(in, Seq(
         docs.filter(col("doc_id") % 3 === 0),
@@ -5203,7 +5201,7 @@ object Extensions {
       val blocks = H.htmlBlocks(
         H.withSynthHtml(stream, "doc_id", "text"), "id", "html")
       graft.streaming.StreamOps.runToParquet(blocks.drop("links"), out, chk)
-      val verified = s.read.parquet(out).select(
+      val verified = Parquet.read(s, out).select(
         when(col("block_idx").isNull, raise_error(concat(
           lit("q270: HTML for id "), col("id").cast("string"),
           lit(" failed to parse in-stream — tag-walker regression"))))
@@ -5232,7 +5230,7 @@ object Extensions {
     ) { (s, dir) =>
       val H = graft.functions.Html
       val table = Tables.stagedTable(s, "graft_q272_linkidx")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       def pairsOf(d: org.apache.spark.sql.DataFrame) = {
         val blocks = H.htmlBlocks(
@@ -5269,7 +5267,7 @@ object Extensions {
       val H = graft.functions.Html
       val G = graft.functions.Graph
       val table = Tables.stagedTable(s, "graft_q277_linkidx")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       def pairsOf(d: org.apache.spark.sql.DataFrame) = {
         val blocks = H.htmlBlocks(
@@ -5320,7 +5318,7 @@ object Extensions {
     // link-analysis composition: parse → extract links → rank targets.
     "q271_hits_authorities" -> ((s, dir) => {
       val H = graft.functions.Html
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       val blocks = H.htmlBlocks(
         H.withSynthHtml(docs, "doc_id", "text"), "id", "html")
@@ -5342,7 +5340,7 @@ object Extensions {
     // to micros per bigram before the exact per-doc sum (no libm).
     "q269_kneser_ney" -> ((s, dir) =>
       graft.functions.LanguageModel.kneserNeyBigram(
-        s.read.parquet(s"$dir/documents.parquet"))),
+        Tables.read(s, dir, "documents"))),
 
     // --- q264's bigram bits against a PERSISTED count table (the q159
     // treatment for the bigram family — clears round-12's one weak):
@@ -5364,7 +5362,7 @@ object Extensions {
         "execute the broadcast unigram slice (only the hint can plan one)")
     ) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q273_bgcounts")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       graft.functions.LanguageModel.bigramCountsTap(table, 8).write(
         graft.functions.LanguageModel.bigramTrainCounts(docs),
         graft.sources.SinkMode.Replace)
@@ -5388,7 +5386,7 @@ object Extensions {
     // implements the same rules from the train/batch split.
     "q279_bigram_bits_arrival" -> ((s, dir) => {
       val table = Tables.stagedTable(s, "graft_q279_bgcounts")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val train = docs.filter(col("doc_id") % 50 =!= 3)
       val batch = docs.filter(col("doc_id") % 50 === 3)
         .select(col("doc_id"),
@@ -5404,7 +5402,7 @@ object Extensions {
 
     "q280_kneser_ney_arrival" -> ((s, dir) => {
       val table = Tables.stagedTable(s, "graft_q280_bgcounts")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val train = docs.filter(col("doc_id") % 50 =!= 3)
       val batch = docs.filter(col("doc_id") % 50 === 3)
         .select(col("doc_id"),
@@ -5435,7 +5433,7 @@ object Extensions {
         "broadcasts")
     ) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q274_bgcounts")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       graft.functions.LanguageModel.bigramCountsTap(table, 8).write(
         graft.functions.LanguageModel.bigramTrainCounts(docs),
         graft.sources.SinkMode.Replace)
@@ -5457,7 +5455,7 @@ object Extensions {
     "q249_pagerank" -> ((s, dir) => {
       val G = graft.functions.Graph
       val edges = G.coOccurrenceEdges(
-        s.read.parquet(s"$dir/lineitem.parquet"),
+        Tables.read(s, dir, "lineitem"),
         "l_orderkey", "l_suppkey", maxDegree = 64)
       G.pageRankTopK(edges, iters = 4, k = 20)
     }),
@@ -5495,7 +5493,7 @@ object Extensions {
     "q250_triangles" -> ((s, dir) => {
       val G = graft.functions.Graph
       val edges = G.coOccurrenceEdges(
-        s.read.parquet(s"$dir/lineitem.parquet"),
+        Tables.read(s, dir, "lineitem"),
         "l_orderkey", "l_suppkey", maxDegree = 64)
       G.triangleStats(edges)
     }),
@@ -5511,7 +5509,7 @@ object Extensions {
     "q251_components" -> ((s, dir) => {
       val G = graft.functions.Graph
       val edges = G.coOccurrenceEdges(
-        s.read.parquet(s"$dir/lineitem.parquet"),
+        Tables.read(s, dir, "lineitem"),
         "l_orderkey", "l_suppkey", maxDegree = 64)
       G.componentSizes(edges)
     }),
@@ -5524,7 +5522,7 @@ object Extensions {
     "q252_clustering" -> ((s, dir) => {
       val G = graft.functions.Graph
       val edges = G.coOccurrenceEdges(
-        s.read.parquet(s"$dir/lineitem.parquet"),
+        Tables.read(s, dir, "lineitem"),
         "l_orderkey", "l_suppkey", maxDegree = 64)
       G.clusteringTopK(edges, k = 20)
     }),
@@ -5539,7 +5537,7 @@ object Extensions {
     // excluded — the coefficient is undefined there.
     "q254_ols_by_group" -> ((s, dir) =>
       graft.functions.ExactMoments.olsByGroup(
-        s.read.parquet(s"$dir/lineitem.parquet").select(
+        Tables.read(s, dir, "lineitem").select(
           col("l_returnflag"), col("l_linestatus"),
           col("l_quantity").cast("bigint").as("x"),
           floor(col("l_extendedprice") * 100).cast("bigint").as("y")),
@@ -5592,7 +5590,7 @@ object Extensions {
     "q257_kcore" -> ((s, dir) => {
       val G = graft.functions.Graph
       val edges = G.coOccurrenceEdges(
-        s.read.parquet(s"$dir/lineitem.parquet"),
+        Tables.read(s, dir, "lineitem"),
         "l_orderkey", "l_partkey", maxDegree = 64)
       G.kCore(edges, k = 60, rounds = 8)
     }),
@@ -5630,7 +5628,7 @@ object Extensions {
     // basket size) + two tiny aggregates; the classic retail-analytics
     // op the co-occurrence projection was built from.
     "q260_association_rules" -> ((s, dir) => graft.exec.Frames { f =>
-      val su = f.persist(s.read.parquet(s"$dir/lineitem.parquet")
+      val su = f.persist(Tables.read(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
         .distinct())
       val n = su.select(col("k")).distinct().count()
@@ -5691,7 +5689,7 @@ object Extensions {
     "q259_pagerank_weighted" -> ((s, dir) => {
       val G = graft.functions.Graph
       val edges = G.coOccurrenceEdges(
-        s.read.parquet(s"$dir/lineitem.parquet"),
+        Tables.read(s, dir, "lineitem"),
         "l_orderkey", "l_suppkey", maxDegree = 64)
       G.pageRankWeightedTopK(edges, iters = 4, k = 20)
     }),
@@ -5706,7 +5704,7 @@ object Extensions {
     // form production dedup uses for high thresholds.
     "q258_setjoin_exact" -> ((s, dir) =>
       Dedup.setSimilarityJoin(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         n = 8, tNum = 4L, tDen = 5L)),
 
     // --- STREAMING EWMA: the q255 ordered fold as a REAL multi-batch
@@ -5736,7 +5734,7 @@ object Extensions {
             .getEpochSecond * 1000000L)
       }
       graft.streaming.StreamOps.runToParquet(folded, out, chk)
-      s.read.parquet(out)
+      Parquet.read(s, out)
         .select(col("user_id"), col("n_events"), col("ewma_micros"))
     }),
 
@@ -5752,7 +5750,7 @@ object Extensions {
     "q253_components_incremental" -> ((s, dir) => graft.exec.Frames { f =>
       val G = graft.functions.Graph
       val edges = f.persist(G.coOccurrenceEdges(
-          s.read.parquet(s"$dir/lineitem.parquet"),
+          Tables.read(s, dir, "lineitem"),
           "l_orderkey", "l_suppkey", maxDegree = 64))
       val isNew = pmod(hash(col("src"), col("dst")), lit(5)) === 0
       // the label table is a PERSISTED artifact (parquet tap), exactly as
@@ -5768,7 +5766,7 @@ object Extensions {
         G.componentLabels(edges.filter(!isNew))
           .write.mode("overwrite").parquet(tmp)
         val labels = G.componentsIncremental(
-          s.read.parquet(tmp), edges.filter(isNew))
+          Parquet.read(s, tmp), edges.filter(isNew))
         f.result(labels.groupBy(col("cluster_id").as("component"))
           .agg(count(lit(1)).as("size")))
       } finally Tables.deleteRecursively(new java.io.File(tmp))
@@ -5784,7 +5782,7 @@ object Extensions {
     // floored integers.
     "q243_rm3_feedback" -> ((s, dir) =>
       graft.functions.Relevance.rm3TopK(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Tables.read(s, dir, "documents"), "doc_id", "text",
         Bm25Terms, fbDocs = 10, fbTerms = 5, legK = 100, topK = 20)),
 
     // --- temperature-balanced language mixing at T=2 (the mBERT/XLM-R
@@ -5796,7 +5794,7 @@ object Extensions {
     // rounded) instead of libm pow (not).
     "q242_temperature_sample" -> ((s, dir) =>
       graft.functions.Governance.temperatureSample(
-        s.read.parquet(s"$dir/documents.parquet")
+        Tables.read(s, dir, "documents")
           .select(col("doc_id"), col("lang")),
         "doc_id", "lang", targetFraction = 0.3, salt = TempSalt)),
 
@@ -5810,7 +5808,7 @@ object Extensions {
     // the verdicts equal q181's with n_copies = 1 — at the replicated
     // sf1 this query SURVIVES where q181 refuses (rehearsed).
     "q202_semdedup_distinct" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       graft.functions.Similarity.semanticDedupDistinct(
         e, "vec_id", "embedding", simThreshold = 0.95,
         basePlanes = 6, extraPlanes = 4, maxBucket = 100L, maxRounds = 3)
@@ -5822,7 +5820,7 @@ object Extensions {
     // silent-corruption class as the winnow finding, so the wide form is
     // the one to run past ~2^20 distinct paragraphs.
     "q203_paragraph_dedup_wide" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val aug = docs.select(col("doc_id"),
         concat(col("text"),
           when(col("doc_id") % 3 === 0, lit("\n" + Boiler1))
@@ -5840,7 +5838,7 @@ object Extensions {
     // persisted layout should entrench collision-safe with the rest)
     "q204_source_overlap_wide" -> ((s, dir) => {
       val table = Tables.stagedTable(s, "graft_q204_gramidx")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 10 =!= 7)
       val batch = docs.filter(col("doc_id") % 10 === 7)
       graft.functions.Contamination.sourceGramIndexTap(table, 8).write(
@@ -5867,7 +5865,7 @@ object Extensions {
     ) { (s, dir) =>
       val table = Tables.stagedTable(s, "graft_q205_bandidx")
       s.sql(s"DROP TABLE IF EXISTS ${table}__compact")
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val day0 = docs.filter(col("doc_id") % 10 =!= 7 &&
         col("doc_id") % 10 =!= 8)
       val day1 = docs.filter(col("doc_id") % 10 === 8)
@@ -5908,7 +5906,7 @@ object Extensions {
       val table = Tables.processLocal("graft_q216_bandidx")
       val tap = graft.sources.PingPongBucketedTap(table, 8, Seq("band", "key"))
       tap.drop(s)
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val day0 = docs.filter(col("doc_id") % 10 =!= 7 &&
         col("doc_id") % 10 =!= 8)
       val day1 = docs.filter(col("doc_id") % 10 === 8)
@@ -5952,7 +5950,7 @@ object Extensions {
       // has guaranteed directed positives at every SF (natural 4-gram
       // overlap is 0 at sf0.001 — and an all-empty stream sink writes no
       // parquet at all); the unplanted half still tests natural overlap
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           concat(col("text"),
             when(col("doc_id") % 50 === 0 || col("doc_id") % 20 === 7,
@@ -5984,7 +5982,7 @@ object Extensions {
         .join(index, Seq("h"))
         .select(col("id"), col("h"))
       graft.streaming.StreamOps.runToParquet(matched, out, chk)
-      s.read.parquet(out).groupBy(col("id").as("doc_id"))
+      Parquet.read(s, out).groupBy(col("id").as("doc_id"))
         .agg(count(lit(1)).as("n_overlap"))
     }),
 
@@ -6001,7 +5999,7 @@ object Extensions {
       Node("BroadcastHashJoin").present(
         "eval-gram index side must broadcast into the positional gram scan")
     ) { (s, dir) =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           concat(col("text"),
             when(col("doc_id") % 50 === 0 || col("doc_id") % 20 === 7,
@@ -6025,7 +6023,7 @@ object Extensions {
     // and param order — three variants collapse to one canonical form,
     // the fragment-only variant to a second.
     "q207_url_dedup" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       val grp = (col("doc_id") % 13).cast("string")
       val k = ((col("doc_id") % 13) % 7).cast("string")
       val v = col("doc_id") % 4
@@ -6051,7 +6049,7 @@ object Extensions {
     // operator's recrawl-budget table: pages and distinct canonical
     // URLs per canonical host.
     "q214_domain_stats" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       val k = (col("doc_id") % 3).cast("string")
       val grp = (col("doc_id") % 13).cast("string")
       val v = col("doc_id") % 6
@@ -6078,7 +6076,7 @@ object Extensions {
     // survive twice (distinct-doc counting, not occurrence counting).
     // wideHash: a paragraph-key collision deletes real content.
     "q211_boilerplate_strip" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val aug = docs.select(col("doc_id"),
         concat(col("text"),
           when(col("doc_id") % 3 === 0, lit("\n" + Boiler1))
@@ -6102,7 +6100,7 @@ object Extensions {
     // discipline, so codebooks, codes, distances and ranks are ALL
     // exact integers the oracle replays arithmetically.
     "q208_pq_adc" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       graft.functions.Similarity.pqAdcTopK(e, e.filter(col("vec_id") < 8),
         "vec_id", "embedding", k = 5, m = 8, kSub = 16, iters = 2, dim = 64)
     }),
@@ -6125,7 +6123,7 @@ object Extensions {
       val (bookT, codesT) =
         (Tables.stagedTable(s, "graft_q212_pq_book"),
          Tables.stagedTable(s, "graft_q212_pq_codes"))
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       val (cents, codes) = Similarity.pqBuild(
         e, "vec_id", "embedding", m = 8, kSub = 16, iters = 2, dim = 64)
       val book = Similarity.pqDenseCodebook(cents)
@@ -6157,7 +6155,7 @@ object Extensions {
         Tables.stagedTable(s, "graft_q213_ivf_cents"),
         Tables.stagedTable(s, "graft_q213_pq_book"),
         Tables.stagedTable(s, "graft_q213_ivf_codes"))
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       val (ivfCents, lists) = Similarity.ivfKMeansBuild(
         e, "vec_id", "embedding", nlist = 16, iters = 2)
       val (pqCents, codes) = Similarity.pqBuild(
@@ -6192,7 +6190,7 @@ object Extensions {
         Tables.stagedTable(s, "graft_q223_ivf_cents"),
         Tables.stagedTable(s, "graft_q223_pq_book"),
         Tables.stagedTable(s, "graft_q223_ivf_codes"))
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       val (ivfCents, lists) = Similarity.ivfKMeansBuild(
         e, "vec_id", "embedding", nlist = 16, iters = 2)
       val (pqCents, codes) = Similarity.pqBuild(
@@ -6225,7 +6223,7 @@ object Extensions {
     ) { (s, dir) =>
       val (boundsT, codesT) = (Tables.stagedTable(s, "graft_q224_sq8_bounds"),
         Tables.stagedTable(s, "graft_q224_sq8_codes"))
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       val (bounds, codes) =
         Similarity.sq8Build(e, "vec_id", "embedding", dim = 64)
       bounds.write.mode("overwrite").saveAsTable(boundsT)
@@ -6255,7 +6253,7 @@ object Extensions {
         Tables.stagedTable(s, "graft_q218_ivf_cents"),
         Tables.stagedTable(s, "graft_q218_pq_book"),
         Tables.stagedTable(s, "graft_q218_ivf_codes"))
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       val (ivfCents, book, ivfCodes) = Similarity.ivfPqResidualBuild(
         e, "vec_id", "embedding", nlist = 16, ivfIters = 2,
         m = 8, kSub = 16, pqIters = 2, dim = 64)
@@ -6275,7 +6273,7 @@ object Extensions {
     // compressed-domain paths. An audit job (the brute leg is
     // queries × corpus), run at refresh cadence.
     "q219_adc_recall" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       graft.functions.Similarity.adcRecallAudit(
         e, e.filter(col("vec_id") < 8), "vec_id", "embedding",
         k = 5, nlist = 16, ivfIters = 2, m = 8, kSub = 16, pqIters = 2,
@@ -6299,7 +6297,7 @@ object Extensions {
         (Tables.stagedTable(s, "graft_q221_pq_book"),
          Tables.stagedTable(s, "graft_q221_pq_codes"))
       val (in, out, chk) = freshStreamDirs("graft_q221_stream")
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       val day0 = e.filter(col("vec_id") % 10 =!= 7)
       val arrivals = e.filter(col("vec_id") % 10 === 7)
       val (cents, codes) = Similarity.pqBuild(
@@ -6318,7 +6316,7 @@ object Extensions {
       val encoded = Similarity.pqEncodeWithBook(stream, s.table(bookT),
         "vec_id", "embedding", m = 8, kSub = 16, dim = 64)
       graft.streaming.StreamOps.runToParquet(encoded, out, chk)
-      tap.write(s.read.parquet(out), graft.sources.SinkMode.Update)
+      tap.write(Parquet.read(s, out), graft.sources.SinkMode.Update)
       s.table(codesT)
         .select(col("nn_id"), posexplode(col("codes")).as(Seq("sub", "code_ix")))
         .join(broadcast(s.table(bookT)
@@ -6332,7 +6330,7 @@ object Extensions {
     // Σ frag_len per doc ≡ n_tok by construction
     "q185_pack_fragments" -> ((s, dir) => {
       val packed = graft.functions.SequencePack.pack(
-        s.read.parquet(s"$dir/documents.parquet")
+        Tables.read(s, dir, "documents")
           .select(col("source"), col("doc_id"),
             TA.tokenCount(col("text")).as("n_tok")),
         "source", "doc_id", "n_tok", budget = 256L, substreams = 4)
@@ -6343,7 +6341,7 @@ object Extensions {
     // integer micros end to end: a float sum over a shuffle is
     // order-dependent; the quantized int sum is not)
     "q174_label_affinity" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
       graft.functions.Similarity.centroidAffinity(
         graft.functions.Similarity.groupCentroids(e, "label", "embedding"))
     })

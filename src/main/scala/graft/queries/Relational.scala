@@ -8,7 +8,7 @@ import graft.model.{CFields, FieldSelector}
 import graft.pipes._
 import graft.exec.Flow
 import graft.exec.PlanContract.{ExchangeOn, contracted}
-import graft.sources.ParquetTap
+import graft.sources.{Parquet, ParquetTap}
 
 /** Parity query set — one entry per operator family in SURVEY.md §2, each
   * expressed through the graft pipe DSL (exercising the library) with a
@@ -420,7 +420,7 @@ object Relational {
         .each(ExpressionFunction("septile", "doc_id div (doc_id % 7)", LongType),
           args = FieldSelector.All, out = FieldSelector.All,
           trap = Some(ParquetTap(trapPath))))(s)
-      s.read.parquet(trapPath).select(col("doc_id"))
+      Parquet.read(s, trapPath).select(col("doc_id"))
     }),
 
     // Trap on the bufferJoin cogroup gate: key groups whose closure throws
@@ -442,7 +442,7 @@ object Relational {
               Iterator.single(Seq(key.head, n))
             },
             trap = Some(ParquetTap(trapPath))))(s)
-      s.read.parquet(trapPath).select(col("c_custkey"))
+      Parquet.read(s, trapPath).select(col("c_custkey"))
     }),
 
     // Custom CAggregator (start/aggregate/merge/complete) under the gate
@@ -462,7 +462,7 @@ object Relational {
           .groupBy("o_orderpriority")
           .everyAgg(new PoisonSpanAggregator, trap = Some(ParquetTap(trapPath))))(s)
       main.withColumn("side", lit("ok"))
-        .unionByName(s.read.parquet(trapPath)
+        .unionByName(Parquet.read(s, trapPath)
           .select(col("o_orderpriority"),
             lit(null).cast("double").as("span"), lit("trap").as("side")))
     }),
@@ -668,7 +668,7 @@ object Relational {
         (branchA, sinkA, graft.sources.SinkMode.Replace),
         (branchB, sinkB, graft.sources.SinkMode.Replace)))(s)
       def cnt(t: ParquetTap, label: String) =
-        s.read.parquet(t.path).agg(count(lit(1)).as("n"))
+        t.read(s).agg(count(lit(1)).as("n"))
           .select(lit(label).as("part"), col("n"))
       cnt(sinkA, "a_ok").unionAll(cnt(trapA, "a_trap"))
         .unionAll(cnt(sinkB, "b_ok")).unionAll(cnt(trapB, "b_trap"))
@@ -703,7 +703,7 @@ object Relational {
     // so the exact-decimal sum matches the oracle computed from parquet.
     "q73_dynamic_arity" -> ((s, dir) => {
       val txt = stagePath("graft_q73_text", dir)
-      val lines = s.read.parquet(s"$dir/orders.parquet")
+      val lines = Tables.read(s, dir, "orders")
         .select(concat_ws("|",
           col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           when(col("o_orderstatus") === "F", lit("LATE"))).as("line"))
@@ -742,10 +742,10 @@ object Relational {
         Seq("o_custkey"), Seq("o_custkey"))
       val ct = graft.sources.BucketedTap(ctN, 8,
         Seq("c_custkey"), Seq("c_custkey"))
-      ot.write(s.read.parquet(s"$dir/orders.parquet")
+      ot.write(Tables.read(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
         graft.sources.SinkMode.Replace)
-      ct.write(s.read.parquet(s"$dir/customer.parquet")
+      ct.write(Tables.read(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment")),
         graft.sources.SinkMode.Replace)
       org.apache.spark.sql.graftbridge.PlanBridge.mergeJoins(

@@ -3,9 +3,15 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.Parquet
 
 /** Table access helpers for the driver test data (TESTDATA.md). */
 object Tables {
+  /** Test-data table `table` (`<dir>/<table>.parquet`), read through the
+    * engine's one parquet reader. */
+  def read(s: SparkSession, dir: String, table: String): DataFrame =
+    Parquet.read(s, s"$dir/$table.parquet")
+
   /** `events.ts` encoding has drifted across testdata generations:
     * TIMESTAMP(NANOS) (read as LongType nanos under
     * `spark.sql.legacy.parquet.nanosAsLong=true`), then
@@ -14,7 +20,7 @@ object Tables {
     * entry point pins the session timezone to UTC, so the NTZ→TZ cast is
     * value-preserving and keeps matching the DuckDB oracle (itself NTZ). */
   def events(s: SparkSession, dir: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/events.parquet")
+    val df = read(s, dir, "events")
     df.schema("ts").dataType match {
       case LongType =>
         // integer div: ns values (~1.7e18) exceed double's 2^53 exact range

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchemaParquet
 import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Sink modes — Spark-native equivalent of the reference's `SinkMode`
@@ -29,10 +30,24 @@ sealed trait Tap {
   def numSinkParts: Option[Int] = None
 }
 
+/** The one parquet input reader. Every parquet input of the engine
+  * reads through [[Parquet.read]], which plans the same scan as
+  * `spark.read.parquet` (same file listing, options and plan text)
+  * except that the schema comes from one footer read on the driver: no
+  * schema-inference job runs when a flow is built, as the reference
+  * reads `tap.getSourceFields()` on the client. Nothing is kept between
+  * calls, so a rewritten path is read afresh. */
+object Parquet {
+  def read(spark: SparkSession, path: String,
+           options: Map[String, String] = Map.empty): DataFrame =
+    spark.read.format(classOf[FooterSchemaParquet].getName)
+      .options(options).load(path)
+}
+
 final case class ParquetTap(path: String, parts: Option[Int] = None) extends Tap {
-  def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
+  def read(spark: SparkSession): DataFrame = Parquet.read(spark, path)
   override def read(spark: SparkSession, options: Map[String, String]): DataFrame =
-    spark.read.options(options).parquet(path)
+    Parquet.read(spark, path, options)
   def write(df: DataFrame, mode: SinkMode): Unit = {
     val out = parts.fold(df)(n => df.repartition(n))
     out.write.mode(mode.toSaveMode).parquet(path)
@@ -145,7 +160,7 @@ final case class TextLineTap(path: String, offsets: Boolean = false) extends Tap
 /** `PartitionTap` — directory-per-key-value layout →
   * `df.write.partitionBy`; reads get partition-pruned scans for free. */
 final case class PartitionTap(parent: ParquetTap, partitionCols: Seq[String]) extends Tap {
-  def read(spark: SparkSession): DataFrame = spark.read.parquet(parent.path)
+  def read(spark: SparkSession): DataFrame = parent.read(spark)
   def write(df: DataFrame, mode: SinkMode): Unit =
     df.write.mode(mode.toSaveMode).partitionBy(partitionCols: _*)
       .parquet(parent.path)

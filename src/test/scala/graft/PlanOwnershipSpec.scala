@@ -176,6 +176,14 @@ class PlanOwnershipSpec extends SparkSpec {
     assert(plans.isEmpty && frames.isEmpty, (plans ++ frames).mkString("\n"))
   }
 
+  test("every parquet input outside graft.tools reads through " +
+       "graft.sources.Parquet") {
+    val offenders = sourceLines(Seq("", "catalyst", "exec", "functions",
+        "model", "operators", "pipes", "queries", "sources", "streaming"),
+      "\\.read(\\.\\w+\\([^)]*\\))*\\.(parquet\\(|format\\(\"parquet\"\\))")
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("graft.queries runs every stream through StreamOps and names " +
        "per-process staging only through Tables.processLocal") {
     val streams = sourceLines(Seq("queries"), "\\.writeStream\\b")
