@@ -22,9 +22,14 @@ import scala.jdk.CollectionConverters._
   *    O(V × k) state, no per-vertex full sort, wedge counts bounded by
   *    V·k² downstream no matter how dense the raw projection gets;
   *  - PageRank is EXACT-INTEGER (floor division, both engines identical),
-  *    one keyed shuffle per iteration, each iteration's ranks a loop
-  *    frame ([[graft.exec.Frames]]) released once its successor is
-  *    materialized (the q186 iteration discipline).
+  *    one aggregation and one keyed shuffle per iteration. The fixed-round
+  *    loops ([[pageRankTopK]], [[pageRankWeightedTopK]], [[hitsTopK]])
+  *    run no action per round: each round is a lazy loop frame
+  *    ([[graft.exec.Frames]]), the top-k collect is the loop's one
+  *    action, and the scope releases every round's frame on exit. The
+  *    rounds stay separate frames rather than one unrolled plan: the
+  *    unrolled plan measured slower (its compiles outweigh the actions
+  *    it saves).
   */
 object Graph {
 
@@ -54,22 +59,31 @@ object Graph {
 
   /** Keep each vertex's `maxDegree` strongest neighbors (weight desc,
     * dst asc via the packed tie-break) — the densification lever,
-    * applied over COMPLETE pair weights. */
+    * applied over COMPLETE pair weights: one row per (src, dst) with
+    * integral `dst` and `w`; a row with a null src has no vertex to cap
+    * and drops out. The kept edges are read back out of the
+    * TopKAgg array itself — the (w, dst) double packing is exact, so
+    * unpacking it recovers the row without a join back onto `pw`. */
   def capByDegree(pw: DataFrame, maxDegree: Int): DataFrame = {
-    val packed = pw.withColumn("nh",
+    val packed = pw.filter(col("src").isNotNull).withColumn("nh",
       when(col("dst") < 0L || col("dst") >= (1L << 25) ||
-           col("w") >= (1L << 28),
+           col("w") >= (1L << 28) || col("w") <= -(1L << 28),
         raise_error(concat(lit("capByDegree: packing domain "),
           lit("exceeded (dst "), col("dst").cast("string"),
           lit(", w "), col("w").cast("string"),
           lit(") — widen the (w, dst) double packing"))))
         .otherwise((col("w") * (1L << 25) +
           (lit((1L << 25) - 1) - col("dst"))).cast("double")))
-    val tops = packed.groupBy(col("src"))
+    // nh = w·2²⁵ + (2²⁵−1−dst): the arithmetic shift floors, so w comes
+    // back exactly for negative weights too; the low 25 bits hold dst
+    val nh = col("nh").cast("long")
+    packed.groupBy(col("src"))
       .agg(graft.catalyst.TopKAgg(col("nh"), maxDegree).as("top"))
-    packed.join(tops, Seq("src"))
-      .filter(array_contains(col("top"), col("nh")))
-      .select(col("src"), col("dst"), col("w"))
+      .select(col("src"), explode(col("top")).as("nh"))
+      .select(col("src"),
+        (lit((1L << 25) - 1) - (nh.bitwiseAND(lit((1L << 25) - 1))))
+          .cast(pw.schema("dst").dataType).as("dst"),
+        shiftright(nh, 25).cast(pw.schema("w").dataType).as("w"))
   }
 
   /** Bounded-degree co-occurrence edges: entities (`vCol`) sharing a
@@ -112,13 +126,11 @@ object Graph {
     // oracles can derive it from DISTINCT src.)
     val verts = f.lazily(e.select(col("src").as("v"))
       .union(e.select(col("dst").as("v"))).distinct())
+    // no action per round: creating round r's lazy frame already runs
+    // (under AQE) the stages that read round r−1, and the scope releases
+    // every round's frame on exit — at most iters + 2 rank-sized frames
     var rank = verts.select(col("v"), lit(1000000000L).as("r"))
-    (1 to iters).foreach { _ =>
-      val next = f.lazily(prNext(e, verts, rank))
-      next.count() // materialize before dropping the previous iteration
-      f.release(rank)
-      rank = next
-    }
+    (1 to iters).foreach { _ => rank = f.lazily(prNext(e, verts, rank)) }
     collected(rank.orderBy(col("r").desc, col("v"))
       .limit(k)
       .select(col("v").as("vertex"), col("r").as("rank_scaled")))
@@ -147,23 +159,36 @@ object Graph {
     // src ∪ dst — the pageRankTopK dangling-vertex note applies
     val verts = f.lazily(e.select(col("src").as("v"))
       .union(e.select(col("dst").as("v"))).distinct())
+    // one lazy frame per round, no per-round action — as in pageRankTopK
     var rank = verts.select(col("v"), lit(1000000000L).as("r"))
     (1 to iters).foreach { _ =>
-      val contrib = e.join(rank, e("src") === rank("v"))
-        .select(col("dst"), expr("(r * 85 * w) div (100 * sw)").as("c"))
-      val sums = contrib.groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      val next = f.lazily(
-        verts.join(sums, verts("v") === sums("dst"), "left_outer")
-          .select(verts("v"),
-            (lit(150000000L) + coalesce(col("s"), lit(0L))).as("r")))
-      next.count()
-      f.release(rank)
-      rank = next
+      rank = f.lazily(prRound(e, verts, rank, "(r * 85 * w) div (100 * sw)"))
     }
     collected(rank.orderBy(col("r").desc, col("v"))
       .limit(k)
       .select(col("v").as("vertex"), col("r").as("rank_scaled")))
   }
+
+  /** ONE PageRank round over prepared inputs — `e` (src, dst, outdeg),
+    * `verts` (v), `rank` (v, r) → next (v, r). Exposed for the
+    * PlanAuditSpec shuffle-count audit. */
+  private[graft] def prNext(e: DataFrame, verts: DataFrame,
+                            rank: DataFrame): DataFrame =
+    prRound(e, verts, rank, "(r * 85) div (100 * outdeg)")
+
+  /** One round as a SINGLE aggregation: each edge's contribution `c`
+    * (an expression over e's columns and the source rank r), plus a 0
+    * row per vertex so that a vertex nothing points at still ranks,
+    * grouped by vertex into 150 000 000 + Σc. The v-keyed sum is the
+    * round's only keyed shuffle; the rank lookup broadcasts at gate
+    * scale. Sums of floored longs do not depend on order, so the ranks
+    * equal the contribution-sum-then-outer-join spelling bit for bit. */
+  private def prRound(e: DataFrame, verts: DataFrame, rank: DataFrame,
+                      c: String): DataFrame =
+    e.join(rank, e("src") === rank("v"))
+      .select(col("dst").as("v"), expr(c).as("c"))
+      .union(verts.select(col("v"), lit(0L).as("c")))
+      .groupBy(col("v")).agg((lit(150000000L) + sum(col("c"))).as("r"))
 
   /** PageRank iterated to a TOLERANCE-gated stop (round-13 verdict item
     * 4 — the q277 warm-start honesty contract generalized from HITS to
@@ -185,31 +210,16 @@ object Graph {
     * rounds assert. Bit-equal warm == cold is not a theorem and is not
     * claimed.
     *
-    * Per iteration: ONE keyed shuffle (the dst-keyed contribution sum;
-    * the rank and vertex joins broadcast at gate scale and stay
-    * rank-keyed co-partitioned at cluster scale) + one bounded driver
-    * action (the 1-row max-|Δ| check — the Lloyd discipline). Every
-    * round ends in an eager localCheckpoint with RDD-level release of
+    * Per iteration: ONE keyed shuffle (the v-keyed round sum of
+    * [[prNext]]; the rank lookup broadcasts at gate scale) + one bounded
+    * driver action (the 1-row max-|Δ| check — the Lloyd discipline),
+    * which also fills the round's lazy localCheckpoint; every round's
+    * checkpoint is released at the next round with RDD-level release of
     * its predecessor (the q277 lineage discipline: the diff check
     * references two rounds at once — without truncation the plan
     * doubles per round). Fails DIRECTED after `maxIters` rounds above
     * tolerance. Returns (full rank table (v, r) — caller-owned — and
     * the stop round). */
-  /** ONE PageRank round over prepared inputs — `e` (src, dst, outdeg),
-    * `verts` (v), `rank` (v, r) → next (v, r). Exposed for the
-    * PlanAuditSpec shuffle-count audit: the dst-keyed contribution sum
-    * is the round's only keyed shuffle when the (bounded) rank and
-    * vertex tables broadcast. */
-  private[graft] def prNext(e: DataFrame, verts: DataFrame,
-                            rank: DataFrame): DataFrame = {
-    val contrib = e.join(rank, e("src") === rank("v"))
-      .select(col("dst"), expr("(r * 85) div (100 * outdeg)").as("c"))
-    val sums = contrib.groupBy(col("dst")).agg(sum(col("c")).as("s"))
-    verts.join(sums, verts("v") === sums("dst"), "left_outer")
-      .select(verts("v"),
-        (lit(150000000L) + coalesce(col("s"), lit(0L))).as("r"))
-  }
-
   def pageRankConverge(edges: DataFrame, epsUnits: Long,
                        initRank: Option[DataFrame] = None,
                        maxIters: Int = 24): (DataFrame, Int) = Frames { f =>
@@ -467,29 +477,6 @@ object Graph {
     f.result(nV.crossJoin(nE).crossJoin(nT))
   }
 
-  /** HITS hubs-and-authorities (Kleinberg 1999) over a DIRECTED (often
-    * bipartite) edge set — the link-analysis dual of PageRank, natural
-    * over the doc→href graph the HTML walker extracts (q268): a target
-    * is authoritative when good hubs point at it, a hub is good when it
-    * points at authorities.
-    *
-    * EXACT integer spelling (the PageRank discipline, with the
-    * normalization HITS needs to keep iterations bounded): hubs start at
-    * 10⁹; each iteration sums hub scores into raw authorities, rescales
-    * by the MAXIMUM (L∞ norm — a_i = (raw_i · 10⁹) div max raw, pure
-    * floor division over decimal(38,0) sums, so the oracle unrolls the
-    * iterations bit-identically; the conventional L2 norm needs a square
-    * root — not engine-exact), then mirrors the same two steps back into
-    * hubs (skipped on the last iteration — the final authorities are the
-    * result). All operands non-negative, so Spark `div` (truncate) and
-    * DuckDB `//` (floor) agree. Overflow headroom: raw ≤ nHubs·10⁹, and
-    * raw·10⁹ < 10³⁸ holds for any nHubs < 10²⁰.
-    *
-    * Scale: two keyed shuffles per iteration over the DISTINCT edge set
-    * + a 1-row max broadcast each; each iteration's vectors persisted,
-    * the predecessors released once they are materialized (the q186
-    * discipline). Returns the top-`k`
-    * authorities (target, authority_scaled), (score desc, target asc). */
   /** HITS iterated to the exact-integer FIXED POINT (successive
     * authority vectors bit-equal), optionally WARM-STARTED from a
     * previous cadence's converged authorities (q277 — the incremental
@@ -620,6 +607,29 @@ object Graph {
     (f.result(auth.select(col("dst"), col("a"))), rounds)
   }
 
+  /** HITS hubs-and-authorities (Kleinberg 1999) over a DIRECTED (often
+    * bipartite) edge set — the link-analysis dual of PageRank, natural
+    * over the doc→href graph the HTML walker extracts (q268): a target
+    * is authoritative when good hubs point at it, a hub is good when it
+    * points at authorities.
+    *
+    * EXACT integer spelling (the PageRank discipline, with the
+    * normalization HITS needs to keep iterations bounded): hubs start at
+    * 10⁹; each iteration sums hub scores into raw authorities, rescales
+    * by the MAXIMUM (L∞ norm — a_i = (raw_i · 10⁹) div max raw, pure
+    * floor division over decimal(38,0) sums, so the oracle unrolls the
+    * iterations bit-identically; the conventional L2 norm needs a square
+    * root — not engine-exact), then mirrors the same two steps back into
+    * hubs (skipped on the last iteration — the final authorities are the
+    * result). All operands non-negative, so Spark `div` (truncate) and
+    * DuckDB `//` (floor) agree. Overflow headroom: raw ≤ nHubs·10⁹, and
+    * raw·10⁹ < 10³⁸ holds for any nHubs < 10²⁰.
+    *
+    * Scale: two keyed shuffles per iteration over the DISTINCT edge set
+    * + a 1-row max broadcast each; each iteration's vectors persisted and
+    * filled by the one top-k collect, then released with the scope.
+    * Returns the top-`k`
+    * authorities (target, authority_scaled), (score desc, target asc). */
   def hitsTopK(edges: DataFrame, iters: Int = 2,
                k: Int = 20): DataFrame = Frames { f =>
     require(iters >= 1, s"hitsTopK: iters must be >= 1, got $iters")
@@ -627,28 +637,25 @@ object Graph {
     var hub = e.select(col("src")).distinct()
       .select(col("src"), lit(1000000000L).as("h"))
     var auth: DataFrame = null
+    // every vector is a persisted frame read by the next half-step's
+    // cached plan; the one action (the collect below) fills them all and
+    // the scope releases them on exit
     (1 to iters).foreach { i =>
       val aRaw = e.join(hub, Seq("src"))
         .groupBy(col("dst"))
         .agg(sum(col("h")).cast("decimal(38,0)").as("ar"))
       val aMax = aRaw.agg(max(col("ar")).as("amax"))
-      val nextAuth = f.persist(aRaw.crossJoin(broadcast(aMax))
+      auth = f.persist(aRaw.crossJoin(broadcast(aMax))
         .select(col("dst"),
           expr("CAST(ar * 1000000000 div amax AS BIGINT)").as("a")))
-      nextAuth.count() // materialize before releasing the predecessors
-      f.release(auth)
-      auth = nextAuth
       if (i < iters) {
-        val hRaw = e.join(nextAuth, Seq("dst"))
+        val hRaw = e.join(auth, Seq("dst"))
           .groupBy(col("src"))
           .agg(sum(col("a")).cast("decimal(38,0)").as("hr"))
         val hMax = hRaw.agg(max(col("hr")).as("hmax"))
-        val nextHub = f.persist(hRaw.crossJoin(broadcast(hMax))
+        hub = f.persist(hRaw.crossJoin(broadcast(hMax))
           .select(col("src"),
             expr("CAST(hr * 1000000000 div hmax AS BIGINT)").as("h")))
-        nextHub.count()
-        f.release(hub)
-        hub = nextHub
       }
     }
     collected(auth.orderBy(col("a").desc, col("dst"))

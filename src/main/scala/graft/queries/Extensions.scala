@@ -5449,9 +5449,9 @@ object Extensions {
     // DENSIFY as data grows — the cap is the scale lever, O(V·k) state,
     // wedges ≤ V·k² downstream), and 4 damping-0.85 iterations run in
     // floor-division int64 so the oracle unrolls them bit-identically.
-    // One keyed shuffle per iteration; each iteration is a lazy
-    // checkpoint frame, counted before its predecessor is released
-    // (Graph.pageRankTopK).
+    // One aggregation and one keyed shuffle per iteration; each iteration
+    // is a lazy checkpoint frame, and the top-k collect is the loop's one
+    // action (Graph.pageRankTopK).
     "q249_pagerank" -> ((s, dir) => {
       val G = graft.functions.Graph
       val edges = G.coOccurrenceEdges(

@@ -43,28 +43,46 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
     if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
     else getFileStatus(f)
 
-  override def getFileStatus(f: Path): FileStatus = loaded(super.getFileStatus(f))
+  override def getFileStatus(f: Path): FileStatus = lazyStatus(super.getFileStatus(f))
 
-  override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(loaded)
+  override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(lazyStatus)
 
-  /** The stock status reads permission, owner and group from `ls -ld` on
-    * first use (of the canonical path, so a link reads its target); this
-    * one reads the same three from one `stat`. A plain `FileStatus`
-    * already carries them. */
-  private def loaded(s: FileStatus): FileStatus =
-    if (s.getClass == classOf[FileStatus]) s
-    else try {
-      val a = Files.readAttributes(pathToFile(s.getPath).toPath, "unix:mode,owner,group")
-      new FileStatus(s.getLen, s.isDirectory, s.getReplication, s.getBlockSize,
-        s.getModificationTime, s.getAccessTime,
-        new FsPermission((a.get("mode").asInstanceOf[Int] & PermissionBits).toShort),
-        a.get("owner").asInstanceOf[UserPrincipal].getName,
-        a.get("group").asInstanceOf[GroupPrincipal].getName, null, s.getPath)
-    } catch { case _: IOException | _: UnsupportedOperationException => s }
+  /** A plain `FileStatus` already carries its permission, owner and group;
+    * the stock local status loads them on first use, and so does ours. */
+  private def lazyStatus(s: FileStatus): FileStatus =
+    if (s.getClass == classOf[FileStatus]) s else new NioFileStatus(s, pathToFile(s.getPath))
+}
+
+/** A local status whose permission, owner and group load on first use, as
+  * the stock status's do, but from one `stat` instead of `ls -ld` (of the
+  * file itself, so a link reads its target, as `ls -ld` of the canonical
+  * path does). Where NIO fails, they come from the stock status `stock`. */
+private[sources] final class NioFileStatus(stock: FileStatus, file: java.io.File)
+    extends FileStatus(stock.getLen, stock.isDirectory, stock.getReplication,
+      stock.getBlockSize, stock.getModificationTime, stock.getAccessTime,
+      null, null, null, null, stock.getPath) {
+  override def getPermission: FsPermission = { load(); super.getPermission }
+  override def getOwner: String = { load(); super.getOwner }
+  override def getGroup: String = { load(); super.getGroup }
+
+  /** An empty owner means not loaded yet: the stock status's test. */
+  private def load(): Unit = synchronized {
+    if (super.getOwner.isEmpty) try {
+      val a = Files.readAttributes(file.toPath, "unix:mode,owner,group")
+      setPermission(new FsPermission(
+        (a.get("mode").asInstanceOf[Int] & NioRawLocalFileSystem.PermissionBits).toShort))
+      setOwner(a.get("owner").asInstanceOf[UserPrincipal].getName)
+      setGroup(a.get("group").asInstanceOf[GroupPrincipal].getName)
+    } catch { case _: IOException | _: UnsupportedOperationException =>
+      setPermission(stock.getPermission)
+      setOwner(stock.getOwner)
+      setGroup(stock.getGroup)
+    }
+  }
 }
 
 object NioRawLocalFileSystem {
-  private val PermissionBits = 0x3ff // 01777: rwx for all three, and sticky
+  private[sources] val PermissionBits = 0x3ff // 01777: rwx for all three, and sticky
   private val SpecialBits = 0xe00    // 07000: set-uid, set-gid, sticky
 
   /** The rwx bits of a mode; PosixFilePermission's order is 0400 down to 01. */

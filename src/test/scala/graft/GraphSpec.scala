@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Graph
 
@@ -7,6 +8,28 @@ import graft.functions.Graph
   * exact-integer PageRank, oriented triangle census. */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The join form of the degree cap, kept as the reference: pack each
+    * row's (w, dst), keep each src's top `maxDegree` packed values, join
+    * them back onto the rows and keep the rows whose value made it. */
+  private def capByJoin(pw: DataFrame, maxDegree: Int): DataFrame = {
+    val packed = pw.withColumn("nh", (col("w") * (1L << 25) +
+      (lit((1L << 25) - 1) - col("dst"))).cast("double"))
+    val tops = packed.groupBy(col("src"))
+      .agg(graft.catalyst.TopKAgg(col("nh"), maxDegree).as("top"))
+    packed.join(tops, Seq("src"))
+      .filter(array_contains(col("top"), col("nh")))
+      .select(col("src"), col("dst"), col("w"))
+  }
+
+  private def sameCap(pw: DataFrame, maxDegree: Int): Unit = {
+    val (got, ref) = (Graph.capByDegree(pw, maxDegree), capByJoin(pw, maxDegree))
+    assert(got.schema.map(f => f.name -> f.dataType) ==
+      ref.schema.map(f => f.name -> f.dataType), got.schema)
+    val rows = (df: DataFrame) => df.collect().map(_.toSeq.map(_.toString)).sortBy(_.mkString(","))
+    val (g, r) = (rows(got), rows(ref))
+    assert(g.toSeq == r.toSeq, s"maxDegree $maxDegree: exploded ${g.toSeq}, join ${r.toSeq}")
+  }
 
   test("coOccurrenceEdges: weights, deterministic cap tie-break, " +
        "packing-domain guard") {
@@ -26,6 +49,67 @@ class GraphSpec extends SparkSpec {
       Graph.coOccurrenceEdges(wide, "k", "v", 4).collect()
     }
     assert(ex.getMessage != null)
+  }
+
+  test("capByDegree reads the kept edges out of the top-k array: equal to " +
+       "the join form on ties, maxDegree = 1, merged weights and int ids") {
+    // src 1: three neighbors tie at w=1 behind a w=2 one; src 2 ties two
+    val ties = Seq((1L, 2L, 1L), (1L, 3L, 1L), (1L, 4L, 1L), (1L, 5L, 2L),
+      (2L, 7L, 3L), (2L, 6L, 3L), (3L, 0L, 0L)).toDF("src", "dst", "w")
+    for (k <- Seq(1, 2, 3, 64)) sameCap(ties, k)
+    val merged = Graph.mergePairWeights(
+      Graph.coOccurrencePairWeights(Seq((10L, 1L), (10L, 2L), (11L, 1L),
+        (11L, 2L), (11L, 3L)).toDF("k", "v"), "k", "v")
+        .union(Graph.coOccurrencePairWeights(
+          Seq((12L, 2L), (12L, 3L), (12L, 4L)).toDF("k", "v"), "k", "v")))
+    for (k <- Seq(1, 2, 64)) sameCap(merged, k)
+    // int vertex ids keep their type through the unpacking; a null src
+    // drops out, as the join form's inner join dropped it
+    sameCap(Seq((1, 2, 1L), (1, 3, 1L), (2, 1, 5L)).toDF("src", "dst", "w"), 1)
+    sameCap(Seq((Some(1L), 2L, 1L), (None, 3L, 1L)).toDF("src", "dst", "w"), 2)
+    val lineitem = Graph.coOccurrencePairWeights(
+      spark.read.parquet(s"${sf()}/lineitem.parquet"), "l_orderkey", "l_suppkey")
+    for (k <- Seq(1, 3)) sameCap(lineitem, k)
+  }
+
+  test("capByDegree: the packing-domain error still raises") {
+    for ((dst, w) <- Seq((1L << 25, 1L), (-1L, 1L), (1L, 1L << 28),
+                         (1L, -(1L << 28)))) {
+      val ex = intercept[Exception] {
+        Graph.capByDegree(Seq((1L, dst, w), (1L, 2L, 1L)).toDF("src", "dst", "w"), 4)
+          .collect()
+      }
+      assert(ex.toString.contains("packing domain") ||
+        Option(ex.getCause).exists(_.toString.contains("packing domain")), ex)
+    }
+  }
+
+  test("the fixed-round loops leave no persistent RDDs, also when they throw") {
+    val g = Seq((1L, 2L, 1L), (2L, 1L, 1L), (2L, 3L, 2L), (3L, 2L, 2L))
+      .toDF("src", "dst", "w")
+    val loops: Seq[DataFrame => DataFrame] = Seq(
+      e => Graph.pageRankTopK(e.select(col("src"), col("dst")), iters = 3, k = 2),
+      e => Graph.pageRankWeightedTopK(e, iters = 3, k = 2),
+      e => Graph.hitsTopK(e.select(col("src"), col("dst")), iters = 3, k = 2))
+    // the error fires inside the loop, when a frame first reads dst 3
+    // (the repartition keeps the projection out of the optimizer's reach)
+    val poisoned = g.repartition(2).withColumn("dst",
+      when(col("dst") === 3L, raise_error(lit("poisoned edge"))).otherwise(col("dst")))
+    for (loop <- loops) {
+      val before = persistentRdds
+      assert(loop(g).count() == 2)
+      assert(persistentRdds == before, s"$persistentRdds persistent RDDs, $before before")
+      interceptNoLeak[Exception](loop(poisoned).collect())
+    }
+  }
+
+  test("pageRankTopK runs a bounded number of jobs, not a few per round") {
+    val path = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("src", "dst")
+    Graph.pageRankTopK(path, iters = 4, k = 3).collect() // warm
+    val jobs = jobsOf(Graph.pageRankTopK(path, iters = 4, k = 3).collect())
+    // one action per loop: the round frames' own stages and the collect;
+    // a count per round would add two jobs a round (26 in all)
+    assert(jobs <= 12, s"$jobs jobs for 4 rounds")
   }
 
   test("pageRankTopK: symmetric fixed point; hand-computed path graph") {

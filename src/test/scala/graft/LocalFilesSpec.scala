@@ -135,6 +135,23 @@ class LocalFilesSpec extends SparkSpec {
       .isInstanceOf[FileNotFoundException])
   }
 
+  test("a status reads its permission, owner and group on first use, as the stock one does") {
+    val root = tmp()
+    Files.write(root.resolve("f"), "rows".getBytes("UTF-8"))
+    Files.createDirectory(root.resolve("d"))
+    val (stock, nio) = (stockFs(conf()), nioFs(conf()))
+    val taken = for (name <- Seq("f", "d"); fs <- Seq(stock, nio))
+      yield fs.getFileStatus(qualified(root.resolve(name)))
+    val listed = Seq(stock, nio).map(_.listStatus(qualified(root)).sortBy(_.getPath))
+    for (name <- Seq("f", "d"))
+      Files.setPosixFilePermissions(root.resolve(name),
+        java.nio.file.attribute.PosixFilePermissions.fromString("rwx-w----"))
+    val modes = (taken ++ listed.flatten).map(_.getPermission)
+    assert(modes.forall(_ == new FsPermission("720")), modes)
+    taken.grouped(2).foreach { case Seq(s, n) => sameStatus(s, n) }
+    listed.head.zip(listed(1)).foreach { case (s, n) => sameStatus(s, n) }
+  }
+
   test("getFileLinkStatus returns the stock status for a file, a directory, " +
        "a missing path and a symlink") {
     val root = tmp()

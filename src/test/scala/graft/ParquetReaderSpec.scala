@@ -97,26 +97,6 @@ class ParquetReaderSpec extends SparkSpec {
     assert(sameSchema(dir).size == 2)
   }
 
-  /** The number of jobs Spark ran while `body` ran, counted through a job
-    * group. A later job in a second group is waited for, so every job of
-    * the first group has reached the status store (the listener bus
-    * delivers in order). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val (group, fence) = (s"reader-${System.nanoTime}", s"fence-${System.nanoTime}")
-    try {
-      sc.setJobGroup(group, "reads")
-      body
-      sc.setJobGroup(fence, "fence")
-      spark.range(1).collect()
-    } finally sc.clearJobGroup()
-    val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup(fence).isEmpty &&
-        System.nanoTime < deadline) Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(fence).nonEmpty)
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
-
   test("a read launches no job; spark.read.parquet launches one per read") {
     val paths = tables.map(t => s"${sf()}/$t")
     var reads = Seq.empty[DataFrame]
