@@ -176,10 +176,9 @@ class PlanOwnershipSpec extends SparkSpec {
     assert(plans.isEmpty && frames.isEmpty, (plans ++ frames).mkString("\n"))
   }
 
-  test("every parquet input outside graft.tools reads through " +
-       "graft.sources.Parquet") {
+  test("every parquet input reads through graft.sources.Parquet") {
     val offenders = sourceLines(Seq("", "catalyst", "exec", "functions",
-        "model", "operators", "pipes", "queries", "sources", "streaming"),
+        "model", "operators", "pipes", "queries", "sources", "streaming", "tools"),
       "\\.read(\\.\\w+\\([^)]*\\))*\\.(parquet\\(|format\\(\"parquet\"\\))")
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
